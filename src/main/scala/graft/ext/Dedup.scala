@@ -254,16 +254,22 @@ object Dedup {
       col(idCol).as("doc_id"),
       shingles(col(textCol), k).as("sh"))
       .filter(size(col("sh")) > 0)
-      .withColumn("sig",
-        if (portable) minhashSignaturePortable(col("sh"), numHashes)
-        else minhashSignature(col("sh"), numHashes))
+      .withColumn("sig", signatureOf(col("sh"), numHashes, portable))
+
+  /** The MinHash signature of a shingle-array column in the chosen hash
+    * family — the one place the `portable` switch is made.
+    */
+  private[graft] def signatureOf(sh: Column, numHashes: Int,
+                                 portable: Boolean): Column =
+    if (portable) minhashSignaturePortable(sh, numHashes)
+    else minhashSignature(sh, numHashes)
 
   /** One SLIM row per (doc, band): the LSH join must shuffle only
     * (band, bucket, id) — shingle arrays are re-joined after the
     * candidate pairs are deduplicated, never carried through the
     * quadratic part of the plan.
     */
-  private def bandedFrame(withSig: DataFrame, bands: Int,
+  private[graft] def bandedFrame(withSig: DataFrame, bands: Int,
                           rowsPerBand: Int): DataFrame =
     withSig.select(
       col("doc_id"),
@@ -626,17 +632,28 @@ object Dedup {
       sig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else sig0
     try {
-      val banded = bandedFrame(withSig, bands, rowsPerBand)
-      val a = banded.as("a"); val b = banded.as("b")
-      val cand = a.join(b,
-          col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .distinct()
-      val pairs = verifyJaccard(cand,
-        withSig.select("doc_id", "sh"), withSig.select("doc_id", "sh"), threshold)
+      val pairs = lshPairsOfSig(withSig, threshold, bands, rowsPerBand)
       if (materialize) pairs.localCheckpoint(true) else pairs
     } finally if (materialize) withSig.unpersist()
+  }
+
+  /** [[minhashLshPairs]]' banding + verification over a PREBUILT
+    * (doc_id, sh, sig) frame (every row with a non-empty shingle set) —
+    * for callers that derive the signature once and feed it to several
+    * consumers ([[Refresh]]'s per-document frame). Lazy; the frame is
+    * read through four branches, so pass a materialized one.
+    */
+  private[graft] def lshPairsOfSig(withSig: DataFrame, threshold: Double,
+                                   bands: Int, rowsPerBand: Int): DataFrame = {
+    val banded = bandedFrame(withSig, bands, rowsPerBand)
+    val a = banded.as("a"); val b = banded.as("b")
+    val cand = a.join(b,
+        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .distinct()
+    verifyJaccard(cand,
+      withSig.select("doc_id", "sh"), withSig.select("doc_id", "sh"), threshold)
   }
 
   /** Incremental / cross-corpus near-dup (the op every training-data
@@ -713,19 +730,29 @@ object Dedup {
       newSig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else newSig0
     try {
-      val a = bandedFrame(newSig, bands, rowsPerBand).as("a")
-      val b = oldIndex.as("b")
-      // no id ordering constraint — sides are distinct by contract
-      val cand = a.join(b,
-          col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .distinct()
-      val pairs = verifyJaccard(cand,
-        newSig.select("doc_id", "sh"), oldShingles, threshold)
-        .withColumnRenamed("id_a", "id_new")
-        .withColumnRenamed("id_b", "id_old")
+      val pairs = crossPairsOfSig(newSig, oldIndex, oldShingles, threshold,
+        bands, rowsPerBand)
       if (materialize) pairs.localCheckpoint(true) else pairs
     } finally if (materialize) newSig.unpersist()
+  }
+
+  /** [[crossDupPairsPrebuilt]] over a PREBUILT incoming (doc_id, sh, sig)
+    * frame — the [[lshPairsOfSig]] counterpart. Lazy; pass a
+    * materialized frame (it is read through two branches).
+    */
+  private[graft] def crossPairsOfSig(newSig: DataFrame, oldIndex: DataFrame,
+                                     oldShingles: DataFrame, threshold: Double,
+                                     bands: Int, rowsPerBand: Int): DataFrame = {
+    val a = bandedFrame(newSig, bands, rowsPerBand).as("a")
+    val b = oldIndex.as("b")
+    // no id ordering constraint — sides are distinct by contract
+    val cand = a.join(b,
+        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .distinct()
+    verifyJaccard(cand, newSig.select("doc_id", "sh"), oldShingles, threshold)
+      .withColumnRenamed("id_a", "id_new")
+      .withColumnRenamed("id_b", "id_old")
   }
 
   /** SimHash 64-bit fingerprint over the token sequence: bit b of the
@@ -888,21 +915,25 @@ object Dedup {
   }
 
   /** Session-conf gate for the driver-local connected-components path
-    * (r19): an edge list verifiably under this many (directed,
-    * deduplicated) rows is collected and labeled with a driver
-    * union-find — ONE job plus O(E α(E)) local work — instead of the
-    * iterative join-per-round min-label propagation, whose per-round
-    * jobs (join + groupBy + signature collect, each an AQE stage
-    * cascade) dominate the refresh family's wall at fixture scale.
-    * Identical labels by construction: both compute, per node, the
-    * minimum id reachable in its component (PropertySpec pins the
-    * equivalence on random graphs over BOTH paths). Above the gate —
-    * the 100 TB crawl case, where the pair list is billions of rows —
-    * the iterative path runs unchanged on the same persisted edge
-    * frame, so the gate count is the only extra job.
+    * (r19), in BYTES of collected ids: a pair list whose rows × id
+    * width (two ids a row) is verifiably under it is collected and
+    * labeled with a driver union-find — ONE job plus O(E α(E)) local
+    * work — instead of the iterative join-per-round min-label
+    * propagation, whose per-round jobs (join + groupBy + change-count
+    * collect, each an AQE stage cascade) dominate the refresh family's
+    * wall at fixture scale. The id width is 8 bytes for LongType (4 / 2
+    * for Integer / Short) and the measured UTF-8 length for StringType,
+    * so a string-id graph is charged what it actually costs the driver
+    * — a row gate admits gigabytes of long string ids. The default,
+    * 16 MiB, is the former gate of 2M directed long-id edges. Identical
+    * labels by construction: both paths compute, per node, the minimum
+    * id reachable in its component (PropertySpec pins the equivalence
+    * on random graphs over BOTH paths). Above the gate — the 100 TB
+    * crawl case, where the pair list is billions of rows — the
+    * iterative path runs unchanged.
     */
-  val CcDriverEdgeRowsKey = "graft.cc.driverEdgeRows"
-  val DefaultCcDriverEdgeRows: Long = 2L << 20
+  val CcDriverEdgeBytesKey = "graft.cc.driverEdgeBytes"
+  val DefaultCcDriverEdgeBytes: Long = 16L << 20
 
   /** Driver union-find over a collected edge list, min-id labels. Only
     * id types whose driver ordering provably matches Spark's `min`
@@ -937,7 +968,7 @@ object Dedup {
     case _ => None
   }
 
-  private def driverUnionFind(rows: Array[org.apache.spark.sql.Row],
+  private def driverUnionFind(src: Array[Any], dst: Array[Any],
                               ord: Ordering[Any]): Seq[(Any, Any)] = {
     val index = new java.util.HashMap[Any, Integer]()
     def idOf(v: Any): Int = {
@@ -945,13 +976,8 @@ object Dedup {
       if (got != null) got.intValue()
       else { val i = index.size(); index.put(v, i); i }
     }
-    val srcIdx = new Array[Int](rows.length)
-    val dstIdx = new Array[Int](rows.length)
-    var r = 0
-    while (r < rows.length) {
-      srcIdx(r) = idOf(rows(r).get(0)); dstIdx(r) = idOf(rows(r).get(1))
-      r += 1
-    }
+    val srcIdx = src.map(idOf)
+    val dstIdx = dst.map(idOf)
     val n = index.size()
     val parent = Array.tabulate(n)(identity)
     def find(x: Int): Int = {
@@ -961,8 +987,8 @@ object Dedup {
       while (parent(cur) != root) { val nxt = parent(cur); parent(cur) = root; cur = nxt }
       root
     }
-    r = 0
-    while (r < rows.length) {
+    var r = 0
+    while (r < srcIdx.length) {
       val (ra, rb) = (find(srcIdx(r)), find(dstIdx(r)))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       r += 1
@@ -982,31 +1008,109 @@ object Dedup {
     (0 until n).map(i => values(i) -> minOf.get(find(i)))
   }
 
+  /** One partition's (a, b) ids and their byte size — None as soon as
+    * the partition's ids pass `budget` bytes or a null id appears (the
+    * iterative path owns null semantics). Built outside
+    * [[collectPairsUnder]] so the task closure captures only its
+    * arguments.
+    */
+  private def pairPartition(dt: org.apache.spark.sql.types.DataType,
+                            budget: Long)
+    : Iterator[org.apache.spark.sql.catalyst.InternalRow] =>
+      Option[(Array[Any], Array[Any], Long)] = {
+    import org.apache.spark.sql.types._
+    val read: (org.apache.spark.sql.catalyst.InternalRow, Int) => Any = dt match {
+      case LongType => (r, i) => r.getLong(i)
+      case IntegerType => (r, i) => r.getInt(i)
+      case ShortType => (r, i) => r.getShort(i)
+      case _ => (r, i) => r.getUTF8String(i).toString
+    }
+    val width: (org.apache.spark.sql.catalyst.InternalRow, Int) => Long = dt match {
+      case StringType => (r, i) => r.getUTF8String(i).numBytes().toLong
+      case _ => val w = dt.defaultSize.toLong; (_, _) => w
+    }
+    it => {
+      val as = Array.newBuilder[Any]; val bs = Array.newBuilder[Any]
+      var bytes = 0L
+      var ok = true
+      while (ok && it.hasNext) {
+        val r = it.next()
+        if (r.isNullAt(0) || r.isNullAt(1)) ok = false
+        else {
+          as += read(r, 0); bs += read(r, 1)
+          bytes += width(r, 0) + width(r, 1)
+          ok = bytes <= budget
+        }
+      }
+      if (ok) Some((as.result(), bs.result(), bytes)) else None
+    }
+  }
+
+  /** The (a, b) pair frame's ids on the driver when rows × id width
+    * stays within `gateBytes` — ONE job over [[Hints.rows]] (a
+    * checkpointed pair list is read from its RDD: no plan, no generated
+    * code). Each task stops buffering at its byte budget (the gate, and
+    * at most half of `spark.driver.maxResultSize` split over the
+    * partitions, so a many-partition pair list can never abort the job
+    * on result size); the driver drops what it holds the moment the
+    * running total passes the gate.
+    */
+  private def collectPairsUnder(ids: DataFrame, gateBytes: Long)
+    : Option[(Array[Any], Array[Any])] = {
+    val rdd = Hints.rows(ids)
+    val sc = ids.sparkSession.sparkContext
+    val parts = rdd.getNumPartitions
+    val maxResult = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    val budget =
+      if (maxResult > 0) math.min(gateBytes, maxResult / 2 / math.max(parts, 1))
+      else gateBytes
+    val got = new Array[(Array[Any], Array[Any])](parts)
+    var total = 0L
+    var over = false
+    type Part = Option[(Array[Any], Array[Any], Long)]
+    sc.runJob[org.apache.spark.sql.catalyst.InternalRow, Part](rdd,
+      pairPartition(ids.schema.fields(0).dataType, budget),
+      (i: Int, res: Part) => res match {
+        case Some((a, b, n)) if !over && total + n <= gateBytes =>
+          total += n; got(i) = (a, b)
+        case _ => over = true; got.indices.foreach(got(_) = null)
+      })
+    if (over) None
+    else Some((got.flatMap(_._1), got.flatMap(_._2)))
+  }
+
   def dupClusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
                   maxIter: Int = 20): DataFrame = {
-    val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-      .distinct().persist()
-    // size-gated driver path (r19, scaladoc above): the count doubles as
-    // the cache materialization the iterative path paid on its first
-    // round anyway; both branches read the persisted frame
-    val gate = pairs.sparkSession.conf.getOption(CcDriverEdgeRowsKey)
-      .map(_.toLong).getOrElse(DefaultCcDriverEdgeRows)
-    val ordOpt = driverMinOrdering(edges.schema.fields(0).dataType)
-    val smallEnough = ordOpt.isDefined && edges.count() <= gate
-    val rows = if (smallEnough) edges.collect() else Array.empty[org.apache.spark.sql.Row]
-    if (smallEnough && !rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-      val dt = edges.schema.fields(0).dataType
-      edges.unpersist()
-      val labeled = driverUnionFind(rows, ordOpt.get)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", dt),
-        org.apache.spark.sql.types.StructField("cluster_id", dt)))
-      import scala.jdk.CollectionConverters._
-      pairs.sparkSession.createDataFrame(
-        labeled.map { case (a, b) => org.apache.spark.sql.Row(a, b) }.asJava,
-        schema)
-    } else dupClustersIterative(edges, maxIter)
+    val ids = if (pairs.columns.toSeq == Seq(idA, idB)) pairs
+      else pairs.select(idA, idB)
+    val gate = pairs.sparkSession.conf.getOption(CcDriverEdgeBytesKey)
+      .map(_.toLong).getOrElse(DefaultCcDriverEdgeBytes)
+    val dt = ids.schema.fields(0).dataType
+    // size-gated driver path (scaladoc above): the union-find takes the
+    // pair list as it stands — duplicates and one direction per pair
+    // are fine — so only the iterative path builds the edge frame
+    driverMinOrdering(dt).flatMap(ord =>
+        collectPairsUnder(ids, gate).map(ord -> _)) match {
+      case Some((ord, (as, bs))) =>
+        val schema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("doc_id", dt),
+          org.apache.spark.sql.types.StructField("cluster_id", dt)))
+        import scala.jdk.CollectionConverters._
+        pairs.sparkSession.createDataFrame(
+          driverUnionFind(as, bs, ord)
+            .map { case (a, b) => org.apache.spark.sql.Row(a, b) }.asJava,
+          schema)
+      case None =>
+        // both directions of every pair from ONE read of `pairs`: a
+        // lazily derived pair list upstream is then computed once per
+        // action, where a two-branch union would compute it twice
+        val edges = ids.select(explode(array(
+            struct(col(idA).as("src"), col(idB).as("dst")),
+            struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
+          .select(col("e.src").as("src"), col("e.dst").as("dst"))
+          .distinct().persist()
+        dupClustersIterative(edges, maxIter)
+    }
   }
 
   /** The distributed min-label propagation loop — the 100 TB path; the
@@ -1016,33 +1120,34 @@ object Dedup {
     */
   private def dupClustersIterative(edges: DataFrame, maxIter: Int): DataFrame = {
     var labels = edges.select(col("src").as("node"), col("src").as("label")).distinct()
+    val idType = edges.schema.fields(0).dataType
     var iter = 0
     var done = false
-    // convergence signature: per-node labels are monotonically
-    // non-increasing (the node's own label is in the min), so an
-    // unchanged (count, sum(label)) pair means fixpoint — one scalar
-    // aggregate per round instead of a self-join diff
-    var prevSig: (Long, Long) = (-1L, -1L)
     while (!done && iter < maxIter) {
+      // each label row carries its value as `prev`, a neighbor's offer
+      // carries none: one aggregate yields the node's new label AND its
+      // old one, so "no label moved" is counted exactly, for any id
+      // type (a sum-of-labels signature cannot add strings and
+      // overflows on hash-sized longs), without a self-join diff
       val nbr = edges
         .join(labels.select(col("node").as("dst"), col("label")), "dst")
-        .select(col("src").as("node"), col("label"))
-      // LAZY checkpoint + signature collect = ONE job per round (r18):
+        .select(col("src").as("node"), col("label"),
+          lit(null).cast(idType).as("prev"))
+      // LAZY checkpoint + change-count collect = ONE job per round (r18):
       // the collect materializes the round's labels into the checkpoint
       // cache, so the eager variant's separate materialization job was
       // pure scheduling latency (the refresh family runs this loop 2-3
       // times per invocation)
-      val next = labels.union(nbr)
-        .groupBy("node").agg(min("label").as("label"))
+      val next = labels.select(col("node"), col("label"), col("label").as("prev"))
+        .union(nbr)
+        .groupBy("node").agg(min("label").as("label"), min("prev").as("prev"))
         .localCheckpoint(false)
-      val sigRow = next.agg(count(lit(1)), sum(col("label"))).collect()(0)
       // empty label frame (a corpus with NO near-dup pairs — real at
-      // small carves): sum() is NULL, the signature is just (0, 0)
-      val sig = (sigRow.getLong(0),
-        if (sigRow.isNullAt(1)) 0L else sigRow.getLong(1))
-      done = sig == prevSig
-      prevSig = sig
-      labels = next
+      // small carves): the sum is NULL, nothing moved
+      val moved = next.agg(sum(when(col("label") =!= col("prev"), 1L)))
+        .collect()(0)
+      done = moved.isNullAt(0) || moved.getLong(0) == 0L
+      labels = next.select("node", "label")
       iter += 1
     }
     edges.unpersist()

@@ -44,43 +44,76 @@ object Hints {
     * artifact-backed) frames so the count is a cached-partition scan,
     * not a plan replay.
     */
-  def isSlim(ids: DataFrame): Boolean = ids.count() <= gate(ids.sparkSession)
+  def isSlim(ids: DataFrame): Boolean =
+    counts(Seq(ids)).head <= gate(ids.sparkSession)
 
   /** Hint the frame for broadcast only when [[isSlim]]. */
   def hintIfSlim(ids: DataFrame): DataFrame =
     if (isSlim(ids)) broadcast(ids) else ids
 
   /** Gate TWO independent materialized frames with ONE Spark job (r19):
-    * the union of their global-count aggregates runs both count stages
-    * concurrently inside a single action, halving the per-gate job
-    * latency the refresh family pays (guide §2.6 — actions are only
-    * sequential because driver code calls them sequentially). Both
-    * frames materialize into their caches exactly as two separate
-    * counts would (the count IS the materializing action for lazy
-    * localCheckpoints). Falls back gracefully for empty frames: a
-    * global count always yields one row.
+    * [[counts]] runs both frames' partitions as the tasks of a single
+    * action, halving the per-gate job latency the refresh family pays
+    * (guide §2.6 — actions are only sequential because driver code
+    * calls them sequentially). Both frames materialize into their
+    * caches exactly as two separate counts would (the count IS the
+    * materializing action for lazy localCheckpoints).
     */
   def hintIfSlim2(a: DataFrame, b: DataFrame): (DataFrame, DataFrame) = {
     val out = hintIfSlimN(Seq(a, b))
     (out(0), out(1))
   }
 
-  /** N-frame form of [[hintIfSlim2]] — one job, N concurrent count
-    * stages, one gate decision per frame.
+  /** N-frame form of [[hintIfSlim2]] — one job, one gate decision per
+    * frame.
     */
   def hintIfSlimN(frames: Seq[DataFrame]): Seq[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    require(frames.nonEmpty)
-    val counts = frames.zipWithIndex
-      .map { case (f, i) =>
-        f.groupBy().count().select(lit(i).as("_i"), col("count"))
-      }
-      .reduce(_.unionAll(_))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val g = gate(frames.head.sparkSession)
-    frames.zipWithIndex.map { case (f, i) =>
-      if (counts(i) <= g) broadcast(f) else f
+    frames.zip(counts(frames)).map { case (f, n) =>
+      if (n <= g) broadcast(f) else f
     }
+  }
+
+  /** A frame's rows as an RDD, for driver code that runs its own job
+    * over them: a checkpointed frame (its plan a bare checkpoint scan)
+    * yields its checkpoint RDD directly — no query plan, no generated
+    * code, which a repeated pipeline would otherwise keep in the
+    * codegen cache — any other frame its executed plan's rows.
+    */
+  private[ext] def rows(f: DataFrame)
+    : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    f.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+      case _ => f.queryExecution.toRdd
+    }
+
+  /** The row counts of N independent frames from ONE job — the
+    * primitive under [[isSlim]] and [[hintIfSlimN]], for callers that
+    * need a count (or a materialization) beside a gate decision. A
+    * checkpointed frame (its plan a bare checkpoint scan) is counted on
+    * its checkpoint RDD directly: no query plan, no generated code, no
+    * shuffle — counting its partitions is also what materializes a
+    * lazy checkpoint, exactly as `count()` would. Any other frame is
+    * counted on the rows of its column-less projection. The per-frame
+    * partitions run as the tasks of one job, so the counts overlap.
+    */
+  def counts(frames: Seq[DataFrame]): Seq[Long] = {
+    require(frames.nonEmpty)
+    val rdds = frames.map(f => f.queryExecution.analyzed match {
+      case _: org.apache.spark.sql.execution.LogicalRDD => rows(f)
+      case _ => rows(f.select())
+    })
+    val sc = frames.head.sparkSession.sparkContext
+    // UnionRDD (not sc.union, which zips co-partitioned inputs) keeps
+    // each frame's partitions contiguous and in order
+    val perPartition = sc.runJob(new org.apache.spark.rdd.UnionRDD(sc, rdds),
+      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+        var n = 0L
+        while (it.hasNext) { it.next(); n += 1 }
+        n
+      })
+    val bounds = rdds.map(_.getNumPartitions).scanLeft(0)(_ + _)
+    bounds.zip(bounds.tail).map { case (a, b) => perPartition.slice(a, b).sum }
   }
 
   /** For LAZILY-derived id lists (an election tail, a contamination
@@ -92,4 +125,20 @@ object Hints {
     */
   def checkpointAndHint(ids: DataFrame): DataFrame =
     hintIfSlim(ids.localCheckpoint(eager = false))
+
+  /** [[checkpointAndHint]] for an id list no longer than a DRIVER-LOCAL
+    * frame `bound` (a local relation — e.g. the cluster map of
+    * [[Dedup.dupClusters]]' driver path, which the drop list of an
+    * election is a subset of): the bound's row count is known without
+    * a job, so when it is under the gate the list is hinted as it
+    * stands — no checkpoint, no count; the list is computed once,
+    * inside the join that broadcasts it. Any other bound falls back to
+    * [[checkpointAndHint]].
+    */
+  def hintBoundedBy(ids: DataFrame, bound: DataFrame): DataFrame =
+    bound.queryExecution.logical match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if l.data.length <= gate(ids.sparkSession) => broadcast(ids)
+      case _ => checkpointAndHint(ids)
+    }
 }

@@ -46,6 +46,26 @@ import org.apache.spark.sql.functions._
   * manifest recompute over pair-list-sized frames — metadata, not
   * corpus. All four state frames persist via [[Artifacts.saveIndex]]
   * (the "build once per corpus version, probe many times" contract).
+  *
+  * Codegen budget: a refresh is a standing job a long-lived driver
+  * repeats, so its generated code should compile once. Spark keeps
+  * compiled classes in `CodeGenerator.cache`: 100 entries held as 4 LRU
+  * segments of 25, keyed by the full source plus the compiling thread's
+  * class loader. Class names carry the codegen stage id, so one
+  * sub-plan at two stage positions is two sources; and a whole-stage
+  * class is compiled twice, by the driver (to check it compiles) and by
+  * the tasks under the executor's loader, so it takes two entries. A
+  * segment cycled through more than 25 entries misses on every lookup,
+  * so a pipeline a driver repeats must keep its distinct classes at or
+  * below about 64, whole-stage ones counting double, for its entries
+  * to fit with headroom. The refresh and the rebuild therefore share
+  * their plan shapes: one per-document derivation ([[perDoc]]) feeds
+  * every state frame and both pair legs, the tail reads pinned inputs
+  * of one schema ([[manifestOf]]), and small driver-side actions (gate
+  * counts, the cluster stage's collect) read checkpoints as RDDs and
+  * generate no code at all ([[Hints.rows]]).
+  * `tools/codegen_footprint.py` counts a run's compiles and distinct
+  * classes from a `CodeGenerator` DEBUG log.
   */
 object Refresh {
 
@@ -70,10 +90,6 @@ object Refresh {
                           bands: Int = 16, rowsPerBand: Int = 4,
                           portableSig: Boolean = false)
 
-  private def meta(gated: DataFrame): DataFrame =
-    gated.select(col("doc_id"), col("quality"),
-      TextStats.tokenCount(col("text")).cast("long").as("n_toks"))
-
   /** Broadcast-hint an id-list join side only when it is verifiably
     * small ([[Hints.hintIfSlim]] — shared with the Declared assembly
     * tails). The refresh id frames are usually delta-sized, but the
@@ -87,40 +103,89 @@ object Refresh {
     */
   private def hintIfSlim(ids: DataFrame): DataFrame = Hints.hintIfSlim(ids)
 
-  /** Build the standing state from scratch (corpus version 1, or any
-    * periodic full re-baseline).
-    *
-    * NOTE the returned frames are LAZY except the checkpointed pair
-    * list: meta/bandIdx/shingles re-run corpus-scale gating+shingling
-    * on EVERY downstream use unless persisted. The deployment contract
-    * is to write all four through [[Artifacts.saveIndex]] and hand
-    * [[refresh]] the reloaded frames (what the declared x85 does) —
-    * a refresh fed the raw lazy frames re-gates the full corpus
-    * several times over and comes out SLOWER than a rebuild
-    * (measured: 173 s vs 76 s at ScaleCheck's 16x).
+  /** P's per-document derivation, the ONE corpus-scale pass of both
+    * paths: the curation gates, then per gated document
+    * (doc_id, quality, n_toks, sh, sig) — its quality score, token
+    * count, k-shingle set and MinHash signature. The text column is not
+    * carried: every state frame and both pair legs derive from this
+    * frame ([[stateOf]], [[Dedup.crossPairsOfSig]]), so the rebuild
+    * gates its corpus once and the refresh its delta once, and the two
+    * paths run their downstream stages through identical plans.
+    * `spread` (r18): caller-supplied starved-scan guard (the Declared
+    * spreadIfStarved idiom — identity at cluster scale), applied before
+    * the shingle/minhash work so it does not serialize on a
+    * single-split fixture.
     */
-  def buildState(corpus: DataFrame, p: Params = Params(),
-                 spread: DataFrame => DataFrame = identity): State = {
-    // `spread` (r18): caller-supplied starved-scan guard (the Declared
-    // spreadIfStarved idiom — identity at cluster scale). The gated
-    // frame feeds four map-heavy derivations (tokenize, shingle,
-    // minhash); on a single-split fixture they would all serialize.
-    val gated = spread(Curation.standardGates(corpus))
-    State(
-      meta(gated),
-      Dedup.minhashBandIndex(gated, "text", "doc_id", p.k, p.bands, p.rowsPerBand),
-      Dedup.shingleFrame(gated, "text", "doc_id", p.k),
-      Dedup.minhashLshPairs(gated, "text", "doc_id", p.k, p.threshold,
-          p.bands, p.rowsPerBand)
+  private def perDoc(corpus: DataFrame, p: Params,
+                     spread: DataFrame => DataFrame): DataFrame =
+    spread(Curation.standardGates(corpus))
+      .select(col("doc_id"), col("quality"),
+        TextStats.tokenCount(col("text")).cast("long").as("n_toks"),
+        Dedup.shingles(col("text"), p.k).as("sh"))
+      .withColumn("sig", Dedup.signatureOf(col("sh"),
+        p.bands * p.rowsPerBand, p.portableSig))
+
+  /** The rows of a [[perDoc]] frame that take part in banding: a
+    * document without a shingle has no signature to band.
+    */
+  private def hashed(docs: DataFrame): DataFrame =
+    docs.filter(size(col("sh")) > 0)
+
+  /** The four state frames of a MATERIALIZED [[perDoc]] frame — meta,
+    * band index, shingle table and the within-frame pair list — lazy
+    * projections that read it (the pair list through four branches).
+    */
+  private def stateOf(docs: DataFrame, p: Params): State = {
+    val h = hashed(docs)
+    State(docs.select("doc_id", "quality", "n_toks"),
+      Dedup.bandedFrame(h, p.bands, p.rowsPerBand),
+      h.select("doc_id", "sh"),
+      Dedup.lshPairsOfSig(h, p.threshold, p.bands, p.rowsPerBand)
         .select("id_a", "id_b"))
   }
 
+  /** Build the standing state from scratch (corpus version 1, or any
+    * periodic full re-baseline).
+    *
+    * One eager action: the [[perDoc]] frame is checkpointed (EAGER —
+    * the pair list's band self-join and verification read it through
+    * concurrent branches, which would race a lazy first
+    * materialization: the cleanedDelta race note), and the four
+    * returned frames are lazy projections of it, so every consumer
+    * reads gated, hashed rows and the corpus is gated once. The
+    * deployment contract is still to write all four through
+    * [[Artifacts.saveIndex]] and hand [[refresh]] the reloaded frames
+    * (what the declared x85 does): the checkpoint lives only as long
+    * as this session.
+    */
+  def buildState(corpus: DataFrame, p: Params = Params(),
+                 spread: DataFrame => DataFrame = identity): State =
+    stateOf(perDoc(corpus, p, spread).localCheckpoint(true), p)
+
   /** P's tail: clusters → quality election → survivor drop → manifest,
-    * a pure function of (meta, pairs) shared by both paths.
+    * a pure function of (meta, pairs) shared by both paths. Both inputs
+    * are pinned by LAZY checkpoints (each is first read through one
+    * branch: the cluster stage's edge pass, the election's join), so
+    * the tail's plans start from the same scans whichever path built
+    * the inputs — the rebuild's projection of its per-document frame,
+    * or the refresh's retire-and-append unions — and compile to the
+    * same classes in both (the codegen budget in the object scaladoc).
     */
   def manifestOf(metaDf: DataFrame, pairs: DataFrame, seed: String,
                  numShards: Int): DataFrame =
-    manifestFromClusters(Dedup.dupClusters(pairs), metaDf, seed, numShards)
+    manifestFromClusters(Dedup.dupClusters(pinned(pairs)), pinned(metaDf),
+      seed, numShards)
+
+  /** A lazy checkpoint of a state frame with every column NOT NULL. No
+    * state row holds a null (the gates drop null ids, null text and
+    * hence null quality and token counts), so the filter drops nothing;
+    * it gives both paths one schema — state reloaded from parquet
+    * comes back all-nullable, the rebuild's frames do not — and with it
+    * the same generated code downstream.
+    */
+  private def pinned(df: DataFrame): DataFrame =
+    df.filter(df.columns.map(col(_).isNotNull).reduce(_ && _))
+      .localCheckpoint(false)
 
   /** The manifest tail from a PRECOMPUTED cluster frame — what the
     * delta-bound refresh path feeds ([[refreshClusters]]' output, or
@@ -139,9 +204,8 @@ object Refresh {
       .select("doc_id")
     // the drop side is "cluster members minus survivors" — on a
     // dedup-heavy corpus that is a large fraction of ALL documents, so
-    // the hint must be size-gated; the checkpoint makes the gate count
-    // and the join read one materialization of the election
-    val standing = metaDf.join(Hints.checkpointAndHint(drop),
+    // the hint must be size-gated (bounded by the cluster frame's rows)
+    val standing = metaDf.join(Hints.hintBoundedBy(drop, clusters),
       Seq("doc_id"), "left_anti")
     TrainSet.exportManifest(standing, "doc_id", col("n_toks"), seed, numShards)
   }
@@ -186,56 +250,60 @@ object Refresh {
     // derive from it, and without the pin each derivation replays the
     // corpus-sized hash-compare join (two full passes over both
     // corpora — measured r18, guide §1.2's "don't compute twice")
-    // d EAGER (r19): the touched gate count and the fresh-slice
-    // materialization below run on two driver threads, and a lazy d
-    // first-read from both would duplicate the corpus-sized
-    // hash-compare join (the cleanedDelta race note)
+    // d EAGER (r19): the batched count below reads it from two
+    // concurrent branches, and a lazy d first-read from both would
+    // duplicate the corpus-sized hash-compare join (the cleanedDelta
+    // race note)
     val d = CorpusDiff.diff(oldCorpus, newCorpus, "doc_id", "text")
       .select("doc_id", "status").localCheckpoint(true)
-    val touched = d.filter(col("status").isin("removed", "changed"))
+    // NOT NULL (the diff drops null ids): every retire join below then
+    // broadcasts the bare checkpoint scan, one plan for all of them
+    val touched = d.filter(col("status").isin("removed", "changed") &&
+        col("doc_id").isNotNull)
       .select("doc_id").localCheckpoint(false)
     val freshIds = d.filter(col("status").isin("added", "changed"))
       .select("doc_id")
     val newDocs = newCorpus.join(freshIds, Seq("doc_id"), "left_semi")
-    // consumed by meta, band, shingle, 2 pair legs; LAZY + explicit
-    // count so its materialization overlaps the touched gate count on
-    // a second driver thread (r19 — the two actions are independent).
-    // `spread` so the pair legs' shingle/minhash passes don't starve on
-    // the AQE-coalesced join output (identity at cluster scale).
-    val newGated = spread(Curation.standardGates(newDocs))
-      .localCheckpoint(false)
+    // the delta's per-document frame — the rebuild's derivation, run on
+    // the added/changed documents only; LAZY, materialized by the
+    // batched count below in the same job as the touched list
+    val fresh = perDoc(newDocs, p, spread).localCheckpoint(false)
 
     // touched is delta-sized on a healthy refresh but corpus-sized on a
     // mass retirement (a full re-crawl replacing most rows) — gate the
     // hint once on the checkpointed list, reuse the decision per column
-    val (touchedSlim, _) = Par.both(Hints.isSlim(touched))(newGated.count())
+    val Seq(nTouched, _) = Hints.counts(Seq(touched, fresh))
+    val touchedSlim = nTouched <= Hints.gate(touched.sparkSession)
+    // joined on a condition, not a USING column: the frame keeps its
+    // column order (the schema of its rebuilt counterpart) and every
+    // retire join builds the same, unrenamed `touched` side
+    val side = if (touchedSlim) broadcast(touched.as("t")) else touched.as("t")
     def retire(df: DataFrame, idCols: String*): DataFrame =
       idCols.foldLeft(df) { (acc, c) =>
-        val side = touched.withColumnRenamed("doc_id", c)
-        acc.join(if (touchedSlim) broadcast(side) else side, Seq(c), "left_anti")
+        acc.join(side, acc(c) === col("t.doc_id"), "left_anti")
       }
 
-    val meta2 = retire(state.meta, "doc_id").unionByName(meta(newGated))
-    val band2 = retire(state.bandIdx, "doc_id")
-      .unionByName(Dedup.minhashBandIndex(newGated, "text", "doc_id",
-        p.k, p.bands, p.rowsPerBand))
-    val sh2 = retire(state.shingles, "doc_id")
-      .unionByName(Dedup.shingleFrame(newGated, "text", "doc_id", p.k))
+    val st = stateOf(fresh, p)
     // cross pairs probe the RETIRED index (standing minus touched), so a
     // changed document never pairs against its own dead version
-    val cross = Dedup.crossDupPairsPrebuilt(newGated,
+    val cross = Dedup.crossPairsOfSig(hashed(fresh),
         retire(state.bandIdx, "doc_id"), retire(state.shingles, "doc_id"),
-        "text", "doc_id", p.k, p.threshold, p.bands, p.rowsPerBand)
+        p.threshold, p.bands, p.rowsPerBand)
       .select(least(col("id_new"), col("id_old")).as("id_a"),
         greatest(col("id_new"), col("id_old")).as("id_b"))
-    val within = Dedup.minhashLshPairs(newGated, "text", "doc_id",
-        p.k, p.threshold, p.bands, p.rowsPerBand)
-      .select("id_a", "id_b")
-    val added = cross.unionByName(within)
+    // LAZY: the first action over the pair list (the cluster stage's
+    // bounded collect) reads it through one branch and materializes it;
+    // Delta consumers read the cache afterwards
+    val added = st.pairs.unionByName(cross).localCheckpoint(false)
     // old×old / new×old / new×new are disjoint by construction — no
     // dedup needed, and together they are exactly P(v2)'s pair set
     val pairs2 = retire(state.pairs, "id_a", "id_b").unionByName(added)
-    Delta(State(meta2, band2, sh2, pairs2), touched, added)
+    Delta(State(
+        retire(state.meta, "doc_id").unionByName(st.meta),
+        retire(state.bandIdx, "doc_id").unionByName(st.bandIdx),
+        retire(state.shingles, "doc_id").unionByName(st.shingles),
+        pairs2),
+      touched, added)
   }
 
   /** X23b (r12): DELTA-BOUND duplicate clusters — recompute label
@@ -949,13 +1017,15 @@ object Refresh {
     val deltaIds = dj.filter(col("t2").isNotNull &&
         (col("t1").isNull || col("t1") =!= col("t2")))
       .select("doc_id").localCheckpoint(false) // changed ∪ fresh
-    // gate all three id carves in ONE job and reuse each decision at
-    // every consumer (r19 — the repeated per-site counts were pure job
-    // latency; the carves are independent reads of the cached diff)
-    val touchedOrDelta = touched.unionByName(deltaIds).distinct()
-      .localCheckpoint(false)
-    val hinted = Hints.hintIfSlimN(Seq(touched, deltaIds, touchedOrDelta))
-    val (touchedH, deltaIdsH, touchedOrDeltaH) = (hinted(0), hinted(1), hinted(2))
+    // gate both id carves in ONE job and reuse each decision at every
+    // consumer (r19 — the repeated per-site counts were pure job
+    // latency; the carves are independent reads of the cached diff).
+    // Their union is derived only AFTER that job has materialized both:
+    // built beside them, its distinct would be a concurrent first read
+    // of the two lazy carves and compute them twice
+    val Seq(touchedH, deltaIdsH) = Hints.hintIfSlimN(Seq(touched, deltaIds))
+    val touchedOrDeltaH = hintIfSlim(touched.unionByName(deltaIds).distinct()
+      .localCheckpoint(false))
     // only the delta re-tokenizes; pos2 is materialized once — it is
     // the new standing index (written once in deployment) and the
     // fold consumes it three times below

@@ -97,15 +97,6 @@ object Similarity {
       when(dot >= 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
     }.reduce(_.bitwiseOR(_))
 
-  /** Cosine of a vector column against a literal vector (codegen'd). */
-  private def cosineLit(vec: Column, w: Seq[Double]): Column = {
-    val dot = aggregate(zip_with(vec, typedLit(w), (x, p) => x * p),
-      lit(0.0d), (acc, v) => acc + v)
-    val nv = sqrt(aggregate(vec, lit(0.0d), (acc, v) => acc + v * v))
-    val nw = math.sqrt(w.map(x => x * x).sum)
-    dot / (nv * lit(nw))
-  }
-
   /** IVF-Flat approximate top-k (the scale path for weakly-clustered
     * embeddings, where sign-LSH single-probe recall collapses):
     *  1. pick `nlist` centroids deterministically (hash-sampled corpus rows;

@@ -23,10 +23,6 @@ object TextStats {
     round(length(regexp_replace(text, "[^.,;:!?]", "")).cast("double") /
       greatest(length(text), lit(1)), 6)
 
-  def upperRatio(text: Column): Column =
-    round(length(regexp_replace(text, "[^A-Z]", "")).cast("double") /
-      greatest(length(text), lit(1)), 6)
-
   val englishStopwords: Seq[String] = Seq(
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
     "that", "for", "on", "with", "as", "at", "by", "from", "this")

@@ -139,15 +139,4 @@ object Fake {
     */
   def payloadBase64(seed: Long, id: Column, bytes: Int = 500): Column =
     graft.functions.DeterministicBase64.deterministic_base64(lit(seed), id, bytes)
-
-  /** Prior built-ins-only derivation (sha512 blocks) — kept as the
-    * fallback path with zero custom-expression surface.
-    */
-  def payloadBase64Sha(seed: Long, id: Column, bytes: Int = 500): Column = {
-    val blocks = (bytes + 63) / 64 // sha512 = 64 bytes per block
-    val hexAll = concat_ws("", transform(
-      sequence(lit(0), lit(blocks - 1)),
-      i => sha2(concat_ws(":", lit(seed), id.cast("string"), i.cast("string")), 512)))
-    translate(base64(unhex(substring(hexAll, 1, bytes * 2))), "\r\n", "")
-  }
 }

@@ -37,15 +37,22 @@ object Declared {
     * r13 verdict's x108 adjudication.
     *
     * The probe must be the raw scan, not the chain: a scan-only plan
-    * has no exchanges, so `.rdd.getNumPartitions` is free, while under
-    * AQE the same call on a post-shuffle frame MATERIALIZES every
+    * has no exchanges, so its split count is free, while under AQE
+    * `.rdd.getNumPartitions` on a post-shuffle frame MATERIALIZES every
     * upstream stage just to report the runtime count (measured: it
-    * re-ran the whole x108 dedup chain as throwaway work).
+    * re-ran the whole x108 dedup chain as throwaway work). A file scan
+    * is asked for its input RDD's splits directly: `.rdd` would also
+    * generate and compile the scan's code and a row deserializer on
+    * every call, just to count.
     */
   private def spreadIfStarved(s: SparkSession, scanProbe: DataFrame,
                               df: DataFrame): DataFrame = {
     val p = s.sparkContext.defaultParallelism
-    if (scanProbe.rdd.getNumPartitions < p) df.repartition(p) else df
+    val splits = scanProbe.queryExecution.executedPlan.collectFirst {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.inputRDD.getNumPartitions
+    }.getOrElse(scanProbe.rdd.getNumPartitions)
+    if (splits < p) df.repartition(p) else df
   }
 
   /** The documents scan, spread when starved (r18): shared front for
@@ -8590,27 +8597,34 @@ object Declared {
         val docs = t(s, dir, "documents")
         val v1 = refreshV1(docs)
         val v2 = refreshV2(docs)
-        // independent legs until the compare join: overlap the eager
-        // refresh fold with the from-scratch rebuild (Par scaladoc)
+        // independent legs until the compare: overlap the eager refresh
+        // fold with the from-scratch rebuild (Par scaladoc)
         val (inc, full) = graft.ext.Par.both {
           graft.ext.Refresh.refresh(
             refreshStateArtifact(s, dir), v1, v2, seed = "ref-v2",
             numShards = 4,
-            spread = spreadIfStarved(s, docs, _))._2.localCheckpoint(true)
+            spread = spreadIfStarved(s, docs, _))._2.collect()
         } {
           graft.ext.Refresh.fullRebuild(v2, seed = "ref-v2", numShards = 4,
               spread = spreadIfStarved(s, docs, _))
-            .localCheckpoint(true)
+            .collect()
         }
-        full.as("f").join(inc.as("i"), Seq("shard"), "full_outer")
-          .select(col("shard"),
-            col("f.n_docs").as("n_docs"),
-            col("f.token_mass").as("token_mass"),
-            col("f.id_xor").as("id_xor"),
-            (col("f.n_docs") <=> col("i.n_docs") &&
-              col("f.token_mass") <=> col("i.token_mass") &&
-              col("f.id_xor") <=> col("i.id_xor")).as("incr_match"))
-          .orderBy("shard")
+        // each manifest has numShards rows — a parameter, not data — so
+        // the full-outer compare (null-safe per column: a shard missing
+        // on either side is a mismatch) runs on the driver and the
+        // result is a local relation
+        import org.apache.spark.sql.Row
+        import org.apache.spark.sql.types._
+        val man = Seq(full, inc).map(_.map(r => r.getAs[Long]("shard") -> r).toMap)
+        val cols = Seq("n_docs", "token_mass", "id_xor")
+        val rows = man.flatMap(_.keys).distinct.sorted.map { shard =>
+          val Seq(f, i) = man.map(m =>
+            cols.map(c => m.get(shard).map(_.getAs[Any](c)).orNull))
+          Row.fromSeq(shard +: f :+ (f == i))
+        }
+        s.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(
+          ("shard" +: cols).map(StructField(_, LongType)) :+
+            StructField("incr_match", BooleanType)))
       },
       Some(refreshV2ClustersCte + refreshManifestTailCte("") + """
         |SELECT shard, n_docs, token_mass, id_xor, true AS incr_match

@@ -71,11 +71,4 @@ object Pipelines {
         struct(lit("X-Country").as("key"), encode(Fake.country(seed, id), "UTF-8").as("value")),
         struct(lit("X-Animal").as("key"), encode(Fake.animal(seed, id), "UTF-8").as("value"))).as("headers"))
   }
-
-  /** Consumer-side counter stream: parse wire records, tag the cluster,
-    * and produce the A1 running-count aggregation (update mode).
-    */
-  def consumerCounts(wire: DataFrame, cluster: String = "default"): DataFrame =
-    StreamCounters.runningCounts(
-      RecordGen.parseWire(wire).withColumn("cluster", lit(cluster)))
 }

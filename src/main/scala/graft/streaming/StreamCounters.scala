@@ -96,16 +96,4 @@ object StreamCounters {
       .select(col("window.start").as("wstart"), col("cnt"))
 
   private val functions = org.apache.spark.sql.functions
-
-  /** Health rollup over the monitor output (A3/A4/A5/A6): the liveness
-    * datum — UP iff no partition is stale
-    * (reference: CounterProgressCheck.java:118-121).
-    */
-  def healthSummary(status: DataFrame): DataFrame =
-    status.groupBy("cluster").agg(
-      sum("count").as("total"),
-      min("lastActivityMs").as("earliestActivity"),
-      max("lastActivityMs").as("latestActivity"),
-      sum(when(col("stale"), 1L).otherwise(0L)).as("inactivePartitions"),
-      (sum(when(col("stale"), 1L).otherwise(0L)) === 0L).as("up"))
 }

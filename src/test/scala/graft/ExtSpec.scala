@@ -1477,17 +1477,22 @@ class ExtSpec extends SparkSuite {
     }
   }
 
+  /** The X23 spec carve — a different carve than the declared x85 row
+    * (no artifact reuse): adds (%7==2 docs absent from v1), removes
+    * (%11==3), changes (%5==1, appended marker) — all against the real
+    * fixture corpus so gates and near-dup pairs do real work.
+    */
+  private def x23Versions(): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val docs = Tables.load(spark, sf(), "documents")
+    (docs.filter(col("doc_id") % 7 =!= 2),
+      docs.filter(col("doc_id") % 11 =!= 3)
+        .withColumn("text", when(col("doc_id") % 5 === 1,
+          concat(col("text"), lit(" crafted spec marker"))).otherwise(col("text"))))
+  }
+
   test("X23 refresh: incremental state + manifest == from-scratch rebuild") {
     import graft.ext.Refresh
-    // a different carve than the declared x85 row (no artifact reuse):
-    // adds (%7==2 docs absent from v1), removes (%11==3), changes
-    // (%5==1, appended marker) — all against the real fixture corpus so
-    // gates and near-dup pairs do real work
-    val docs = Tables.load(spark, sf(), "documents")
-    val v1 = docs.filter(col("doc_id") % 7 =!= 2)
-    val v2 = docs.filter(col("doc_id") % 11 =!= 3)
-      .withColumn("text", when(col("doc_id") % 5 === 1,
-        concat(col("text"), lit(" crafted spec marker"))).otherwise(col("text")))
+    val (v1, v2) = x23Versions()
     val st1 = Refresh.buildState(v1)
     val (st2, inc) = Refresh.refresh(st1, v1, v2, seed = "spec", numShards = 4)
     val full = Refresh.fullRebuild(v2, seed = "spec", numShards = 4)
@@ -1502,6 +1507,45 @@ class ExtSpec extends SparkSuite {
       df.select(least(col("id_a"), col("id_b")), greatest(col("id_a"), col("id_b")))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairSet(st2.pairs) == pairSet(stFull.pairs), "refreshed pairs drifted")
+  }
+
+  test("X23 refresh footprint: a repeated refresh + rebuild stays within its job budget") {
+    import graft.ext.Refresh
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // the refresh is a standing job a driver repeats: once warm, one
+    // refresh plus the rebuild it is checked against runs at most this
+    // many Spark jobs (job counts are deterministic for fixed data and
+    // session, unlike wall time or codegen-cache hits)
+    val budget = 36
+    val (v1, v2) = x23Versions()
+    val st1 = Refresh.buildState(v1)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    def run() = (rows(Refresh.refresh(st1, v1, v2, seed = "spec", numShards = 4)._2),
+      rows(Refresh.fullRebuild(v2, seed = "spec", numShards = 4)))
+    run()
+    val sc = spark.sparkContext
+    val fence = "graft.spec.fence"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(fence) != null)) fenced.countDown()
+        else { jobs.incrementAndGet(); () }
+    }
+    sc.addSparkListener(listener)
+    val (inc, full) = try {
+      val out = run()
+      // listener events arrive asynchronously but in order: once a
+      // marked job run after the refresh is seen, every earlier job
+      // start has been delivered
+      sc.setLocalProperty(fence, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(fence, null)
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus never delivered the fence job")
+      out
+    } finally sc.removeSparkListener(listener)
+    assert(inc == full, "refresh manifest != rebuild manifest")
+    assert(jobs.get <= budget, s"refresh + rebuild ran ${jobs.get} jobs, budget $budget")
   }
 
   test("X22b packed sequences: conservation, capacity-boundary starts, no doc splits") {

@@ -147,12 +147,12 @@ class PropertySpec extends SparkSuite {
         val got = Dedup.dupClusters(edges.toDF("id_a", "id_b")).collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(got == expect, s"n=$n edges=$edges (driver path)")
-        spark.conf.set(Dedup.CcDriverEdgeRowsKey, "0")
+        spark.conf.set(Dedup.CcDriverEdgeBytesKey, "0")
         try {
           val gotIter = Dedup.dupClusters(edges.toDF("id_a", "id_b")).collect()
             .map(r => r.getLong(0) -> r.getLong(1)).toMap
           assert(gotIter == expect, s"n=$n edges=$edges (iterative path)")
-        } finally spark.conf.unset(Dedup.CcDriverEdgeRowsKey)
+        } finally spark.conf.unset(Dedup.CcDriverEdgeBytesKey)
         // string ids: driver byte-wise UTF-8 min must match Spark's
         // UTF8String binary min (same components, labels = min string)
         val sEdges = edges.map { case (a, b) => (f"d$a%03d", f"d$b%03d") }
@@ -162,6 +162,26 @@ class PropertySpec extends SparkSuite {
         assert(gotS == sExpect, s"n=$n edges=$edges (string driver path)")
       }
     }
+  }
+
+  test("dupClusters gates its driver path by id bytes, not rows") {
+    // a 40-node star: 39 pairs, 78 ids. With the gate at 78 ids × 8
+    // bytes — exactly what a 78-id row gate admitted — long ids fit and
+    // are labeled on the driver, while the same graph over 24-byte
+    // string ids passes that row gate but not the byte gate, and runs
+    // the distributed loop; both label every node with the hub
+    val star = (1 until 40).map(i => (0L, i.toLong))
+    def wide(i: Long) = f"document-identifier-$i%05d"
+    spark.conf.set(Dedup.CcDriverEdgeBytesKey, (2 * star.size * 8).toString)
+    try {
+      val longs = Dedup.dupClusters(star.toDF("id_a", "id_b"))
+      assert(longs.isLocal, "long ids under the byte gate: driver path expected")
+      assert(longs.collect().map(_.getLong(1)).toSet == Set(0L))
+      val strings = Dedup.dupClusters(
+        star.map { case (a, b) => (wide(a), wide(b)) }.toDF("id_a", "id_b"))
+      assert(!strings.isLocal, "wide string ids over the byte gate: loop expected")
+      assert(strings.collect().map(_.getString(1)).toSet == Set(wide(0)))
+    } finally spark.conf.unset(Dedup.CcDriverEdgeBytesKey)
   }
 
   // --- binary-parser fuzz (r7, per the r5 verdict): media_probe's
