@@ -1,8 +1,13 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import scala.util.control.NonFatal
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/check_oracle.py`).
+  * A query that throws is reported as `[verify] <name> failed: ...` and
+  * the dump carries on; once oracle_sql.json is written the run prints
+  * `[verify] FAILED: <names>` and exits 1.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -23,12 +28,14 @@ object Verify {
     // dumps only the named queries; unset = the full declared catalog
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.forall(_.contains(name)))
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          failed += name
         }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -47,5 +54,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] FAILED: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -7,7 +7,9 @@ package graft.ext
   *
   * The refresh-duality queries (x85/x112/x114/x121/x131/x136/x137) run
   * an INCREMENTAL leg and a FROM-SCRATCH REBUILD leg that are
-  * independent until the final compare join, but each leg's
+  * independent until the final compare — the driver compare of the two
+  * collected key-sized readouts (x85/x112/x114/x121/x131/x137), or a
+  * distributed join of per-document rows (x136) — but each leg's
   * construction fires eager materializations (localCheckpoints, gate
   * counts, iterative cluster rounds) — built sequentially, the query's
   * wall is refresh + rebuild while most cores idle through each leg's

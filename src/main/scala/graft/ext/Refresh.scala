@@ -28,10 +28,10 @@ import org.apache.spark.sql.functions._
   * deterministic per-document function of its text, and candidate
   * verification is exact Jaccard — so the v2 pair set decomposes
   * disjointly into (old×old = standing pairs minus those touching a
-  * removed/changed id) ∪ (new×old = [[Dedup.crossDupPairsPrebuilt]]
-  * against the standing index minus touched rows) ∪ (new×new =
-  * [[Dedup.minhashLshPairs]] over the new batch), each computed with
-  * the SAME banding parameters. Gates, clusters, election and manifest
+  * removed/changed id) ∪ (new×old = [[Dedup.crossPairsOfSig]] against
+  * the standing index minus touched rows) ∪ (new×new =
+  * [[Dedup.lshPairsOfSig]] over the new batch), each computed with the
+  * SAME banding parameters ([[fold]]). Gates, clusters, election and manifest
   * are pure functions of (meta, pairs), so the refresh output is
   * bit-identical to a from-scratch rebuild — asserted by the declared
   * x85 row (Spark compares both sides; DuckDB independently replays the
@@ -45,7 +45,8 @@ import org.apache.spark.sql.functions._
   * broadcast the (delta-sized) touched id list. Clusters/election/
   * manifest recompute over pair-list-sized frames — metadata, not
   * corpus. All four state frames persist via [[Artifacts.saveIndex]]
-  * (the "build once per corpus version, probe many times" contract).
+  * (the "build once per corpus version, probe many times" contract;
+  * [[State.persisted]]).
   *
   * Codegen budget: a refresh is a standing job a long-lived driver
   * repeats, so its generated code should compile once. Spark keeps
@@ -74,7 +75,24 @@ object Refresh {
     * probe side), and the verified near-dup pair list.
     */
   final case class State(meta: DataFrame, bandIdx: DataFrame,
-                         shingles: DataFrame, pairs: DataFrame)
+                         shingles: DataFrame, pairs: DataFrame) {
+    /** The cross-job hand-off: every frame written under `base` and
+      * read back. The band index is laid out by `band`, its probe key
+      * (the [[Dedup.minhashBandIndex]] layout).
+      */
+    def persisted(base: String): State =
+      State(saved(base, "meta", meta), saved(base, "band", bandIdx, "band"),
+        saved(base, "shingles", shingles), saved(base, "pairs", pairs))
+  }
+
+  /** Write `df` through [[Artifacts.saveIndex]] to `base/name` and return
+    * the reloaded frame — each state's `persisted` is built from this.
+    */
+  private def saved(base: String, name: String, df: DataFrame,
+                    layoutCols: String*): DataFrame = {
+    Artifacts.saveIndex(df, s"$base/$name", layoutCols)
+    Artifacts.loadIndex(df.sparkSession, s"$base/$name")
+  }
 
   /** Banding/verification parameters — must be identical across the
     * state build, the refresh and any rebuild being compared.
@@ -89,19 +107,6 @@ object Refresh {
   final case class Params(k: Int = 3, threshold: Double = 0.2,
                           bands: Int = 16, rowsPerBand: Int = 4,
                           portableSig: Boolean = false)
-
-  /** Broadcast-hint an id-list join side only when it is verifiably
-    * small ([[Hints.hintIfSlim]] — shared with the Declared assembly
-    * tails). The refresh id frames are usually delta-sized, but the
-    * [[ccnetRefresh]] scaladoc's boilerplate-line case makes the
-    * affected set CORPUS-sized — an unconditional hint would then push
-    * a corpus-sized build through the driver (and into the 8 GB
-    * broadcast hard cap). Callers pass eagerly localCheckpoint'ed
-    * frames, so the count is a cached-partition scan, not a replay;
-    * above the bound the join is left unhinted and AQE picks the
-    * strategy from runtime stats.
-    */
-  private def hintIfSlim(ids: DataFrame): DataFrame = Hints.hintIfSlim(ids)
 
   /** P's per-document derivation, the ONE corpus-scale pass of both
     * paths: the curation gates, then per gated document
@@ -118,12 +123,17 @@ object Refresh {
     */
   private def perDoc(corpus: DataFrame, p: Params,
                      spread: DataFrame => DataFrame): DataFrame =
-    spread(Curation.standardGates(corpus))
+    withSig(spread(Curation.standardGates(corpus))
       .select(col("doc_id"), col("quality"),
         TextStats.tokenCount(col("text")).cast("long").as("n_toks"),
-        Dedup.shingles(col("text"), p.k).as("sh"))
-      .withColumn("sig", Dedup.signatureOf(col("sh"),
-        p.bands * p.rowsPerBand, p.portableSig))
+        Dedup.shingles(col("text"), p.k).as("sh")), p)
+
+  /** A per-document frame's MinHash signature, appended as `sig` from
+    * its shingle set `sh`.
+    */
+  private def withSig(docs: DataFrame, p: Params): DataFrame =
+    docs.withColumn("sig", Dedup.signatureOf(col("sh"),
+      p.bands * p.rowsPerBand, p.portableSig))
 
   /** The rows of a [[perDoc]] frame that take part in banding: a
     * document without a shingle has no signature to band.
@@ -131,13 +141,15 @@ object Refresh {
   private def hashed(docs: DataFrame): DataFrame =
     docs.filter(size(col("sh")) > 0)
 
-  /** The four state frames of a MATERIALIZED [[perDoc]] frame — meta,
-    * band index, shingle table and the within-frame pair list — lazy
-    * projections that read it (the pair list through four branches).
+  /** The four state frames of a MATERIALIZED per-document frame
+    * ([[perDoc]], [[asmPerDoc]]) — meta (every column but `sh` and
+    * `sig`), band index, shingle table and the within-frame pair list —
+    * lazy projections that read it (the pair list through four
+    * branches).
     */
   private def stateOf(docs: DataFrame, p: Params): State = {
     val h = hashed(docs)
-    State(docs.select("doc_id", "quality", "n_toks"),
+    State(docs.drop("sh", "sig"),
       Dedup.bandedFrame(h, p.bands, p.rowsPerBand),
       h.select("doc_id", "sh"),
       Dedup.lshPairsOfSig(h, p.threshold, p.bands, p.rowsPerBand)
@@ -153,10 +165,9 @@ object Refresh {
     * materialization: the cleanedDelta race note), and the four
     * returned frames are lazy projections of it, so every consumer
     * reads gated, hashed rows and the corpus is gated once. The
-    * deployment contract is still to write all four through
-    * [[Artifacts.saveIndex]] and hand [[refresh]] the reloaded frames
-    * (what the declared x85 does): the checkpoint lives only as long
-    * as this session.
+    * deployment contract is still to hand [[refresh]] the
+    * [[State.persisted]] copy (what the declared x85 does): the
+    * checkpoint lives only as long as this session.
     */
   def buildState(corpus: DataFrame, p: Params = Params(),
                  spread: DataFrame => DataFrame = identity): State =
@@ -188,8 +199,8 @@ object Refresh {
       .localCheckpoint(false)
 
   /** The manifest tail from a PRECOMPUTED cluster frame — what the
-    * delta-bound refresh path feeds ([[refreshClusters]]' output, or
-    * the reloaded standing map): election → survivor drop → manifest
+    * delta-bound refresh path feeds ([[incrementalClusters]]' output,
+    * or the reloaded standing map): election → survivor drop → manifest
     * run over cluster-volume frames, with the expensive iterative
     * cluster stage priced where it was actually paid. `manifestOf` is
     * this with a full from-scratch [[Dedup.dupClusters]] in front —
@@ -236,9 +247,9 @@ object Refresh {
   /** The refresh's pair-level delta, exposed alongside the updated
     * state: `touched` (removed/changed ids — the retired side) and
     * `addedPairs` (new×old ∪ new×new — the added side). The cluster
-    * stage's incremental form ([[refreshClusters]]) is driven by
-    * exactly these two frames; sharing one construction with
-    * [[refresh]] keeps the two paths incapable of drifting.
+    * stage's incremental form ([[incrementalClusters]]) is driven by
+    * exactly these two frames; [[fold]] builds all three, so the
+    * refresh paths cannot drift.
     */
   final case class Delta(state2: State, touched: DataFrame,
                          addedPairs: DataFrame)
@@ -250,14 +261,13 @@ object Refresh {
     // derive from it, and without the pin each derivation replays the
     // corpus-sized hash-compare join (two full passes over both
     // corpora — measured r18, guide §1.2's "don't compute twice")
-    // d EAGER (r19): the batched count below reads it from two
+    // d EAGER (r19): the batched count in fold reads it from two
     // concurrent branches, and a lazy d first-read from both would
     // duplicate the corpus-sized hash-compare join (the cleanedDelta
     // race note)
     val d = CorpusDiff.diff(oldCorpus, newCorpus, "doc_id", "text")
       .select("doc_id", "status").localCheckpoint(true)
-    // NOT NULL (the diff drops null ids): every retire join below then
-    // broadcasts the bare checkpoint scan, one plan for all of them
+    // NOT NULL (the diff drops null ids), as fold requires
     val touched = d.filter(col("status").isin("removed", "changed") &&
         col("doc_id").isNotNull)
       .select("doc_id").localCheckpoint(false)
@@ -265,10 +275,22 @@ object Refresh {
       .select("doc_id")
     val newDocs = newCorpus.join(freshIds, Seq("doc_id"), "left_semi")
     // the delta's per-document frame — the rebuild's derivation, run on
-    // the added/changed documents only; LAZY, materialized by the
-    // batched count below in the same job as the touched list
-    val fresh = perDoc(newDocs, p, spread).localCheckpoint(false)
+    // the added/changed documents only
+    fold(state, touched, perDoc(newDocs, p, spread).localCheckpoint(false), p)
+  }
 
+  /** The dedup fold every refresh of the family shares (x85 through
+    * [[delta]], x114/x131/x137 through [[asmRefresh]]): retire
+    * `touched` from every state frame, derive the fresh documents'
+    * frames from their per-document frame `fresh` ([[stateOf]]), probe
+    * the retired index for their cross pairs, and append.
+    *
+    * `touched` is a LAZY checkpoint of NOT NULL `doc_id`s and `fresh` a
+    * LAZY checkpoint of a per-document frame; ONE job gates the first
+    * and materializes the second, each read through one branch.
+    */
+  private def fold(state: State, touched: DataFrame, fresh: DataFrame,
+                   p: Params): Delta = {
     // touched is delta-sized on a healthy refresh but corpus-sized on a
     // mass retirement (a full re-crawl replacing most rows) — gate the
     // hint once on the checkpointed list, reuse the decision per column
@@ -292,8 +314,9 @@ object Refresh {
       .select(least(col("id_new"), col("id_old")).as("id_a"),
         greatest(col("id_new"), col("id_old")).as("id_b"))
     // LAZY: the first action over the pair list (the cluster stage's
-    // bounded collect) reads it through one branch and materializes it;
-    // Delta consumers read the cache afterwards
+    // bounded collect, or incrementalClusters' seed gate) reads it
+    // through one branch and materializes it; later readers hit the
+    // cache
     val added = st.pairs.unionByName(cross).localCheckpoint(false)
     // old×old / new×old / new×new are disjoint by construction — no
     // dedup needed, and together they are exactly P(v2)'s pair set
@@ -312,9 +335,10 @@ object Refresh {
     *
     * `standing` is v1's cluster map ([[Dedup.dupClusters]] over the
     * standing pair list — itself refresh state, persisted like the
-    * other four frames); `pairs2` the refreshed pair set; `seeds` the
-    * doc ids whose incidence changed (endpoints of added pairs +
-    * removed/changed ids — every retired pair touches one by
+    * other four frames); `pairs2` the refreshed pair set; `touched` and
+    * `addedPairs` the refresh's [[Delta]] sides. The seeds are the doc
+    * ids whose incidence changed ([[seedsOf]]: endpoints of added pairs
+    * + removed/changed ids — every retired pair touches one by
     * construction, which marks the neighbor's cluster through the
     * shared cluster id).
     *
@@ -339,11 +363,11 @@ object Refresh {
     * itself pays.
     */
   def incrementalClusters(standing: DataFrame, pairs2: DataFrame,
-                          seeds: DataFrame): DataFrame = {
+                          touched: DataFrame, addedPairs: DataFrame): DataFrame = {
     // delta-component-sized on a healthy refresh, but a delta touching
     // a giant component (or a mass retirement) blows these up to
     // corpus scale — every hint is size-gated on its checkpointed list
-    val seedIds = seeds.select("doc_id").distinct().localCheckpoint(false)
+    val seedIds = seedsOf(touched, addedPairs).localCheckpoint(false)
     val touchedClusters = standing
       .join(Hints.hintIfSlim(seedIds), Seq("doc_id"), "left_semi")
       .select("cluster_id").distinct().localCheckpoint(false)
@@ -361,29 +385,16 @@ object Refresh {
       Dedup.dupClusters(sub).select("doc_id", "cluster_id"))
   }
 
-  /** The cluster stage of a refresh, both state and result: derives the
-    * seed set from [[Delta]] and hands [[incrementalClusters]] the
-    * standing map. Returns v2's cluster frame — bit-identical to
-    * `Dedup.dupClusters(delta.state2.pairs)` (the x87 row asserts it
-    * in-query; DuckDB replays the full recompute independently).
+  /** The doc ids whose pair incidence a refresh changed: both endpoints
+    * of every added pair plus the touched ids, distinct. `addedPairs` is
+    * read through ONE branch (both endpoints from one `explode`), so a
+    * lazily checkpointed pair list is first read — and materialized —
+    * once.
     */
-  def refreshClusters(standing: DataFrame, d: Delta): DataFrame = {
-    val seeds = d.addedPairs.select(col("id_a").as("doc_id"))
-      .unionByName(d.addedPairs.select(col("id_b").as("doc_id")))
-      .unionByName(d.touched)
-    incrementalClusters(standing, d.state2.pairs, seeds)
-  }
+  private[graft] def seedsOf(touched: DataFrame, addedPairs: DataFrame): DataFrame =
+    addedPairs.select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
+      .unionByName(touched.select("doc_id")).distinct()
 
-  /** X23c (r12): the manifest DELTA a refresh consumer polls for —
-    * per shard, old vs new checksums plus a status (`unchanged` /
-    * `changed` / `new` / `retired`), so a downstream trainer re-pulls
-    * ONLY the shards whose checksums moved instead of diffing (or
-    * re-reading) the full export. Both manifests must share the seed
-    * (same shard routing) for per-shard comparison to be meaningful —
-    * which [[refresh]]-produced manifests do by construction. One
-    * numShards-row full-outer join; shards absent on one side surface
-    * as `new` / `retired` rather than vanishing.
-    */
   // ------------------------------------------------------------ X23d
 
   /** X23d (r14): incremental CCNet-HEAD refresh under a FROZEN
@@ -429,7 +440,12 @@ object Refresh {
     * too, not an incremental penalty.
     */
   final case class CcnetState(lf: DataFrame, hist: DataFrame,
-                              scored: DataFrame)
+                              scored: DataFrame) {
+    /** The cross-job hand-off ([[State.persisted]]). */
+    def persisted(base: String): CcnetState =
+      CcnetState(saved(base, "lf", lf), saved(base, "hist", hist),
+        saved(base, "scored", scored))
+  }
 
   /** The chain's cleaned view for a set of documents against a given
     * drop frame: (doc_id, clean_text, lang_pred), 'und' dropped —
@@ -551,13 +567,13 @@ object Refresh {
     val rescoreIdsRaw = lf2.join(affectedLh, Seq("lh"), "left_semi")
       .select("doc_id").unionByName(freshIds).distinct()
       .localCheckpoint(false) // usually delta-sized, corpus-sized worst case
-    val rescoreIds = hintIfSlim(rescoreIdsRaw)
+    val rescoreIds = Hints.hintIfSlim(rescoreIdsRaw)
     val rescoreDocs = newCorpus.join(rescoreIds, Seq("doc_id"), "left_semi")
     // delta-sized text; checkpointed because the composed consumer reads
     // it twice (scores below + the tail's fresh corpus slice). `spread`
     // so the frozen-LM scoring pass over it doesn't starve on the
     // AQE-coalesced join output (identity at cluster scale).
-    // EAGER deliberately: the composed consumer (freshCk) reads it
+    // EAGER deliberately: the composed consumer ([[keptSlice]]) reads it
     // through TWO join branches of one job — a lazy checkpoint's first
     // read from concurrent branches duplicates the whole extraction
     // subtree (getOrElseUpdate does not cross-task lock; measured as a
@@ -709,19 +725,19 @@ object Refresh {
     *  - TAIL (near-dup clusters → survivor election → curation gates →
     *    decontam → mixture → budget fill → epoch shuffle → manifest):
     *    every per-document quantity is a pure function of the KEPT
-    *    cleaned text + frozen benchmark set, so it lives in one SLIM
-    *    state frame [[AsmState.docMeta]] (id, src, n_toks, quality,
-    *    gate_pass, contam) next to the x85-shaped dedup state (band
-    *    index, shingles, verified pairs, standing cluster map). A
-    *    refresh retires `touched ∪ rescoreIds` from every frame,
-    *    computes the per-doc rows for the fresh kept slice only (its
-    *    text comes from the head's `cleanedDelta` — corpus text is
-    *    never tail state), finds cross/within pairs against the retired
-    *    index ([[Dedup.crossDupPairsPrebuilt]]), and re-labels ONLY the
-    *    delta-touched cluster region ([[incrementalClusters]]). The
-    *    global stages (election, rates, fill, manifest) recompute over
-    *    metadata-sized frames — [[asmManifestFrom]], shared verbatim by
-    *    the refresh and rebuild paths so they cannot drift.
+    *    cleaned text + frozen benchmark set, so the tail state is x85's
+    *    [[State]] over one per-document frame ([[asmPerDoc]]: meta =
+    *    (id, src, n_toks, quality, gate_pass, contam), band index,
+    *    shingles, verified pairs) plus the standing cluster map. A
+    *    refresh runs x85's [[fold]]: it retires `touched ∪ rescoreIds`
+    *    from every frame, derives the per-document frame of the fresh
+    *    kept slice only (its text comes from the head's `cleanedDelta`
+    *    — corpus text is never tail state), finds its cross/within pairs
+    *    against the retired index, and re-labels ONLY the delta-touched
+    *    cluster region ([[incrementalClusters]]). The global stages
+    *    (election, rates, fill, manifest) recompute over metadata-sized
+    *    frames — [[asmManifestFrom]], shared verbatim by the refresh and
+    *    rebuild paths so they cannot drift.
     *
     * EXACTNESS (refresh == rebuild, the declared x114 claim): the
     * retired set `touched ∪ rescoreIds` covers every document whose
@@ -729,11 +745,15 @@ object Refresh {
     * exactness argument; src is a function of the merged id), the fresh
     * side re-derives exactly the current kept members of that set from
     * v2 text, and the pair/cluster decomposition is x85's. Everything
-    * downstream is a pure function of (docMeta, clusters).
+    * downstream is a pure function of (meta, clusters).
     */
-  final case class AsmState(head: CcnetState, docMeta: DataFrame,
-                            bandIdx: DataFrame, shingles: DataFrame,
-                            pairs: DataFrame, clusters: DataFrame)
+  final case class AsmState(head: CcnetState, dedup: State,
+                            clusters: DataFrame) {
+    /** The cross-job hand-off ([[State.persisted]]). */
+    def persisted(base: String): AsmState =
+      AsmState(head.persisted(base), dedup.persisted(base),
+        saved(base, "clusters", clusters))
+  }
 
   /** The kept ids of a scored frame under the FROZEN per-language tail
     * thresholds (missing language fails closed — the x112 rule).
@@ -743,37 +763,56 @@ object Refresh {
     scored.filter(t.isNotNull && col("lp") >= t).select("doc_id")
   }
 
-  /** The slim per-document tail state of a kept cleaned corpus slice
-    * `ck` (doc_id, text = clean text, src): token mass, the shared
-    * quality score (election rank AND fill rank — [[Curation
-    * .standardGates]] computes the same [[TextStats.qualityScore]]),
-    * gate membership (the REAL gate code runs on the slice, not a
-    * re-derived predicate), and benchmark contamination (per-doc
-    * overlap vs the frozen benchmark shingle set — computed for every
-    * kept doc and flag-filtered later, a superset of x110's
-    * gated-only probe with the identical final drop set).
+  /** The per-document frame of a kept cleaned corpus slice `ck`
+    * (doc_id, text = clean text, src): token mass, the shared quality
+    * score (election rank AND fill rank — [[Curation.standardGates]]
+    * computes the same [[TextStats.qualityScore]]), gate membership (the
+    * REAL gate code runs on the slice, not a re-derived predicate),
+    * benchmark contamination (per-doc overlap vs the frozen benchmark
+    * shingle set — computed for every kept doc and flag-filtered later,
+    * a superset of x110's gated-only probe with the identical final drop
+    * set), and the k-shingle set and MinHash signature [[stateOf]] bands.
+    * Reads `ck` through three branches: pass a materialized slice.
     */
-  def asmDocMeta(ck: DataFrame, bench: DataFrame): DataFrame = {
+  private def asmPerDoc(ck: DataFrame, bench: DataFrame, p: Params): DataFrame = {
     val gated = Curation.standardGates(ck)
       .select(col("doc_id"), lit(true).as("gate_pass"))
     val contam = Curation.contaminationOverlap(ck, bench, "text", "doc_id",
       k = 3, minOverlap = 5).select(col("doc_id"), lit(true).as("contam"))
-    ck.select(col("doc_id"), col("src"),
+    withSig(ck.select(col("doc_id"), col("src"),
         size(Dedup.tokens(coalesce(col("text"), lit(""))))
           .cast("long").as("n_toks"),
-        TextStats.qualityScore(col("text")).as("quality"))
+        TextStats.qualityScore(col("text")).as("quality"),
+        Dedup.shingles(col("text"), p.k).as("sh"))
       .join(gated, Seq("doc_id"), "left")
       .join(contam, Seq("doc_id"), "left")
       .select(col("doc_id"), col("src"), col("n_toks"), col("quality"),
         coalesce(col("gate_pass"), lit(false)).as("gate_pass"),
-        coalesce(col("contam"), lit(false)).as("contam"))
+        coalesce(col("contam"), lit(false)).as("contam"), col("sh")), p)
   }
+
+  /** The kept cleaned slice (doc_id, text = clean text, src) of a
+    * cleaned view under the frozen thresholds, spread and EAGERLY
+    * checkpointed: [[asmPerDoc]] reads it through three branches. The
+    * spread (r19) keeps the shingle/minhash pass off the 1-2 partitions
+    * AQE coalesces the join output to on a fixture-sized corpus
+    * (measured: 4x 3.9 s 2-task jobs in x131's rebuild leg); identity
+    * at cluster scale.
+    */
+  private def keptSlice(cleaned: DataFrame, scored: DataFrame,
+                        merged: DataFrame, thr: Map[String, Double],
+                        spread: DataFrame => DataFrame): DataFrame =
+    spread(cleaned
+      .join(keptUnderThr(scored, thr), Seq("doc_id"), "left_semi")
+      .join(merged.select("doc_id", "src"), Seq("doc_id"))
+      .select(col("doc_id"), col("clean_text").as("text"), col("src")))
+      .localCheckpoint(true)
 
   /** Build the standing assembly state from scratch (corpus v1 or a
     * re-baseline: the LM + thresholds are retrained at the same
     * moment). `merged` is the precedence-merged corpus (doc_id, text,
     * src); `bench` the frozen decontamination benchmark. Deployment
-    * persists every frame via [[Artifacts.saveIndex]] (what the
+    * hands the refresh the [[AsmState.persisted]] copy (what the
     * declared x114 does).
     */
   def asmBuildState(merged: DataFrame, linesCol: org.apache.spark.sql.Column,
@@ -783,37 +822,24 @@ object Refresh {
                     spread: DataFrame => DataFrame = identity): AsmState = {
     val lf = Dedup.lineFrame(merged, "doc_id", linesCol)
     val hist = Dedup.lineHistogram(lf)
-    // `spread` (r18): scoring + the kept corpus's four map-heavy
-    // derivations would otherwise serialize on a single-split fixture
+    // `spread` (r18): scoring + the kept corpus's per-document
+    // derivation would otherwise serialize on a single-split fixture
     // (identity at cluster scale — the callers' spreadIfStarved guard)
     val cleaned = spread(ccnetCleanedWith(merged, linesCol,
       Dedup.lineDropsAgainst(lf, hist, minDocs)))
     val scored = ccnetScoredOf(cleaned, lm)
-    // `spread` again on the kept corpus (r19): the join output above is
-    // AQE-coalesced to 1-2 post-shuffle partitions on a fixture-sized
-    // corpus, so without it the four map-heavy consumers below each ran
-    // their shingle/minhash pass on 2 starved tasks (measured: 4x 3.9 s
-    // 2-task jobs in x131's rebuild leg)
-    val ck = spread(cleaned
-      .join(keptUnderThr(scored, thr), Seq("doc_id"), "left_semi")
-      .join(merged.select("doc_id", "src"), Seq("doc_id"))
-      .select(col("doc_id"), col("clean_text").as("text"), col("src")))
-      .localCheckpoint(true) // consumed by meta, band, shingles, pairs
-    val pairs = Dedup.minhashLshPairs(ck, "text", "doc_id", p.k,
-      p.threshold, p.bands, p.rowsPerBand, portable = p.portableSig)
-      .select("id_a", "id_b")
-    AsmState(CcnetState(lf, hist, scored), asmDocMeta(ck, bench),
-      Dedup.minhashBandIndex(ck, "text", "doc_id", p.k, p.bands,
-        p.rowsPerBand, portable = p.portableSig),
-      Dedup.shingleFrame(ck, "text", "doc_id", p.k),
-      pairs, Dedup.dupClusters(pairs))
+    // EAGER (the buildState rule): the pair list's band self-join and
+    // verification read it through concurrent branches
+    val dedup = stateOf(asmPerDoc(keptSlice(cleaned, scored, merged, thr,
+      spread), bench, p).localCheckpoint(true), p)
+    AsmState(CcnetState(lf, hist, scored), dedup, Dedup.dupClusters(dedup.pairs))
   }
 
   /** The incremental path: refresh the head via [[ccnetRefreshDelta]],
-    * retire `touched ∪ rescoreIds` from every tail frame, insert the
-    * fresh kept slice (text from the head's `cleanedDelta`), find its
-    * cross/within pairs against the retired index, and re-label only
-    * the touched cluster region.
+    * then [[fold]] the tail: retire `touched ∪ rescoreIds`, insert the
+    * per-document frame of the fresh kept slice (text from the head's
+    * `cleanedDelta`), find its cross/within pairs against the retired
+    * index, and re-label only the touched cluster region.
     */
   def asmRefresh(st: AsmState, mergedOld: DataFrame, mergedNew: DataFrame,
                  linesCol: org.apache.spark.sql.Column, lm: TextStats.RefLm,
@@ -822,72 +848,34 @@ object Refresh {
                  spread: DataFrame => DataFrame = identity): AsmState = {
     val hd = ccnetRefreshDelta(st.head, mergedOld, mergedNew, linesCol,
       lm, minDocs, spread)
-    val tailTouched = hd.touched.unionByName(hd.rescoreIds).distinct()
-      .localCheckpoint(false)
-    // consumed by meta, band, shingles, 2 pair legs; LAZY + explicit
-    // count so its materialization overlaps the retire-list gate count
-    // on a second driver thread (r19 — independent actions). `spread`
-    // for the same reason as the rebuild's kept corpus: the join output
-    // coalesces to 1-2 partitions at fixture scale and the pair legs'
-    // shingle/minhash passes starve (measured: 2x 3.7 s 2-task jobs in
-    // x131's refresh leg); identity at cluster scale.
-    val freshCk = spread(hd.cleanedDelta
-      .join(keptUnderThr(hd.scoredDelta, thr), Seq("doc_id"), "left_semi")
-      .join(mergedNew.select("doc_id", "src"), Seq("doc_id"))
-      .select(col("doc_id"), col("clean_text").as("text"), col("src")))
-      .localCheckpoint(false)
-    val (tailTouchedH, _) = Par.both(hintIfSlim(tailTouched))(freshCk.count())
-    def retire(df: DataFrame, cols: String*): DataFrame =
-      cols.foldLeft(df) { (acc, c) =>
-        acc.join(tailTouchedH.withColumnRenamed("doc_id", c), Seq(c),
-          "left_anti")
-      }
-    val meta2 = retire(st.docMeta, "doc_id")
-      .unionByName(asmDocMeta(freshCk, bench))
-    val band2 = retire(st.bandIdx, "doc_id")
-      .unionByName(Dedup.minhashBandIndex(freshCk, "text", "doc_id",
-        p.k, p.bands, p.rowsPerBand, portable = p.portableSig))
-    val sh2 = retire(st.shingles, "doc_id")
-      .unionByName(Dedup.shingleFrame(freshCk, "text", "doc_id", p.k))
-    val cross = Dedup.crossDupPairsPrebuilt(freshCk,
-        retire(st.bandIdx, "doc_id"), retire(st.shingles, "doc_id"),
-        "text", "doc_id", p.k, p.threshold, p.bands, p.rowsPerBand,
-        portable = p.portableSig)
-      .select(least(col("id_new"), col("id_old")).as("id_a"),
-        greatest(col("id_new"), col("id_old")).as("id_b"))
-    val within = Dedup.minhashLshPairs(freshCk, "text", "doc_id",
-        p.k, p.threshold, p.bands, p.rowsPerBand,
-        portable = p.portableSig)
-      .select("id_a", "id_b")
-    // EAGER deliberately: `seeds` reads it through two concurrent union
-    // branches (the cleanedDelta race note)
-    val added = cross.unionByName(within).localCheckpoint(true)
-    val pairs2 = retire(st.pairs, "id_a", "id_b").unionByName(added)
-    val seeds = added.select(col("id_a").as("doc_id"))
-      .unionByName(added.select(col("id_b").as("doc_id")))
-      .unionByName(tailTouched)
-    AsmState(hd.state2, meta2, band2, sh2, pairs2,
-      incrementalClusters(st.clusters, pairs2, seeds))
+    // NOT NULL, as fold requires (a null id retires nothing either way)
+    val touched = hd.touched.unionByName(hd.rescoreIds)
+      .filter(col("doc_id").isNotNull).distinct().localCheckpoint(false)
+    val fresh = asmPerDoc(keptSlice(hd.cleanedDelta, hd.scoredDelta,
+      mergedNew, thr, spread), bench, p).localCheckpoint(false)
+    val d = fold(st.dedup, touched, fresh, p)
+    AsmState(hd.state2, d.state2,
+      incrementalClusters(st.clusters, d.state2.pairs, touched, d.addedPairs))
   }
 
   /** Stages 5–11 from the slim state — survivor election over the
     * standing cluster map, gate + decontamination flags applied,
     * mixture recipe over token sums, greedy budget fill, epoch shuffle
-    * and export manifest — a pure function of (docMeta, clusters)
+    * and export manifest — a pure function of (meta, clusters)
     * shared VERBATIM by the refresh and rebuild paths (the
     * [[manifestOf]] discipline). Constants are x110's (the chain being
     * refreshed): mixture (0.5/0.3/0.2, 8000 tokens), fill 5000, seed
     * "asm-e1", 4 shards.
     */
-  def asmManifestFrom(docMeta: DataFrame, clusters: DataFrame): DataFrame = {
+  def asmManifestFrom(meta: DataFrame, clusters: DataFrame): DataFrame = {
     val drop = clusters.join(
-        Dedup.clusterSurvivors(clusters, docMeta, "doc_id", col("quality"))
+        Dedup.clusterSurvivors(clusters, meta, "doc_id", col("quality"))
           .select(col("survivor_id").as("doc_id")),
         Seq("doc_id"), "left_anti")
       .select("doc_id")
     // same dedup-heavy-corpus hazard as [[manifestFromClusters]]: gate
     // the drop-side hint, materializing the election exactly once
-    val standing = docMeta.join(Hints.checkpointAndHint(drop),
+    val standing = meta.join(Hints.checkpointAndHint(drop),
         Seq("doc_id"), "left_anti")
       .filter(col("gate_pass") && !col("contam"))
     val mixed = Curation.mixtureSampleBy(standing, "src", col("n_toks"),
@@ -905,6 +893,16 @@ object Refresh {
         col("id_xor"), col("lead_doc"))
   }
 
+  /** X23c (r12): the manifest DELTA a refresh consumer polls for —
+    * per shard, old vs new checksums plus a status (`unchanged` /
+    * `changed` / `new` / `retired`), so a downstream trainer re-pulls
+    * ONLY the shards whose checksums moved instead of diffing (or
+    * re-reading) the full export. Both manifests must share the seed
+    * (same shard routing) for per-shard comparison to be meaningful —
+    * which [[refresh]]-produced manifests do by construction. One
+    * numShards-row full-outer join; shards absent on one side surface
+    * as `new` / `retired` rather than vanishing.
+    */
   def manifestDelta(oldMan: DataFrame, newMan: DataFrame): DataFrame =
     oldMan.as("o").join(newMan.as("n"), Seq("shard"), "full_outer")
       .select(col("shard"),
@@ -973,7 +971,12 @@ object Refresh {
     * x112 boilerplate-line argument).
     */
   final case class XdocState(pos: DataFrame, sig: DataFrame,
-                             cut: DataFrame)
+                             cut: DataFrame) {
+    /** The cross-job hand-off ([[State.persisted]]). */
+    def persisted(base: String): XdocState =
+      XdocState(saved(base, "pos", pos), saved(base, "sig", sig),
+        saved(base, "cut", cut))
+  }
 
   /** The refresh's recut delta alongside the updated state: `recut` =
     * changed ∪ fresh ∪ mark-flipped unchanged ids — the re-cut row
@@ -984,8 +987,7 @@ object Refresh {
 
   /** Build the standing state from scratch (corpus v1, or a periodic
     * re-baseline). The frames are LAZY — the deployment contract is
-    * [[Artifacts.saveIndex]] → reload (what the declared x136
-    * artifact does); a refresh fed raw lazy frames re-tokenizes the
+    * [[XdocState.persisted]] (what the declared x136 artifact does); a refresh fed raw lazy frames re-tokenizes the
     * corpus on every consumption (the [[buildState]] warning).
     */
   def xdocBuildState(docs: DataFrame, textCol: String, idCol: String,
@@ -1024,7 +1026,7 @@ object Refresh {
     // built beside them, its distinct would be a concurrent first read
     // of the two lazy carves and compute them twice
     val Seq(touchedH, deltaIdsH) = Hints.hintIfSlimN(Seq(touched, deltaIds))
-    val touchedOrDeltaH = hintIfSlim(touched.unionByName(deltaIds).distinct()
+    val touchedOrDeltaH = Hints.hintIfSlim(touched.unionByName(deltaIds).distinct()
       .localCheckpoint(false))
     // only the delta re-tokenizes; pos2 is materialized once — it is
     // the new standing index (written once in deployment) and the
@@ -1043,7 +1045,7 @@ object Refresh {
     // that can flip
     val affH = removedPos.select("h").union(addedPos.select("h"))
       .distinct().localCheckpoint(false)
-    val affHH = hintIfSlim(affH)
+    val affHH = Hints.hintIfSlim(affH)
     def stats(p: DataFrame): DataFrame = p.groupBy("h").agg(
       count(lit(1)).as("cnt"),
       min(struct(col("doc_id"), col("pos"))).as("kp"))
@@ -1072,12 +1074,12 @@ object Refresh {
       .join(touchedOrDeltaH, Seq("doc_id"), "left_anti")
     val recut = deltaIds.unionByName(flipped).distinct()
       .localCheckpoint(false)
-    val recutHint = hintIfSlim(recut)
+    val recutHint = Hints.hintIfSlim(recut)
     val recutPos = pos2.join(recutHint, Seq("doc_id"), "left_semi")
       .localCheckpoint(false) // recutH's gate count materializes it
     val recutH = recutPos.select("h").distinct().localCheckpoint(false)
     val anchors = recutPos.join(
-        stats(pos2.join(hintIfSlim(recutH), Seq("h"), "left_semi"))
+        stats(pos2.join(Hints.hintIfSlim(recutH), Seq("h"), "left_semi"))
           .filter(col("cnt") >= 2), Seq("h"))
       .filter(!(col("kp.doc_id") === col("doc_id") &&
         col("kp.pos") === col("pos")))
@@ -1085,7 +1087,7 @@ object Refresh {
     val recutRows = Curation.applySpanCut(
       v2.join(idsAs(recutHint, idCol), Seq(idCol), "left_semi"),
       textCol, idCol, Curation.mergeAnchorSpans(anchors, n))
-    val cut2 = st.cut.join(hintIfSlim(touched.unionByName(recut)
+    val cut2 = st.cut.join(Hints.hintIfSlim(touched.unionByName(recut)
         .distinct().localCheckpoint(false)), Seq("doc_id"), "left_anti")
       .unionByName(recutRows)
     XdocDelta(XdocState(pos2, sig2, cut2), recut)

@@ -29,7 +29,7 @@ object Declared {
     * count. The local fixtures are single-file parquet scans (1 split),
     * so a cpu-bound pass like the native LM scorer (~2.6 cpu-s
     * single-threaded at sf0.1 vs ~0.1 s across 32 threads — measured,
-    * ProbeX108 r14) would serialize, and AQE's size-based coalescing
+    * r14) would serialize, and AQE's size-based coalescing
     * keeps post-shuffle stages just as narrow (compressed text
     * coalesces the x108 cleaned corpus to ONE task); at cluster scale
     * the same scan arrives in thousands of splits, the guard is false,
@@ -68,6 +68,43 @@ object Declared {
                       name: String = "documents"): DataFrame = {
     val tbl = t(s, dir, name)
     spreadIfStarved(s, tbl, tbl)
+  }
+
+  /** The refresh-duality readout of the refresh rows: the incremental
+    * leg `inc` and the from-scratch rebuild leg `full` run on two driver
+    * threads ([[graft.ext.Par]]) and are collected, then compared on the
+    * driver by `key` — the rebuild's columns plus `incr_match`, the
+    * null-safe equality of every column (a key missing on either side
+    * is a mismatch), as a local relation ordered by key. Both legs are
+    * key-sized readouts — manifests (numShards rows), kept reports (one
+    * row per language) — so the collects are bounded by parameters, not
+    * by data.
+    */
+  private def refreshDuality(s: SparkSession, key: String)(inc: => DataFrame)(
+      full: => DataFrame): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val (incRows, (schema, fullRows)) = graft.ext.Par.both(inc.collect()) {
+      val f = full
+      (f.schema, f.collect())
+    }
+    val cols = schema.fieldNames.toSeq
+    val legs = Seq(fullRows, incRows).map(_.map(r => r.getAs[Any](key) -> r).toMap)
+    // `<=>`: nulls equal each other, NaN equals NaN
+    def same(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: Double, y: Double) => x == y || (x.isNaN && y.isNaN)
+      case _ => a == b
+    }
+    val byKey = Ordering.fromLessThan[Any](
+      _.asInstanceOf[Comparable[Any]].compareTo(_) < 0)
+    val rows = legs.flatMap(_.keys).distinct.sorted(byKey).map { k =>
+      val Seq(f, i) = legs.map(m => cols.map(c =>
+        if (c == key) k else m.get(k).map(_.getAs[Any](c)).orNull))
+      Row.fromSeq(f :+ f.zip(i).forall { case (a, b) => same(a, b) })
+    }
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(
+      schema.fields.map(_.copy(nullable = true)) :+
+        StructField("incr_match", BooleanType)))
   }
 
   /** Train-once artifact memo for the queries whose construction trains a
@@ -316,20 +353,8 @@ object Declared {
         graft.ext.Artifacts.loadRefLm)
       val thr = graft.ext.Refresh.ccnetTailThr(
         graft.ext.Refresh.ccnetBuildState(merged1, tokenLines12, lm).scored)
-      val st = graft.ext.Refresh.asmBuildState(merged1, tokenLines12, lm,
-        thr, bench, CrawlAsmParams)
-      graft.ext.Artifacts.saveIndex(st.head.lf, s"$base/lf")
-      graft.ext.Artifacts.saveIndex(st.head.hist, s"$base/hist")
-      graft.ext.Artifacts.saveIndex(st.head.scored, s"$base/scored")
-      graft.ext.Artifacts.saveIndex(st.docMeta, s"$base/meta")
-      graft.ext.Artifacts.saveIndex(st.bandIdx, s"$base/band")
-      graft.ext.Artifacts.saveIndex(st.shingles, s"$base/shingles")
-      graft.ext.Artifacts.saveIndex(st.pairs, s"$base/pairs")
-      graft.ext.Artifacts.saveIndex(st.clusters, s"$base/clusters")
-      def ld(n: String) = graft.ext.Artifacts.loadIndex(s, s"$base/$n")
-      val reloaded = graft.ext.Refresh.AsmState(
-        graft.ext.Refresh.CcnetState(ld("lf"), ld("hist"), ld("scored")),
-        ld("meta"), ld("band"), ld("shingles"), ld("pairs"), ld("clusters"))
+      val reloaded = graft.ext.Refresh.asmBuildState(merged1, tokenLines12,
+        lm, thr, bench, CrawlAsmParams).persisted(base)
       (v1Store, v2Store, idx1, ex1, reloaded, lm,
         graft.ext.Refresh.ccnetTailThr(reloaded.head.scored))
     }
@@ -434,10 +459,9 @@ object Declared {
           assemblyMerged(assemblyUnion(ex1)))
         val pages2 = crawlPages(read(v2Store))
           .localCheckpoint(true) // read by the fold, the delta extract, the rebuild
-        // independent legs until the compare join (both read only the
-        // checkpointed pages2 + the persisted v1 state): overlap the
-        // eager refresh fold with the full-history rebuild (Par)
-        val (inc, full) = graft.ext.Par.both {
+        // independent legs until the compare (both read only the
+        // checkpointed pages2 + the persisted v1 state)
+        refreshDuality(s, "shard") {
           val idx2 = graft.ext.Urls.urlDedupRefresh(idx1,
             pages2.select(col("url"), col("fetch_id")), "url", "fetch_id",
             latestWins = true)
@@ -450,8 +474,7 @@ object Declared {
           val st2 = graft.ext.Refresh.asmRefresh(st1, merged1, merged2,
             tokenLines12, lm, thr, bench, CrawlAsmParams,
             spread = spreadIfStarved(s, docs, _))
-          graft.ext.Refresh.asmManifestFrom(st2.docMeta, st2.clusters)
-            .localCheckpoint(true)
+          graft.ext.Refresh.asmManifestFrom(st2.dedup.meta, st2.clusters)
         } {
           val pagesAll = crawlPages(read(v1Store))
             .unionByName(pages2)
@@ -467,19 +490,8 @@ object Declared {
           val fullSt = graft.ext.Refresh.asmBuildState(mergedF, tokenLines12,
             lm, thr, bench, CrawlAsmParams,
             spread = spreadIfStarved(s, docs, _))
-          graft.ext.Refresh.asmManifestFrom(fullSt.docMeta, fullSt.clusters)
-            .localCheckpoint(true)
+          graft.ext.Refresh.asmManifestFrom(fullSt.dedup.meta, fullSt.clusters)
         }
-        full.as("f").join(inc.as("i"), Seq("shard"), "full_outer")
-          .select(col("shard"), col("f.n_docs").as("n_docs"),
-            col("f.token_mass").as("token_mass"),
-            col("f.id_xor").as("id_xor"),
-            col("f.lead_doc").as("lead_doc"),
-            (col("f.n_docs") <=> col("i.n_docs") &&
-              col("f.token_mass") <=> col("i.token_mass") &&
-              col("f.id_xor") <=> col("i.id_xor") &&
-              col("f.lead_doc") <=> col("i.lead_doc")).as("incr_match"))
-          .orderBy("shard")
       }
 
   /** The x131 refresh-fixture snapshots recompressed to per-record-gzip
@@ -880,22 +892,15 @@ object Declared {
           numBuckets = 1024)
       }((ss, m, p) => graft.ext.Artifacts.saveRefLm(ss, m, p),
         graft.ext.Artifacts.loadRefLm)
-      val st = graft.ext.Refresh.ccnetBuildState(v1, tokenLines12, lm)
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-ccnet-refresh").toString
-      graft.ext.Artifacts.saveIndex(st.lf, s"$base/lf")
-      graft.ext.Artifacts.saveIndex(st.hist, s"$base/hist")
-      graft.ext.Artifacts.saveIndex(st.scored, s"$base/scored")
-      val reloaded = graft.ext.Refresh.CcnetState(
-        graft.ext.Artifacts.loadIndex(s, s"$base/lf"),
-        graft.ext.Artifacts.loadIndex(s, s"$base/hist"),
-        graft.ext.Artifacts.loadIndex(s, s"$base/scored"))
+      val reloaded = graft.ext.Refresh.ccnetBuildState(v1, tokenLines12, lm)
+        .persisted(java.nio.file.Files
+          .createTempDirectory("graft-ccnet-refresh").toString)
       (reloaded, lm, graft.ext.Refresh.ccnetTailThr(reloaded.scored))
     }
 
   /** x114's standing v1 ASSEMBLY state — the x110 chain's full refresh
     * state built on the v1 carve: frozen LM (save→reload), the three
-    * slim head frames + docMeta + dedup index/shingles/pairs + standing
+    * slim head frames + the dedup meta/index/shingles/pairs + standing
     * cluster map all persisted through the parquet index store and
     * RELOADED (the x85/x112 cross-job hand-off discipline), frozen tail
     * thresholds derived from the reloaded baseline scores.
@@ -915,22 +920,9 @@ object Declared {
         graft.ext.Artifacts.loadRefLm)
       val thr = graft.ext.Refresh.ccnetTailThr(
         graft.ext.Refresh.ccnetBuildState(merged1, tokenLines12, lm).scored)
-      val st = graft.ext.Refresh.asmBuildState(merged1, tokenLines12, lm,
-        thr, bench)
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-asm-refresh").toString
-      graft.ext.Artifacts.saveIndex(st.head.lf, s"$base/lf")
-      graft.ext.Artifacts.saveIndex(st.head.hist, s"$base/hist")
-      graft.ext.Artifacts.saveIndex(st.head.scored, s"$base/scored")
-      graft.ext.Artifacts.saveIndex(st.docMeta, s"$base/meta")
-      graft.ext.Artifacts.saveIndex(st.bandIdx, s"$base/band")
-      graft.ext.Artifacts.saveIndex(st.shingles, s"$base/shingles")
-      graft.ext.Artifacts.saveIndex(st.pairs, s"$base/pairs")
-      graft.ext.Artifacts.saveIndex(st.clusters, s"$base/clusters")
-      def ld(n: String) = graft.ext.Artifacts.loadIndex(s, s"$base/$n")
-      val reloaded = graft.ext.Refresh.AsmState(
-        graft.ext.Refresh.CcnetState(ld("lf"), ld("hist"), ld("scored")),
-        ld("meta"), ld("band"), ld("shingles"), ld("pairs"), ld("clusters"))
+      val reloaded = graft.ext.Refresh.asmBuildState(merged1, tokenLines12,
+        lm, thr, bench).persisted(java.nio.file.Files
+          .createTempDirectory("graft-asm-refresh").toString)
       (reloaded, lm, graft.ext.Refresh.ccnetTailThr(reloaded.head.scored))
     }
 
@@ -974,14 +966,8 @@ object Declared {
           numBuckets = 1024)
       }((ss, m, p) => graft.ext.Artifacts.saveRefLm(ss, m, p),
         graft.ext.Artifacts.loadRefLm)
-      val st = graft.ext.Refresh.ccnetBuildState(ex1, tokenLines12, lm)
-      graft.ext.Artifacts.saveIndex(st.lf, s"$base/lf")
-      graft.ext.Artifacts.saveIndex(st.hist, s"$base/hist")
-      graft.ext.Artifacts.saveIndex(st.scored, s"$base/scored")
-      val reloaded = graft.ext.Refresh.CcnetState(
-        graft.ext.Artifacts.loadIndex(s, s"$base/lf"),
-        graft.ext.Artifacts.loadIndex(s, s"$base/hist"),
-        graft.ext.Artifacts.loadIndex(s, s"$base/scored"))
+      val reloaded = graft.ext.Refresh.ccnetBuildState(ex1, tokenLines12, lm)
+        .persisted(base)
       (ex1, reloaded, lm, graft.ext.Refresh.ccnetTailThr(reloaded.scored))
     }
 
@@ -2997,18 +2983,9 @@ object Declared {
     */
   private def refreshStateArtifact(s: SparkSession, dir: String): graft.ext.Refresh.State =
     artifact(s, "refresh_state_v1", dir) {
-      val st = graft.ext.Refresh.buildState(refreshV1(t(s, dir, "documents")))
-      val base = java.nio.file.Files.createTempDirectory("graft-refresh-state").toString
-      graft.ext.Artifacts.saveIndex(st.meta, s"$base/meta")
-      graft.ext.Artifacts.saveIndex(st.bandIdx, s"$base/band",
-        layoutCols = Seq("band"))
-      graft.ext.Artifacts.saveIndex(st.shingles, s"$base/shingles")
-      graft.ext.Artifacts.saveIndex(st.pairs, s"$base/pairs")
-      graft.ext.Refresh.State(
-        graft.ext.Artifacts.loadIndex(s, s"$base/meta"),
-        graft.ext.Artifacts.loadIndex(s, s"$base/band"),
-        graft.ext.Artifacts.loadIndex(s, s"$base/shingles"),
-        graft.ext.Artifacts.loadIndex(s, s"$base/pairs"))
+      graft.ext.Refresh.buildState(refreshV1(t(s, dir, "documents")))
+        .persisted(java.nio.file.Files
+          .createTempDirectory("graft-refresh-state").toString)
     }
 
   /** x136's standing v1 state — the slim window index, the per-doc
@@ -3018,17 +2995,10 @@ object Declared {
     */
   private def xdocRefreshArtifact(s: SparkSession, dir: String): graft.ext.Refresh.XdocState =
     artifact(s, "xdoc_refresh_state_v1", dir) {
-      val st = graft.ext.Refresh.xdocBuildState(
-        refreshV1(t(s, dir, "documents")), "text", "doc_id", n = 5)
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-xdoc-state").toString
-      graft.ext.Artifacts.saveIndex(st.pos, s"$base/pos")
-      graft.ext.Artifacts.saveIndex(st.sig, s"$base/sig")
-      graft.ext.Artifacts.saveIndex(st.cut, s"$base/cut")
-      graft.ext.Refresh.XdocState(
-        graft.ext.Artifacts.loadIndex(s, s"$base/pos"),
-        graft.ext.Artifacts.loadIndex(s, s"$base/sig"),
-        graft.ext.Artifacts.loadIndex(s, s"$base/cut"))
+      graft.ext.Refresh.xdocBuildState(
+          refreshV1(t(s, dir, "documents")), "text", "doc_id", n = 5)
+        .persisted(java.nio.file.Files
+          .createTempDirectory("graft-xdoc-state").toString)
     }
 
   /** x87's standing cluster map — v1's duplicate clusters, the FIFTH
@@ -8140,29 +8110,16 @@ object Declared {
         val v1 = ccnetV1(docs)
         val v2 = ccnetV2(docs)
         val (st1, lm, thr) = ccnetRefreshArtifact(s, dir)
-        // the two legs are independent until the compare join — build
-        // them on two threads so the eager refresh chain and the
-        // rebuild evaluation overlap (Par scaladoc; identical results)
-        val (inc, full) = graft.ext.Par.both {
+        refreshDuality(s, "lang") {
           graft.ext.Refresh.ccnetKeptReport(
             graft.ext.Refresh.ccnetRefresh(st1, v1, v2, tokenLines12, lm,
               spread = spreadIfStarved(s, docs, _))
-              .scored, thr).localCheckpoint(true)
+              .scored, thr)
         } {
           graft.ext.Refresh.ccnetKeptReport(
             graft.ext.Refresh.ccnetBuildState(v2, tokenLines12, lm,
-              spread = spreadIfStarved(s, docs, _)).scored,
-            thr).localCheckpoint(true)
+              spread = spreadIfStarved(s, docs, _)).scored, thr)
         }
-        full.as("f").join(inc.as("i"), Seq("lang"), "full_outer")
-          .select(col("lang"), col("f.thr").as("thr"),
-            col("f.n_docs").as("n_docs"), col("f.n_kept").as("n_kept"),
-            col("f.kept_xor").as("kept_xor"),
-            (col("f.thr") <=> col("i.thr") &&
-              col("f.n_docs") <=> col("i.n_docs") &&
-              col("f.n_kept") <=> col("i.n_kept") &&
-              col("f.kept_xor") <=> col("i.kept_xor")).as("incr_match"))
-          .orderBy("lang")
       },
       Some(s"""WITH ${ccnetRefreshHeadCtes},
         |$ccnetRefreshTailSql""".stripMargin)),
@@ -8195,9 +8152,8 @@ object Declared {
         val (ex1, st1, lm, thr) = webRefreshArtifact(s, dir)
         // the incremental leg (markup diff -> delta extraction -> head
         // fold) and the rebuild leg (full v2 extraction -> from-scratch
-        // head) are independent until the compare join — build them on
-        // two threads so their eager chains overlap (Par scaladoc)
-        val (inc, full) = graft.ext.Par.both {
+        // head) are independent until the compare
+        refreshDuality(s, "lang") {
           // materialized once (the x131 merged2 discipline): the fold
           // consumes the refreshed corpus several times, and each lazy
           // replay re-runs the corpus-sized markup diff — in deployment
@@ -8210,7 +8166,7 @@ object Declared {
           graft.ext.Refresh.ccnetKeptReport(
             graft.ext.Refresh.ccnetRefresh(st1, ex1, ex2, tokenLines12, lm,
               spread = spreadIfStarved(s, docs, _))
-              .scored, thr).localCheckpoint(true)
+              .scored, thr)
         } {
           graft.ext.Refresh.ccnetKeptReport(
             graft.ext.Refresh.ccnetBuildState(
@@ -8218,17 +8174,7 @@ object Declared {
               webExtractAll(htmlV2).localCheckpoint(true),
               tokenLines12, lm,
               spread = spreadIfStarved(s, docs, _)).scored, thr)
-            .localCheckpoint(true)
         }
-        full.as("f").join(inc.as("i"), Seq("lang"), "full_outer")
-          .select(col("lang"), col("f.thr").as("thr"),
-            col("f.n_docs").as("n_docs"), col("f.n_kept").as("n_kept"),
-            col("f.kept_xor").as("kept_xor"),
-            (col("f.thr") <=> col("i.thr") &&
-              col("f.n_docs") <=> col("i.n_docs") &&
-              col("f.n_kept") <=> col("i.n_kept") &&
-              col("f.kept_xor") <=> col("i.kept_xor")).as("incr_match"))
-          .orderBy("lang")
       },
       Some(s"""WITH wc1 AS MATERIALIZED (
         |  $ccnetCarveV1Sql),
@@ -8312,7 +8258,7 @@ object Declared {
     // Corpus v2 arrives under the frozen-LM/threshold contract and the
     // refresh re-runs ONLY delta work: the head folds via
     // ccnetRefreshDelta (x112's machinery), the tail retires
-    // touched ∪ rescoreIds from slim per-doc state (docMeta: gate,
+    // touched ∪ rescoreIds from slim per-doc state (meta: gate,
     // contamination, quality, token mass — all pure functions of the
     // kept cleaned text), inserts the fresh kept slice (text from the
     // head's cleanedDelta), finds cross/within pairs against the
@@ -8340,30 +8286,16 @@ object Declared {
           assemblyMerged(assemblyUnion(refreshV2(docs))))
           .localCheckpoint(true) // read by diff, fresh joins, rebuild
         val bench = docs.filter(col("doc_id") % 37 === 0)
-        // independent legs until the compare join: overlap the eager
-        // refresh fold with the from-scratch rebuild (Par scaladoc)
-        val (inc, full) = graft.ext.Par.both {
+        refreshDuality(s, "shard") {
           val st2 = graft.ext.Refresh.asmRefresh(st1, merged1, merged2,
             tokenLines12, lm, thr, bench,
             spread = spreadIfStarved(s, docs, _))
-          graft.ext.Refresh.asmManifestFrom(st2.docMeta, st2.clusters)
-            .localCheckpoint(true)
+          graft.ext.Refresh.asmManifestFrom(st2.dedup.meta, st2.clusters)
         } {
           val fullSt = graft.ext.Refresh.asmBuildState(merged2, tokenLines12,
             lm, thr, bench, spread = spreadIfStarved(s, docs, _))
-          graft.ext.Refresh.asmManifestFrom(fullSt.docMeta, fullSt.clusters)
-            .localCheckpoint(true)
+          graft.ext.Refresh.asmManifestFrom(fullSt.dedup.meta, fullSt.clusters)
         }
-        full.as("f").join(inc.as("i"), Seq("shard"), "full_outer")
-          .select(col("shard"), col("f.n_docs").as("n_docs"),
-            col("f.token_mass").as("token_mass"),
-            col("f.id_xor").as("id_xor"),
-            col("f.lead_doc").as("lead_doc"),
-            (col("f.n_docs") <=> col("i.n_docs") &&
-              col("f.token_mass") <=> col("i.token_mass") &&
-              col("f.id_xor") <=> col("i.id_xor") &&
-              col("f.lead_doc") <=> col("i.lead_doc")).as("incr_match"))
-          .orderBy("shard")
       },
       Some(s"""WITH RECURSIVE v1 AS MATERIALIZED (
         |  SELECT doc_id, text FROM documents WHERE doc_id % 17 <> 5),
@@ -8597,34 +8529,15 @@ object Declared {
         val docs = t(s, dir, "documents")
         val v1 = refreshV1(docs)
         val v2 = refreshV2(docs)
-        // independent legs until the compare: overlap the eager refresh
-        // fold with the from-scratch rebuild (Par scaladoc)
-        val (inc, full) = graft.ext.Par.both {
+        refreshDuality(s, "shard") {
           graft.ext.Refresh.refresh(
             refreshStateArtifact(s, dir), v1, v2, seed = "ref-v2",
             numShards = 4,
-            spread = spreadIfStarved(s, docs, _))._2.collect()
+            spread = spreadIfStarved(s, docs, _))._2
         } {
           graft.ext.Refresh.fullRebuild(v2, seed = "ref-v2", numShards = 4,
-              spread = spreadIfStarved(s, docs, _))
-            .collect()
+            spread = spreadIfStarved(s, docs, _))
         }
-        // each manifest has numShards rows — a parameter, not data — so
-        // the full-outer compare (null-safe per column: a shard missing
-        // on either side is a mismatch) runs on the driver and the
-        // result is a local relation
-        import org.apache.spark.sql.Row
-        import org.apache.spark.sql.types._
-        val man = Seq(full, inc).map(_.map(r => r.getAs[Long]("shard") -> r).toMap)
-        val cols = Seq("n_docs", "token_mass", "id_xor")
-        val rows = man.flatMap(_.keys).distinct.sorted.map { shard =>
-          val Seq(f, i) = man.map(m =>
-            cols.map(c => m.get(shard).map(_.getAs[Any](c)).orNull))
-          Row.fromSeq(shard +: f :+ (f == i))
-        }
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(
-          ("shard" +: cols).map(StructField(_, LongType)) :+
-            StructField("incr_match", BooleanType)))
       },
       Some(refreshV2ClustersCte + refreshManifestTailCte("") + """
         |SELECT shard, n_docs, token_mass, id_xor, true AS incr_match
@@ -8653,11 +8566,8 @@ object Declared {
     "x87_incremental_clusters" -> Q(
       (s, dir) => {
         val d = refreshDeltaArtifact(s, dir)
-        val seeds = d.addedPairs.select(col("id_a").as("doc_id"))
-          .unionByName(d.addedPairs.select(col("id_b").as("doc_id")))
-          .unionByName(d.touched.select("doc_id"))
         val inc = graft.ext.Refresh.incrementalClusters(
-          refreshClustersArtifact(s, dir), d.pairs2, seeds)
+          refreshClustersArtifact(s, dir), d.pairs2, d.touched, d.addedPairs)
         val full = graft.ext.Dedup.dupClusters(d.pairs2)
         inc.as("i").join(full.as("f"), Seq("doc_id"), "full_outer")
           .select(col("doc_id"),
@@ -8691,10 +8601,8 @@ object Declared {
         val man1 = graft.ext.Refresh.manifestFromClusters(
           c1, st.meta, "ref-v2", 4)
         val d = refreshDeltaArtifact(s, dir)
-        val seeds = d.addedPairs.select(col("id_a").as("doc_id"))
-          .unionByName(d.addedPairs.select(col("id_b").as("doc_id")))
-          .unionByName(d.touched.select("doc_id"))
-        val c2 = graft.ext.Refresh.incrementalClusters(c1, d.pairs2, seeds)
+        val c2 = graft.ext.Refresh.incrementalClusters(c1, d.pairs2,
+          d.touched, d.addedPairs)
         val man2 = graft.ext.Refresh.manifestFromClusters(
           c2, d.meta2, "ref-v2", 4)
         graft.ext.Refresh.manifestDelta(man1, man2).orderBy("shard")

@@ -7,6 +7,10 @@ import java.nio.file.{Files, Paths}
 /** Writes PLANS.md: the formatted physical plans of the headline queries,
   * as evidence that scans prune/push and joins broadcast where intended.
   * Run: sbt "runMain graft.tools.Plans [sfDir]"
+  *
+  * Capture mode, for the before/after plan pairs of a change:
+  * sbt "runMain graft.tools.Plans <tag> <suffix> <query>[,<query>...] [sfDir]"
+  * writes `plans/<tag>/<query>_<suffix>.txt`.
   */
 object Plans {
   val headline = Seq(
@@ -311,7 +315,9 @@ object Plans {
   private def fileName(name: String): String =
     name.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("_+$", "") + ".md"
 
-  def main(args: Array[String]): Unit = {
+  def main(argv: Array[String]): Unit = {
+    // capture mode takes three leading arguments; the fixture dir follows
+    val (captureArgs, args) = argv.splitAt(if (argv.length >= 3) 3 else 0)
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = SparkSession.builder()
       .master("local[8]")
@@ -321,6 +327,31 @@ object Plans {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    captureArgs match {
+      case Array(tag, suffix, names) =>
+        capture(spark, tag, suffix, names.split(",").toSeq, sfDir)
+      case _ => index(spark, sfDir)
+    }
+    spark.stop()
+  }
+
+  private def planOf(df: DataFrame): String =
+    normalize(df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode))
+
+  /** Capture mode: one plan file per query under `plans/<tag>/`. */
+  private def capture(spark: SparkSession, tag: String, suffix: String,
+                      names: Seq[String], sfDir: String): Unit = {
+    val dir = Paths.get("plans", tag)
+    Files.createDirectories(dir)
+    names.foreach { name =>
+      Files.writeString(dir.resolve(s"${name}_$suffix.txt"),
+        planOf(graft.SparkEntry.queries(name)(spark, sfDir)))
+      println(s"wrote plans/$tag/${name}_$suffix.txt")
+    }
+  }
+
+  private def index(spark: SparkSession, sfDir: String): Unit = {
     val dir = Paths.get("plans")
     Files.createDirectories(dir)
     val sb = new StringBuilder
@@ -334,15 +365,12 @@ object Plans {
     val frames = headline.map(n =>
       n -> graft.SparkEntry.queries(n)(spark, sfDir)) ++ lazyForms(spark, sfDir)
     frames.foreach { case (name, df) =>
-      val plan = normalize(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
       val f = fileName(name)
       Files.writeString(dir.resolve(f),
-        s"## $name\n\n```\n$plan```\n")
+        s"## $name\n\n```\n${planOf(df)}```\n")
       sb.append(s"- [$name](plans/$f)\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md + ${frames.size} plan files under plans/")
-    spark.stop()
   }
 }

@@ -1401,14 +1401,7 @@ object ScaleCheck {
           "text", "lang_pred",
           col("lang_pred") =!= "und" && col("doc_id").isNotNull,
           numBuckets = 1024)
-        val st0 = Refresh.ccnetBuildState(v1p, lines12, lm)
-        graft.ext.Artifacts.saveIndex(st0.lf, s"$base/lf")
-        graft.ext.Artifacts.saveIndex(st0.hist, s"$base/hist")
-        graft.ext.Artifacts.saveIndex(st0.scored, s"$base/scored")
-        val st = Refresh.CcnetState(
-          graft.ext.Artifacts.loadIndex(spark, s"$base/lf"),
-          graft.ext.Artifacts.loadIndex(spark, s"$base/hist"),
-          graft.ext.Artifacts.loadIndex(spark, s"$base/scored"))
+        val st = Refresh.ccnetBuildState(v1p, lines12, lm).persisted(base)
         val thr = Refresh.ccnetTailThr(st.scored)
         val t0 = System.nanoTime()
         val delta = Refresh.ccnetRefreshDelta(st, v1p, v2p, lines12, lm)
@@ -1508,14 +1501,8 @@ object ScaleCheck {
         // read it)
         val base = java.nio.file.Files
           .createTempDirectory("graft-x136-scale").toString
-        val st0 = Refresh.xdocBuildState(v1p(n), "text", "doc_id", 5)
-        graft.ext.Artifacts.saveIndex(st0.pos, s"$base/pos")
-        graft.ext.Artifacts.saveIndex(st0.sig, s"$base/sig")
-        graft.ext.Artifacts.saveIndex(st0.cut, s"$base/cut")
-        val st = Refresh.XdocState(
-          graft.ext.Artifacts.loadIndex(spark, s"$base/pos"),
-          graft.ext.Artifacts.loadIndex(spark, s"$base/sig"),
-          graft.ext.Artifacts.loadIndex(spark, s"$base/cut"))
+        val st = Refresh.xdocBuildState(v1p(n), "text", "doc_id", 5)
+          .persisted(base)
         val v2 = v2p(n).localCheckpoint(true)
         val t0 = System.nanoTime()
         val d = Refresh.xdocRefresh(st, v2, "text", "doc_id", 5)
@@ -1621,25 +1608,16 @@ object ScaleCheck {
           numBuckets = 1024)
         val thr = Refresh.ccnetTailThr(
           Refresh.ccnetBuildState(m1, lines12, lm).scored)
-        val st0 = Refresh.asmBuildState(m1, lines12, lm, thr, bench)
-        for ((f, nm) <- Seq(st0.head.lf -> "lf", st0.head.hist -> "hist",
-            st0.head.scored -> "scored", st0.docMeta -> "meta",
-            st0.bandIdx -> "band", st0.shingles -> "shingles",
-            st0.pairs -> "pairs", st0.clusters -> "clusters"))
-          graft.ext.Artifacts.saveIndex(f, s"$base/$nm")
-        def ld(nm: String) = graft.ext.Artifacts.loadIndex(spark, s"$base/$nm")
-        val st = Refresh.AsmState(
-          Refresh.CcnetState(ld("lf"), ld("hist"), ld("scored")),
-          ld("meta"), ld("band"), ld("shingles"), ld("pairs"),
-          ld("clusters"))
+        val st = Refresh.asmBuildState(m1, lines12, lm, thr, bench)
+          .persisted(base)
         val t0 = System.nanoTime()
         val st2 = Refresh.asmRefresh(st, m1, m2, lines12, lm, thr, bench)
-        val inc = Refresh.asmManifestFrom(st2.docMeta, st2.clusters)
+        val inc = Refresh.asmManifestFrom(st2.dedup.meta, st2.clusters)
           .collect().map(_.toSeq).toSet
         val tRef = (System.nanoTime() - t0) / 1e9
         val t1 = System.nanoTime()
         val fullSt = Refresh.asmBuildState(m2, lines12, lm, thr, bench)
-        val full = Refresh.asmManifestFrom(fullSt.docMeta, fullSt.clusters)
+        val full = Refresh.asmManifestFrom(fullSt.dedup.meta, fullSt.clusters)
           .collect().map(_.toSeq).toSet
         val tReb = (System.nanoTime() - t1) / 1e9
         assert(inc == full,
@@ -1745,14 +1723,7 @@ object ScaleCheck {
           "text", "lang_pred",
           col("lang_pred") =!= "und" && col("doc_id").isNotNull,
           numBuckets = 1024)
-        val st0 = Refresh.ccnetBuildState(ex1, lines12, lm)
-        graft.ext.Artifacts.saveIndex(st0.lf, s"$base/lf")
-        graft.ext.Artifacts.saveIndex(st0.hist, s"$base/hist")
-        graft.ext.Artifacts.saveIndex(st0.scored, s"$base/scored")
-        val st = Refresh.CcnetState(
-          graft.ext.Artifacts.loadIndex(spark, s"$base/lf"),
-          graft.ext.Artifacts.loadIndex(spark, s"$base/hist"),
-          graft.ext.Artifacts.loadIndex(spark, s"$base/scored"))
+        val st = Refresh.ccnetBuildState(ex1, lines12, lm).persisted(base)
         val thr = Refresh.ccnetTailThr(st.scored)
         val t0 = System.nanoTime()
         // timed INCLUDING the one-shot materialization — deployment
@@ -1883,19 +1854,8 @@ object ScaleCheck {
           numBuckets = 1024)
         val thr = Refresh.ccnetTailThr(
           Refresh.ccnetBuildState(merged1, lines12, lm).scored)
-        val st0 = Refresh.asmBuildState(merged1, lines12, lm, thr, bench, Declared.CrawlAsmParams)
-        graft.ext.Artifacts.saveIndex(st0.head.lf, s"$base/lf")
-        graft.ext.Artifacts.saveIndex(st0.head.hist, s"$base/hist")
-        graft.ext.Artifacts.saveIndex(st0.head.scored, s"$base/scored")
-        graft.ext.Artifacts.saveIndex(st0.docMeta, s"$base/meta")
-        graft.ext.Artifacts.saveIndex(st0.bandIdx, s"$base/band")
-        graft.ext.Artifacts.saveIndex(st0.shingles, s"$base/shingles")
-        graft.ext.Artifacts.saveIndex(st0.pairs, s"$base/pairs")
-        graft.ext.Artifacts.saveIndex(st0.clusters, s"$base/clusters")
-        def ld(nm: String) = graft.ext.Artifacts.loadIndex(spark, s"$base/$nm")
-        val st = Refresh.AsmState(
-          Refresh.CcnetState(ld("lf"), ld("hist"), ld("scored")),
-          ld("meta"), ld("band"), ld("shingles"), ld("pairs"), ld("clusters"))
+        val st = Refresh.asmBuildState(merged1, lines12, lm, thr, bench,
+          Declared.CrawlAsmParams).persisted(base)
         val t0 = System.nanoTime()
         val pages2 = Declared.crawlPages(
             FileSources.readWarc(spark, s"$base/v2"))
@@ -1908,7 +1868,7 @@ object ScaleCheck {
           .localCheckpoint(true)
         val st2 = Refresh.asmRefresh(st, merged1, merged2, lines12, lm,
           thr, bench, Declared.CrawlAsmParams)
-        val inc = Refresh.asmManifestFrom(st2.docMeta, st2.clusters)
+        val inc = Refresh.asmManifestFrom(st2.dedup.meta, st2.clusters)
           .collect().map(_.toSeq).toSet
         val tRef = (System.nanoTime() - t0) / 1e9
         val t1 = System.nanoTime()
@@ -1924,7 +1884,7 @@ object ScaleCheck {
           .localCheckpoint(true)
         val fullSt = Refresh.asmBuildState(mergedF, lines12, lm, thr, bench,
           Declared.CrawlAsmParams)
-        val full = Refresh.asmManifestFrom(fullSt.docMeta, fullSt.clusters)
+        val full = Refresh.asmManifestFrom(fullSt.dedup.meta, fullSt.clusters)
           .collect().map(_.toSeq).toSet
         val tReb = (System.nanoTime() - t1) / 1e9
         assert(inc == full,
@@ -2043,16 +2003,7 @@ object ScaleCheck {
         v2(n).write.mode("overwrite").parquet(s"$base/v2")
         val v1p = spark.read.parquet(s"$base/v1")
         val v2p = spark.read.parquet(s"$base/v2")
-        val st0 = Refresh.buildState(v1p)
-        graft.ext.Artifacts.saveIndex(st0.meta, s"$base/meta")
-        graft.ext.Artifacts.saveIndex(st0.bandIdx, s"$base/band")
-        graft.ext.Artifacts.saveIndex(st0.shingles, s"$base/shingles")
-        graft.ext.Artifacts.saveIndex(st0.pairs, s"$base/pairs")
-        val st = Refresh.State(
-          graft.ext.Artifacts.loadIndex(spark, s"$base/meta"),
-          graft.ext.Artifacts.loadIndex(spark, s"$base/band"),
-          graft.ext.Artifacts.loadIndex(spark, s"$base/shingles"),
-          graft.ext.Artifacts.loadIndex(spark, s"$base/pairs"))
+        val st = Refresh.buildState(v1p).persisted(base)
         val t0 = System.nanoTime()
         val (_, inc) = Refresh.refresh(st, v1p, v2p, "scale-ref", 4)
         val incRows = inc.collect().map(_.toSeq).toSet
@@ -2075,11 +2026,11 @@ object ScaleCheck {
         val d = Refresh.delta(st, v1p, v2p)
         graft.ext.Artifacts.saveIndex(d.state2.pairs, s"$base/pairs2")
         val pairs2 = graft.ext.Artifacts.loadIndex(spark, s"$base/pairs2")
-        val seeds = d.addedPairs.select(col("id_a").as("doc_id"))
-          .unionByName(d.addedPairs.select(col("id_b").as("doc_id")))
-          .unionByName(d.touched).distinct().localCheckpoint(true)
+        val seeds = Refresh.seedsOf(d.touched, d.addedPairs)
+          .localCheckpoint(true)
         val tc0 = System.nanoTime()
-        val incCl = Refresh.incrementalClusters(c1p, pairs2, seeds)
+        val incCl = Refresh.incrementalClusters(c1p, pairs2, d.touched,
+          d.addedPairs)
           .collect().map(_.toSeq).toSet
         val tIncCl = (System.nanoTime() - tc0) / 1e9
         val tc1 = System.nanoTime()
