@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loader for the driver-provided parquet fixtures (TESTDATA.md). */
 object Tables {
@@ -27,11 +27,45 @@ object Tables {
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = stamp(spark, path) match {
+      case Some(st) =>
+        val session = org.apache.spark.sql.GraftColumns.sessionUUID(spark)
+          .getOrElse(String.valueOf(System.identityHashCode(spark)))
+        spark.read.schema(schemas.computeIfAbsent((session, path, st),
+          _ => spark.read.parquet(path).schema)).parquet(path)
+      case None => spark.read.parquet(path)
+    }
     if (name == "events") df.schema("ts").dataType match {
       case LongType         => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
       case _                => df
     } else df
+  }
+
+  /** Inferred parquet schemas by (session, path, [[stamp]]): inference
+    * runs a footer-reading job, so a query that loads the same table
+    * again skips it. A rewritten file changes its stamp and infers anew.
+    */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, (Long, Long)), StructType]()
+
+  /** (total bytes, latest modification time) of the files under `path`,
+    * or None when it does not exist (the plain read then reports it).
+    */
+  private def stamp(spark: SparkSession, path: String): Option[(Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val files = fs.listFiles(p, true)
+      var (bytes, mtime) = (0L, 0L)
+      while (files.hasNext) {
+        val f = files.next()
+        bytes += f.getLen
+        mtime = math.max(mtime, f.getModificationTime)
+      }
+      Some((bytes, mtime))
+    }
   }
 }

@@ -136,9 +136,19 @@ object Hints {
     * [[checkpointAndHint]].
     */
   def hintBoundedBy(ids: DataFrame, bound: DataFrame): DataFrame =
-    bound.queryExecution.logical match {
+    if (localUnderGate(bound).isDefined) broadcast(ids)
+    else checkpointAndHint(ids)
+
+  /** The rows of a DRIVER-LOCAL frame (a local relation, e.g. the
+    * cluster map of [[Dedup.dupClusters]]' driver path) whose row count
+    * is under the gate — known without a job — in the frame's column
+    * order; None for any other frame.
+    */
+  private[ext] def localUnderGate(f: DataFrame)
+    : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
+    f.queryExecution.logical match {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if l.data.length <= gate(ids.sparkSession) => broadcast(ids)
-      case _ => checkpointAndHint(ids)
+          if l.data.length <= gate(f.sparkSession) => Some(l.data)
+      case _ => None
     }
 }

@@ -44,7 +44,10 @@ import org.apache.spark.sql.functions._
   * anti-joins that retire touched rows
   * broadcast the (delta-sized) touched id list. Clusters/election/
   * manifest recompute over pair-list-sized frames — metadata, not
-  * corpus. All four state frames persist via [[Artifacts.saveIndex]]
+  * corpus — and, when the cluster map fits the driver gate, the
+  * election and the manifest sums run on the driver over one bounded
+  * job ([[manifestFromClusters]]). All four state frames persist via
+  * [[Artifacts.saveIndex]]
   * (the "build once per corpus version, probe many times" contract;
   * [[State.persisted]]).
   *
@@ -61,10 +64,12 @@ import org.apache.spark.sql.functions._
   * below about 64, whole-stage ones counting double, for its entries
   * to fit with headroom. The refresh and the rebuild therefore share
   * their plan shapes: one per-document derivation ([[perDoc]]) feeds
-  * every state frame and both pair legs, the tail reads pinned inputs
-  * of one schema ([[manifestOf]]), and small driver-side actions (gate
-  * counts, the cluster stage's collect) read checkpoints as RDDs and
-  * generate no code at all ([[Hints.rows]]).
+  * every state frame and both pair legs, and the tail reads pinned
+  * inputs of one schema ([[manifestOf]]) through driver-side actions:
+  * gate counts and the cluster stage's collect read checkpoints as RDDs
+  * and generate no code at all ([[Hints.rows]]), and the election and
+  * manifest of a driver-local cluster map compile one projection, the
+  * manifest keys, and total them on the driver.
   * `tools/codegen_footprint.py` counts a run's compiles and distinct
   * classes from a `CodeGenerator` DEBUG log.
   */
@@ -117,13 +122,14 @@ object Refresh {
     * gates its corpus once and the refresh its delta once, and the two
     * paths run their downstream stages through identical plans.
     * `spread` (r18): caller-supplied starved-scan guard (the Declared
-    * spreadIfStarved idiom — identity at cluster scale), applied before
-    * the shingle/minhash work so it does not serialize on a
-    * single-split fixture.
+    * spreadIfStarved idiom — identity at cluster scale), applied to the
+    * corpus BEFORE the gates, the costliest per-row work, so neither
+    * they nor the shingle/minhash work serialize on a single-split
+    * fixture.
     */
   private def perDoc(corpus: DataFrame, p: Params,
                      spread: DataFrame => DataFrame): DataFrame =
-    withSig(spread(Curation.standardGates(corpus))
+    withSig(Curation.standardGates(spread(corpus))
       .select(col("doc_id"), col("quality"),
         TextStats.tokenCount(col("text")).cast("long").as("n_toks"),
         Dedup.shingles(col("text"), p.k).as("sh")), p)
@@ -176,16 +182,23 @@ object Refresh {
   /** P's tail: clusters → quality election → survivor drop → manifest,
     * a pure function of (meta, pairs) shared by both paths. Both inputs
     * are pinned by LAZY checkpoints (each is first read through one
-    * branch: the cluster stage's edge pass, the election's join), so
-    * the tail's plans start from the same scans whichever path built
-    * the inputs — the rebuild's projection of its per-document frame,
-    * or the refresh's retire-and-append unions — and compile to the
-    * same classes in both (the codegen budget in the object scaladoc).
+    * branch: the cluster stage's collect or edge pass, the manifest's
+    * key job or election join), so the tail's plans start from the same
+    * scans whichever path built the inputs — the rebuild's projection
+    * of its per-document frame, or the refresh's retire-and-append
+    * unions — and compile to the same classes in both (the codegen
+    * budget in the object scaladoc). Under the cluster stage's driver
+    * gate the whole tail after its collect is one job
+    * ([[manifestFromClusters]]).
     */
   def manifestOf(metaDf: DataFrame, pairs: DataFrame, seed: String,
-                 numShards: Int): DataFrame =
-    manifestFromClusters(Dedup.dupClusters(pinned(pairs)), pinned(metaDf),
-      seed, numShards)
+                 numShards: Int): DataFrame = {
+    // meta first: pinning runs the input's own stages (the refresh's
+    // retire broadcast), so after the cluster stage's collect only the
+    // tail's work remains
+    val meta = pinned(metaDf)
+    manifestFromClusters(Dedup.dupClusters(pinned(pairs)), meta, seed, numShards)
+  }
 
   /** A lazy checkpoint of a state frame with every column NOT NULL. No
     * state row holds a null (the gates drop null ids, null text and
@@ -205,9 +218,30 @@ object Refresh {
     * cluster stage priced where it was actually paid. `manifestOf` is
     * this with a full from-scratch [[Dedup.dupClusters]] in front —
     * identical output for equal cluster frames (ExtSpec asserts it).
+    *
+    * Where it runs: a DRIVER-LOCAL cluster map under the broadcast gate
+    * (a local relation of at most [[Hints.gate]] rows — what
+    * [[Dedup.dupClusters]]' driver path returns, the property
+    * [[Hints.hintBoundedBy]] matches on) with integral ids takes
+    * [[manifestOnDriver]]: one job, then the election and the sums on
+    * the driver, returning a local relation. Any other cluster frame (a
+    * reloaded or incrementally derived map, or one over the gate) runs
+    * the distributed tail. Both give the same rows and schema
+    * (PropertySpec).
     */
   def manifestFromClusters(clusters: DataFrame, metaDf: DataFrame,
-                           seed: String, numShards: Int): DataFrame = {
+                           seed: String, numShards: Int): DataFrame =
+    Hints.localUnderGate(clusters).filter(_ => driverIds(clusters, metaDf)) match {
+      case Some(map) => manifestOnDriver(map, clusters, metaDf, seed, numShards)
+      case None => manifestDistributed(clusters, metaDf, seed, numShards)
+    }
+
+  /** The cluster-frame-sized tail as Spark jobs, for cluster maps that
+    * are not driver-local: election join and aggregate, broadcast
+    * survivor drop, manifest aggregate.
+    */
+  private def manifestDistributed(clusters: DataFrame, metaDf: DataFrame,
+                                  seed: String, numShards: Int): DataFrame = {
     val drop = clusters.join(
         Dedup.clusterSurvivors(clusters, metaDf, "doc_id", col("quality"))
           .select(col("survivor_id").as("doc_id")),
@@ -219,6 +253,115 @@ object Refresh {
     val standing = metaDf.join(Hints.hintBoundedBy(drop, clusters),
       Seq("doc_id"), "left_anti")
     TrainSet.exportManifest(standing, "doc_id", col("n_toks"), seed, numShards)
+  }
+
+  /** Whether both frames key on one integral `doc_id` type — the ids
+    * the driver election orders exactly as [[Dedup.clusterSurvivors]]'
+    * `-doc_id` tie-break does.
+    */
+  private def driverIds(clusters: DataFrame, metaDf: DataFrame): Boolean = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val t = clusters.schema("doc_id").dataType
+    t == metaDf.schema("doc_id").dataType &&
+      Seq(LongType, IntegerType, ShortType, ByteType).contains(t)
+  }
+
+  /** One meta row of a cluster member, as the driver election reads it. */
+  private final case class Member(id: Long, score: java.lang.Double,
+                                  shard: Long, tok: java.lang.Long, w: Long)
+
+  /** One shard's running manifest sums under [[TrainSet.exportManifest]]'s
+    * rules: `n` counts rows, the token sum skips nulls (null until a
+    * value arrives; ANSI overflow throws), the id words xor.
+    */
+  private final class ShardSums extends Serializable {
+    var n = 0L
+    var tok: java.lang.Long = null
+    var xor = 0L
+    def add(rows: Long, t: java.lang.Long, w: Long): ShardSums = {
+      n += rows
+      if (t != null) tok = if (tok == null) t else Math.addExact(tok, t)
+      xor ^= w
+      this
+    }
+  }
+
+  /** Whether `a` wins a cluster's election over `b`: the
+    * [[Dedup.clusterSurvivors]] order — higher score (nulls lowest, NaN
+    * highest, Spark's double order), then the lower id.
+    */
+  private def outranks(a: Member, b: Member): Boolean = {
+    val c =
+      if (a.score == null || b.score == null)
+        (if (a.score == null) 0 else 1) - (if (b.score == null) 0 else 1)
+      else org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+        .compareDoubles(a.score, b.score)
+    c > 0 || (c == 0 && a.id < b.id)
+  }
+
+  /** The tail for a DRIVER-LOCAL cluster map `map` (the rows of the
+    * local relation `clusters`): ONE job over `metaDf`'s manifest keys
+    * ([[TrainSet.manifestKeys]], read through [[Hints.rows]]) returns
+    * every cluster member's (id, score, shard, tokens, id word) — as
+    * many rows as the cluster map, which the cluster stage's byte gate
+    * bounds — and per-shard partial sums of every other row. The
+    * election, the survivor drop and the manifest totals then run on
+    * the driver; a shard left with no document has no row, as in the
+    * aggregate. Returns a local relation of
+    * [[TrainSet.manifestSchema]], ordered by shard.
+    */
+  private def manifestOnDriver(map: Seq[org.apache.spark.sql.catalyst.InternalRow],
+                               clusters: DataFrame, metaDf: DataFrame,
+                               seed: String, numShards: Int): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import scala.collection.mutable
+    val dt = clusters.schema("doc_id").dataType
+    val (di, ci) = (clusters.schema.fieldIndex("doc_id"),
+      clusters.schema.fieldIndex("cluster_id"))
+    val ct = clusters.schema(ci).dataType
+    // a null member id joins no meta row and drops none
+    val membership = map.filterNot(_.isNullAt(di)).map(r =>
+      r.get(di, dt).asInstanceOf[Number].longValue -> r.get(ci, ct))
+    val ids = membership.map(_._1).distinct.sorted.toArray
+    val keys = TrainSet.manifestKeys(metaDf, "doc_id", col("n_toks"), seed,
+      numShards, col("doc_id"), col("quality").cast("double"))
+    type Part = (Array[Member], Array[(Long, ShardSums)])
+    val parts = metaDf.sparkSession.sparkContext.runJob(Hints.rows(keys),
+      (it: Iterator[InternalRow]) => {
+        val members = mutable.ArrayBuffer.empty[Member]
+        val sums = mutable.LongMap.empty[ShardSums]
+        it.foreach { r =>
+          val id = r.get(0, dt).asInstanceOf[Number].longValue
+          val tok = if (r.isNullAt(3)) null else java.lang.Long.valueOf(r.getLong(3))
+          if (java.util.Arrays.binarySearch(ids, id) >= 0)
+            members += Member(id,
+              if (r.isNullAt(1)) null else java.lang.Double.valueOf(r.getDouble(1)),
+              r.getLong(2), tok, r.getLong(4))
+          else sums.getOrElseUpdate(r.getLong(2), new ShardSums).add(1, tok, r.getLong(4))
+        }
+        (members.toArray, sums.toArray): Part
+      })
+    val members = parts.flatMap(_._1)
+    val byId = members.groupBy(_.id)
+    val winners = mutable.HashMap.empty[Any, Member]
+    for ((id, cluster) <- membership; m <- byId.getOrElse(id, Array.empty[Member]))
+      winners.get(cluster) match {
+        case Some(w) if !outranks(m, w) =>
+        case _ => winners(cluster) = m
+      }
+    // standing = meta − (members − survivors): of the members' rows,
+    // exactly the survivors' stay
+    val survivors = winners.values.map(_.id).toSet
+    val totals = mutable.LongMap.empty[ShardSums]
+    for (part <- parts; (shard, s) <- part._2)
+      totals.getOrElseUpdate(shard, new ShardSums).add(s.n, s.tok, s.xor)
+    for (m <- members if survivors(m.id))
+      totals.getOrElseUpdate(m.shard, new ShardSums).add(1, m.tok, m.w)
+    val rows = totals.toSeq.sortBy(_._1).map { case (shard, s) =>
+      org.apache.spark.sql.Row(shard, s.n, s.tok, s.xor)
+    }
+    metaDf.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      TrainSet.manifestSchema)
   }
 
   /** The from-scratch path: P(corpus) end to end. */

@@ -412,17 +412,39 @@ object TrainSet {
     * sized.
     */
   def exportManifest(df: DataFrame, idCol: String, tokenCol: Column,
-                     seed: String, numShards: Int): DataFrame = {
-    require(numShards > 0, s"numShards must be positive (got $numShards)")
-    val h = md5(concat(lit(seed), lit(":"), col(idCol).cast("string")))
-    df.filter(col(idCol).isNotNull)
-      .select(
-        (conv(substring(h, 1, 8), 16, 10).cast("long") % numShards).as("shard"),
-        tokenCol.cast("long").as("_tok"),
-        conv(substring(h, 9, 15), 16, 10).cast("long").as("_w"))
+                     seed: String, numShards: Int): DataFrame =
+    manifestKeys(df, idCol, tokenCol, seed, numShards)
       .groupBy("shard")
       .agg(count(lit(1)).as("n_docs"), sum(col("_tok")).as("token_mass"),
         bit_xor(col("_w")).as("id_xor"))
+
+  /** The per-row keys every [[exportManifest]] sum is taken over: the
+    * non-null-id rows of `df` as the `carry` columns followed by
+    * (shard, _tok, _w) — the md5 shard, the token count and the 60-bit
+    * id word. The one definition of that arithmetic: the driver-resident
+    * manifest tail ([[Refresh.manifestFromClusters]]) reads it too, so
+    * both tails total bit-identical values.
+    */
+  def manifestKeys(df: DataFrame, idCol: String, tokenCol: Column,
+                   seed: String, numShards: Int, carry: Column*): DataFrame = {
+    require(numShards > 0, s"numShards must be positive (got $numShards)")
+    val h = md5(concat(lit(seed), lit(":"), col(idCol).cast("string")))
+    df.filter(col(idCol).isNotNull)
+      .select(carry :+
+        (conv(substring(h, 1, 8), 16, 10).cast("long") % numShards).as("shard") :+
+        tokenCol.cast("long").as("_tok") :+
+        conv(substring(h, 9, 15), 16, 10).cast("long").as("_w"): _*)
+  }
+
+  /** [[exportManifest]]'s output schema, for manifests totalled
+    * elsewhere (the driver-resident tail of
+    * [[Refresh.manifestFromClusters]]).
+    */
+  val manifestSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("shard", LongType),
+      StructField("n_docs", LongType, nullable = false),
+      StructField("token_mass", LongType), StructField("id_xor", LongType)))
   }
 
   /** Deterministic uniform negative sampling for contrastive training:

@@ -1550,7 +1550,7 @@ class ExtSpec extends SparkSuite {
     // refresh plus the rebuild it is checked against runs at most this
     // many Spark jobs (job counts are deterministic for fixed data and
     // session, unlike wall time or codegen-cache hits)
-    val budget = 36
+    val budget = 26
     val (v1, v2) = x23Versions()
     val st1 = Refresh.buildState(v1)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
@@ -1560,6 +1560,10 @@ class ExtSpec extends SparkSuite {
     val ((inc, full), jobs) = withJobCount(run())
     assert(inc == full, "refresh manifest != rebuild manifest")
     assert(jobs <= budget, s"refresh + rebuild ran $jobs jobs, budget $budget")
+    // the carve's cluster map is driver-local, so the manifest tail runs
+    // on the driver: a fall back to the distributed tail fails here
+    assert(Refresh.refresh(st1, v1, v2, seed = "spec", numShards = 4)._2.isLocal,
+      "refresh manifest is not a driver-local relation: distributed tail ran")
   }
 
   test("X22b packed sequences: conservation, capacity-boundary starts, no doc splits") {

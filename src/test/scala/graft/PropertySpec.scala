@@ -679,6 +679,52 @@ class PropertySpec extends SparkSuite {
       }
   }
 
+  test("manifestFromClusters: the driver tail equals the distributed tail on random graphs") {
+    import graft.ext.{Refresh, TrainSet}
+    // meta over ids 0..n-1 (some absent), qualities from a tiny set so
+    // elections tie, a few null scores, NaN scores and null token
+    // counts; pair lists over a wider id range, so some cluster members
+    // have no meta row
+    val cases = samples(for {
+      n <- Gen.choose(0, 12)
+      metaIds <- Gen.someOf(0L until n.toLong)
+      q <- Gen.listOfN(metaIds.size, Gen.frequency(6 -> Gen.oneOf(0.5, 0.8),
+        1 -> Gen.const(Double.NaN), 1 -> Gen.const(-1.0)))
+      tok <- Gen.listOfN(metaIds.size, Gen.frequency(6 -> Gen.choose(0L, 50L), 1 -> Gen.const(-1L)))
+      nPairs <- Gen.choose(0, 14)
+      pairs <- Gen.listOfN(nPairs, Gen.zip(Gen.choose(0L, n + 3L), Gen.choose(0L, n + 3L)))
+      shards <- Gen.choose(1, 14)
+    } yield (metaIds.toSeq.sorted.zip(q).zip(tok).map { case ((i, s), t) =>
+        (i, if (s < 0) None else Some(s), if (t < 0) None else Some(t)) },
+      pairs.filter { case (a, b) => a != b }.map { case (a, b) => (a min b, a max b) }.distinct,
+      shards), 28)
+    var (tied, emptied, wide, empty, absent) = (0, 0, 0, 0, 0)
+    cases.foreach { case (meta, pairs, shards) =>
+      val metaDf = meta.toDF("doc_id", "quality", "n_toks")
+      val local = Dedup.dupClusters(pairs.toDF("id_a", "id_b"))
+      assert(local.isLocal, "cluster map under the gate: local relation expected")
+      val got = Refresh.manifestFromClusters(local, metaDf, "prop", shards)
+      val want = Refresh.manifestFromClusters(local.localCheckpoint(), metaDf, "prop", shards)
+      assert(got.isLocal && !want.isLocal, "driver tail vs distributed tail")
+      assert(got.schema == want.schema, s"${got.schema} vs ${want.schema}")
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+      assert(rows(got) == rows(want), s"meta=$meta pairs=$pairs shards=$shards")
+      // coverage of the shapes this property exists for
+      val members = local.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val byId = meta.map(m => m._1 -> m._2).toMap
+      if (members.keys.groupBy(members).values.exists(ms =>
+          ms.toSeq.flatMap(byId.get).groupBy(identity).values.exists(_.size > 1))) tied += 1
+      val allShards = TrainSet.exportManifest(metaDf, "doc_id", col("n_toks"), "prop", shards)
+        .collect().map(_.getLong(0)).toSet
+      if (allShards != rows(got).map(_.head)) emptied += 1
+      if (shards > meta.size) wide += 1
+      if (members.isEmpty) empty += 1
+      if (members.keys.exists(!byId.contains(_))) absent += 1
+    }
+    assert(Seq(tied, emptied, wide, empty, absent).forall(_ > 0),
+      s"uncovered shape: tied=$tied emptied=$emptied wide=$wide empty=$empty absent=$absent")
+  }
+
   test("normalizeText fuzz: idempotent, case/edge-punct invariant, equals a plain-JVM replay") {
     // plain-JVM reimplementation of the declared normalization
     def refNorm(s: String): String =
