@@ -271,20 +271,27 @@ object Dedup {
     */
   private[graft] def bandedFrame(withSig: DataFrame, bands: Int,
                           rowsPerBand: Int): DataFrame =
-    withSig.select(
-      col("doc_id"),
-      explode(transform(sequence(lit(0), lit(bands - 1)),
-        b => struct(b.as("band"),
-          xxhash64((Seq(b) ++ (0 until rowsPerBand).map(r =>
-            element_at(col("sig"), b * rowsPerBand + r + 1))): _*).as("bucket"))))
-        .as("bb"))
+    withSig.select(col("doc_id"),
+        explode(bandBuckets(col("sig"), bands, rowsPerBand)).as("bb"))
       .select(col("doc_id"), col("bb.band"), col("bb.bucket"))
+
+  /** A MinHash signature's LSH band buckets — per band b, the struct
+    * (band = b, bucket = xxhash64 of b and the band's `rowsPerBand`
+    * signature values): the one banding rule, which [[bandedFrame]]
+    * explodes and the refresh's driver fold reads as an array.
+    */
+  private[graft] def bandBuckets(sig: Column, bands: Int,
+                                 rowsPerBand: Int): Column =
+    transform(sequence(lit(0), lit(bands - 1)),
+      b => struct(b.as("band"),
+        xxhash64((Seq(b) ++ (0 until rowsPerBand).map(r =>
+          element_at(sig, b * rowsPerBand + r + 1))): _*).as("bucket")))
 
   /** Exact-Jaccard verification of a candidate (id_a, id_b) frame against
     * the shingle sets in `shA`/`shB` (each (doc_id, sh)).
     */
-  private def verifyJaccard(cand: DataFrame, shA: DataFrame, shB: DataFrame,
-                            threshold: Double): DataFrame =
+  private[graft] def verifyJaccard(cand: DataFrame, shA: DataFrame, shB: DataFrame,
+                                   threshold: Double): DataFrame =
     cand
       .join(shA.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(shB.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b")
@@ -293,6 +300,20 @@ object Dedup {
         (size(col("sh_a")) + size(col("sh_b")) - col("common")), 6))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
+
+  /** [[verifyJaccard]]'s rule for one pair of shingle sets on the driver,
+    * bit for bit: the distinct common shingles (`array_intersect`) over
+    * `size(a) + size(b) - common`, rounded HALF_UP to 6 decimals the way
+    * Spark's `round` rounds a double (through its shortest decimal
+    * string), then `>= threshold`. PropertySpec holds the two equal.
+    */
+  private[graft] def jaccardKeeps(a: Array[String], b: Array[String],
+                                  threshold: Double): Boolean = {
+    val common = a.toSet.intersect(b.toSet).size
+    val j = common.toDouble / (a.length + b.length - common)
+    java.math.BigDecimal.valueOf(j)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue >= threshold
+  }
 
   /** X1b: CCNet-family text NORMALIZATION — lowercase, strip everything
     * outside [a-z0-9 ], collapse whitespace runs, trim. The canonical
@@ -1008,16 +1029,22 @@ object Dedup {
     (0 until n).map(i => values(i) -> minOf.get(find(i)))
   }
 
-  /** One partition's (a, b) ids and their byte size — None as soon as
-    * the partition's ids pass `budget` bytes or a null id appears (the
-    * iterative path owns null semantics). Built outside
-    * [[collectPairsUnder]] so the task closure captures only its
-    * arguments.
+  /** The byte gate of the driver-local paths ([[CcDriverEdgeBytesKey]]):
+    * the cluster stage's collected ids, and the refresh's driver fold
+    * ([[Refresh.delta]]).
     */
-  private def pairPartition(dt: org.apache.spark.sql.types.DataType,
-                            budget: Long)
-    : Iterator[org.apache.spark.sql.catalyst.InternalRow] =>
-      Option[(Array[Any], Array[Any], Long)] = {
+  private[ext] def driverEdgeBytes(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.conf.getOption(CcDriverEdgeBytesKey).map(_.toLong)
+      .getOrElse(DefaultCcDriverEdgeBytes)
+
+  /** A pair row's two ids and their byte charge, for [[collectUnder]]:
+    * 8 bytes per long id (4 / 2 for Integer / Short), the UTF-8 length
+    * of a string id. A null id charges more than any budget — the
+    * iterative path owns null semantics. Built outside the job so the
+    * task closure captures only what it reads.
+    */
+  private def pairRow(dt: org.apache.spark.sql.types.DataType)
+    : org.apache.spark.sql.catalyst.InternalRow => Option[((Any, Any), Long)] = {
     import org.apache.spark.sql.types._
     val read: (org.apache.spark.sql.catalyst.InternalRow, Int) => Any = dt match {
       case LongType => (r, i) => r.getLong(i)
@@ -1029,77 +1056,83 @@ object Dedup {
       case StringType => (r, i) => r.getUTF8String(i).numBytes().toLong
       case _ => val w = dt.defaultSize.toLong; (_, _) => w
     }
-    it => {
-      val as = Array.newBuilder[Any]; val bs = Array.newBuilder[Any]
-      var bytes = 0L
-      var ok = true
-      while (ok && it.hasNext) {
-        val r = it.next()
-        if (r.isNullAt(0) || r.isNullAt(1)) ok = false
-        else {
-          as += read(r, 0); bs += read(r, 1)
-          bytes += width(r, 0) + width(r, 1)
-          ok = bytes <= budget
-        }
-      }
-      if (ok) Some((as.result(), bs.result(), bytes)) else None
-    }
+    r => Some(
+      if (r.isNullAt(0) || r.isNullAt(1)) (null, Long.MaxValue)
+      else ((read(r, 0), read(r, 1)), width(r, 0) + width(r, 1)))
   }
 
-  /** The (a, b) pair frame's ids on the driver when rows × id width
-    * stays within `gateBytes` — ONE job over [[Hints.rows]] (a
-    * checkpointed pair list is read from its RDD: no plan, no generated
-    * code). Each task stops buffering at its byte budget (the gate, and
-    * at most half of `spark.driver.maxResultSize` split over the
-    * partitions, so a many-partition pair list can never abort the job
-    * on result size); the driver drops what it holds the moment the
-    * running total passes the gate.
+  /** The values `read` takes from `rows`, on the driver, while their byte
+    * charges stay within `gateBytes` — ONE job. `read` maps a row to
+    * `Some((value, bytes))` to keep it and None to skip it; a row the
+    * driver cannot take charges `Long.MaxValue`. Each task stops
+    * buffering at its byte budget (the gate, and at most half of
+    * `spark.driver.maxResultSize` split over the partitions, so a
+    * many-partition frame can never abort the job on result size); the
+    * driver drops what it holds the moment the running total passes the
+    * gate. Returns the kept values and their total charge, or None over
+    * the gate. Pass a checkpoint's or a plan's rows ([[Hints.rows]]).
     */
-  private def collectPairsUnder(ids: DataFrame, gateBytes: Long)
-    : Option[(Array[Any], Array[Any])] = {
-    val rdd = Hints.rows(ids)
-    val sc = ids.sparkSession.sparkContext
-    val parts = rdd.getNumPartitions
+  private[ext] def collectUnder[T: scala.reflect.ClassTag](
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      gateBytes: Long)(
+      read: org.apache.spark.sql.catalyst.InternalRow => Option[(T, Long)])
+    : Option[(Array[T], Long)] = {
+    val sc = rows.sparkContext
+    val parts = rows.getNumPartitions
     val maxResult = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
     val budget =
       if (maxResult > 0) math.min(gateBytes, maxResult / 2 / math.max(parts, 1))
       else gateBytes
-    val got = new Array[(Array[Any], Array[Any])](parts)
+    val got = new Array[Array[T]](parts)
     var total = 0L
     var over = false
-    type Part = Option[(Array[Any], Array[Any], Long)]
-    sc.runJob[org.apache.spark.sql.catalyst.InternalRow, Part](rdd,
-      pairPartition(ids.schema.fields(0).dataType, budget),
+    type Part = Option[(Array[T], Long)]
+    sc.runJob[org.apache.spark.sql.catalyst.InternalRow, Part](rows,
+      partitionUnder(read, budget),
       (i: Int, res: Part) => res match {
-        case Some((a, b, n)) if !over && total + n <= gateBytes =>
-          total += n; got(i) = (a, b)
+        case Some((vs, n)) if !over && n <= gateBytes - total =>
+          total += n; got(i) = vs
         case _ => over = true; got.indices.foreach(got(_) = null)
       })
-    if (over) None
-    else Some((got.flatMap(_._1), got.flatMap(_._2)))
+    if (over) None else Some((got.flatMap(_.iterator), total))
   }
+
+  /** One task of [[collectUnder]]: the partition's kept values and their
+    * charge, or None as soon as the charge passes `budget`.
+    */
+  private def partitionUnder[T: scala.reflect.ClassTag](
+      read: org.apache.spark.sql.catalyst.InternalRow => Option[(T, Long)],
+      budget: Long)
+    : Iterator[org.apache.spark.sql.catalyst.InternalRow] => Option[(Array[T], Long)] =
+    it => {
+      val out = Array.newBuilder[T]
+      var bytes = 0L
+      var ok = true
+      while (ok && it.hasNext) read(it.next()).foreach { case (v, n) =>
+        ok = n <= budget - bytes
+        if (ok) { out += v; bytes += n }
+      }
+      if (ok) Some((out.result(), bytes)) else None
+    }
 
   def dupClusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
                   maxIter: Int = 20): DataFrame = {
     val ids = if (pairs.columns.toSeq == Seq(idA, idB)) pairs
       else pairs.select(idA, idB)
-    val gate = pairs.sparkSession.conf.getOption(CcDriverEdgeBytesKey)
-      .map(_.toLong).getOrElse(DefaultCcDriverEdgeBytes)
     val dt = ids.schema.fields(0).dataType
     // size-gated driver path (scaladoc above): the union-find takes the
     // pair list as it stands — duplicates and one direction per pair
     // are fine — so only the iterative path builds the edge frame
     driverMinOrdering(dt).flatMap(ord =>
-        collectPairsUnder(ids, gate).map(ord -> _)) match {
-      case Some((ord, (as, bs))) =>
+        collectUnder(Hints.rows(ids), driverEdgeBytes(pairs.sparkSession))(
+          pairRow(dt)).map(got => ord -> got._1)) match {
+      case Some((ord, edges)) =>
         val schema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("doc_id", dt),
           org.apache.spark.sql.types.StructField("cluster_id", dt)))
-        import scala.jdk.CollectionConverters._
-        pairs.sparkSession.createDataFrame(
-          driverUnionFind(as, bs, ord)
-            .map { case (a, b) => org.apache.spark.sql.Row(a, b) }.asJava,
-          schema)
+        Hints.local(pairs.sparkSession, schema,
+          driverUnionFind(edges.map(_._1), edges.map(_._2), ord)
+            .map { case (a, b) => org.apache.spark.sql.Row(a, b) })
       case None =>
         // both directions of every pair from ONE read of `pairs`: a
         // lazily derived pair list upstream is then computed once per

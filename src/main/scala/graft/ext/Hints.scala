@@ -139,6 +139,17 @@ object Hints {
     if (localUnderGate(bound).isDefined) broadcast(ids)
     else checkpointAndHint(ids)
 
+  /** A DRIVER-LOCAL frame (a local relation) of `rows` under `schema` —
+    * how the driver paths hand their results back (the cluster map of
+    * [[Dedup.dupClusters]], the refresh's driver fold and manifest).
+    */
+  private[ext] def local(spark: SparkSession,
+                         schema: org.apache.spark.sql.types.StructType,
+                         rows: Seq[org.apache.spark.sql.Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
   /** The rows of a DRIVER-LOCAL frame (a local relation, e.g. the
     * cluster map of [[Dedup.dupClusters]]' driver path) whose row count
     * is under the gate — known without a job — in the frame's column

@@ -40,16 +40,27 @@ import org.apache.spark.sql.functions._
   * Scale: the state frames are SLIM — meta (id, quality, n_toks), band
   * index (id, band, bucket), per-doc shingle sets (the one state frame
   * that scales with text volume — the cross-verify side), pair list
-  * (id, id). Corpus text is touched only for the delta; the
-  * anti-joins that retire touched rows
-  * broadcast the (delta-sized) touched id list. Clusters/election/
-  * manifest recompute over pair-list-sized frames — metadata, not
-  * corpus — and, when the cluster map fits the driver gate, the
-  * election and the manifest sums run on the driver over one bounded
-  * job ([[manifestFromClusters]]). All four state frames persist via
-  * [[Artifacts.saveIndex]]
-  * (the "build once per corpus version, probe many times" contract;
-  * [[State.persisted]]).
+  * (id, id). Corpus text is read for the diff's hashes and otherwise
+  * only for the delta: the fresh documents are picked out by id before
+  * the curation gates, so the gates, shingles and MinHash run on the
+  * delta alone and no corpus text crosses an Exchange. A delta that
+  * fits the driver's byte budget ([[Dedup.CcDriverEdgeBytesKey]], the
+  * cluster stage's gate: the diff's ids, the fresh documents' rows with
+  * their shingle sets and band buckets, and the standing candidates'
+  * rows all draw on it) is folded there: an `InSet` on the ids under the
+  * gates, one probe of the retired band index and one fetch of the
+  * candidates' shingle sets, the pairs banded and verified on the
+  * driver, and local relations appended to the retired state
+  * ([[foldOnDriver]]). A larger delta takes the distributed [[fold]]:
+  * a size-gated broadcast semi-join under an observation boundary, so
+  * the gates still see the delta's rows only. The anti-joins that
+  * retire touched rows broadcast the (delta-sized) touched id list.
+  * Clusters/election/manifest recompute over pair-list-sized frames —
+  * metadata, not corpus — and, when the cluster map fits the driver
+  * gate, the election and the manifest sums run on the driver over one
+  * bounded job ([[manifestFromClusters]]). All four state frames
+  * persist via [[Artifacts.saveIndex]] (the "build once per corpus
+  * version, probe many times" contract; [[State.persisted]]).
   *
   * Codegen budget: a refresh is a standing job a long-lived driver
   * repeats, so its generated code should compile once. Spark keeps
@@ -122,10 +133,13 @@ object Refresh {
     * gates its corpus once and the refresh its delta once, and the two
     * paths run their downstream stages through identical plans.
     * `spread` (r18): caller-supplied starved-scan guard (the Declared
-    * spreadIfStarved idiom — identity at cluster scale), applied to the
-    * corpus BEFORE the gates, the costliest per-row work, so neither
-    * they nor the shingle/minhash work serialize on a single-split
-    * fixture.
+    * spreadIfStarved idiom — identity at cluster scale) wrapped round
+    * the corpus. Catalyst pushes the gate Filter through its
+    * Repartition, so the gates still run on the scan's splits (one task
+    * on a single-split fixture) and only the survivors' text is spread
+    * for the shingle/MinHash work. Forcing the gates above the Exchange
+    * measured slower on a 4-core box (+10.5 % wall): the whole corpus
+    * text then crosses the shuffle.
     */
   private def perDoc(corpus: DataFrame, p: Params,
                      spread: DataFrame => DataFrame): DataFrame =
@@ -137,7 +151,7 @@ object Refresh {
   /** A per-document frame's MinHash signature, appended as `sig` from
     * its shingle set `sh`.
     */
-  private def withSig(docs: DataFrame, p: Params): DataFrame =
+  private[graft] def withSig(docs: DataFrame, p: Params): DataFrame =
     docs.withColumn("sig", Dedup.signatureOf(col("sh"),
       p.bands * p.rowsPerBand, p.portableSig))
 
@@ -153,7 +167,7 @@ object Refresh {
     * lazy projections that read it (the pair list through four
     * branches).
     */
-  private def stateOf(docs: DataFrame, p: Params): State = {
+  private[graft] def stateOf(docs: DataFrame, p: Params): State = {
     val h = hashed(docs)
     State(docs.drop("sh", "sig"),
       Dedup.bandedFrame(h, p.bands, p.rowsPerBand),
@@ -231,7 +245,8 @@ object Refresh {
     */
   def manifestFromClusters(clusters: DataFrame, metaDf: DataFrame,
                            seed: String, numShards: Int): DataFrame =
-    Hints.localUnderGate(clusters).filter(_ => driverIds(clusters, metaDf)) match {
+    Hints.localUnderGate(clusters)
+        .filter(_ => driverIds(clusters -> "doc_id", metaDf -> "doc_id")) match {
       case Some(map) => manifestOnDriver(map, clusters, metaDf, seed, numShards)
       case None => manifestDistributed(clusters, metaDf, seed, numShards)
     }
@@ -255,15 +270,38 @@ object Refresh {
     TrainSet.exportManifest(standing, "doc_id", col("n_toks"), seed, numShards)
   }
 
-  /** Whether both frames key on one integral `doc_id` type — the ids
-    * the driver election orders exactly as [[Dedup.clusterSurvivors]]'
-    * `-doc_id` tie-break does.
+  /** Whether the named id columns share one integral type — ids the
+    * driver paths hold as longs and order exactly as Spark does (the
+    * election's `-doc_id` tie-break in [[Dedup.clusterSurvivors]], the
+    * within-delta `id_a < id_b`).
     */
-  private def driverIds(clusters: DataFrame, metaDf: DataFrame): Boolean = {
+  private def driverIds(cols: (DataFrame, String)*): Boolean = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val t = clusters.schema("doc_id").dataType
-    t == metaDf.schema("doc_id").dataType &&
-      Seq(LongType, IntegerType, ShortType, ByteType).contains(t)
+    val ts = cols.map { case (df, c) => df.schema(c).dataType }.distinct
+    ts.size == 1 && Seq(LongType, IntegerType, ShortType, ByteType).contains(ts.head)
+  }
+
+  /** An integral id column's reader: the value at an ordinal as a long. */
+  private def idAt(dt: org.apache.spark.sql.types.DataType)
+    : (org.apache.spark.sql.catalyst.InternalRow, Int) => Long = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
+    dt match {
+      case IntegerType => (r, i) => r.getInt(i).toLong
+      case ShortType => (r, i) => r.getShort(i).toLong
+      case ByteType => (r, i) => r.getByte(i).toLong
+      case _ => (r, i) => r.getLong(i)
+    }
+  }
+
+  /** A long id back as a value of its integral column type. */
+  private def idValue(dt: org.apache.spark.sql.types.DataType): Long => Any = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
+    dt match {
+      case IntegerType => _.toInt
+      case ShortType => _.toShort
+      case ByteType => _.toByte
+      case _ => x => x
+    }
   }
 
   /** One meta row of a cluster member, as the driver election reads it. */
@@ -360,8 +398,7 @@ object Refresh {
     val rows = totals.toSeq.sortBy(_._1).map { case (shard, s) =>
       org.apache.spark.sql.Row(shard, s.n, s.tok, s.xor)
     }
-    metaDf.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-      TrainSet.manifestSchema)
+    Hints.local(metaDf.sparkSession, TrainSet.manifestSchema, rows)
   }
 
   /** The from-scratch path: P(corpus) end to end. */
@@ -376,8 +413,9 @@ object Refresh {
     * from every state frame (broadcast anti-join on the delta-sized
     * touched list), gate + shingle + band ONLY the added/changed docs,
     * find their cross pairs against the standing index and their
-    * within-batch pairs, and re-derive the manifest from the updated
-    * slim state. Returns (updated state, manifest).
+    * within-batch pairs ([[delta]] — on the driver when the delta fits
+    * it), and re-derive the manifest from the updated slim state.
+    * Returns (updated state, manifest).
     */
   def refresh(state: State, oldCorpus: DataFrame, newCorpus: DataFrame,
               seed: String, numShards: Int,
@@ -397,62 +435,300 @@ object Refresh {
   final case class Delta(state2: State, touched: DataFrame,
                          addedPairs: DataFrame)
 
+  /** The refresh's delta: diff v1 → v2, then fold the touched and fresh
+    * documents into the standing state.
+    *
+    * When the delta fits the driver ([[deltaOnDriver]]: integral ids, and
+    * the diff's ids, the fresh documents' rows and their candidates
+    * within the [[Dedup.CcDriverEdgeBytesKey]] byte budget) the fold
+    * runs there, four jobs after the diff; any other delta takes the
+    * distributed [[fold]]. Both give the same frames (PropertySpec).
+    */
   def delta(state: State, oldCorpus: DataFrame, newCorpus: DataFrame,
             p: Params = Params(),
             spread: DataFrame => DataFrame = identity): Delta = {
-    // checkpoint the SLIM diff once: `touched` and `freshIds` both
+    // checkpoint the SLIM diff once: `touched` and the fresh ids both
     // derive from it, and without the pin each derivation replays the
     // corpus-sized hash-compare join (two full passes over both
-    // corpora — measured r18, guide §1.2's "don't compute twice")
-    // d EAGER (r19): the batched count in fold reads it from two
-    // concurrent branches, and a lazy d first-read from both would
-    // duplicate the corpus-sized hash-compare join (the cleanedDelta
-    // race note)
+    // corpora — measured r18, guide §1.2's "don't compute twice").
+    // LAZY: its first reader is always one job reading it through one
+    // branch — the driver path's id collect, or the fallback's fresh-id
+    // gate count — so the corpus-sized join runs once (a lazy
+    // checkpoint first read from two concurrent branches would run it
+    // twice: the cleanedDelta race note)
     val d = CorpusDiff.diff(oldCorpus, newCorpus, "doc_id", "text")
-      .select("doc_id", "status").localCheckpoint(true)
-    // NOT NULL (the diff drops null ids), as fold requires
-    val touched = d.filter(col("status").isin("removed", "changed") &&
-        col("doc_id").isNotNull)
-      .select("doc_id").localCheckpoint(false)
-    val freshIds = d.filter(col("status").isin("added", "changed"))
-      .select("doc_id")
-    val newDocs = newCorpus.join(freshIds, Seq("doc_id"), "left_semi")
-    // the delta's per-document frame — the rebuild's derivation, run on
-    // the added/changed documents only
-    fold(state, touched, perDoc(newDocs, p, spread).localCheckpoint(false), p)
+      .select("doc_id", "status").localCheckpoint(false)
+    deltaOnDriver(state, d, newCorpus, p).getOrElse {
+      // NOT NULL (the diff drops null ids), as fold requires
+      val touched = d.filter(col("status").isin("removed", "changed") &&
+          col("doc_id").isNotNull)
+        .select("doc_id").localCheckpoint(false)
+      val freshIds = d.filter(col("status").isin("added", "changed"))
+        .select("doc_id")
+      fold(state, touched,
+        freshPerDoc(newCorpus, freshIds, p, spread).localCheckpoint(false), p)
+    }
+  }
+
+  /** The distributed fold's per-document frame of the fresh documents:
+    * the rows of `newCorpus` whose ids are in `freshIds`, selected by a
+    * size-gated broadcast semi-join, then [[perDoc]]. The `delta_in`
+    * observation (the selected row count) is a boundary Catalyst pushes
+    * no Filter through: the curation gates stay above the semi-join and
+    * evaluate the delta's rows only, where they would otherwise sink onto
+    * the corpus scan below the join.
+    */
+  private[graft] def freshPerDoc(newCorpus: DataFrame, freshIds: DataFrame,
+                                 p: Params,
+                                 spread: DataFrame => DataFrame): DataFrame =
+    perDoc(newCorpus.join(Hints.checkpointAndHint(freshIds), Seq("doc_id"), "left_semi")
+      .observe("delta_in", count(lit(1)).as("rows")), p, spread)
+
+  /** [[delta]] on the driver, or None when the delta does not fit it. One
+    * bounded collect ([[Dedup.collectUnder]]) reads the checkpointed
+    * diff's removed, added and changed ids; the fresh documents of
+    * `newCorpus` are then picked out by id membership (an `InSet` under
+    * the curation gates — no join, no Exchange of corpus text, and the
+    * gates see the delta only) and [[foldOnDriver]] takes them from
+    * there. Every collect draws on the one byte budget. `spread` is not
+    * applied: the fresh rows end on the driver.
+    */
+  private def deltaOnDriver(state: State, d: DataFrame, newCorpus: DataFrame,
+                            p: Params): Option[Delta] =
+    if (!driverIds(d -> "doc_id", newCorpus -> "doc_id", state.meta -> "doc_id",
+        state.bandIdx -> "doc_id", state.shingles -> "doc_id",
+        state.pairs -> "id_a", state.pairs -> "id_b")) None
+    else {
+      import org.apache.spark.sql.GraftColumns
+      val dt = d.schema("doc_id").dataType
+      val budget = Dedup.driverEdgeBytes(d.sparkSession)
+      Dedup.collectUnder(Hints.rows(d), budget)(diffRow(dt)).flatMap {
+        case (ids, used) =>
+          val v = idValue(dt)
+          val fresh = ids.collect { case (id, s) if s != Removed => v(id) }
+          val inFresh = GraftColumns.column(
+            org.apache.spark.sql.catalyst.expressions.InSet(
+              GraftColumns.expression(col("doc_id")), fresh.toSet))
+          foldOnDriver(state, ids.collect { case (id, s) if s != Added => id }.toSeq,
+            perDoc(newCorpus.filter(inFresh), p, identity), p, budget - used)
+      }
+    }
+
+  // the diff statuses the driver fold collects
+  private final val Removed = 0
+  private final val Added = 1
+  private final val Changed = 2
+
+  /** A diff row (doc_id, status) as [[deltaOnDriver]] collects it: the id
+    * and its status code, charged the id's width; unchanged rows are
+    * skipped, and a null id charges more than any budget.
+    */
+  private def diffRow(dt: org.apache.spark.sql.types.DataType)
+    : org.apache.spark.sql.catalyst.InternalRow => Option[((Long, Int), Long)] = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val id = idAt(dt)
+    val width = dt.defaultSize.toLong
+    val codes = Seq("removed" -> Removed, "added" -> Added, "changed" -> Changed)
+      .map { case (s, c) => UTF8String.fromString(s) -> c }.toMap
+    r =>
+      if (r.isNullAt(0)) Some((null, Long.MaxValue))
+      else codes.get(r.getUTF8String(1)).map(c => (id(r, 0), c) -> width)
+  }
+
+  /** [[fold]] on the driver, for `touched` ids and a per-document frame
+    * `fresh` that fit it — None when a collect passes `budget` bytes.
+    * Three bounded collects ([[Dedup.collectUnder]]), each one job:
+    *  1. `fresh`'s rows with their band buckets ([[Dedup.bandBuckets]],
+    *     the banding rule of the state frames);
+    *  2. the rows of the RETIRED standing band index (`touched` dropped
+    *     task-side) in one of the fresh documents' buckets — skipped when
+    *     no fresh document has a shingle;
+    *  3. the shingle sets of the standing documents those rows name —
+    *     skipped when there are none.
+    * The within-delta pairs (`id_a < id_b`, distinct across bands) and
+    * the cross pairs (as `least`/`greatest`) are then verified on the
+    * driver ([[Dedup.jaccardKeeps]], [[Dedup.verifyJaccard]]'s rule) and
+    * every frame [[appended]] receives is a local relation. A fresh
+    * document with no shingle is meta only, as in [[stateOf]].
+    */
+  private[graft] def foldOnDriver(state: State, touched: Seq[Long], fresh: DataFrame,
+                                  p: Params, budget: Long): Option[Delta] = {
+    val metaCols = fresh.columns.filterNot(Set("sh", "sig")).toSeq
+    val docs = fresh.select(metaCols.map(col) :+ col("sh") :+
+      Dedup.bandBuckets(col("sig"), p.bands, p.rowsPerBand).as("bb"): _*)
+    val m = metaCols.size
+    Dedup.collectUnder(Hints.rows(docs), budget)(docRow(docs.schema, m)).flatMap {
+      case (rows, usedDocs) =>
+        val all = rows.map(FreshDoc.of(_, docs.schema.fieldIndex("doc_id"), m))
+        val hashedDocs = all.filter(_.sh.nonEmpty)
+        val shOf = hashedDocs.map(f => f.id -> f.sh).toMap
+        val byKey = hashedDocs.flatMap(f => f.keys.map(_ -> f.id)).groupMap(_._1)(_._2)
+        for {
+          (probed, usedProbe) <-
+            if (byKey.isEmpty) Some((Array.empty[(Long, (Int, Long))], 0L))
+            else Dedup.collectUnder(Hints.rows(state.bandIdx), budget - usedDocs)(
+              probeRow(state.bandIdx.schema, byKey.keySet, touched.toSet))
+          cand = probed.flatMap { case (o, key) => byKey(key).map(_ -> o) }.toSet
+          (oldSh, _) <-
+            if (cand.isEmpty) Some((Array.empty[(Long, Array[String])], 0L))
+            else Dedup.collectUnder(Hints.rows(state.shingles),
+              budget - usedDocs - usedProbe)(
+              shingleRow(state.shingles.schema, cand.map(_._2)))
+        } yield {
+          def kept(a: Array[String], b: Array[String]) =
+            Dedup.jaccardKeeps(a, b, p.threshold)
+          val within = byKey.values.flatMap(ids =>
+              for (a <- ids.toSeq; b <- ids.toSeq if a < b) yield (a, b)).toSet
+            .filter(ab => kept(shOf(ab._1), shOf(ab._2)))
+          val oldOf = oldSh.toMap
+          val cross = cand.toSeq.collect {
+            case (f, o) if oldOf.get(o).exists(kept(shOf(f), _)) =>
+              (math.min(f, o), math.max(f, o))
+          }
+          localFold(state, touched, docs.schema, m, all, within.toSeq ++ cross)
+        }
+    }
+  }
+
+  /** [[foldOnDriver]]'s result: the touched ids, the fresh documents'
+    * meta, band index and shingle rows and the added pairs as local
+    * relations (the schemas of their distributed counterparts, read off
+    * the collected frame `schema`: `m` meta columns, `sh`, `bb`),
+    * [[appended]] to the retired state.
+    */
+  private def localFold(state: State, touched: Seq[Long],
+                        schema: org.apache.spark.sql.types.StructType, m: Int,
+                        docs: Seq[FreshDoc], added: Seq[(Long, Long)]): Delta = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+    val spark = state.meta.sparkSession
+    val idField = schema("doc_id")
+    val v = idValue(idField.dataType)
+    val hashedDocs = docs.filter(_.sh.nonEmpty)
+    val bucket = schema("bb").dataType.asInstanceOf[ArrayType]
+      .elementType.asInstanceOf[StructType]
+    val touchedDf = Hints.local(spark,
+      StructType(Seq(idField.copy(nullable = false))), touched.map(t => Row(v(t))))
+    appended(state, touchedDf,
+      if (touched.size <= Hints.gate(spark)) broadcast(touchedDf) else touchedDf,
+      State(
+        Hints.local(spark, StructType(schema.fields.take(m).toSeq), docs.map(_.meta)),
+        Hints.local(spark, StructType(idField +: bucket.fields.toSeq),
+          hashedDocs.flatMap(f => f.keys.map { case (b, k) => Row(v(f.id), b, k) })),
+        Hints.local(spark, StructType(Seq(idField, schema("sh"))),
+          hashedDocs.map(f => Row(v(f.id), f.sh.toSeq))),
+        Hints.local(spark, StructType(Seq("id_a", "id_b").map(n =>
+            StructField(n, idField.dataType, idField.nullable))),
+          added.map { case (a, b) => Row(v(a), v(b)) })))
+  }
+
+  /** One fresh document on the driver: its id, its meta row (every
+    * column but `sh` and `sig`), its shingle set and its band keys
+    * (band, bucket).
+    */
+  private final case class FreshDoc(id: Long, meta: org.apache.spark.sql.Row,
+                                    sh: Array[String], keys: Array[(Int, Long)])
+  private object FreshDoc {
+    /** From a collected row (meta columns, then `sh`, then `bb`). */
+    def of(r: org.apache.spark.sql.Row, idIdx: Int, m: Int): FreshDoc =
+      FreshDoc(r.getAs[Number](idIdx).longValue,
+        org.apache.spark.sql.Row.fromSeq(r.toSeq.take(m)),
+        if (r.isNullAt(m)) Array.empty else r.getSeq[String](m).toArray,
+        r.getSeq[org.apache.spark.sql.Row](m + 1)
+          .map(b => (b.getAs[Number](0).intValue, b.getLong(1))).toArray)
+  }
+
+  /** The driver's charge for a shingle array: its UTF-8 bytes plus 8 per
+    * shingle.
+    */
+  private def shingleBytes(a: org.apache.spark.sql.catalyst.util.ArrayData): Long = {
+    var bytes = 0L
+    var i = 0
+    while (i < a.numElements) {
+      bytes += 8 + (if (a.isNullAt(i)) 0 else a.getUTF8String(i).numBytes)
+      i += 1
+    }
+    bytes
+  }
+
+  /** A fresh document's row as [[foldOnDriver]] collects it: converted to
+    * a Row, charged 8 bytes per meta column, its shingles
+    * ([[shingleBytes]]) and 12 bytes per band bucket. A null id charges
+    * more than any budget.
+    */
+  private def docRow(schema: org.apache.spark.sql.types.StructType, m: Int)
+    : org.apache.spark.sql.catalyst.InternalRow =>
+      Option[(org.apache.spark.sql.Row, Long)] = {
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
+    val idIdx = schema.fieldIndex("doc_id")
+    r =>
+      if (r.isNullAt(idIdx)) Some((null, Long.MaxValue))
+      else Some(toRow(r).asInstanceOf[org.apache.spark.sql.Row] ->
+        (8L * m + 12L * r.getArray(m + 1).numElements +
+          (if (r.isNullAt(m)) 0L else shingleBytes(r.getArray(m)))))
+  }
+
+  /** A standing band-index row as [[foldOnDriver]]'s probe collects it:
+    * (id, (band, bucket)) when the key is one of `keys` and the id is not
+    * in `gone`, charged 20 bytes; any other row is skipped.
+    */
+  private def probeRow(schema: org.apache.spark.sql.types.StructType,
+                       keys: Set[(Int, Long)], gone: Set[Long])
+    : org.apache.spark.sql.catalyst.InternalRow => Option[((Long, (Int, Long)), Long)] = {
+    val Seq(di, bi, ki) = Seq("doc_id", "band", "bucket").map(schema.fieldIndex)
+    val (id, band) = (idAt(schema(di).dataType), idAt(schema(bi).dataType))
+    r =>
+      if (r.isNullAt(di) || r.isNullAt(bi) || r.isNullAt(ki)) None
+      else {
+        val key = (band(r, bi).toInt, r.getLong(ki))
+        if (!keys(key)) None
+        else Some(id(r, di)).filterNot(gone).map(o => (o, key) -> 20L)
+      }
+  }
+
+  /** A standing shingle-table row as [[foldOnDriver]]'s fetch collects
+    * it: (id, shingles) for an id in `want`, charged 8 bytes plus its
+    * shingles ([[shingleBytes]]); any other row is skipped.
+    */
+  private def shingleRow(schema: org.apache.spark.sql.types.StructType, want: Set[Long])
+    : org.apache.spark.sql.catalyst.InternalRow => Option[((Long, Array[String]), Long)] = {
+    val Seq(di, si) = Seq("doc_id", "sh").map(schema.fieldIndex)
+    val id = idAt(schema(di).dataType)
+    r =>
+      if (r.isNullAt(di) || r.isNullAt(si) || !want(id(r, di))) None
+      else {
+        val a = r.getArray(si)
+        Some((id(r, di), Array.tabulate(a.numElements)(i =>
+          if (a.isNullAt(i)) null else a.getUTF8String(i).toString)) ->
+          (8 + shingleBytes(a)))
+      }
   }
 
   /** The dedup fold every refresh of the family shares (x85 through
-    * [[delta]], x114/x131/x137 through [[asmRefresh]]): retire
-    * `touched` from every state frame, derive the fresh documents'
-    * frames from their per-document frame `fresh` ([[stateOf]]), probe
-    * the retired index for their cross pairs, and append.
+    * [[delta]] over the driver budget, x114/x131/x137 through
+    * [[asmRefresh]]): retire `touched` from every state frame, derive the
+    * fresh documents' frames from their per-document frame `fresh`
+    * ([[stateOf]]), probe the retired index for their cross pairs, and
+    * append.
     *
     * `touched` is a LAZY checkpoint of NOT NULL `doc_id`s and `fresh` a
     * LAZY checkpoint of a per-document frame; ONE job gates the first
     * and materializes the second, each read through one branch.
     */
-  private def fold(state: State, touched: DataFrame, fresh: DataFrame,
-                   p: Params): Delta = {
+  private[graft] def fold(state: State, touched: DataFrame, fresh: DataFrame,
+                          p: Params): Delta = {
     // touched is delta-sized on a healthy refresh but corpus-sized on a
     // mass retirement (a full re-crawl replacing most rows) — gate the
     // hint once on the checkpointed list, reuse the decision per column
     val Seq(nTouched, _) = Hints.counts(Seq(touched, fresh))
-    val touchedSlim = nTouched <= Hints.gate(touched.sparkSession)
-    // joined on a condition, not a USING column: the frame keeps its
-    // column order (the schema of its rebuilt counterpart) and every
-    // retire join builds the same, unrenamed `touched` side
-    val side = if (touchedSlim) broadcast(touched.as("t")) else touched.as("t")
-    def retire(df: DataFrame, idCols: String*): DataFrame =
-      idCols.foldLeft(df) { (acc, c) =>
-        acc.join(side, acc(c) === col("t.doc_id"), "left_anti")
-      }
-
+    val side = if (nTouched <= Hints.gate(touched.sparkSession)) broadcast(touched)
+      else touched
     val st = stateOf(fresh, p)
     // cross pairs probe the RETIRED index (standing minus touched), so a
     // changed document never pairs against its own dead version
     val cross = Dedup.crossPairsOfSig(hashed(fresh),
-        retire(state.bandIdx, "doc_id"), retire(state.shingles, "doc_id"),
+        retired(side)(state.bandIdx, "doc_id"), retired(side)(state.shingles, "doc_id"),
         p.threshold, p.bands, p.rowsPerBand)
       .select(least(col("id_new"), col("id_old")).as("id_a"),
         greatest(col("id_new"), col("id_old")).as("id_b"))
@@ -461,15 +737,36 @@ object Refresh {
     // through one branch and materializes it; later readers hit the
     // cache
     val added = st.pairs.unionByName(cross).localCheckpoint(false)
-    // old×old / new×old / new×new are disjoint by construction — no
-    // dedup needed, and together they are exactly P(v2)'s pair set
-    val pairs2 = retire(state.pairs, "id_a", "id_b").unionByName(added)
+    appended(state, touched, side, st.copy(pairs = added))
+  }
+
+  /** `df` without the rows whose `idCols` hit the touched list `side` (a
+    * one-column `doc_id` frame, hinted or not). Joined on a condition,
+    * not a USING column: the frame keeps its column order (the schema of
+    * its rebuilt counterpart) and every retire join builds the same,
+    * unrenamed `touched` side.
+    */
+  private def retired(side: DataFrame)(df: DataFrame, idCols: String*): DataFrame =
+    idCols.foldLeft(df) { (acc, c) =>
+      acc.join(side.as("t"), acc(c) === col("t.doc_id"), "left_anti")
+    }
+
+  /** The fold's result, on either path: every frame of `state` with
+    * `touched` retired (through `side`, its possibly hinted form) and the
+    * fresh documents' frames appended, `fresh.pairs` being the added
+    * pairs — old×old / new×old / new×new are disjoint by construction,
+    * so no dedup is needed, and together they are exactly P(v2)'s pair
+    * set.
+    */
+  private def appended(state: State, touched: DataFrame, side: DataFrame,
+                       fresh: State): Delta = {
+    def retire(df: DataFrame, idCols: String*) = retired(side)(df, idCols: _*)
     Delta(State(
-        retire(state.meta, "doc_id").unionByName(st.meta),
-        retire(state.bandIdx, "doc_id").unionByName(st.bandIdx),
-        retire(state.shingles, "doc_id").unionByName(st.shingles),
-        pairs2),
-      touched, added)
+        retire(state.meta, "doc_id").unionByName(fresh.meta),
+        retire(state.bandIdx, "doc_id").unionByName(fresh.bandIdx),
+        retire(state.shingles, "doc_id").unionByName(fresh.shingles),
+        retire(state.pairs, "id_a", "id_b").unionByName(fresh.pairs)),
+      touched, fresh.pairs)
   }
 
   /** X23b (r12): DELTA-BOUND duplicate clusters — recompute label

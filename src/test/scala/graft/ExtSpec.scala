@@ -1550,7 +1550,7 @@ class ExtSpec extends SparkSuite {
     // refresh plus the rebuild it is checked against runs at most this
     // many Spark jobs (job counts are deterministic for fixed data and
     // session, unlike wall time or codegen-cache hits)
-    val budget = 26
+    val budget = 18
     val (v1, v2) = x23Versions()
     val st1 = Refresh.buildState(v1)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
@@ -1564,6 +1564,35 @@ class ExtSpec extends SparkSuite {
     // on the driver: a fall back to the distributed tail fails here
     assert(Refresh.refresh(st1, v1, v2, seed = "spec", numShards = 4)._2.isLocal,
       "refresh manifest is not a driver-local relation: distributed tail ran")
+    // the delta fits the driver budget, so the fold runs there: a fall
+    // back to the distributed fold fails here
+    assert(Refresh.delta(st1, v1, v2).addedPairs.isLocal,
+      "added pairs are not a driver-local relation: distributed fold ran")
+  }
+
+  test("X23 refresh fallback: over the driver budget the distributed fold gives the driver path's result") {
+    import graft.ext.{Dedup, Refresh}
+    val (v1, v2) = x23Versions()
+    val st1 = Refresh.buildState(v1)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val onDriver = Refresh.delta(st1, v1, v2)
+    val manifest = rows(Refresh.refresh(st1, v1, v2, seed = "spec", numShards = 4)._2)
+    assert(onDriver.addedPairs.isLocal, "the carve's delta should fit the default budget")
+    // a budget of a few ids: the diff's collect passes it at once
+    spark.conf.set(Dedup.CcDriverEdgeBytesKey, "64")
+    try {
+      val fallback = Refresh.delta(st1, v1, v2)
+      assert(!fallback.addedPairs.isLocal, "over the budget the fold must be distributed")
+      assert(rows(Refresh.refresh(st1, v1, v2, seed = "spec", numShards = 4)._2) == manifest,
+        "fallback manifest != driver-path manifest")
+      for ((nm, a, b) <- Seq(("meta", onDriver.state2.meta, fallback.state2.meta),
+          ("bandIdx", onDriver.state2.bandIdx, fallback.state2.bandIdx),
+          ("shingles", onDriver.state2.shingles, fallback.state2.shingles),
+          ("pairs", onDriver.state2.pairs, fallback.state2.pairs),
+          ("touched", onDriver.touched, fallback.touched),
+          ("addedPairs", onDriver.addedPairs, fallback.addedPairs)))
+        assert(rows(a) == rows(b), s"$nm: driver path != fallback")
+    } finally spark.conf.unset(Dedup.CcDriverEdgeBytesKey)
   }
 
   test("X22b packed sequences: conservation, capacity-boundary starts, no doc splits") {

@@ -1225,4 +1225,43 @@ class PlanSpec extends SparkSuite {
     assert(p.contains("PushedFilters: [IsNotNull(doc_id), EqualTo(doc_id,42)]"),
       s"plan:\n$p")
   }
+
+  // the x85 refresh's distributed fallback (a delta over the driver
+  // budget) picks the fresh documents out through a broadcast semi-join
+  // under the `delta_in` observation: the curation gates stay above the
+  // join and see the delta's rows only, and no Exchange moves corpus text
+  test("x85 refresh fallback gates only the delta and shuffles no text") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val docs = Tables.load(spark, sf(), "documents")
+    val v1 = docs.filter(col("doc_id") % 7 =!= 2)
+    val v2 = docs.filter(col("doc_id") % 11 =!= 3)
+    val freshIds = graft.ext.CorpusDiff.diff(v1, v2, "doc_id", "text")
+      .filter(col("status").isin("added", "changed")).select("doc_id")
+    val df = graft.ext.Refresh.freshPerDoc(v2, freshIds, graft.ext.Refresh.Params(), identity)
+    val plan: SparkPlan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val shown = plan.treeString
+    // the gate Filter: the one reading the text (language, quality,
+    // repetition) and the id sample
+    val gates = plan.collect { case f: FilterExec
+      if f.condition.references.exists(_.name == "text") &&
+        f.condition.toString.contains("md5") => f }
+    assert(gates.nonEmpty, s"no gate filter found:\n$shown")
+    gates.foreach { f =>
+      assert(f.child.exists {
+        case j: BaseJoinExec => j.joinType == LeftSemi
+        case _ => false
+      }, s"a gate filter runs below the fresh-id semi-join:\n$shown")
+    }
+    val textExchanges = plan.collect {
+      case e: Exchange if e.output.exists(_.name == "text") => e }
+    assert(textExchanges.isEmpty, s"an Exchange carries corpus text:\n$shown")
+  }
 }

@@ -725,6 +725,121 @@ class PropertySpec extends SparkSuite {
       s"uncovered shape: tied=$tied emptied=$emptied wide=$wide empty=$empty absent=$absent")
   }
 
+  test("refresh fold: the driver fold equals the distributed fold on random states and deltas") {
+    import graft.ext.Refresh
+    import org.apache.spark.sql.DataFrame
+    // standing documents 0..n-1 and fresh documents (changed standing ids
+    // and new ones) over shingle sets drawn from a tiny vocabulary, so
+    // Jaccard values sit on the threshold (1 of 5 distinct shingles in
+    // common is exactly 0.2) and band buckets collide; one row per band
+    // (rowsPerBand 1) makes such pairs candidates often
+    val shingleSet = Gen.choose(0, 5).flatMap(n => Gen.pick(n, (0 until 8).map("s" + _)))
+      .map(_.toSeq.sorted)
+    val cases = samples(for {
+      n <- Gen.choose(0, 9)
+      standing <- Gen.listOfN(n, shingleSet)
+      gone <- Gen.someOf(0L until n.toLong)
+      changed <- Gen.someOf(gone)
+      added <- Gen.choose(0, 5)
+      copies <- Gen.listOfN(changed.size + added, Gen.frequency(
+        2 -> Gen.const(None), 1 -> Gen.choose(0, math.max(n - 1, 0)).map(Some(_))))
+      drawn <- Gen.listOfN(changed.size + added, shingleSet)
+      bands <- Gen.oneOf(4, 8)
+      rpb <- Gen.oneOf(1, 1, 2)
+      portable <- Gen.oneOf(false, true)
+    } yield {
+      val freshIds = changed.toSeq.sorted ++ (n.toLong until n.toLong + added)
+      // a fresh document copies a standing document's set now and then:
+      // a changed one its own dead version, so it collides with a
+      // retired row
+      val fresh = freshIds.zip(copies.zip(drawn)).map { case (id, (c, d)) =>
+        id -> c.filter(_ < n).map(standing(_)).getOrElse(d) }
+      (standing, gone.toSeq.sorted, fresh,
+        Refresh.Params(bands = bands, rowsPerBand = rpb, portableSig = portable))
+    }, 30) :+ ((Seq(Seq("s1", "s2", "s3"), Seq("s3", "s4", "s5")), Seq.empty[Long],
+      Seq.empty[(Long, Seq[String])], Refresh.Params(bands = 4, rowsPerBand = 1)))
+    def perDoc(docs: Seq[(Long, Seq[String])], p: Refresh.Params): DataFrame =
+      Refresh.withSig(docs.map { case (id, sh) => (id, 0.5 + id % 3 * 0.25, sh.size.toLong, sh) }
+        .toDF("doc_id", "quality", "n_toks", "sh"), p)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    var (onThreshold, repeated, retiredOnly, empty, emptyDelta) = (0, 0, 0, 0, 0)
+    cases.foreach { case (standing, gone, fresh, p) =>
+      val st = Refresh.stateOf(
+        perDoc(standing.indices.map(i => i.toLong -> standing(i)), p).localCheckpoint(), p)
+      val freshDf = perDoc(fresh, p)
+      val want = Refresh.fold(st, gone.toDF("doc_id").localCheckpoint(false),
+        freshDf.localCheckpoint(false), p)
+      val got = Refresh.foldOnDriver(st, gone, freshDf, p, Long.MaxValue)
+        .getOrElse(fail("driver fold refused an unbounded budget"))
+      val what = s"standing=$standing gone=$gone fresh=$fresh $p"
+      assert(got.addedPairs.isLocal && !want.addedPairs.isLocal, what)
+      for ((nm, g, w) <- Seq(("meta", got.state2.meta, want.state2.meta),
+          ("bandIdx", got.state2.bandIdx, want.state2.bandIdx),
+          ("shingles", got.state2.shingles, want.state2.shingles),
+          ("pairs", got.state2.pairs, want.state2.pairs),
+          ("addedPairs", got.addedPairs, want.addedPairs),
+          ("touched", got.touched, want.touched))) {
+        assert(g.columns.toSeq == w.columns.toSeq &&
+          g.schema.map(_.dataType) == w.schema.map(_.dataType), s"$nm schema: $what")
+        assert(rows(g) == rows(w), s"$nm: $what")
+      }
+      // coverage of the shapes this property exists for
+      val shOf = (standing.indices.map(i => i.toLong -> standing(i)) ++ fresh).toMap
+      val freshSet = fresh.map(_._1).toSet
+      val keys = rows(st.bandIdx).map(r => (r(0).asInstanceOf[Long], (r(1), r(2))))
+      val freshKeys = rows(want.state2.bandIdx).map(r => (r(0).asInstanceOf[Long], (r(1), r(2))))
+        .filter(k => freshSet(k._1))
+      val added = rows(want.addedPairs).map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long]))
+      if (added.exists { case (a, b) =>
+          val c = shOf(a).intersect(shOf(b)).size
+          5 * c == shOf(a).size + shOf(b).size - c
+        }) onThreshold += 1
+      val sharing = (freshKeys ++ keys.filterNot(k => gone.contains(k._1)))
+        .groupMap(_._2)(_._1).values
+        .flatMap(ids => for (a <- ids; b <- ids if a < b && (freshSet(a) || freshSet(b)))
+          yield (a, b))
+        .groupBy(identity).values
+      if (sharing.exists(_.size >= 2)) repeated += 1
+      if (freshKeys.exists { case (_, k) =>
+          val owners = keys.filter(_._2 == k).map(_._1)
+          owners.nonEmpty && owners.forall(gone.contains)
+        }) retiredOnly += 1
+      if (fresh.exists(_._2.isEmpty)) empty += 1
+      if (fresh.isEmpty && gone.isEmpty) emptyDelta += 1
+    }
+    assert(Seq(onThreshold, repeated, retiredOnly, empty, emptyDelta).forall(_ > 0),
+      s"uncovered shape: onThreshold=$onThreshold repeated=$repeated " +
+        s"retiredOnly=$retiredOnly empty=$empty emptyDelta=$emptyDelta")
+  }
+
+  test("refresh fold: the driver's Jaccard rule equals verifyJaccard at the threshold") {
+    import org.apache.spark.sql.DataFrame
+    // exact 1/5; common/union within half a millionth below 0.2, which
+    // round(·, 6) carries onto it (80001 / 400006) or not (80000 /
+    // 400004, 80001 / 400008); repeated shingles, which array_intersect
+    // counts once and size() counts each time
+    def run(from: Int, n: Int) = (from until from + n).map("t" + _)
+    val sets = Seq(
+      1L -> Seq("a", "b", "c"), 2L -> Seq("c", "d", "e"),
+      3L -> run(0, 240003), 4L -> run(160002, 240004),
+      5L -> run(0, 240002), 6L -> run(160002, 240002),
+      7L -> run(0, 240003), 8L -> run(160002, 240006),
+      9L -> Seq("x", "x", "x", "x", "y"), 10L -> Seq("x", "z", "w"),
+      11L -> Seq("x", "x", "y", "u", "v"), 12L -> Seq("x", "x", "z"),
+      13L -> Seq("m", "m", "n"), 14L -> Seq("m", "o"))
+    val pairs = Seq((1L, 2L), (3L, 4L), (5L, 6L), (7L, 8L), (9L, 10L), (11L, 12L),
+      (13L, 14L))
+    val sh: DataFrame = sets.toDF("doc_id", "sh")
+    val spark0 = Dedup.verifyJaccard(pairs.toDF("id_a", "id_b"), sh, sh, 0.2)
+      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val byId = sets.toMap
+    val driver = pairs.filter { case (a, b) =>
+      Dedup.jaccardKeeps(byId(a).toArray, byId(b).toArray, 0.2) }.toSet
+    assert(driver == spark0, s"driver $driver vs Spark $spark0")
+    // the crafted cases land where they were meant to
+    assert(driver == Set((1L, 2L), (3L, 4L), (13L, 14L)), driver.toString)
+  }
+
   test("normalizeText fuzz: idempotent, case/edge-punct invariant, equals a plain-JVM replay") {
     // plain-JVM reimplementation of the declared normalization
     def refNorm(s: String): String =
