@@ -441,8 +441,9 @@ object Refresh {
     * When the delta fits the driver ([[deltaOnDriver]]: integral ids, and
     * the diff's ids, the fresh documents' rows and their candidates
     * within the [[Dedup.CcDriverEdgeBytesKey]] byte budget) the fold
-    * runs there, four jobs after the diff; any other delta takes the
-    * distributed [[fold]]. Both give the same frames (PropertySpec).
+    * runs there: the collect of the diff's ids, then at most three
+    * jobs. Any other delta takes the distributed [[fold]]. Both give the
+    * same frames (PropertySpec).
     */
   def delta(state: State, oldCorpus: DataFrame, newCorpus: DataFrame,
             p: Params = Params(),

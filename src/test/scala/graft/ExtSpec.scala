@@ -1578,6 +1578,12 @@ class ExtSpec extends SparkSuite {
     val onDriver = Refresh.delta(st1, v1, v2)
     val manifest = rows(Refresh.refresh(st1, v1, v2, seed = "spec", numShards = 4)._2)
     assert(onDriver.addedPairs.isLocal, "the carve's delta should fit the default budget")
+    // an empty delta selects no document and leaves the state as it is
+    val none = Refresh.delta(st1, v1, v1)
+    assert(none.addedPairs.isLocal && none.addedPairs.isEmpty && none.touched.isEmpty,
+      "an empty delta added or retired something")
+    assert(rows(none.state2.meta) == rows(st1.meta) &&
+      rows(none.state2.pairs) == rows(st1.pairs), "an empty delta changed the state")
     // a budget of a few ids: the diff's collect passes it at once
     spark.conf.set(Dedup.CcDriverEdgeBytesKey, "64")
     try {
