@@ -452,13 +452,10 @@ object Refresh {
     // derive from it, and without the pin each derivation replays the
     // corpus-sized hash-compare join (two full passes over both
     // corpora — measured r18, guide §1.2's "don't compute twice").
-    // LAZY: its first reader is always one job reading it through one
-    // branch — the driver path's id collect, or the fallback's fresh-id
-    // gate count — so the corpus-sized join runs once (a lazy
-    // checkpoint first read from two concurrent branches would run it
-    // twice: the cleanedDelta race note)
+    // EAGER: materialized before the driver path's id collect or the
+    // fallback's derivations first read it
     val d = CorpusDiff.diff(oldCorpus, newCorpus, "doc_id", "text")
-      .select("doc_id", "status").localCheckpoint(false)
+      .select("doc_id", "status").localCheckpoint(true)
     deltaOnDriver(state, d, newCorpus, p).getOrElse {
       // NOT NULL (the diff drops null ids), as fold requires
       val touched = d.filter(col("status").isin("removed", "changed") &&

@@ -1550,7 +1550,7 @@ class ExtSpec extends SparkSuite {
     // refresh plus the rebuild it is checked against runs at most this
     // many Spark jobs (job counts are deterministic for fixed data and
     // session, unlike wall time or codegen-cache hits)
-    val budget = 18
+    val budget = 19
     val (v1, v2) = x23Versions()
     val st1 = Refresh.buildState(v1)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
