@@ -951,7 +951,8 @@ object Dedup {
     * id reachable in its component (PropertySpec pins the equivalence
     * on random graphs over BOTH paths). Above the gate — the 100 TB
     * crawl case, where the pair list is billions of rows — the
-    * iterative path runs unchanged.
+    * iterative path runs unchanged. The x85 refresh's driver fold
+    * ([[Refresh.delta]]) draws its collects on the same budget.
     */
   val CcDriverEdgeBytesKey = "graft.cc.driverEdgeBytes"
   val DefaultCcDriverEdgeBytes: Long = 16L << 20
