@@ -301,16 +301,27 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
 
+  /** A shingle array as [[jaccardKeeps]] reads it, built once per
+    * document: its length (Spark's `size`) and its distinct shingles.
+    */
+  private[graft] final class Shingled(a: Array[String]) {
+    val size: Int = a.length
+    val distinct: Set[String] = a.toSet
+  }
+
   /** [[verifyJaccard]]'s rule for one pair of shingle sets on the driver,
     * bit for bit: the distinct common shingles (`array_intersect`) over
     * `size(a) + size(b) - common`, rounded HALF_UP to 6 decimals the way
     * Spark's `round` rounds a double (through its shortest decimal
     * string), then `>= threshold`. PropertySpec holds the two equal.
     */
-  private[graft] def jaccardKeeps(a: Array[String], b: Array[String],
+  private[graft] def jaccardKeeps(a: Shingled, b: Shingled,
                                   threshold: Double): Boolean = {
-    val common = a.toSet.intersect(b.toSet).size
-    val j = common.toDouble / (a.length + b.length - common)
+    val (small, large) =
+      if (a.distinct.size <= b.distinct.size) (a.distinct, b.distinct)
+      else (b.distinct, a.distinct)
+    val common = small.count(large)
+    val j = common.toDouble / (a.size + b.size - common)
     java.math.BigDecimal.valueOf(j)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue >= threshold
   }
@@ -942,8 +953,8 @@ object Dedup {
     * work — instead of the iterative join-per-round min-label
     * propagation, whose per-round jobs (join + groupBy + change-count
     * collect, each an AQE stage cascade) dominate the refresh family's
-    * wall at fixture scale. The id width is 8 bytes for LongType (4 / 2
-    * for Integer / Short) and the measured UTF-8 length for StringType,
+    * wall at fixture scale. The id width is 8 bytes for LongType (4 / 2 /
+    * 1 for Integer / Short / Byte) and the measured UTF-8 length for StringType,
     * so a string-id graph is charged what it actually costs the driver
     * — a row gate admits gigabytes of long string ids. The default,
     * 16 MiB, is the former gate of 2M directed long-id edges. Identical
@@ -964,12 +975,8 @@ object Dedup {
     */
   private def driverMinOrdering(dt: org.apache.spark.sql.types.DataType)
     : Option[Ordering[Any]] = dt match {
-    case org.apache.spark.sql.types.LongType =>
-      Some(Ordering.by((x: Any) => x.asInstanceOf[Long]))
-    case org.apache.spark.sql.types.IntegerType =>
-      Some(Ordering.by((x: Any) => x.asInstanceOf[Int]))
-    case org.apache.spark.sql.types.ShortType =>
-      Some(Ordering.by((x: Any) => x.asInstanceOf[Short]))
+    case _ if integralId(dt) =>
+      Some(Ordering.by((x: Any) => x.asInstanceOf[Number].longValue))
     case org.apache.spark.sql.types.StringType =>
       Some(new Ordering[Any] {
         def compare(a: Any, b: Any): Int = {
@@ -1039,27 +1046,56 @@ object Dedup {
       .getOrElse(DefaultCcDriverEdgeBytes)
 
   /** A pair row's two ids and their byte charge, for [[collectUnder]]:
-    * 8 bytes per long id (4 / 2 for Integer / Short), the UTF-8 length
-    * of a string id. A null id charges more than any budget — the
+    * 8 bytes per long id (4 / 2 / 1 for Integer / Short / Byte), the
+    * UTF-8 length of a string id. A null id charges more than any budget — the
     * iterative path owns null semantics. Built outside the job so the
     * task closure captures only what it reads.
     */
   private def pairRow(dt: org.apache.spark.sql.types.DataType)
     : org.apache.spark.sql.catalyst.InternalRow => Option[((Any, Any), Long)] = {
-    import org.apache.spark.sql.types._
-    val read: (org.apache.spark.sql.catalyst.InternalRow, Int) => Any = dt match {
-      case LongType => (r, i) => r.getLong(i)
-      case IntegerType => (r, i) => r.getInt(i)
-      case ShortType => (r, i) => r.getShort(i)
-      case _ => (r, i) => r.getUTF8String(i).toString
-    }
-    val width: (org.apache.spark.sql.catalyst.InternalRow, Int) => Long = dt match {
-      case StringType => (r, i) => r.getUTF8String(i).numBytes().toLong
-      case _ => val w = dt.defaultSize.toLong; (_, _) => w
-    }
+    val (read, width): ((org.apache.spark.sql.catalyst.InternalRow, Int) => Any,
+                        (org.apache.spark.sql.catalyst.InternalRow, Int) => Long) =
+      if (integralId(dt)) {
+        val (at, back, w) = (longIdAt(dt), idOfLong(dt), dt.defaultSize.toLong)
+        ((r, i) => back(at(r, i)), (_, _) => w)
+      } else ((r, i) => r.getUTF8String(i).toString,
+        (r, i) => r.getUTF8String(i).numBytes().toLong)
     r => Some(
       if (r.isNullAt(0) || r.isNullAt(1)) (null, Long.MaxValue)
       else ((read(r, 0), read(r, 1)), width(r, 0) + width(r, 1)))
+  }
+
+  /** Whether `dt` is an integral id type — ids the driver paths hold as
+    * longs, which order exactly as Spark orders the column.
+    */
+  private[ext] def integralId(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    Seq(LongType, IntegerType, ShortType, ByteType).contains(dt)
+  }
+
+  /** An [[integralId]] column's reader: the value at an ordinal as a long. */
+  private[ext] def longIdAt(dt: org.apache.spark.sql.types.DataType)
+    : (org.apache.spark.sql.catalyst.InternalRow, Int) => Long = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
+    dt match {
+      case IntegerType => (r, i) => r.getInt(i).toLong
+      case ShortType => (r, i) => r.getShort(i).toLong
+      case ByteType => (r, i) => r.getByte(i).toLong
+      case _ => (r, i) => r.getLong(i)
+    }
+  }
+
+  /** [[longIdAt]]'s inverse: a long id back as a value of its integral
+    * column type.
+    */
+  private[ext] def idOfLong(dt: org.apache.spark.sql.types.DataType): Long => Any = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
+    dt match {
+      case IntegerType => _.toInt
+      case ShortType => _.toShort
+      case ByteType => _.toByte
+      case _ => x => x
+    }
   }
 
   /** The values `read` takes from `rows`, on the driver, while their byte

@@ -46,14 +46,15 @@ import org.apache.spark.sql.functions._
   * delta alone and no corpus text crosses an Exchange. A delta that
   * fits the driver's byte budget ([[Dedup.CcDriverEdgeBytesKey]], the
   * cluster stage's gate: the diff's ids, the fresh documents' rows with
-  * their shingle sets and band buckets, and the standing candidates'
-  * rows all draw on it) is folded there: an `InSet` on the ids under the
+  * their shingle sets and band buckets, the standing candidates' rows
+  * and the candidate pairs, counted before any is built, all draw on
+  * it) is folded there: an `InSet` on the ids under the
   * gates, one probe of the retired band index and one fetch of the
   * candidates' shingle sets, the pairs banded and verified on the
   * driver, and local relations appended to the retired state
   * ([[foldOnDriver]]). A larger delta takes the distributed [[fold]]:
-  * a size-gated broadcast semi-join under an observation boundary, so
-  * the gates still see the delta's rows only. The anti-joins that
+  * a size-gated broadcast semi-join under an optimizer barrier, so the
+  * gates still see the delta's rows only. The anti-joins that
   * retire touched rows broadcast the (delta-sized) touched id list.
   * Clusters/election/manifest recompute over pair-list-sized frames —
   * metadata, not corpus — and, when the cluster map fits the driver
@@ -276,32 +277,8 @@ object Refresh {
     * within-delta `id_a < id_b`).
     */
   private def driverIds(cols: (DataFrame, String)*): Boolean = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val ts = cols.map { case (df, c) => df.schema(c).dataType }.distinct
-    ts.size == 1 && Seq(LongType, IntegerType, ShortType, ByteType).contains(ts.head)
-  }
-
-  /** An integral id column's reader: the value at an ordinal as a long. */
-  private def idAt(dt: org.apache.spark.sql.types.DataType)
-    : (org.apache.spark.sql.catalyst.InternalRow, Int) => Long = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
-    dt match {
-      case IntegerType => (r, i) => r.getInt(i).toLong
-      case ShortType => (r, i) => r.getShort(i).toLong
-      case ByteType => (r, i) => r.getByte(i).toLong
-      case _ => (r, i) => r.getLong(i)
-    }
-  }
-
-  /** A long id back as a value of its integral column type. */
-  private def idValue(dt: org.apache.spark.sql.types.DataType): Long => Any = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
-    dt match {
-      case IntegerType => _.toInt
-      case ShortType => _.toShort
-      case ByteType => _.toByte
-      case _ => x => x
-    }
+    ts.size == 1 && Dedup.integralId(ts.head)
   }
 
   /** One meta row of a cluster member, as the driver election reads it. */
@@ -439,8 +416,9 @@ object Refresh {
     * documents into the standing state.
     *
     * When the delta fits the driver ([[deltaOnDriver]]: integral ids, and
-    * the diff's ids, the fresh documents' rows and their candidates
-    * within the [[Dedup.CcDriverEdgeBytesKey]] byte budget) the fold
+    * the diff's ids, the fresh documents' rows, the standing candidates'
+    * rows and the candidate pairs within the
+    * [[Dedup.CcDriverEdgeBytesKey]] byte budget) the fold
     * runs there: the collect of the diff's ids, then at most three
     * jobs. Any other delta takes the distributed [[fold]]. Both give the
     * same frames (PropertySpec).
@@ -470,11 +448,11 @@ object Refresh {
 
   /** The distributed fold's per-document frame of the fresh documents:
     * the rows of `newCorpus` whose ids are in `freshIds`, selected by a
-    * size-gated broadcast semi-join, then [[perDoc]]. The `delta_in`
-    * observation (the selected row count) is a boundary Catalyst pushes
-    * no Filter through: the curation gates stay above the semi-join and
-    * evaluate the delta's rows only, where they would otherwise sink onto
-    * the corpus scan below the join.
+    * size-gated broadcast semi-join, then [[perDoc]]. The `observe` is an
+    * optimizer barrier, not a reading: Catalyst pushes no Filter through
+    * it, so the curation gates stay above the semi-join and evaluate the
+    * delta's rows only, where they would otherwise sink onto the corpus
+    * scan below the join. Nothing reads its metric.
     */
   private[graft] def freshPerDoc(newCorpus: DataFrame, freshIds: DataFrame,
                                  p: Params,
@@ -502,7 +480,7 @@ object Refresh {
       val budget = Dedup.driverEdgeBytes(d.sparkSession)
       Dedup.collectUnder(Hints.rows(d), budget)(diffRow(dt)).flatMap {
         case (ids, used) =>
-          val v = idValue(dt)
+          val v = Dedup.idOfLong(dt)
           val fresh = ids.collect { case (id, s) if s != Removed => v(id) }
           val inFresh = GraftColumns.column(
             org.apache.spark.sql.catalyst.expressions.InSet(
@@ -524,7 +502,7 @@ object Refresh {
   private def diffRow(dt: org.apache.spark.sql.types.DataType)
     : org.apache.spark.sql.catalyst.InternalRow => Option[((Long, Int), Long)] = {
     import org.apache.spark.unsafe.types.UTF8String
-    val id = idAt(dt)
+    val id = Dedup.longIdAt(dt)
     val width = dt.defaultSize.toLong
     val codes = Seq("removed" -> Removed, "added" -> Added, "changed" -> Changed)
       .map { case (s, c) => UTF8String.fromString(s) -> c }.toMap
@@ -534,8 +512,8 @@ object Refresh {
   }
 
   /** [[fold]] on the driver, for `touched` ids and a per-document frame
-    * `fresh` that fit it — None when a collect passes `budget` bytes.
-    * Three bounded collects ([[Dedup.collectUnder]]), each one job:
+    * `fresh` that fit it — None when the driver's share passes `budget`
+    * bytes. Three bounded collects ([[Dedup.collectUnder]]), each one job:
     *  1. `fresh`'s rows with their band buckets ([[Dedup.bandBuckets]],
     *     the banding rule of the state frames);
     *  2. the rows of the RETIRED standing band index (`touched` dropped
@@ -543,11 +521,18 @@ object Refresh {
     *     no fresh document has a shingle;
     *  3. the shingle sets of the standing documents those rows name —
     *     skipped when there are none.
-    * The within-delta pairs (`id_a < id_b`, distinct across bands) and
-    * the cross pairs (as `least`/`greatest`) are then verified on the
-    * driver ([[Dedup.jaccardKeeps]], [[Dedup.verifyJaccard]]'s rule) and
-    * every frame [[appended]] receives is a local relation. A fresh
-    * document with no shingle is meta only, as in [[stateOf]].
+    * The candidate pairs draw on the same budget ([[pairBytes]]) and are
+    * counted before any is built: after the first collect every bucket's
+    * within-delta pairs, after the second every probed row's cross pairs,
+    * once per band a pair shares. A delta of many near-identical
+    * documents, whose candidates grow with the square of its size, thus
+    * takes the distributed fold. The within-delta pairs (`id_a < id_b`)
+    * and the cross pairs (as `least`/`greatest`) are then verified on the
+    * driver, each once across the bands ([[Dedup.jaccardKeeps]],
+    * [[Dedup.verifyJaccard]]'s rule, over shingle sets built once per
+    * document), and every frame [[appended]] receives is a local
+    * relation. A fresh document with no shingle is meta only, as in
+    * [[stateOf]].
     */
   private[graft] def foldOnDriver(state: State, touched: Seq[Long], fresh: DataFrame,
                                   p: Params, budget: Long): Option[Delta] = {
@@ -559,33 +544,46 @@ object Refresh {
       case (rows, usedDocs) =>
         val all = rows.map(FreshDoc.of(_, docs.schema.fieldIndex("doc_id"), m))
         val hashedDocs = all.filter(_.sh.nonEmpty)
-        val shOf = hashedDocs.map(f => f.id -> f.sh).toMap
         val byKey = hashedDocs.flatMap(f => f.keys.map(_ -> f.id)).groupMap(_._1)(_._2)
+        val withinLeft = budget - usedDocs -
+          pairBytes(byKey.valuesIterator.map(ids => ids.length * (ids.length - 1L) / 2))
         for {
           (probed, usedProbe) <-
-            if (byKey.isEmpty) Some((Array.empty[(Long, (Int, Long))], 0L))
-            else Dedup.collectUnder(Hints.rows(state.bandIdx), budget - usedDocs)(
+            if (withinLeft < 0) None
+            else if (byKey.isEmpty) Some((Array.empty[(Long, (Int, Long))], 0L))
+            else Dedup.collectUnder(Hints.rows(state.bandIdx), withinLeft)(
               probeRow(state.bandIdx.schema, byKey.keySet, touched.toSet))
-          cand = probed.flatMap { case (o, key) => byKey(key).map(_ -> o) }.toSet
+          crossLeft = withinLeft - usedProbe -
+            pairBytes(probed.iterator.map(o => byKey(o._2).length.toLong))
+          if crossLeft >= 0
+          wanted = probed.map(_._1).toSet
           (oldSh, _) <-
-            if (cand.isEmpty) Some((Array.empty[(Long, Array[String])], 0L))
-            else Dedup.collectUnder(Hints.rows(state.shingles),
-              budget - usedDocs - usedProbe)(
-              shingleRow(state.shingles.schema, cand.map(_._2)))
+            if (wanted.isEmpty) Some((Array.empty[(Long, Array[String])], 0L))
+            else Dedup.collectUnder(Hints.rows(state.shingles), crossLeft)(
+              shingleRow(state.shingles.schema, wanted))
         } yield {
-          def kept(a: Array[String], b: Array[String]) =
-            Dedup.jaccardKeeps(a, b, p.threshold)
-          val within = byKey.values.flatMap(ids =>
-              for (a <- ids.toSeq; b <- ids.toSeq if a < b) yield (a, b)).toSet
-            .filter(ab => kept(shOf(ab._1), shOf(ab._2)))
-          val oldOf = oldSh.toMap
-          val cross = cand.toSeq.collect {
-            case (f, o) if oldOf.get(o).exists(kept(shOf(f), _)) =>
-              (math.min(f, o), math.max(f, o))
-          }
-          localFold(state, touched, docs.schema, m, all, within.toSeq ++ cross)
+          val shOf = hashedDocs.map(f => f.id -> new Dedup.Shingled(f.sh)).toMap
+          val oldOf = oldSh.map { case (o, sh) => o -> new Dedup.Shingled(sh) }.toMap
+          val seen = scala.collection.mutable.HashSet.empty[(Long, Long)]
+          val added = Seq.newBuilder[(Long, Long)]
+          def verify(a: Long, b: Long, sa: Dedup.Shingled, sb: Dedup.Shingled): Unit =
+            if (seen.add((a, b)) && Dedup.jaccardKeeps(sa, sb, p.threshold)) added += ((a, b))
+          for (ids <- byKey.valuesIterator; sorted = ids.sorted;
+               i <- sorted.indices; j <- i + 1 until sorted.length)
+            verify(sorted(i), sorted(j), shOf(sorted(i)), shOf(sorted(j)))
+          for ((o, key) <- probed; so <- oldOf.get(o); f <- byKey(key))
+            verify(math.min(f, o), math.max(f, o), shOf(f), so)
+          localFold(state, touched, docs.schema, m, all, added.result())
         }
     }
+  }
+
+  /** The driver's charge for candidate pairs, `counts` of them, two long
+    * ids each: 16 bytes a pair, saturating where a long would overflow.
+    */
+  private def pairBytes(counts: Iterator[Long]): Long = {
+    val cap = Long.MaxValue / 16
+    16 * counts.foldLeft(0L)((sum, n) => math.min(cap, sum + math.min(cap, n)))
   }
 
   /** [[foldOnDriver]]'s result: the touched ids, the fresh documents'
@@ -601,7 +599,7 @@ object Refresh {
     import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
     val spark = state.meta.sparkSession
     val idField = schema("doc_id")
-    val v = idValue(idField.dataType)
+    val v = Dedup.idOfLong(idField.dataType)
     val hashedDocs = docs.filter(_.sh.nonEmpty)
     val bucket = schema("bb").dataType.asInstanceOf[ArrayType]
       .elementType.asInstanceOf[StructType]
@@ -675,7 +673,7 @@ object Refresh {
                        keys: Set[(Int, Long)], gone: Set[Long])
     : org.apache.spark.sql.catalyst.InternalRow => Option[((Long, (Int, Long)), Long)] = {
     val Seq(di, bi, ki) = Seq("doc_id", "band", "bucket").map(schema.fieldIndex)
-    val (id, band) = (idAt(schema(di).dataType), idAt(schema(bi).dataType))
+    val Seq(id, band) = Seq(di, bi).map(i => Dedup.longIdAt(schema(i).dataType))
     r =>
       if (r.isNullAt(di) || r.isNullAt(bi) || r.isNullAt(ki)) None
       else {
@@ -692,7 +690,7 @@ object Refresh {
   private def shingleRow(schema: org.apache.spark.sql.types.StructType, want: Set[Long])
     : org.apache.spark.sql.catalyst.InternalRow => Option[((Long, Array[String]), Long)] = {
     val Seq(di, si) = Seq("doc_id", "sh").map(schema.fieldIndex)
-    val id = idAt(schema(di).dataType)
+    val id = Dedup.longIdAt(schema(di).dataType)
     r =>
       if (r.isNullAt(di) || r.isNullAt(si) || !want(id(r, di))) None
       else {

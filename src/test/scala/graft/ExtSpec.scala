@@ -1601,6 +1601,39 @@ class ExtSpec extends SparkSuite {
     } finally spark.conf.unset(Dedup.CcDriverEdgeBytesKey)
   }
 
+  test("X23 refresh fallback: a delta of many identical documents passes the driver's pair budget") {
+    import graft.ext.{Dedup, Refresh}
+    val (v1, v2) = x23Versions()
+    val st1 = Refresh.buildState(v1)
+    // the shortest gated document copied under 600 new ids: the copies
+    // the id sample keeps (about 450) share every band bucket, so their
+    // rows stay far under the default budget while their candidate pairs
+    // (16 bands x about 10^5 pairs, 16 bytes each) pass it
+    val shortest = st1.meta.orderBy("n_toks", "doc_id").head().getAs[Long]("doc_id")
+    val copies = v2.filter(col("doc_id") === shortest)
+      .crossJoin(spark.range(600).withColumnRenamed("id", "k"))
+      .withColumn("doc_id", col("k") + 100000000L).drop("k")
+    val v2b = v2.unionByName(copies)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val fallback = Refresh.delta(st1, v1, v2b)
+    assert(!fallback.addedPairs.isLocal,
+      "the copies' candidate pairs pass the default budget: the fold must be distributed")
+    spark.conf.set(Dedup.CcDriverEdgeBytesKey, (1L << 30).toString)
+    try {
+      val onDriver = Refresh.delta(st1, v1, v2b)
+      assert(onDriver.addedPairs.isLocal, "under a 1 GiB budget the fold runs on the driver")
+      for ((nm, a, b) <- Seq(("meta", onDriver.state2.meta, fallback.state2.meta),
+          ("bandIdx", onDriver.state2.bandIdx, fallback.state2.bandIdx),
+          ("shingles", onDriver.state2.shingles, fallback.state2.shingles),
+          ("pairs", onDriver.state2.pairs, fallback.state2.pairs),
+          ("touched", onDriver.touched, fallback.touched),
+          ("addedPairs", onDriver.addedPairs, fallback.addedPairs)))
+        assert(rows(a) == rows(b), s"$nm: driver path != fallback")
+      val copyPairs = rows(onDriver.addedPairs).count(_.forall(_ != shortest))
+      assert(copyPairs > 50000, s"only $copyPairs pairs among the copies")
+    } finally spark.conf.unset(Dedup.CcDriverEdgeBytesKey)
+  }
+
   test("X22b packed sequences: conservation, capacity-boundary starts, no doc splits") {
     import graft.ext.{Curation, TextStats}
     val docs = Tables.load(spark, sf(), "documents")

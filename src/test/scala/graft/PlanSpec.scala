@@ -1228,8 +1228,8 @@ class PlanSpec extends SparkSuite {
 
   // the x85 refresh's distributed fallback (a delta over the driver
   // budget) picks the fresh documents out through a broadcast semi-join
-  // under the `delta_in` observation: the curation gates stay above the
-  // join and see the delta's rows only, and no Exchange moves corpus text
+  // under an `observe` barrier: the curation gates stay above the join
+  // and see the delta's rows only, and no Exchange moves corpus text
   test("x85 refresh fallback gates only the delta and shuffles no text") {
     import org.apache.spark.sql.catalyst.plans.LeftSemi
     import org.apache.spark.sql.execution.{FilterExec, SparkPlan}

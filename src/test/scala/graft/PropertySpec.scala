@@ -834,7 +834,8 @@ class PropertySpec extends SparkSuite {
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val byId = sets.toMap
     val driver = pairs.filter { case (a, b) =>
-      Dedup.jaccardKeeps(byId(a).toArray, byId(b).toArray, 0.2) }.toSet
+      Dedup.jaccardKeeps(new Dedup.Shingled(byId(a).toArray),
+        new Dedup.Shingled(byId(b).toArray), 0.2) }.toSet
     assert(driver == spark0, s"driver $driver vs Spark $spark0")
     // the crafted cases land where they were meant to
     assert(driver == Set((1L, 2L), (3L, 4L), (13L, 14L)), driver.toString)
