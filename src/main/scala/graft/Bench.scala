@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Benchmark main (driver contract): runs the declared queries on
@@ -58,26 +58,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // r18 (guide §2.2): let AQE coalescing keep small post-shuffle
-      // stages PARALLEL — the default 1 MB floor collapses the
-      // expression-heavy text stages (LM scoring, extraction, encode)
-      // to 1-3 tasks on compressed sub-MB fixture shuffles while each
-      // carries seconds of per-row CPU. Scale-adaptive by construction:
-      // parallelismFirst sizes partitions at totalBytes/parallelism,
-      // so on any real shuffle (>> 8 KB × cores) this floor is inert.
-      // Env-overridable for cluster profiles. r19: 64k -> 8k after the
-      // refresh-family probe still showed 0.3-1.2 s single-task stages
-      // on slim-but-CPU-heavy frames (A/B: x131 18.2 -> 12.4 s at 8k;
-      // 1k measured WORSE — scheduling overhead passes the win).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "8k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.profile(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     def time(f: => Unit): Double = {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke: drives the driver-facing surface — `SparkEntry.entry` and a
   * couple of cross-checks that the oracle can't express (MinHash recall
   * vs exact Jaccard, ANN vs brute-force overlap). Run:
@@ -10,16 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // r18: same AQE coalescing floor as Bench (keeps tiny post-shuffle
-      // compute stages parallel; inert at real shuffle sizes)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "8k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.profile(8)
     spark.sparkContext.setLogLevel("ERROR")
 
     val e = SparkEntry.entry(spark)

@@ -80,15 +80,12 @@ object Curation {
     * coverage. Checkpoint-backed result caveat applies.
     */
   def dupNgramCoverage(docs: DataFrame, textCol: String, idCol: String,
-                       n: Int = 3, materialize: Boolean = true): DataFrame = {
+                       n: Int = 3): DataFrame = {
     // coalesce null text (the chunkWithOverlap policy): size(null) = -1
     // would otherwise leak n_tokens = -1 instead of the documented 0
     val base0 = docs.select(col(idCol).as("doc_id"),
       Dedup.tokens(coalesce(col(textCol), lit(""))).as("w"))
-    val base = if (materialize)
-      base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else base0
-    try {
+    Dedup.materialized(base0) { base =>
       val toks = base.select(col("doc_id"), size(col("w")).as("n_tokens"))
       // ALL shingle positions (not distinct — multiplicity is the point)
       val pos = base.filter(size(col("w")) >= n)
@@ -104,14 +101,13 @@ object Curation {
           explode(sequence(col("pos"), col("pos") + (n - 1))).as("j"))
         .distinct()
         .groupBy("doc_id").agg(count(lit(1)).as("n_covered"))
-      val res = toks.join(covered, Seq("doc_id"), "left")
+      toks.join(covered, Seq("doc_id"), "left")
         .select(col("doc_id"), col("n_tokens"),
           coalesce(col("n_covered"), lit(0L)).as("n_covered"))
         .withColumn("dup_frac",
           round(col("n_covered").cast("double") /
             greatest(col("n_tokens"), lit(1L)), 6))
-      if (materialize) res.localCheckpoint(true) else res
-    } finally if (materialize) base.unpersist()
+    }
   }
 
   /** CROSS-document boilerplate fraction: per document, the share of its
@@ -136,21 +132,17 @@ object Curation {
     * from the Dedup materialization policy applies.
     */
   def boilerplateFraction(docs: DataFrame, textCol: String, idCol: String,
-                          k: Int = 3, minDf: Int = 3,
-                          materialize: Boolean = true): DataFrame = {
+                          k: Int = 3, minDf: Int = 3): DataFrame = {
     val pairs0 = docs.select(col(idCol).as("doc_id"),
       explode(Dedup.shingles(col(textCol), k)).as("s"))
       .select(col("doc_id"), xxhash64(col("s")).as("h"))
-    val pairs = if (materialize)
-      pairs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else pairs0
-    try {
+    Dedup.materialized(pairs0) { pairs =>
       val df = pairs.groupBy("h").agg(count(lit(1)).as("df"))
       val perDoc = pairs.join(df, Seq("h"))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_shingles"),
           count(when(col("df") >= minDf, 1)).as("n_common"))
-      val res = docs.select(col(idCol).as("doc_id"))
+      docs.select(col(idCol).as("doc_id"))
         .join(perDoc, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
@@ -158,8 +150,7 @@ object Curation {
         .withColumn("boiler_frac",
           round(col("n_common").cast("double") /
             greatest(col("n_shingles"), lit(1L)), 6))
-      if (materialize) res.localCheckpoint(true) else res
-    } finally if (materialize) pairs.unpersist()
+    }
   }
 
   /** Batch half of the streaming boilerplate gate
@@ -236,34 +227,29 @@ object Curation {
     *
     * The corpus is TOKENIZED ONCE: the (doc_id, tokens) frame feeds both
     * the frequency aggregation and the probe side, so it's persisted
-    * with lineage (same policy as [[Dedup.jaccardPairs]] — recomputable
-    * on executor loss, released in finally); the lazy form re-evaluates
-    * the regexp tokenizer per consumer, a 3× corpus-scan regression at
-    * 100 TB. The eagerly-driven per-doc score result is localCheckpoint'd
+    * with lineage (the [[Dedup]] materialization policy — recomputable
+    * on executor loss, released in finally); left unpersisted, the plan
+    * re-evaluates the regexp tokenizer per consumer, a 3× corpus-scan
+    * regression at 100 TB. The eagerly-driven per-doc score result is localCheckpoint'd
     * so it survives the unpersist, but (like every checkpointed result
     * frame — see the Dedup policy note) is NOT fault-tolerant past job
     * completion.
     */
-  def unigramLogProb(docs: DataFrame, textCol: String, idCol: String,
-                     materialize: Boolean = true): DataFrame = {
+  def unigramLogProb(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
     val base0 = docs.select(col(idCol).as("doc_id"),
       Dedup.tokens(col(textCol)).as("toks"))
-    val base = if (materialize)
-      base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else base0
-    try {
+    Dedup.materialized(base0) { base =>
       val toks = base.select(col("doc_id"), explode(col("toks")).as("term"))
       val freq = toks.groupBy("term").agg(count(lit(1)).as("tf"))
       // grand total derived from freq (vocabulary-sized), not the corpus
       val tot = freq.agg(sum("tf").cast("double").as("tot"))
-      val res = toks.join(freq, "term")
+      toks.join(freq, "term")
         .crossJoin(broadcast(tot))
         .withColumn("lp", log(col("tf").cast("double") / col("tot")))
         .groupBy("doc_id")
         .agg(round(avg(col("lp")), 6).as("avg_logp"),
           count(lit(1)).as("n_tok"))
-      if (materialize) res.localCheckpoint(true) else res
-    } finally if (materialize) base.unpersist()
+    }
   }
 
   /** Bigram conditional log-probability quality (the KenLM-style step up
@@ -284,8 +270,7 @@ object Curation {
     * with fewer than 2 tokens have no bigrams and drop out (same
     * convention both engines).
     */
-  def bigramLogProb(docs: DataFrame, textCol: String, idCol: String,
-                    materialize: Boolean = true): DataFrame = {
+  def bigramLogProb(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
     val toks = Dedup.tokens(col(textCol))
     val bg0 = docs
       .select(col(idCol).as("doc_id"), toks.as("toks"))
@@ -295,19 +280,15 @@ object Curation {
         i => struct(element_at(col("toks"), i).as("w1"),
           element_at(col("toks"), i + 1).as("w2")))).as("b"))
       .select(col("doc_id"), col("b.w1"), col("b.w2"))
-    val bg = if (materialize)
-      bg0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else bg0
-    try {
+    Dedup.materialized(bg0) { bg =>
       val cb = bg.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
       val cu = bg.groupBy("w1").agg(count(lit(1)).as("cu"))
-      val res = bg.join(cb, Seq("w1", "w2")).join(cu, Seq("w1"))
+      bg.join(cb, Seq("w1", "w2")).join(cu, Seq("w1"))
         .withColumn("lp", log(col("cb").cast("double") / col("cu")))
         .groupBy("doc_id")
         .agg(round(avg(col("lp")), 6).as("avg_logp"),
           count(lit(1)).as("n_bigrams"))
-      if (materialize) res.localCheckpoint(true) else res
-    } finally if (materialize) bg.unpersist()
+    }
   }
 
   /** Deterministic hash-gate for weighted sampling: keep a row iff the
@@ -457,7 +438,6 @@ object Curation {
     */
   def embeddingOutlierGate(emb: DataFrame, groupCol: String, idCol: String,
                            vecCol: String, frac: Double = 0.10,
-                           materialize: Boolean = true,
                            approx: Boolean = false): DataFrame = {
     require(frac > 0 && frac < 1, s"frac must be in (0,1) (got $frac)")
     val base = emb.filter(col(idCol).isNotNull && col(groupCol).isNotNull &&
@@ -479,15 +459,11 @@ object Curation {
     // the kept rollup: persist it so the centroid join + cosine run once
     // (the refLmTrain persist-in-finally discipline; the group-sized
     // result is checkpointed eagerly so the persist can be released).
-    // materialize = false returns the lazy plan (plan audits).
     val scored0 = base.join(broadcast(cent), Seq("_g"))
       .select(col("_g"), col("_id"),
         round(graft.functions.CosineSimilarity.cosine_sim(
           col("_v"), col("cent")), 6).as("sim"))
-    val scored = if (materialize)
-      scored0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else scored0
-    try {
+    Dedup.materialized(scored0) { scored =>
       val est = if (approx) s"approx_percentile(sim, $frac, 10000)"
         else s"percentile(sim, $frac)"
       val thr = scored.groupBy("_g").agg(
@@ -499,14 +475,13 @@ object Curation {
         .groupBy("_g").agg(count(lit(1)).as("n_kept"),
           bit_xor(conv(substring(md5(col("_id").cast("string")), 1, 15), 16, 10)
             .cast("long")).as("kept_xor"))
-      val out = thr.join(kept, Seq("_g"), "left")
+      thr.join(kept, Seq("_g"), "left")
         .select(col("_g").as(groupCol), col("n_vecs"),
           col("thr").cast("double").as("thr"),
           coalesce(col("n_kept"), lit(0L)).as("n_kept"),
           coalesce(col("kept_xor"), lit(0L)).as("kept_xor"))
         .orderBy(groupCol)
-      if (materialize) out.localCheckpoint(true) else out
-    } finally if (materialize) scored.unpersist()
+    }
   }
 
   /** Training-mixture temperature reweighting (data mixing): per-group
@@ -1329,13 +1304,10 @@ object Curation {
     * anchor rows, so the merge shuffles only duplicated anchors.
     */
   def dupSpans(docs: DataFrame, textCol: String, idCol: String,
-               n: Int = 5, materialize: Boolean = true): DataFrame = {
+               n: Int = 5): DataFrame = {
     val base0 = docs.select(col(idCol).as("doc_id"),
       Dedup.tokens(coalesce(col(textCol), lit(""))).as("w"))
-    val base = if (materialize)
-      base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else base0
-    try {
+    Dedup.materialized(base0) { base =>
       val pos = base.filter(size(col("w")) >= n)
         .select(col("doc_id"), posexplode(transform(
           sequence(lit(0), size(col("w")) - n),
@@ -1348,9 +1320,8 @@ object Curation {
         .select(col("doc_id"), col("pos"))
       // island merge on intervals [pos, pos+n-1]: break when this
       // anchor starts past the running coverage end + 1
-      val spans = mergeAnchorSpans(anchors, n)
-      if (materialize) spans.localCheckpoint(true) else spans
-    } finally if (materialize) base.unpersist()
+      mergeAnchorSpans(anchors, n)
+    }
   }
 
   /** The cut: rebuild each document with its duplicated spans removed —
@@ -1403,12 +1374,9 @@ object Curation {
     * engine has no dedup surface.)
     */
   def xdocSubstrSpans(docs: DataFrame, textCol: String, idCol: String,
-                      n: Int = 5, materialize: Boolean = true): DataFrame = {
+                      n: Int = 5): DataFrame = {
     val pos0 = xdocPosFrame(docs, textCol, idCol, n)
-    val pos = if (materialize)
-      pos0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else pos0
-    try {
+    Dedup.materialized(pos0) { pos =>
       val keep = pos.groupBy("h")
         .agg(count(lit(1)).as("cnt"),
           min(struct(col("doc_id"), col("pos"))).as("kp"))
@@ -1417,9 +1385,8 @@ object Curation {
       val anchors = pos.join(keep, Seq("h"))
         .filter(!(col("doc_id") === col("kd") && col("pos") === col("kpos")))
         .select(col("doc_id"), col("pos"))
-      val spans = mergeAnchorSpans(anchors, n)
-      if (materialize) spans.localCheckpoint(true) else spans
-    } finally if (materialize) pos.unpersist()
+      mergeAnchorSpans(anchors, n)
+    }
   }
 
   /** The cut for [[xdocSubstrSpans]] — each document rebuilt with its

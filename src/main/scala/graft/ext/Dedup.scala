@@ -16,20 +16,38 @@ import org.apache.spark.sql.functions._
   *    exact-Jaccard verification. Hot shingles can be capped via
   *    `maxDocFreq` to bound worst-case bucket sizes (skew guard).
   *
-  * Materialization policy (applies to every `materialize = true` operator
-  * here and in [[Search]]): the corpus-sized intermediate is persisted
-  * WITH lineage (MEMORY_AND_DISK) so a lost executor recomputes its
-  * blocks; the small result is driven eagerly and returned as a
+  * Materialization policy (every operator that goes through
+  * [[materialized]], here and in [[Search]], [[Curation]], [[TextStats]]
+  * and [[TrainSet]]): the corpus-sized intermediate is persisted WITH
+  * lineage (MEMORY_AND_DISK) so a lost executor recomputes its blocks;
+  * the small result is driven eagerly and returned as a
   * `localCheckpoint(true)` frame so the cache can be released in
   * `finally`. NOTE the returned frame itself is NOT fault-tolerant past
   * job completion — its lineage is truncated, so result partitions lost
   * AFTER the operator returns (e.g. preempted executors between jobs)
   * are irrecoverable. The results are pair-list / top-k sized, so on
   * preemptible infra either consume them promptly, write them to a sink,
-  * or collect them driver-side; pass `materialize = false` to manage
-  * materialization yourself.
+  * or collect them driver-side. The eager checkpoint posts one SQL
+  * execution carrying the whole plan (the persisted intermediate
+  * included), which is what PlanSpec's shape gates read.
   */
 object Dedup {
+
+  /** The materialization policy above, stated once: `base` persists,
+    * `result` is built over the persisted frame and checkpointed
+    * eagerly, and the cache is released before returning.
+    */
+  private[graft] def materialized(base: DataFrame)(
+      result: DataFrame => DataFrame): DataFrame =
+    withPersisted(base)(cached => result(cached).localCheckpoint(true))
+
+  /** `f` over `base` persisted (MEMORY_AND_DISK), released in `finally`;
+    * `f` must drive whatever it needs from the cache before returning.
+    */
+  private[graft] def withPersisted[T](base: DataFrame)(f: DataFrame => T): T = {
+    val cached = base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try f(cached) finally cached.unpersist()
+  }
 
   /** Lower-cased word tokens; empty strings filtered on both the Spark and
     * oracle side so tokenization is engine-agnostic.
@@ -130,15 +148,9 @@ object Dedup {
     * "exact near-dup" plan. Quadratic per shingle bucket; use
     * `maxDocFreq` to drop stop-shingles at scale.
     */
-  /** `materialize = false` skips the persist + eager drive and returns
-    * the raw lazy plan — for `explain()` inspection or composition into
-    * a larger job where the caller manages materialization; the default
-    * applies the policy documented below.
-    */
   def jaccardPairs(docs: DataFrame, textCol: String, idCol: String,
                    k: Int, threshold: Double,
-                   maxDocFreq: Option[Int] = None,
-                   materialize: Boolean = true): DataFrame = {
+                   maxDocFreq: Option[Int] = None): DataFrame = {
     // shingle extraction is the expensive expression: materialize it ONCE
     // (hashed to 64-bit so the self-join shuffles longs, not strings —
     // at 100 TB the shuffle carries (id, hash) pairs only)
@@ -149,23 +161,16 @@ object Dedup {
       val hot = sh0.groupBy("h").count().filter(col("count") > cap).select("h")
       sh0.join(broadcast(hot), Seq("h"), "left_anti")
     }
-    // materialization policy: the exploded-shingle frame is CORPUS-sized
-    // (~10x corpus rows), so it gets persist(MEMORY_AND_DISK) — lineage
-    // stays intact, and on a preemptible cluster a lost executor's blocks
-    // recompute instead of failing the job. The RESULT (the pair list,
-    // orders of magnitude smaller) is driven eagerly so the cache can be
-    // unpersisted in finally — leak-free AND recomputable.
-    val sh = if (materialize)
-      capped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else capped
-    try {
+    // the exploded-shingle frame is CORPUS-sized (~10x corpus rows) and
+    // the pair list orders of magnitude smaller: the policy's shape
+    materialized(capped) { sh =>
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
       val a = sh.as("a"); val b = sh.as("b")
       val common = a.join(b, col("a.h") === col("b.h") &&
           col("a.doc_id") < col("b.doc_id"))
         .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
         .agg(count(lit(1)).as("common"))
-      val pairs = common
+      common
         .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
         .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
         .withColumn("jaccard",
@@ -173,8 +178,7 @@ object Dedup {
             (col("sz_a") + col("sz_b") - col("common")), 6))
         .filter(col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
-      if (materialize) pairs.localCheckpoint(true) else pairs
-    } finally if (materialize) sh.unpersist()
+    }
   }
 
   /** X2d: DIRECTIONAL containment near-dup pairs — `(id_a, id_b)` where
@@ -196,8 +200,7 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, textCol: String, idCol: String,
                        k: Int, threshold: Double,
-                       maxDocFreq: Option[Int] = None,
-                       materialize: Boolean = true): DataFrame = {
+                       maxDocFreq: Option[Int] = None): DataFrame = {
     val sh0 = docs.select(col(idCol).as("doc_id"),
       explode(shingles(col(textCol), k)).as("s"))
       .select(col("doc_id"), xxhash64(col("s")).as("h"))
@@ -205,10 +208,7 @@ object Dedup {
       val hot = sh0.groupBy("h").count().filter(col("count") > cap).select("h")
       sh0.join(broadcast(hot), Seq("h"), "left_anti")
     }
-    val sh = if (materialize)
-      capped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else capped
-    try {
+    materialized(capped) { sh =>
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
       val a = sh.as("a"); val b = sh.as("b")
       val common = a.join(b, col("a.h") === col("b.h") &&
@@ -219,7 +219,7 @@ object Dedup {
         .join(sizes.withColumnRenamed("doc_id", "id_lo").withColumnRenamed("sz", "sz_lo"), "id_lo")
         .join(sizes.withColumnRenamed("doc_id", "id_hi").withColumnRenamed("sz", "sz_hi"), "id_hi")
       // one row per unordered candidate -> up to two directional rows
-      val directed = sized.select(explode(array(
+      sized.select(explode(array(
           struct(col("id_lo").as("id_a"), col("id_hi").as("id_b"),
             col("common"), col("sz_lo").as("sz_a")),
           struct(col("id_hi").as("id_a"), col("id_lo").as("id_b"),
@@ -228,8 +228,7 @@ object Dedup {
           round(col("d.common").cast("double") / col("d.sz_a"), 6)
             .as("containment"))
         .filter(col("containment") >= threshold)
-      if (materialize) directed.localCheckpoint(true) else directed
-    } finally if (materialize) sh.unpersist()
+    }
   }
 
   /** MinHash signature: for each of `numHashes` hash families, the min
@@ -247,9 +246,9 @@ object Dedup {
     * collisions, same candidate set) — the r18 crawl-family contract;
     * the xxhash64 default stays the scale path.
     */
-  private def sigFrame(docs: DataFrame, textCol: String, idCol: String,
-                       k: Int, numHashes: Int,
-                       portable: Boolean = false): DataFrame =
+  private[graft] def sigFrame(docs: DataFrame, textCol: String, idCol: String,
+                              k: Int, numHashes: Int,
+                              portable: Boolean = false): DataFrame =
     docs.select(
       col(idCol).as("doc_id"),
       shingles(col(textCol), k).as("sh"))
@@ -595,15 +594,13 @@ object Dedup {
                      k: Int = 3, numHashes: Int = 12,
                      configs: Seq[(Int, Int)] =
                        Seq((12, 1), (6, 2), (4, 3), (3, 4), (2, 6), (1, 12)),
-                     minJaccard: Double = 0.05,
-                     materialize: Boolean = true): DataFrame = {
+                     minJaccard: Double = 0.05): DataFrame = {
     require(configs.nonEmpty &&
       configs.forall { case (b, r) => b > 0 && r > 0 && b * r == numHashes },
       s"every (bands, rowsPerBand) must factor numHashes=$numHashes: $configs")
     require(configs.map(_._1).distinct.size == configs.size,
       s"band counts must be distinct (they key the config dispatch): $configs")
-    val pairs = jaccardPairs(docs, textCol, idCol, k, minJaccard,
-      materialize = materialize)
+    val pairs = jaccardPairs(docs, textCol, idCol, k, minJaccard)
     // signatures only for PAIR PARTICIPANTS: the report consults no other
     // doc's signature, and the md5-per-(shingle × seed) pass is the
     // expensive leg — pruning it to the pair-doc set (broadcast semi-join
@@ -651,23 +648,11 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, textCol: String, idCol: String,
                       k: Int, threshold: Double,
                       bands: Int = 16, rowsPerBand: Int = 4,
-                      materialize: Boolean = true,
-                      portable: Boolean = false): DataFrame = {
-    // materialize (id, shingles, signature) once — corpus-sized
-    // (shingles + signature per doc): persist with lineage + unpersist
-    // in finally; the result pair list is driven eagerly — see
-    // jaccardPairs for the materialization policy (and the
-    // materialize = false escape hatch)
-    val sig0 = sigFrame(docs, textCol, idCol, k, bands * rowsPerBand,
-      portable)
-    val withSig = if (materialize)
-      sig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else sig0
-    try {
-      val pairs = lshPairsOfSig(withSig, threshold, bands, rowsPerBand)
-      if (materialize) pairs.localCheckpoint(true) else pairs
-    } finally if (materialize) withSig.unpersist()
-  }
+                      portable: Boolean = false): DataFrame =
+    // (id, shingles, signature) is corpus-sized (shingles + signature
+    // per doc) and the verified pair list small: the policy's shape
+    materialized(sigFrame(docs, textCol, idCol, k, bands * rowsPerBand,
+      portable))(lshPairsOfSig(_, threshold, bands, rowsPerBand))
 
   /** [[minhashLshPairs]]' banding + verification over a PREBUILT
     * (doc_id, sh, sig) frame (every row with a non-empty shingle set) —
@@ -707,21 +692,14 @@ object Dedup {
                     textCol: String, idCol: String,
                     k: Int, threshold: Double,
                     bands: Int = 16, rowsPerBand: Int = 4,
-                    materialize: Boolean = true,
-                    portable: Boolean = false): DataFrame = {
-    val oldSig0 = sigFrame(existing, textCol, idCol, k, bands * rowsPerBand,
-      portable)
-    val oldSig = if (materialize)
-      oldSig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else oldSig0
-    try {
+                    portable: Boolean = false): DataFrame =
+    withPersisted(sigFrame(existing, textCol, idCol, k, bands * rowsPerBand,
+        portable)) { oldSig =>
       crossDupPairsPrebuilt(incoming,
         bandedFrame(oldSig, bands, rowsPerBand),
         oldSig.select("doc_id", "sh"),
-        textCol, idCol, k, threshold, bands, rowsPerBand, materialize,
-        portable)
-    } finally if (materialize) oldSig.unpersist()
-  }
+        textCol, idCol, k, threshold, bands, rowsPerBand, portable)
+    }
 
   /** The precomputed existing-side LSH index for incremental refreshes —
     * the crossDupPairs docstring's "write them out instead of passing
@@ -754,19 +732,10 @@ object Dedup {
                             textCol: String, idCol: String,
                             k: Int, threshold: Double,
                             bands: Int = 16, rowsPerBand: Int = 4,
-                            materialize: Boolean = true,
-                            portable: Boolean = false): DataFrame = {
-    val newSig0 = sigFrame(incoming, textCol, idCol, k, bands * rowsPerBand,
-      portable)
-    val newSig = if (materialize)
-      newSig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else newSig0
-    try {
-      val pairs = crossPairsOfSig(newSig, oldIndex, oldShingles, threshold,
-        bands, rowsPerBand)
-      if (materialize) pairs.localCheckpoint(true) else pairs
-    } finally if (materialize) newSig.unpersist()
-  }
+                            portable: Boolean = false): DataFrame =
+    materialized(sigFrame(incoming, textCol, idCol, k, bands * rowsPerBand,
+      portable))(crossPairsOfSig(_, oldIndex, oldShingles, threshold,
+        bands, rowsPerBand))
 
   /** [[crossDupPairsPrebuilt]] over a PREBUILT incoming (doc_id, sh, sig)
     * frame — the [[lshPairsOfSig]] counterpart. Lazy; pass a
@@ -865,8 +834,7 @@ object Dedup {
     * re-join — the fingerprint IS the verifier.
     */
   def simhashPairs(docs: DataFrame, textCol: String, idCol: String,
-                   maxHamming: Int = 3, bands: Int = 4,
-                   materialize: Boolean = true): DataFrame = {
+                   maxHamming: Int = 3, bands: Int = 4): DataFrame = {
     require(bands > maxHamming,
       s"pigeonhole completeness needs bands > maxHamming (got bands=$bands, maxHamming=$maxHamming)")
     require(64 % bands == 0, s"bands must divide 64 (got $bands)")
@@ -876,14 +844,9 @@ object Dedup {
     // tree — left lazy, the join condition would re-evaluate it PER
     // CANDIDATE PAIR (low-entropy corpora collide heavily on 16-bit
     // chunks, so candidates >> output pairs; measured 12s -> ~1s at
-    // sf0.1). Slim (id, long) but corpus-row-sized: persist with
-    // lineage, result driven eagerly, released in finally — see
-    // jaccardPairs for the policy.
-    val fp0 = docs.select(col(idCol).as("doc_id"), simhash(col(textCol)).as("fp"))
-    val fp = if (materialize)
-      fp0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else fp0
-    try {
+    // sf0.1). Slim (id, long) but corpus-row-sized: the policy's shape.
+    materialized(docs.select(col(idCol).as("doc_id"),
+        simhash(col(textCol)).as("fp"))) { fp =>
       // bands unrolled statically (bands is a plan-time constant), so
       // the chunk extraction stays in whole-stage codegen
       val bandStructs = (0 until bands).map { bi =>
@@ -894,15 +857,14 @@ object Dedup {
         .select(col("doc_id"), col("fp"), explode(array(bandStructs: _*)).as("bc"))
         .select(col("doc_id"), col("fp"), col("bc.band"), col("bc.chunk"))
       val a = banded.as("a"); val b = banded.as("b")
-      val pairs = a.join(b,
+      a.join(b,
           col("a.band") === col("b.band") && col("a.chunk") === col("b.chunk") &&
             col("a.doc_id") < col("b.doc_id") &&
             hamming64(col("a.fp"), col("b.fp")) <= maxHamming)
         .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
           hamming64(col("a.fp"), col("b.fp")).as("hamming"))
         .distinct()
-      if (materialize) pairs.localCheckpoint(true) else pairs
-    } finally if (materialize) fp.unpersist()
+    }
   }
 
   /** Duplicate-cluster resolution: connected components over a near-dup

@@ -26,14 +26,10 @@ import org.apache.spark.sql.functions._
   */
 object Search {
 
-  /** BM25 top-k documents for a bag-of-words query. `materialize =
-    * false` skips the persist + eager drive (raw lazy plan for
-    * explain()/composition).
-    */
+  /** BM25 top-k documents for a bag-of-words query. */
   def bm25TopK(docs: DataFrame, textCol: String, idCol: String,
                queryTerms: Seq[String], k: Int = 10,
-               k1: Double = 1.2, b: Double = 0.75,
-               materialize: Boolean = true): DataFrame = {
+               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val toks = Dedup.tokens(col(textCol))
     // ONE corpus scan: doc length for the global stats, plus the tokens
     // pruned to the query terms INSIDE the array (before explode — the
@@ -43,13 +39,9 @@ object Search {
       col(idCol).as("doc_id"),
       size(toks).as("dl"),
       filter(toks, t => queryTerms.map(q => t === q).reduce(_ || _)).as("qtoks"))
-    // corpus-sized (one slim row per doc): persist with lineage so a
-    // lost executor recomputes its blocks; the k-row result below is
-    // driven eagerly and the cache released in finally — leak-free
-    val base = if (materialize)
-      base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else base0
-    try {
+    // corpus-sized (one slim row per doc), the result k rows: the
+    // Dedup policy's shape
+    Dedup.materialized(base0) { base =>
       val global = base.agg(count(lit(1)).cast("double").as("n"),
         avg(col("dl")).as("avgdl"))
       // dl rides along with the postings — no separate length join
@@ -59,7 +51,7 @@ object Search {
         .agg(count(lit(1)).cast("double").as("tf"), first(col("dl")).as("dl"))
       val df = postings.select("doc_id", "term").distinct()
         .groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-      val topk = tf.join(broadcast(df), "term")
+      tf.join(broadcast(df), "term")
         .crossJoin(broadcast(global))
         .withColumn("contrib",
           log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)) *
@@ -69,8 +61,7 @@ object Search {
         .agg(round(sum(col("contrib")), 6).as("score"))
         .orderBy(desc("score"), col("doc_id"))
         .limit(k)
-      if (materialize) topk.localCheckpoint(true) else topk
-    } finally if (materialize) base.unpersist()
+    }
   }
 
   /** X8b: hybrid retrieval — reciprocal-rank fusion (RRF, the standard
@@ -96,11 +87,9 @@ object Search {
                  emb: DataFrame, queryTerms: Seq[String],
                  queryVec: Seq[Double], k: Int = 10, kRetrieve: Int = 50,
                  c: Int = 60, embIdCol: String = "vec_id",
-                 vecCol: String = "embedding",
-                 materialize: Boolean = true): DataFrame = {
+                 vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val lexTop = bm25TopK(docs, textCol, idCol, queryTerms, kRetrieve,
-      materialize = materialize)
+    val lexTop = bm25TopK(docs, textCol, idCol, queryTerms, kRetrieve)
     val wLex = Window.orderBy(desc("score"), col("doc_id"))
     val lex = lexTop.select(col("doc_id"),
       row_number().over(wLex).cast("long").as("lex_rank"))

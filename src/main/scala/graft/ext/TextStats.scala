@@ -1039,20 +1039,15 @@ object TextStats {
     * never shuffles.
     */
   def pmiCollocations(docs: org.apache.spark.sql.DataFrame, textCol: String,
-                      minCount: Long = 3L, k: Int = 30,
-                      materialize: Boolean = true): org.apache.spark.sql.DataFrame = {
+                      minCount: Long = 3L, k: Int = 30): org.apache.spark.sql.DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1 (got $minCount)")
     require(k > 0, s"k must be positive (got $k)")
     val base0 = docs.select(
       Dedup.tokens(coalesce(col(textCol), lit(""))).as("w"))
-    val base = if (materialize)
-      base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else base0
-    try {
-      val res = pmiFromCounts(unigramCounts(base), bigramCounts(base),
+    Dedup.materialized(base0) { base =>
+      pmiFromCounts(unigramCounts(base), bigramCounts(base),
         minCount, k)
-      if (materialize) res.localCheckpoint(true) else res
-    } finally if (materialize) base.unpersist()
+    }
   }
 
   /** The (t, cu) unigram count frame of a tokenized (w: array) frame. */
@@ -1359,9 +1354,6 @@ object TextStats {
     * before returning). The ≥ 2-token filter is `isnan(lp)` AFTER
     * materialization — the scorer's NaN sentinel is exactly the
     * "no mean exists" set, so filtering costs no extra tokenize.
-    * `materialize = false` skips the persist + eager checkpoint and
-    * returns the lazy plan (the [[Dedup.jaccardPairs]] policy — plan
-    * audits and callers managing their own materialization).
     * Output one row per (lang, tier) with doc/bigram mass, mean
     * perplexity and the doc-set xor witness.
     *
@@ -1376,7 +1368,6 @@ object TextStats {
     */
   def perplexityTiers(docs: org.apache.spark.sql.DataFrame, textCol: String,
                       langCol: String, idCol: String, model: RefLm,
-                      materialize: Boolean = true,
                       approx: Boolean = false)
     : org.apache.spark.sql.DataFrame = {
     val scored0 = docs
@@ -1386,10 +1377,8 @@ object TextStats {
           .cast("long").as("n_bigrams"),
         round(refLmAvgLogProb(col(textCol), col(langCol), model), 6)
           .as("lp"))
-    val cached = if (materialize)
-      scored0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else scored0
-    try {
+    // group-sized result (langs × 3 rows): pin eagerly, then release the scan
+    Dedup.materialized(scored0) { cached =>
       val scored = cached.filter(!isnan(col("lp")))
       def est(q: Double): String =
         if (approx) s"approx_percentile(lp, $q, 10000)"
@@ -1397,7 +1386,7 @@ object TextStats {
       val thr = scored.groupBy("lang").agg(
         round(expr(est(1.0 / 3)), 4).as("thr_lo"),
         round(expr(est(2.0 / 3)), 4).as("thr_hi"))
-      val out = scored.join(broadcast(thr), Seq("lang"))
+      scored.join(broadcast(thr), Seq("lang"))
         .withColumn("tier", when(col("lp") >= col("thr_hi"), "head")
           .when(col("lp") >= col("thr_lo"), "middle").otherwise("tail"))
         .groupBy("lang", "tier", "thr_lo", "thr_hi")
@@ -1422,9 +1411,7 @@ object TextStats {
           col("thr_hi").cast("double"), col("n_docs"), col("n_bigrams"),
           col("avg_ppl"), col("doc_xor"))
         .orderBy("lang", "tier")
-      // group-sized (langs × 3 rows): pin eagerly, then release the scan
-      if (materialize) out.localCheckpoint(true) else out
-    } finally if (materialize) cached.unpersist()
+    }
   }
 
   /** X5k gate form — the filter CCNet actually deploys (Wenzek et al.
@@ -1441,30 +1428,24 @@ object TextStats {
     * frozen threshold map is the fail-closed form,
     * [[graft.streaming.StreamCurate.applyPerplexityGate]]). Returns
     * the kept (idCol, lang, lp) — slim, join it back to the corpus for
-    * payloads. `materialize = false` returns the lazy plan (plan
-    * audits / callers composing their own materialization).
+    * payloads.
     */
   def perplexityKeep(docs: org.apache.spark.sql.DataFrame, textCol: String,
-                     langCol: String, idCol: String, model: RefLm,
-                     materialize: Boolean = true)
+                     langCol: String, idCol: String, model: RefLm)
     : org.apache.spark.sql.DataFrame = {
     val scored0 = docs
       .filter(col(idCol).isNotNull && col(langCol).isNotNull)
       .select(col(langCol).as("lang"), col(idCol).as(idCol),
         round(refLmAvgLogProb(col(textCol), col(langCol), model), 6)
           .as("lp"))
-    val cached = if (materialize)
-      scored0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else scored0
-    try {
+    Dedup.materialized(scored0) { cached =>
       val scored = cached.filter(!isnan(col("lp")))
       val thr = scored.groupBy("lang").agg(
         round(expr(s"percentile(lp, ${1.0 / 3})"), 4).as("thr_lo"))
-      val out = scored.join(broadcast(thr), Seq("lang"))
+      scored.join(broadcast(thr), Seq("lang"))
         .filter(col("lp") >= col("thr_lo"))
         .select(col(idCol), col("lang"), col("lp"))
-      if (materialize) out.localCheckpoint(true) else out
-    } finally if (materialize) cached.unpersist()
+    }
   }
 
   /** X6: 256-bit content fingerprint (hex). */

@@ -149,15 +149,12 @@ object TrainSet {
     */
   def dsirResample(raw: DataFrame, target: DataFrame, textCol: String,
                    idCol: String, k: Int, numBuckets: Int = 1024,
-                   salt: String = "graft-dsir",
-                   materialize: Boolean = true): DataFrame = {
+                   salt: String = "graft-dsir"): DataFrame = {
     require(k > 0, s"k must be positive (got $k)")
     import graft.functions.TopKByScore.top_k_by_score
-    val feats0 = hashedNgramBuckets(raw, textCol, idCol, numBuckets)
-    val feats = if (materialize)
-      feats0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else feats0
-    try {
+    // k-row result: checkpoint eagerly so the featurization runs once
+    // while `feats` is cached (the Dedup materialization policy)
+    Dedup.materialized(hashedNgramBuckets(raw, textCol, idCol, numBuckets)) { feats =>
       val ct = hashedNgramBuckets(target, textCol, idCol, numBuckets)
         .groupBy("bucket").agg(count(lit(1)).as("ct"))
       val cr = feats.groupBy("bucket").agg(count(lit(1)).as("cr"))
@@ -176,17 +173,14 @@ object TrainSet {
       val keyed = feats.join(broadcast(ratio), Seq("bucket"))
         .groupBy("_id").agg(sum(col("lr")).as("logw"))
         .select(col("_id"), (col("logw") + gumbel(col("_id"))).as("key"))
-      val res = keyed
+      keyed
         .agg(top_k_by_score(col("key"), col("_id"), k).as("topk"))
         .select(posexplode(col("topk")).as(Seq("pos", "t")))
         .select((col("pos") + 1).cast("long").as("rank"),
           col("t.id").as(idCol),
           round(col("t.score") - gumbel(col("t.id")), 6).as("log_weight"),
           round(col("t.score"), 6).as("gumbel_key"))
-      // k-row result: checkpoint eagerly so the featurization runs once
-      // while `feats` is cached (the Dedup materialization policy)
-      if (materialize) res.localCheckpoint(true) else res
-    } finally if (materialize) feats.unpersist()
+    }
   }
 
   /** The DSIR "train" artifact: the full per-bucket smoothed log-ratio
@@ -338,12 +332,16 @@ object TrainSet {
     // to DIFFERENT _pid partitions — the driver offsets would then
     // apply to the wrong partitions and cum_before would be silently
     // wrong. Pinning one evaluation is a correctness requirement here,
-    // not a performance knob (there is deliberately no materialize
-    // escape hatch; [[budgetFillPlanShape]] is the lazy inspection
-    // form).
-    val parted = budgetFillParted(df, idCol, rankCol, tokenCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // not a performance knob; the selection is checkpointed eagerly
+    // while `parted` is cached (the Dedup materialization policy — the
+    // index is slim).
+    val parted0 = df.filter(col(idCol).isNotNull)
+      .select(col(idCol).as("_id"), rankCol.cast("double").as("_rank"),
+        tokenCol.cast("long").as("_tok"))
+      .filter(col("_rank").isNotNull && col("_tok").isNotNull)
+      .repartitionByRange(col("_rank").desc, col("_id").asc)
+      .withColumn("_pid", spark_partition_id().cast("long"))
+    Dedup.materialized(parted0) { parted =>
       // driver prefix over per-partition token totals: result size =
       // shuffle partition count, and an empty partition simply
       // contributes nothing to the running offsets
@@ -353,49 +351,18 @@ object TrainSet {
       val offsets = totals.map { case (p, t) =>
         val o = acc; acc += t; p -> o.toDouble
       }.toMap
-      // checkpoint eagerly so the selection materializes while `parted`
-      // is cached (the dsirResample discipline); the index is slim
-      budgetFillSelect(parted, idCol, budget, offsets).localCheckpoint(true)
-    } finally parted.unpersist()
-  }
-
-  private def budgetFillParted(df: DataFrame, idCol: String,
-                               rankCol: Column, tokenCol: Column): DataFrame =
-    df.filter(col(idCol).isNotNull)
-      .select(col(idCol).as("_id"), rankCol.cast("double").as("_rank"),
-        tokenCol.cast("long").as("_tok"))
-      .filter(col("_rank").isNotNull && col("_tok").isNotNull)
-      .repartitionByRange(col("_rank").desc, col("_id").asc)
-      .withColumn("_pid", spark_partition_id().cast("long"))
-
-  private def budgetFillSelect(parted: DataFrame, idCol: String,
-                               budget: Long,
-                               offsets: Map[Long, Double]): DataFrame = {
-    val w = Window.partitionBy("_pid")
-      .orderBy(col("_rank").desc, col("_id").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    parted
-      .withColumn("cum_before",
-        coalesce(sum(col("_tok")).over(w), lit(0L)) +
-          graft.functions.BucketLookup.bucket_lookup(
-            col("_pid"), offsets, 0.0).cast("long"))
-      .filter(col("cum_before") < budget)
-      .select(col("_id").as(idCol), col("_rank").as("rank"),
-        col("_tok").as("n_tokens"), col("cum_before"))
-  }
-
-  /** PLAN-INSPECTION form of [[budgetFill]]: the identical lazy plan
-    * (range exchange → per-partition window → bucket_lookup offset →
-    * filter) built with placeholder zero offsets and NO jobs run.
-    * Exists so plan gates (PlanSpec) can assert the shuffle shape
-    * without executing; its RESULT is not the greedy fill (the
-    * cross-partition offsets are zeros) — never execute it for data.
-    */
-  def budgetFillPlanShape(df: DataFrame, idCol: String, rankCol: Column,
-                          tokenCol: Column, budget: Long): DataFrame = {
-    require(budget > 0, s"budget must be positive (got $budget)")
-    budgetFillSelect(budgetFillParted(df, idCol, rankCol, tokenCol),
-      idCol, budget, Map.empty)
+      val w = Window.partitionBy("_pid")
+        .orderBy(col("_rank").desc, col("_id").asc)
+        .rowsBetween(Window.unboundedPreceding, -1)
+      parted
+        .withColumn("cum_before",
+          coalesce(sum(col("_tok")).over(w), lit(0L)) +
+            graft.functions.BucketLookup.bucket_lookup(
+              col("_pid"), offsets, 0.0).cast("long"))
+        .filter(col("cum_before") < budget)
+        .select(col("_id").as(idCol), col("_rank").as("rank"),
+          col("_tok").as("n_tokens"), col("cum_before"))
+    }
   }
 
   /** X21: sharded-export manifest — the delivery bookkeeping of a

@@ -1671,17 +1671,16 @@ object Declared {
       .select("doc_id").localCheckpoint(true)
   }
 
-  /** Stages 3-5, one LAZY frame: survivor drop (broadcast anti-join) →
-    * curation gates (map-only; adds `quality` for the fill rank) →
-    * benchmark decontamination (broadcast shingle set → broadcast
-    * anti-join of the flagged ids) → mixture recipe over source shares
-    * (group-sized broadcast rates + md5 gate). PlanSpec gates this
-    * frame's shape: broadcasts for every small side, no window, no
-    * global sort.
+  /** Stages 3-5: survivor drop (broadcast anti-join) → curation gates
+    * (map-only; adds `quality` for the fill rank) → benchmark
+    * decontamination (broadcast shingle set → broadcast anti-join of
+    * the flagged ids) → mixture recipe over source shares (group-sized
+    * broadcast rates + md5 gate). PlanSpec gates the executions this
+    * runs plus the returned frame's plan: broadcasts for every small
+    * side, no window, no global sort.
     */
   private[graft] def assemblyMixed(docs: DataFrame, merged: DataFrame,
-                                   dropDups: DataFrame,
-                                   pin: Boolean = true): DataFrame = {
+                                   dropDups: DataFrame): DataFrame = {
     // both anti-join sides size-gated (Hints scaladoc): dropDups is
     // checkpoint-backed (assemblyDropDups), contam is lazily derived so
     // it is materialized once for the gate count and the join.
@@ -1692,14 +1691,10 @@ object Declared {
     // — the contam gate count materializes the cache as a side effect,
     // so evaluate-once costs ZERO extra jobs (in deployment this frame
     // IS the standing gated store, written once — the r18 extract-once
-    // argument one stage later). `pin = false` is the PLAN-SHAPE form
-    // (PlanSpec / the Plans lazy registry): the checkpoint truncates
-    // the composed prefix to an ExistingRDD scan, so the shape gates
-    // inspect the un-pinned composition (the budgetFillPlanShape
-    // convention) — never execute the un-pinned form for data.
-    val gated0 = Curation.standardGates(
+    // argument one stage later).
+    val gated = Curation.standardGates(
       merged.join(graft.ext.Hints.hintIfSlim(dropDups), Seq("doc_id"), "left_anti"))
-    val gated = if (pin) gated0.localCheckpoint(false) else gated0
+      .localCheckpoint(false)
     val contam = Curation.contaminationOverlap(
       gated, docs.filter(col("doc_id") % 37 === 0),
       "text", "doc_id", k = 3, minOverlap = 5).select("doc_id")

@@ -112,12 +112,14 @@ object StreamDedup {
     * rows) plus [[graft.ext.Dedup.shingleFrame]] (exact-verification
     * table); at 100 TB both are one-off partitioned writes reused
     * across corpus refreshes, and persisting them is what makes the
-    * per-batch probe |batch|-proportional. The probe itself is
-    * [[graft.ext.Dedup.crossDupPairsPrebuilt]] VERBATIM (one code path
-    * with the batch refresh operator, so they cannot drift): only the
-    * micro-batch is shingled/hashed, candidates come from the banded
-    * equi-join, and every emitted pair is exact-Jaccard verified —
-    * precision 1, recall identical to the batch form.
+    * per-batch probe |batch|-proportional. The probe itself is the
+    * lazy core of [[graft.ext.Dedup.crossDupPairsPrebuilt]] (the same
+    * signature frame and cross-pair join as the batch refresh operator,
+    * so they cannot drift, without its persist and checkpoint per
+    * micro-batch): only the micro-batch is shingled/hashed, candidates
+    * come from the banded equi-join, and every emitted pair is
+    * exact-Jaccard verified — precision 1, recall identical to the
+    * batch form.
     *
     * `foreachBatch` (not a continuous stream-static join) because the
     * candidate dedup + verification join are plain batch ops there —
@@ -127,8 +129,9 @@ object StreamDedup {
                     oldShingles: DataFrame, textCol: String, idCol: String,
                     k: Int, threshold: Double,
                     bands: Int = 16, rowsPerBand: Int = 4): DataFrame =
-    graft.ext.Dedup.crossDupPairsPrebuilt(batch, oldIndex, oldShingles,
-      textCol, idCol, k, threshold, bands, rowsPerBand, materialize = false)
+    graft.ext.Dedup.crossPairsOfSig(
+      graft.ext.Dedup.sigFrame(batch, textCol, idCol, k, bands * rowsPerBand),
+      oldIndex, oldShingles, threshold, bands, rowsPerBand)
 
   /** X1e streaming twin (r13): per-micro-batch LINE-HISTOGRAM journal —
     * the standing state corpus-wide keep-first line dedup needs at

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Per-job latency breakdown for one or more declared queries — the
@@ -10,7 +9,7 @@ import org.apache.spark.sql.functions._
   *
   * Run: sbt "runMain graft.tools.ProbeJobs <sfDir> <query>[,<query>...]"
   *
-  * Methodology mirrors graft.Bench: same session config, one untimed
+  * Methodology mirrors graft.Bench: same session profile, one untimed
   * warm-up drain (JIT + artifact builds), then ONE timed drain with a
   * listener recording every job's wall, task count and description.
   * Output: per-job rows (ordered by start), then the wall total vs the
@@ -26,16 +25,7 @@ object ProbeJobs {
     val names = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(Seq("x121_web_ccnet_refresh"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_PROBE_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "8k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.profile(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     def drain(df: org.apache.spark.sql.DataFrame): Unit =

@@ -1518,32 +1518,6 @@ class ExtSpec extends SparkSuite {
     assert(pairSet(st2.pairs) == pairSet(stFull.pairs), "refreshed pairs drifted")
   }
 
-  /** `f`'s result and the number of Spark jobs it started. */
-  private def withJobCount[T](f: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val fence = "graft.spec.fence"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(fence) != null)) fenced.countDown()
-        else { jobs.incrementAndGet(); () }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = f
-      // listener events arrive asynchronously but in order: once a
-      // marked job run after `f` is seen, every earlier job start has
-      // been delivered
-      sc.setLocalProperty(fence, "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(fence, null)
-      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus never delivered the fence job")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("X23 refresh footprint: a repeated refresh + rebuild stays within its job budget") {
     import graft.ext.Refresh
     // the refresh is a standing job a driver repeats: once warm, one

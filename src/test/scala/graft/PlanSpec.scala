@@ -1,19 +1,143 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import graft.tools.Executions
 
 /** Plan-regression gate: asserts the physical-plan SHAPE of the declared
   * queries, not just their results. A future change that un-pushes a
   * filter, drops a broadcast hint, or sneaks a shuffle into a map-only
   * pipeline turns these red even while the oracle rows stay green.
   *
-  * Queries whose operator eagerly materializes a result-sized frame
-  * (x02/x09/x23/x24/x25/x30 — see Dedup/Search materialization policy)
-  * present as an ExistingRDD scan here; their internal plans are audited
-  * via the operators directly where it matters (no-cartesian check
-  * below).
+  * The gates read the plans that run. An operator that checkpoints its
+  * result (x02/x09/x24/… — the Dedup materialization policy) runs its
+  * whole plan in the SQL execution its checkpoint posts, and the frame
+  * it returns only scans the checkpoint. So every declared query is
+  * built once under [[withExecutions]], and the gates read the captured
+  * executions next to the returned frame's plan.
   */
 class PlanSpec extends SparkSuite {
+
+  /** A query or composition as built: the SQL executions its
+    * construction ran and the frame it returned.
+    */
+  private final case class Built(runs: Seq[Executions.Execution], frame: DataFrame) {
+    def ran: Seq[SparkPlan] = runs.map(_.plan)
+    def plans: Seq[SparkPlan] = ran :+ frame.queryExecution.executedPlan
+  }
+
+  private def build(df: => DataFrame): Built = {
+    val (frame, runs) = withExecutions(df)
+    Built(runs, frame)
+  }
+
+  private def textOf(plans: Seq[SparkPlan]): String =
+    plans.map(Executions.text).mkString
+
+  // every declared query built once, in name order: the suite-wide
+  // gates and the per-query tests below read these captures (building
+  // runs the checkpointing operators, so this is most of the suite's
+  // wall time)
+  private lazy val built: Map[String, Built] =
+    SparkEntry.queries.keys.toSeq.sorted.map(q =>
+      q -> build(SparkEntry.queries(q)(spark, sf()))).toMap
+
+  // an assembly's composed prefix (merge → … → mixture): the executions
+  // before its budget fill starts, i.e. before the first one reading the
+  // fill's `_pid` range-partition id (the fill's own shape is the x72
+  // gate's)
+  private def assemblyPrefix(b: Built): Seq[SparkPlan] =
+    b.ran.takeWhile(p => !Executions.text(p).contains("_pid"))
+
+  // the test-side compositions: operators, or operator portions, whose
+  // shape is gated apart from the declared query that embeds them
+  private lazy val composed: Map[String, Built] = {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val docs = Tables.load(spark, sf(), "documents")
+    val emb = Tables.load(spark, sf(), "embeddings")
+    Map(
+      // x25/x30's gate portion: everything around the pair-finding
+      // internals — gates map-only, drop-list join left_anti
+      "x25 gate portion" -> build {
+        val dropDups = graft.ext.Dedup.dupClusters(
+          graft.ext.Dedup.jaccardPairs(docs, "text", "doc_id",
+            k = 3, threshold = 0.2, maxDocFreq = Some(100)))
+          .filter(col("doc_id") =!= col("cluster_id")).select("doc_id")
+        graft.queries.Declared.curationGates(docs, dropDups)
+      },
+      // the r7 declared x29/x36_blocked rows are verification
+      // compositions (blocked vs exact full-outer) — the SCALE-path
+      // internals worth gating are the raw operators' plans: equi-join
+      // on cell, never a cartesian
+      "x29 blocked pairs (raw operator)" -> build(
+        graft.ext.Dedup.embeddingNearDupPairsBlocked(
+          emb, threshold = 0.45, nlist = 16, nprobe = 4)),
+      "x36 blocked decontam (raw operator)" -> build(
+        graft.ext.Curation.semanticDecontamBlocked(
+          emb.filter(col("vec_id") % 37 =!= 0),
+          emb.filter(col("vec_id") % 37 === 0),
+          threshold = 0.35, nlist = 16, nprobe = 8)),
+      // x72's fill itself (the declared query adds a presentation sort,
+      // whose range exchange would answer for the fill's own)
+      "x72 budget fill" -> build(graft.ext.TrainSet.budgetFill(
+        docs.filter(col("text").isNotNull), "doc_id",
+        graft.ext.TextStats.qualityScore(col("text")),
+        graft.ext.TextStats.tokenCount(col("text")),
+        budget = 15000L)),
+      // x75's clustering input is the iterative x23 pipeline; the plan
+      // worth gating is the ELECTION itself — greatest_row hash agg over
+      // the slim join, no membership window
+      "x75 election portion" -> build(graft.ext.Dedup.clusterSurvivors(
+        docs.select(col("doc_id"), (col("doc_id") % 10).as("cluster_id")),
+        docs, "doc_id", graft.ext.TextStats.qualityScore(col("text")))),
+      // x78's stages 3-5 over a crafted slim drop list (the real one is
+      // the memoized cluster artifact; the gates assert plan SHAPE, so
+      // training it here would only add runtime): the executions the
+      // pinned gated frame and the contamination gate run, plus the
+      // mixed frame's own plan
+      "x78 assembly mixed" -> build {
+        val merged = graft.queries.Declared.assemblyMerged(
+          graft.queries.Declared.assemblyUnion(docs))
+        graft.queries.Declared.assemblyMixed(docs, merged,
+          Seq(20002L).toDF("doc_id"))
+      },
+      // x83's pair-finding prefix (the declared query's memoized
+      // artifact input): portable seeded cells — map-only
+      // nearest_cells_rounded assignment, seeds as a codegen reference
+      // object — then the within-cell equi-join; clustering/election are
+      // gated via x75's election portion
+      "x83 pair prefix" -> build(graft.ext.Dedup.semanticDedupPairs(
+        graft.ext.Dedup.semanticCells(emb, nlist = 8, nprobe = 3),
+        threshold = 0.4)))
+  }
+
+  // the gates below are only as good as the capture: an eagerly
+  // checkpointed operator (x02's) and a lazily checkpointed frame must
+  // each post an execution whose plan holds their joins — a Spark
+  // upgrade that stops posting them, or stops carrying the cached plan,
+  // fails here by name instead of silently emptying every gate
+  test("capture: eager and lazy checkpoints post executions that hold their joins") {
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.functions.col
+    val docs = Tables.load(spark, sf(), "documents")
+    def joinKeys(b: Built): Set[String] = b.ran.flatMap(Executions.nodes)
+      .collect { case (_, j: BaseJoinExec) => j.leftKeys.flatMap(_.references.map(_.name)) }
+      .flatten.toSet
+    val eager = build(graft.ext.Dedup.jaccardPairs(
+      docs, "text", "doc_id", k = 3, threshold = 0.2))
+    assert(eager.runs.map(_.action) == Seq("localCheckpoint"),
+      s"x02 operator executions: ${eager.runs.map(_.action)}")
+    assert(Set("h", "id_a", "id_b").subsetOf(joinKeys(eager)),
+      s"x02 execution lacks its joins:\n${textOf(eager.ran)}")
+    val lazyCk = build(docs.as("a")
+      .join(docs.as("b"), col("a.doc_id") === col("b.doc_id") + 1)
+      .select(col("a.doc_id")).localCheckpoint(false))
+    assert(lazyCk.runs.map(_.action) == Seq("localCheckpoint"),
+      s"lazy checkpoint executions: ${lazyCk.runs.map(_.action)}")
+    assert(joinKeys(lazyCk).contains("doc_id"),
+      s"lazy checkpoint execution lacks its join:\n${textOf(lazyCk.ran)}")
+  }
 
   private def planOf(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sf())
@@ -42,9 +166,9 @@ class PlanSpec extends SparkSuite {
   // r18: the declared encode rows spread a STARVED fixture scan
   // (tSpread — the x113/x68 idiom), so their declared plans carry one
   // guarded round-robin exchange on the local single-split fixture; a
-  // sharded corpus arrives pre-spread and takes the map-only plan,
-  // which stays pinned here on the un-spread form (the x113 lazy-twin
-  // convention). The model rides as reference objects, never a join.
+  // sharded corpus arrives pre-spread and takes the map-only plan, so
+  // the gate allows that one spread and nothing else. The model rides
+  // as reference objects, never a join.
   private val mapOnlySpread = Seq("x118_unigram_encode",
     "x126_wordpiece_encode", "x128_wordpiece_byte_encode")
 
@@ -112,137 +236,112 @@ class PlanSpec extends SparkSuite {
   // property-oracle queries that embed an n² form as their VERIFICATION
   // side only (x29 joins its blocked pairs against the exact n² set to
   // assert precision/recall driver-visibly; the scale path inside it is
-  // still the cell-blocked equi-join, gated via the lazy-form test)
+  // still the cell-blocked equi-join, gated via the raw-operator
+  // composition below)
   private val nSquaredOracles =
     Set("x03_cosine_topk", "x03_cosine_topk_agg", "x16_embedding_dups",
       "x29_embedding_dups_blocked")
 
-  // queries whose declared form materializes eagerly: their declared
-  // plan is an ExistingRDD scan (vacuous to inspect) and constructing
-  // the frame runs the whole pipeline — skipped here, their INTERNAL
-  // plans are asserted through the materialize=false lazy forms below.
-  // (x23's connected components is iterative/eager by nature and has no
-  // single lazy plan; its joins are equi-joins by construction and its
-  // behavior is covered in ExtSpec.)
-  private val eagerQueries = Set("x02_jaccard_pairs", "x09_minhash_pairs",
-    "x23_dup_clusters", "x24_bm25", "x27_unigram_logprob",
-    "x33_simhash_pairs", "x38_bigram_logprob", "x41_cross_dedup",
-    "x42_boilerplate", "x43_containment", "x46_dup_ngram_coverage",
-    "x63_dup_spans", "x63_cut_spans", "x67_dsir_resample",
-    "x72_budget_fill",
-    // r18: keeper-preserving cross-doc substring dedup — span frame
-    // checkpointed like x63; lazy twin gated below
-    "x133_xdoc_substr_spans", "x134_xdoc_substr_cut",
-    // r14: scored-frame persist + group-sized checkpoint (one scoring
-    // scan) — declared plans are ExistingRDD; lazy twins gated below
-    "x105_perplexity_tiers", "x108_ccnet_e2e", "x109_embedding_outliers",
-    // r14: stage-checkpointed CCNet-extended assembly — composed lazy
-    // prefix gated below (the x78 convention)
-    "x110_assembly_ccnet",
-    // r15: extraction-fed CCNet head — scored-frame persist (the x105
-    // discipline); lazy twin gated below
-    "x119_web_ccnet_e2e",
-    // r16: the container-entry twin of x119 — same scored-frame
-    // persist tail (shared helper); its container-specific prefix
-    // (WARC scan + metadata-enrichment join) is gated via the x120
-    // no-join scan-parallel test and the x119 lazy twin
-    "x127_warc_ccnet_e2e",
-    // r15: the x110 refresh twin runs BOTH paths eagerly (artifact
-    // state + budget fills); its stage plans are the x110 composed
-    // prefix + the Refresh machinery gated via ExtSpec/ScaleCheck
-    "x114_assembly_ccnet_refresh",
-    // r17: the crawl-entered assembly + its refresh twin run the x110
-    // machinery eagerly; their container/URL front door is gated
-    // componentwise (the x120 no-join scan gate, the x124 slim-agg
-    // gate — the keeper semi-join is a plain equi-join on fetch_id)
-    // and the assembly stages through the x110 composed prefix
-    "x130_crawl_assembly_e2e", "x131_crawl_assembly_refresh",
-    // r18: the gz-entered x130 twin — front door gated by the x132
-    // scan-parallel gate, assembly by the x110 composed prefix
-    "x135_crawlgz_assembly_e2e",
-    // r18: the x134 refresh twin runs BOTH paths eagerly from artifact
-    // state (the x114/x131 convention); its span/cut machinery is
-    // gated through the x133/x134 lazy twins (equi-join on h) and the
-    // fold's joins are plain equi-joins on h / doc_id / (doc_id, pos)
-    // with size-gated id-list hints (CurationSpec pins the delta
-    // classes, ScaleCheck the recut-row boundedness)
-    "x136_xdoc_substr_refresh",
-    // r18: the gz-entered x131 twin — front door gated by the x132
-    // scan-parallel gate, the refresh machinery shared verbatim with
-    // x131 (one def, cannot drift)
-    "x137_crawlgz_assembly_refresh")
-
-  // built once: the lazy twins of every eagerly-materializing operator
-  // (training the small plan-shape models runs a few fixture jobs)
-  private lazy val lazyPlans: Map[String, String] =
-    graft.tools.Plans.lazyForms(spark, sf()).toMap
-      .view.mapValues(_.queryExecution.explainString(
-        org.apache.spark.sql.execution.SimpleMode)).toMap
-
   test("no cartesian product outside the declared n-squared oracles") {
-    for (q <- SparkEntry.queries.keys.toSeq.sorted
-         if !nSquaredOracles.contains(q) && !eagerQueries.contains(q)) {
-      val p = planOf(q)
-      assert(!p.contains("CartesianProduct"), s"$q: cartesian product:\n$p")
+    import org.apache.spark.sql.execution.joins.CartesianProductExec
+    for ((q, b) <- built.toSeq.sortBy(_._1) if !nSquaredOracles.contains(q);
+         p <- b.plans) {
+      val cartesian = Executions.nodes(p).exists(_._2.isInstanceOf[CartesianProductExec])
+      assert(!cartesian, s"$q: cartesian product:\n${Executions.text(p)}")
     }
   }
 
-  // the eager pipelines, inspected through their lazy forms: candidate
-  // joins must be hash EQUI-joins on the banded keys — a cartesian or a
-  // non-degenerate nested-loop join here is the difference between a
-  // bucketed shuffle and an n² scan at 100 TB. (Whether Spark picks
-  // BroadcastHashJoin or SortMergeJoin is a size decision — broadcast at
-  // fixture scale, SMJ at corpus scale — both are fine; the KEYS are the
-  // invariant.)
-  test("eager pipelines (lazy forms): hash equi-joins on banded keys, no cartesian") {
+  // no silent passes: a query whose returned frame scans a checkpoint
+  // ran its plan at construction, so the capture must hold that run —
+  // an empty capture would leave the gates reading a bare checkpoint
+  // scan. x23_dup_clusters and x83_semantic_dedup read memoized cluster
+  // artifacts: their runs are captured only when `built` is the first
+  // to build them in this JVM (true today: no suite builds them before
+  // PlanSpec), so their capture depends on test order.
+  test("every checkpoint-backed query's construction runs are captured") {
+    import org.apache.spark.sql.execution.RDDScanExec
+    val backed = built.toSeq.sortBy(_._1).filter { case (_, b) =>
+      Executions.nodes(b.frame.queryExecution.executedPlan)
+        .exists(_._2.isInstanceOf[RDDScanExec])
+    }
+    assert(backed.size >= 25, s"only ${backed.size} checkpoint-backed queries")
+    for ((q, b) <- backed)
+      assert(b.runs.nonEmpty, s"$q: scans a checkpoint but no execution was captured")
+  }
+
+  // the checkpointing operators, read on the executions their
+  // checkpoints ran: candidate joins must be hash EQUI-joins on the
+  // banded keys — a cartesian or a non-degenerate nested-loop join here
+  // is the difference between a bucketed shuffle and an n² scan at
+  // 100 TB. (Whether Spark picks BroadcastHashJoin or SortMergeJoin is
+  // a size decision — broadcast at fixture scale, SMJ at corpus scale —
+  // both are fine; the KEYS are the invariant.)
+  test("checkpointed operators (captured runs): hash equi-joins on banded keys, no cartesian") {
+    // an operator's runs only: x33's and x101's returned frames compose
+    // verification / report sides over the checkpointed pairs
+    val operators = Seq("x02_jaccard_pairs", "x09_minhash_pairs", "x24_bm25",
+      "x27_unigram_logprob", "x33_simhash_pairs", "x38_bigram_logprob",
+      "x41_cross_dedup", "x42_boilerplate", "x43_containment",
+      "x46_dup_ngram_coverage", "x63_dup_spans", "x67_dsir_resample",
+      "x81_pmi_collocations", "x101_lsh_calibration", "x105_perplexity_tiers",
+      "x108_ccnet_e2e", "x109_embedding_outliers", "x119_web_ccnet_e2e",
+      "x133_xdoc_substr_spans").map(q => q -> textOf(built(q).ran))
+    // the scoring pipelines whose trained model is memoized: the
+    // returned frame is the scoring plan
+    val scorers = Seq("x68_dsir_score", "x71_nb_langid", "x98_quality_distill",
+      "x113_html_extract").map(q => q -> textOf(Seq(built(q).plans.last)))
+    val plans = (operators ++ scorers ++
+      Seq("x110_assembly_ccnet" -> textOf(assemblyPrefix(built("x110_assembly_ccnet")))) ++
+      composed.toSeq.map { case (k, b) => k -> textOf(b.plans) }).toMap
     // the only nested-loop joins allowed are the broadcast crossJoins of
     // the 1-row corpus-stats frames (bm25's (n, avgdl), unigram's tot)
     val bnljAllowance = Map(
-      "x24_bm25 (lazy form)" -> 1,
-      "x27_unigram_logprob (lazy form)" -> 1,
+      "x24_bm25" -> 1,
+      "x27_unigram_logprob" -> 1,
       // the two 1-row smoothing totals (target, raw) broadcast in
-      "x67_dsir_resample (lazy form)" -> 2,
+      "x67_dsir_resample" -> 2,
       // the two 1-row totals (token count N, bigram count B) broadcast in
-      "x81_pmi_collocations (lazy form)" -> 2).withDefaultValue(0)
-    for ((name, p) <- lazyPlans) {
+      "x81_pmi_collocations" -> 2).withDefaultValue(0)
+    for ((name, p) <- plans) {
+      assert(p.nonEmpty, s"$name: no plan captured")
       assert(!p.contains("CartesianProduct"), s"$name: cartesian:\n$p")
       val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(p).size
       assert(bnlj <= bnljAllowance(name),
         s"$name: $bnlj nested-loop joins (allowed ${bnljAllowance(name)}):\n$p")
     }
     def hashJoinOn(name: String, keys: String*): Unit = {
-      val p = lazyPlans(name)
+      val p = plans(name)
       val hit = p.linesIterator.exists(l =>
         (l.contains("BroadcastHashJoin") || l.contains("SortMergeJoin")) &&
           keys.forall(k => (s"""[\\[(, ]$k#\\d""").r.findFirstIn(l).isDefined))
       assert(hit, s"$name: no hash equi-join on (${keys.mkString(",")}):\n$p")
     }
-    hashJoinOn("x02_jaccard_pairs (lazy form)", "h")       // shingle hash
-    hashJoinOn("x101_lsh_calibration (lazy form)", "h")    // same exact-pair leg
-    hashJoinOn("x43_containment (lazy form)", "h")         // same index join
-    hashJoinOn("x42_boilerplate (lazy form)", "h")         // df table join
-    hashJoinOn("x46_dup_ngram_coverage (lazy form)", "doc_id", "h")
-    hashJoinOn("x63_dup_spans (lazy form)", "h")           // dup-gram mark
-    hashJoinOn("x133_xdoc_substr_spans (lazy form)", "h")  // keeper mark
-    hashJoinOn("x09_minhash_pairs (lazy form)", "band", "bucket")
-    hashJoinOn("x33_simhash_pairs (lazy form)", "band", "chunk")
-    hashJoinOn("x24_bm25 (lazy form)", "term")             // broadcast df
+    hashJoinOn("x02_jaccard_pairs", "h")       // shingle hash
+    hashJoinOn("x101_lsh_calibration", "h")    // same exact-pair leg
+    hashJoinOn("x43_containment", "h")         // same index join
+    hashJoinOn("x42_boilerplate", "h")         // df table join
+    hashJoinOn("x46_dup_ngram_coverage", "doc_id", "h")
+    hashJoinOn("x63_dup_spans", "h")           // dup-gram mark
+    hashJoinOn("x133_xdoc_substr_spans", "h")  // keeper mark
+    hashJoinOn("x09_minhash_pairs", "band", "bucket")
+    hashJoinOn("x33_simhash_pairs", "band", "chunk")
+    hashJoinOn("x24_bm25", "term")             // broadcast df
     // the cell-blocked scale paths: IVF cell is the equi key
-    hashJoinOn("x29 blocked pairs (operator raw form)", "cell")
-    hashJoinOn("x36 blocked decontam (operator raw form)", "cell")
-    hashJoinOn("x83_semantic_dedup (lazy pair prefix)", "cell")
+    hashJoinOn("x29 blocked pairs (raw operator)", "cell")
+    hashJoinOn("x36 blocked decontam (raw operator)", "cell")
+    hashJoinOn("x83 pair prefix", "cell")
     // x83's cell assignment must be the map-only rounded expression —
     // no seed join, no aggregate, no window before the pair join
     locally {
-      val p = lazyPlans("x83_semantic_dedup (lazy pair prefix)")
+      val p = plans("x83 pair prefix")
       assert(p.contains("nearest_cells"), s"x83: assignment not map-only:\n$p")
       assert(!p.contains("Window"), s"x83: window in the pair prefix:\n$p")
     }
-    hashJoinOn("x38_bigram_logprob (lazy form)", "w1", "w2")
-    hashJoinOn("x41_cross_dedup (lazy form)", "band", "bucket")
-    hashJoinOn("x67_dsir_resample (lazy form)", "bucket") // broadcast log-ratio table
+    hashJoinOn("x38_bigram_logprob", "w1", "w2")
+    hashJoinOn("x41_cross_dedup", "band", "bucket")
+    hashJoinOn("x67_dsir_resample", "bucket") // broadcast log-ratio table
     // bm25's top-k must still bound-heap, not globally sort
-    assert(lazyPlans("x24_bm25 (lazy form)").contains("TakeOrderedAndProject"))
+    assert(plans("x24_bm25").contains("TakeOrderedAndProject"))
   }
 
   // x36: the benchmark embedding set must broadcast (nested-loop against
@@ -480,7 +579,7 @@ class PlanSpec extends SparkSuite {
 
   // x64: the semantic retrieval head and the final fusion cut must both
   // bound-heap via TakeOrderedAndProject (the lexical head's internals
-  // are gated through x24's lazy form); the fusion full-outer join runs
+  // are gated on x24's captured run); the fusion full-outer join runs
   // over 2 x kRetrieve rows so any join type is fine — but never a
   // cartesian (suite-wide test covers it)
   test("hybrid RRF plans bounded-heap retrieval heads") {
@@ -539,9 +638,7 @@ class PlanSpec extends SparkSuite {
   // feature stream as a BROADCAST hash join (the corpus never shuffles
   // by bucket)
   test("DSIR resample plans the bounded heap and a broadcast ratio join") {
-    val p = graft.tools.Plans.lazyForms(spark, sf()).toMap
-      .apply("x67_dsir_resample (lazy form)")
-      .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
+    val p = textOf(built("x67_dsir_resample").ran)
     assert(p.contains("top_k_by_score"), s"bounded heap missing:\n$p")
     assert(p.contains("ObjectHashAggregate") && p.contains("partial_top_k_by_score"),
       s"no map-side partial heap:\n$p")
@@ -556,10 +653,10 @@ class PlanSpec extends SparkSuite {
   // partitioning of the slim projection with PER-PARTITION running-sum
   // windows + the driver-offset bucket_lookup — never a single-partition
   // global window (the r7 empty-partition-spec funnel) and never a join
+  // (read on the fill's two runs — the totals collect and the selection
+  // checkpoint — plus its result's plan)
   test("budget fill plans range partition + per-partition window + offset lookup") {
-    val p = graft.tools.Plans.lazyForms(spark, sf()).toMap
-      .apply("x72_budget_fill (lazy form)")
-      .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
+    val p = textOf(composed("x72 budget fill").plans)
     assert(p.toLowerCase.contains("rangepartitioning"),
       s"greedy order not range-partitioned:\n$p")
     assert(p.contains("bucket_lookup"), s"driver offset lookup missing:\n$p")
@@ -571,9 +668,7 @@ class PlanSpec extends SparkSuite {
   // agg over the slim join — map-side partials, never a window over the
   // cluster membership (the x69 survivor discipline)
   test("cluster survivor election plans a partial greatest_row hash agg, no window") {
-    val p = graft.tools.Plans.lazyForms(spark, sf()).toMap
-      .apply("x75_cluster_survivors (lazy election portion)")
-      .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
+    val p = textOf(composed("x75 election portion").plans)
     assert(p.contains("partial_greatest_row"), s"no map-side partial survivor:\n$p")
     assert(p.contains("ObjectHashAggregate"), s"not hash-aggregated:\n$p")
     assert(!p.contains("SortAggregate"), s"degraded to sort agg:\n$p")
@@ -601,23 +696,15 @@ class PlanSpec extends SparkSuite {
   // -> decontam -> mixture) must keep every stage's proven shape IN
   // COMPOSITION: the merge is the partial greatest_row hash agg, every
   // small side (drop list, contaminated list, mixture rates) joins
-  // broadcast, and nothing introduces a window or a global sort — the
-  // lazy prefix is exactly what the declared query executes before the
-  // budget fill (whose own range+window+lookup shape x72's gate holds)
+  // broadcast, and nothing introduces a window or a global sort — read
+  // on the runs the pinned gated frame and the contamination gate make
+  // plus the mixed frame's plan, which is exactly what the declared
+  // query executes before the budget fill (whose own range+window+lookup
+  // shape x72's gate holds)
   test("assembly e2e composed prefix: broadcasts for small sides, no window, no global sort") {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val docs = Tables.load(spark, sf(), "documents")
-    val union = graft.queries.Declared.assemblyUnion(docs)
-    val merged = graft.queries.Declared.assemblyMerged(union)
-    // crafted slim drop list: the gate asserts plan SHAPE, so training
-    // the real cluster artifact here would only add runtime
-    val drop = Seq(20002L).toDF("doc_id")
-    // pin = false: the plan-shape form (the declared query's pinned
-    // gated frame truncates the composed prefix to an ExistingRDD)
-    val p = graft.queries.Declared.assemblyMixed(docs, merged, drop,
-        pin = false)
-      .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
+    val mixed = composed("x78 assembly mixed")
+    assert(mixed.runs.nonEmpty, "the pinned gated frame ran no execution")
+    val p = textOf(mixed.plans)
     assert(p.contains("partial_greatest_row"), s"merge lost its partial agg:\n$p")
     assert(p.contains("ObjectHashAggregate"), s"merge not hash-aggregated:\n$p")
     assert(!p.contains("SortAggregate"), s"merge degraded to sort agg:\n$p")
@@ -641,9 +728,12 @@ class PlanSpec extends SparkSuite {
   // the merge's partial greatest_row agg, the line election's partial
   // min-over-struct (never a window over occurrence lists), the native
   // LM scorer in-plan with its lang-sized tertile broadcast, and still
-  // no window / cartesian / global sort anywhere in the prefix
+  // no window / cartesian / global sort anywhere in the prefix (read on
+  // the declared query's runs before its budget fill)
   test("ccnet assembly composed prefix keeps merge agg, line election, native scorer") {
-    val p = lazyPlans("x110_assembly_ccnet (composed lazy prefix)")
+    val prefix = assemblyPrefix(built("x110_assembly_ccnet"))
+    assert(prefix.nonEmpty, "x110: no run captured before the budget fill")
+    val p = textOf(prefix)
     assert(p.contains("partial_greatest_row"), s"merge lost its partial agg:\n$p")
     assert(p.contains("partial_min"), s"line election lost its partial agg:\n$p")
     assert(p.contains("ref_lm_score"), s"codegen'd LM scorer not in-plan:\n$p")
@@ -737,11 +827,7 @@ class PlanSpec extends SparkSuite {
   // partial-agg'd counts with broadcast totals — no global sort, no
   // window over the bigram table
   test("PMI collocations plan: partial counts, broadcast totals, bounded top-k") {
-    import org.apache.spark.sql.functions.col
-    val p = graft.ext.TextStats.pmiCollocations(
-        Tables.load(spark, sf(), "documents"), "text",
-        minCount = 3L, k = 30, materialize = false)
-      .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
+    val p = textOf(built("x81_pmi_collocations").ran)
     assert(p.contains("TakeOrderedAndProject"), s"top-k not bounded:\n$p")
     assert(!p.contains("Window"), s"window in the PMI plan:\n$p")
     assert(!p.toLowerCase.contains("rangepartitioning"),
@@ -802,13 +888,14 @@ class PlanSpec extends SparkSuite {
     import org.apache.spark.sql.execution.window.WindowExec
     // x64's two rank windows run over the <= kRetrieve-row retrieval
     // heads (TakeOrderedAndProject output) — dimension-sized by
-    // construction, not a fact-table funnel; anything else stays 0
+    // construction, not a fact-table funnel; anything else stays 0.
+    // They are the only such windows in the suite's runs, and so the
+    // source of Verify's `WindowExec: No Partition Defined` warnings
+    // (one burst while x64 is written)
     val allowance = Map("x64_hybrid_rrf" -> 2).withDefaultValue(0)
-    for (q <- SparkEntry.queries.keys.toSeq.sorted
-         if !eagerQueries.contains(q)) {
-      val df = SparkEntry.queries(q)(spark, sf())
-      val bad = df.queryExecution.sparkPlan.collect {
-        case w: WindowExec if w.partitionSpec.isEmpty => w
+    for ((q, b) <- built.toSeq.sortBy(_._1)) {
+      val bad = b.plans.flatMap(Executions.nodes).collect {
+        case (_, w: WindowExec) if w.partitionSpec.isEmpty => w
       }
       assert(bad.size <= allowance(q),
         s"$q: ${bad.size} empty-partition-spec windows (allowed ${allowance(q)}; all rows funnel to one partition)")
@@ -1048,11 +1135,11 @@ class PlanSpec extends SparkSuite {
 
   // x105: scoring is the codegen'd bucket_lookup fold — no join on the
   // corpus side; the per-lang tertile frame is lang-sized and must reach
-  // the tier assignment as a broadcast, never by shuffling the corpus.
-  // (Declared form materializes the slim scored frame — gated on the
-  // lazy twin, whose plan is identical minus the InMemory scan.)
+  // the tier assignment as a broadcast, never by shuffling the corpus
+  // (read on the declared query's runs: the scored frame persists, so
+  // its checkpoint's plan carries the scorer through the cached scan)
   test("perplexity tiers broadcast the tertile frame; scoring is the in-plan fold") {
-    val p = lazyPlans("x105_perplexity_tiers (lazy form)")
+    val p = textOf(built("x105_perplexity_tiers").ran)
     assert(p.contains("ref_lm_score"), s"codegen'd LM scorer not in-plan:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"tertile join must broadcast:\n$p")
     assert(!p.contains("SortMergeJoin"),
@@ -1090,7 +1177,7 @@ class PlanSpec extends SparkSuite {
   // and nothing multiplying rows (the doc-keyed rewrite/meta joins are
   // corpus-sized hash joins, allowed)
   test("ccnet e2e keeps the native scorer + broadcast tertiles, no cartesian") {
-    val p = lazyPlans("x108_ccnet_e2e (lazy form)")
+    val p = textOf(built("x108_ccnet_e2e").ran)
     assert(p.contains("ref_lm_score"), s"codegen'd LM scorer not in-plan:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"tertile join must broadcast:\n$p")
     assert(!p.contains("CartesianProduct"), s"cartesian in ccnet e2e:\n$p")
@@ -1102,7 +1189,7 @@ class PlanSpec extends SparkSuite {
   // lang-sized tertile frame broadcast, and no NEW exchange for the
   // extraction stage (it is pure per-row expression work)
   test("web ccnet e2e: extraction fused map-side, scorer in-plan, tertiles broadcast") {
-    val p = lazyPlans("x119_web_ccnet_e2e (lazy form)")
+    val p = textOf(built("x119_web_ccnet_e2e").ran)
     assert(p.contains("ref_lm_score"), s"codegen'd LM scorer not in-plan:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"tertile join must broadcast:\n$p")
     assert(!p.contains("CartesianProduct"), s"cartesian in web ccnet:\n$p")
@@ -1112,7 +1199,7 @@ class PlanSpec extends SparkSuite {
   // x109: centroid and threshold frames are group-sized — both reach
   // the corpus-side scans as broadcasts; scoring is the native cosine
   test("embedding outlier gate broadcasts centroids + cutoffs; native cosine in-plan") {
-    val p = lazyPlans("x109_embedding_outliers (lazy form)")
+    val p = textOf(built("x109_embedding_outliers").ran)
     assert(p.contains("cosine_sim"), s"native cosine not in-plan:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"group-sized joins must broadcast:\n$p")
     assert(!p.contains("SortMergeJoin"),
@@ -1122,16 +1209,16 @@ class PlanSpec extends SparkSuite {
 
   // x68/x71: on a pre-spread corpus the scoring fold is MAP-ONLY — the
   // only exchange allowed is the presentation sort's range partition of
-  // the slim scored projection (text already dropped); a round-robin or
-  // hash exchange here would shuffle corpus text a 100 TB reader never
-  // needs to move (the declared forms add the spread ONLY behind the
-  // spreadIfStarved scan probe, so these lazy twins ARE the scale plans)
-  test("dsir + nb scoring lazy forms are map-only up to the presentation sort") {
-    for (q <- Seq("x68_dsir_score (lazy form)", "x71_nb_langid (lazy form)")) {
-      val p = lazyPlans(q)
-      val exchanges = "Exchange ".r.findAllIn(p).size
+  // the slim scored projection (text already dropped); a hash exchange
+  // here would shuffle corpus text a 100 TB reader never needs to move.
+  // The declared forms add one round-robin spread, and only behind the
+  // spreadIfStarved scan probe (a no-op on a sharded corpus), so the
+  // gate reads the returned scoring frame beyond that spread
+  test("dsir + nb scoring frames are map-only up to the presentation sort") {
+    for (q <- Seq("x68_dsir_score", "x71_nb_langid")) {
+      val p = textOf(Seq(built(q).plans.last))
       val rangeExchanges = "Exchange rangepartitioning".r.findAllIn(p).size
-      assert(exchanges == rangeExchanges,
+      assert(exchangesBeyondSpread(p) == rangeExchanges,
         s"$q: non-range exchange in a map-only scoring plan:\n$p")
       assert(!p.contains("Join"), s"$q: join in a map-only scoring plan:\n$p")
     }
@@ -1139,11 +1226,11 @@ class PlanSpec extends SparkSuite {
 
   // x113: extraction is per-document expression work — on a pre-spread
   // corpus the only exchange is the presentation sort's range partition
-  test("html extraction lazy form is map-only up to the presentation sort") {
-    val p = lazyPlans("x113_html_extract (lazy form)")
-    val exchanges = "Exchange ".r.findAllIn(p).size
+  // (the declared form's guarded spread aside, as for x68/x71)
+  test("html extraction is map-only up to the presentation sort") {
+    val p = textOf(Seq(built("x113_html_extract").plans.last))
     val rangeExchanges = "Exchange rangepartitioning".r.findAllIn(p).size
-    assert(exchanges == rangeExchanges,
+    assert(exchangesBeyondSpread(p) == rangeExchanges,
       s"non-range exchange in the extraction plan:\n$p")
     assert(!p.contains("Join"), s"join in the extraction plan:\n$p")
   }
@@ -1191,11 +1278,11 @@ class PlanSpec extends SparkSuite {
   // x98: the distilled student's report aggregates AFTER the map-only
   // scoring fold — exactly one hash exchange (the partial-agg'd slim
   // (teacher, student) rows) plus the presentation sort; corpus text is
-  // never round-robin'd or hash-shuffled
-  test("distill lazy form exchanges only slim agg rows, never corpus text") {
-    val p = lazyPlans("x98_quality_distill (lazy form)")
-    assert(!p.toLowerCase.contains("roundrobin"),
-      s"corpus text round-robin'd:\n$p")
+  // never hash-shuffled, and round-robin'd only by the declared form's
+  // one guarded spread (as for x68/x71)
+  test("distill scoring frame exchanges only slim agg rows, never corpus text") {
+    val p = textOf(Seq(built("x98_quality_distill").plans.last))
+    exchangesBeyondSpread(p) // at most one round-robin spread
     val hashEx = "Exchange hashpartitioning".r.findAllIn(p).size
     assert(hashEx == 1, s"$hashEx hash exchanges (one slim agg expected):\n$p")
     assert(!p.contains("Join"), s"join in the distill scoring plan:\n$p")
