@@ -23,7 +23,8 @@ class PlanSpec extends SparkSuite {
     */
   private final case class Built(runs: Seq[Executions.Execution], frame: DataFrame) {
     def ran: Seq[SparkPlan] = runs.map(_.plan)
-    def plans: Seq[SparkPlan] = ran :+ frame.queryExecution.executedPlan
+    def framePlan: SparkPlan = frame.queryExecution.executedPlan
+    def plans: Seq[SparkPlan] = ran :+ framePlan
   }
 
   private def build(df: => DataFrame): Built = {
@@ -261,8 +262,7 @@ class PlanSpec extends SparkSuite {
   test("every checkpoint-backed query's construction runs are captured") {
     import org.apache.spark.sql.execution.RDDScanExec
     val backed = built.toSeq.sortBy(_._1).filter { case (_, b) =>
-      Executions.nodes(b.frame.queryExecution.executedPlan)
-        .exists(_._2.isInstanceOf[RDDScanExec])
+      Executions.nodes(b.framePlan).exists(_._2.isInstanceOf[RDDScanExec])
     }
     assert(backed.size >= 25, s"only ${backed.size} checkpoint-backed queries")
     for ((q, b) <- backed)
@@ -289,7 +289,7 @@ class PlanSpec extends SparkSuite {
     // the scoring pipelines whose trained model is memoized: the
     // returned frame is the scoring plan
     val scorers = Seq("x68_dsir_score", "x71_nb_langid", "x98_quality_distill",
-      "x113_html_extract").map(q => q -> textOf(Seq(built(q).plans.last)))
+      "x113_html_extract").map(q => q -> textOf(Seq(built(q).framePlan)))
     val plans = (operators ++ scorers ++
       Seq("x110_assembly_ccnet" -> textOf(assemblyPrefix(built("x110_assembly_ccnet")))) ++
       composed.toSeq.map { case (k, b) => k -> textOf(b.plans) }).toMap
@@ -1216,7 +1216,7 @@ class PlanSpec extends SparkSuite {
   // gate reads the returned scoring frame beyond that spread
   test("dsir + nb scoring frames are map-only up to the presentation sort") {
     for (q <- Seq("x68_dsir_score", "x71_nb_langid")) {
-      val p = textOf(Seq(built(q).plans.last))
+      val p = textOf(Seq(built(q).framePlan))
       val rangeExchanges = "Exchange rangepartitioning".r.findAllIn(p).size
       assert(exchangesBeyondSpread(p) == rangeExchanges,
         s"$q: non-range exchange in a map-only scoring plan:\n$p")
@@ -1228,7 +1228,7 @@ class PlanSpec extends SparkSuite {
   // corpus the only exchange is the presentation sort's range partition
   // (the declared form's guarded spread aside, as for x68/x71)
   test("html extraction is map-only up to the presentation sort") {
-    val p = textOf(Seq(built("x113_html_extract").plans.last))
+    val p = textOf(Seq(built("x113_html_extract").framePlan))
     val rangeExchanges = "Exchange rangepartitioning".r.findAllIn(p).size
     assert(exchangesBeyondSpread(p) == rangeExchanges,
       s"non-range exchange in the extraction plan:\n$p")
@@ -1281,7 +1281,7 @@ class PlanSpec extends SparkSuite {
   // never hash-shuffled, and round-robin'd only by the declared form's
   // one guarded spread (as for x68/x71)
   test("distill scoring frame exchanges only slim agg rows, never corpus text") {
-    val p = textOf(Seq(built("x98_quality_distill").plans.last))
+    val p = textOf(Seq(built("x98_quality_distill").framePlan))
     exchangesBeyondSpread(p) // at most one round-robin spread
     val hashEx = "Exchange hashpartitioning".r.findAllIn(p).size
     assert(hashEx == 1, s"$hashEx hash exchanges (one slim agg expected):\n$p")
