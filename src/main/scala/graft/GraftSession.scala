@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session profile of the production entry points (Bench,
-  * Verify, Smoke, ProbeJobs, Plans), so what Verify checks, what Plans
-  * writes and what Bench times run under the same settings.
+  * Verify, Smoke, ProbeJobs, Plans, ScaleCheck, BoundProbe), so what
+  * Verify checks, what Plans writes, what ScaleCheck scales and what
+  * Bench times run under the same settings.
   */
 object GraftSession {
 

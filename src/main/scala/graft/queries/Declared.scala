@@ -831,7 +831,7 @@ object Declared {
     * makes the view non-vacuous — 110 cross-doc duplicate lines at
     * sf0.001).
     */
-  private def tokenLines12: Column = {
+  private[graft] def tokenLines12: Column = {
     val toks = Dedup.tokens(coalesce(col("text"), lit("")))
     when(size(toks) > 0,
       transform(sequence(lit(0),

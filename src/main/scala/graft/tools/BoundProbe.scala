@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.Tables
 import graft.ext.{Dedup, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Provenance probe for the property-oracle bounds (round 7): measures,
@@ -13,16 +12,12 @@ import org.apache.spark.sql.functions._
   * ADVICE warns about). Output is cited in BASELINE.md ("Property-oracle
   * provenance").
   *
-  * Usage: sbt "runMain graft.tools.BoundProbe"
+  * Usage: sbt "runMain graft.tools.BoundProbe" — on the `GraftSession`
+  * profile with `SPARK_GRAFT_CPUS` cores (default 32).
   */
 object BoundProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.profile(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {

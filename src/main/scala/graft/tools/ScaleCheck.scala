@@ -1,5 +1,9 @@
 package graft.tools
 
+import graft.ext.{Artifacts, Curation, Dedup, Extract, Multimodal, Refresh, Search, Similarity,
+  Sketches, TextStats, TrainSet, Urls}
+import graft.operators.{AsofJoin, Compaction, RangeJoin, Rolling, SessionWindows}
+import graft.queries.Declared
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
@@ -22,283 +26,468 @@ import java.nio.file.{Files, Paths}
   * the operator's own growth. The exponent (log16(t16/t1)) is ASSERTED
   * sub-quadratic for x09 (MinHash LSH) and the cell-blocked x16 twin.
   *
-  * Run: sbt "runMain graft.tools.ScaleCheck [sfDir]"
+  * The cases are built from four shared parts: [[replicas]] (with the
+  * [[retag]], [[permute]] and [[signFlip]] bijections), [[timedWitness]],
+  * [[refreshAtScale]] and [[Report]].
+  *
+  * Run: sbt "runMain graft.tools.ScaleCheck [sfDir]" — on the
+  * `GraftSession` profile with `SPARK_GRAFT_CPUS` cores (default 32).
+  * `SPARK_GRAFT_SCALE_ONLY=<substring>` runs only the matching cases and
+  * sections and leaves SCALE.md alone; stdout carries every row either way.
   */
 object ScaleCheck {
+
+  /** Replica i's ids start at i × Stride; replica-0 ids are below it. */
+  private[graft] val Stride = 100000000L
+
+  /** `n` replicas of `df`, unioned, with `idCol` offset by i × [[Stride]]
+    * in replica i: replica 0 is `zero` of its rows, replica i ≥ 1 is
+    * `rest(i)` of them.
+    */
+  private[graft] def replicas(df: DataFrame, idCol: String, n: Int,
+      zero: DataFrame => DataFrame = identity,
+      rest: Int => DataFrame => DataFrame = _ => identity): DataFrame =
+    (0 until n).map { i =>
+      val base = df.withColumn(idCol, col(idCol) + lit(i * Stride))
+      if (i == 0) zero(base) else rest(i)(base)
+    }.reduce(_ union _)
+
+  /** Retags every token of replica i ("word" -> "x3zword"): within-replica
+    * shingle sets (and so jaccard/minhash structure) are preserved
+    * exactly; across replicas the shingle spaces are disjoint. The prefix
+    * is SELF-DELIMITING: a bare "x$i" prefix is ambiguous when tokens
+    * start with digits (replica 1 on "5foo" -> "x15foo" == replica 15 on
+    * "foo"), which would leak cross-replica shingle collisions into the
+    * witness counts at n >= 10.
+    */
+  private[graft] def retag(i: Int)(df: DataFrame): DataFrame =
+    df.withColumn("text", regexp_replace(col("text"), "([a-zA-Z0-9]+)", s"x${i}z$$1"))
+
+  /** PERMUTES each document's lower-cased tokens by a per-(replica,
+    * position, token) md5 key tagged `#<tag><i>#`: the token MULTISET is
+    * unchanged (langId stopword counts, stopword / repetition ratios,
+    * token count all invariant), so replicas flow through the gates like
+    * real corpus growth, while the 3-shingle sets and the lines scramble,
+    * so cross-replica identity clusters don't explode quadratically.
+    */
+  private[graft] def permute(tag: String)(i: Int)(df: DataFrame): DataFrame =
+    df.withColumn("text", concat_ws(" ",
+      transform(array_sort(transform(
+        filter(split(lower(col("text")), "[^a-z0-9]+"), t => t =!= ""),
+        (tok, pos) => struct(
+          md5(concat(tok, lit(s"#$tag$i#"), pos.cast("string"))).as("k"),
+          tok.as("t")))),
+        s => s.getField("t"))))
+
+  /** Replica i's diagonal +-1 sign pattern D_i (orthogonal): cos(D_i a,
+    * D_i b) = cos(a, b), so within-replica pairs keep their sims
+    * bit-for-bit; cross-replica sims are sign-scrambled to ~0. Each
+    * replica also carries DESIGNED strong twins (every 10th vector, twin
+    * id = id + 50000000, sim ~ 1): the fixture's own pairs are all weak
+    * (sim 0.45-0.55), whose blocking recall legitimately decays as the
+    * probe fraction nprobe/nlist shrinks — the scale-invariant recall
+    * claim, and so the linearity assert, is about STRONG pairs.
+    */
+  private[graft] def signFlip(i: Int)(df: DataFrame): DataFrame = {
+    val base = df.withColumn("embedding",
+      transform(col("embedding").cast("array<double>"),
+        (x, pos) => when(pmod(xxhash64(pos + lit(i.toLong * 97L)), lit(2L)) === 0, x)
+          .otherwise(-x)))
+    val twins = base.filter(col("vec_id") % 10 === 0)
+      .withColumn("vec_id", col("vec_id") + lit(50000000L))
+      .withColumn("embedding", transform(col("embedding"), x => x * lit(1.0) + lit(1e-4)))
+    base.union(twins)
+  }
+
+  /** A refresh witness's corpus version at scale `n`: replica 0 takes the
+    * declared `version` rule (the whole v1→v2 delta lives there),
+    * replicas ≥ 1 the token permutation tagged `tag`.
+    */
+  private[graft] def refreshReplicas(docs: DataFrame, n: Int,
+      version: DataFrame => DataFrame, tag: String = ""): DataFrame =
+    replicas(docs, "doc_id", n, version, permute(tag))
+
+  private def clocked[T](f: => T): (T, Double) = {
+    val t0 = System.nanoTime()
+    val out = f
+    (out, (System.nanoTime() - t0) / 1e9)
+  }
+  private def time(f: => Unit): Double = clocked(f)._2
+  private def s2(d: Double): String = f"$d%.2f"
+
+  // per-scale temp stores (merged corpora, persisted refresh states)
+  // are deleted as soon as their timed comparison has collected — at
+  // 16x they are a sizable parquet footprint, and a ScaleCheck run
+  // must not leak it into /tmp (r15 advice)
+  private def rmTree(p: String): Unit = {
+    val root = Paths.get(p)
+    if (Files.exists(root))
+      Files.walk(root).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(f => Files.deleteIfExists(f))
+  }
+
+  /** The growth exponent log16(t16/t1) of 1x..16x walls: 1.0 = linear,
+    * 2.0 = quadratic.
+    */
+  private def growth(secs: Seq[Double]): Double = math.log(secs.last / secs.head) / math.log(16.0)
+
+  /** `run`'s wall and output at each scale. */
+  private[graft] final case class Timed[T](secs: Seq[Double], outs: Seq[T]) {
+    def exp: Double = growth(secs)
+  }
+
+  /** Times `run` at each scale, after a 1x warm-up (codegen + JIT) unless
+    * `warmUp` is off; `check(n, out, out1x)` then sees each scale's output
+    * beside the 1x output, and the exponent is asserted below `maxExp`.
+    */
+  private[graft] def timedWitness[T](name: String, scales: Seq[Int] = Seq(1, 4, 16),
+      maxExp: Option[Double] = None, warmUp: Boolean = true)(run: Int => T)(
+      check: (Int, T, T) => Unit = (_: Int, _: T, _: T) => ()): Timed[T] = {
+    if (warmUp) run(scales.head)
+    val (outs, secs) = scales.map(n => clocked(run(n))).unzip
+    scales.zip(outs).foreach { case (n, o) => check(n, o, outs.head) }
+    val t = Timed(secs, outs)
+    maxExp.foreach(b => assert(t.exp < b, f"$name: growth exponent ${t.exp}%.2f not sub-quadratic"))
+    t
+  }
+
+  /** One refresh witness at one scale, built by [[refreshAtScale]]'s
+    * `stand` over its stores: the two timed legs, how their results
+    * differ (None when equal), and the row witnesses counted after the
+    * clock stops.
+    */
+  private[graft] final case class Legs[A, B, W](refresh: () => A, rebuild: () => B,
+      differ: (A, B) => Option[String], witness: (A, B) => W)
+
+  private[graft] def legs[A, B, W](refresh: => A, rebuild: => B)(
+      differ: (A, B) => Option[String])(witness: (A, B) => W): Legs[A, B, W] =
+    Legs(() => refresh, () => rebuild, differ, witness)
+
+  /** Legs whose results are collected row sets, compared as sets. */
+  private[graft] def rowLegs[W](refresh: => DataFrame, rebuild: => DataFrame)(
+      witness: => W): Legs[Set[Seq[Any]], Set[Seq[Any]], W] =
+    legs(rowSet(refresh), rowSet(rebuild))(sameRows)((_, _) => witness)
+
+  private def rowSet(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+  private def sameRows(inc: Set[Seq[Any]], full: Set[Seq[Any]]): Option[String] =
+    if (inc == full) None else Some(s"\n inc: $inc\n reb: $full")
+
+  private[graft] final case class RefreshRun[W](refresh: Double, rebuild: Double, witness: W)
+
+  /** A version stored as a deployment keeps it: written once, read back. */
+  private[graft] def parquetStore(df: DataFrame, path: String): DataFrame = {
+    Artifacts.saveIndex(df, path)
+    Artifacts.loadIndex(df.sparkSession, path)
+  }
+
+  /** A refresh against its from-scratch rebuild at scale `n`, in the
+    * deployment shape: `v1` and `v2` are stored under a temp directory,
+    * then `stand(dir, v1, v2)` builds, untimed, what a deployment keeps
+    * between runs (the persisted standing state, a frozen LM, …) and
+    * returns the legs. The refresh and the rebuild are timed, asserted
+    * equal, and the witnesses counted; the store is removed even when a
+    * leg or an assert throws.
+    */
+  private[graft] def refreshAtScale[A, B, W](tag: String, n: Int, v1: DataFrame, v2: DataFrame,
+      store: (DataFrame, String) => DataFrame = parquetStore)(
+      stand: (String, DataFrame, DataFrame) => Legs[A, B, W]): RefreshRun[W] = {
+    val dir = Files.createTempDirectory(s"$tag-scale-$n").toString
+    try {
+      val legs = stand(dir, store(v1, s"$dir/v1"), store(v2, s"$dir/v2"))
+      val (inc, tRef) = clocked(legs.refresh())
+      val (full, tReb) = clocked(legs.rebuild())
+      val differs = legs.differ(inc, full)
+      assert(differs.isEmpty, s"$tag scale: refresh != rebuild at ${n}x${differs.getOrElse("")}")
+      RefreshRun(tRef, tReb, legs.witness(inc, full))
+    } finally rmTree(dir)
+  }
+
+  /** SCALE.md as it is built. Every row, and every line carrying
+    * measured data, is printed as it is appended, so a filtered run's
+    * stdout carries the rows a full run writes.
+    */
+  private[graft] final class Report {
+    private val sb = new StringBuilder
+    def text(s: String): Unit = sb.append(s)
+    def table(header: String*): Unit = {
+      sb.append(header.mkString("| ", " | ", " |\n"))
+      sb.append(header.map(_ => "---").mkString("|", "|", "|\n"))
+    }
+    def row(cells: String*): Unit = line(cells.mkString("| ", " | ", " |"))
+    def line(s: String): Unit = { sb.append(s + "\n"); println(s"SCALE $s") }
+    override def toString: String = sb.toString
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.profile(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
+    val check = new Check(spark, sfDir, sys.env.get("SPARK_GRAFT_SCALE_ONLY"))
+    check.all()
+    if (check.only.isEmpty) {
+      Files.write(Paths.get("SCALE.md"),
+        check.report.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      println("wrote SCALE.md")
+    } else println("filtered run: SCALE.md not written")
+    spark.stop()
+  }
 
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
+  private final class Check(spark: SparkSession, sfDir: String, val only: Option[String]) {
+    val report = new Report
+    private val scales = Seq(1, 4, 16)
+
+    // builder-iteration filter (the bench's SPARK_GRAFT_BENCH_ONLY
+    // precedent): runs only the matching cases and sections — for
+    // adjudicating ONE ordering violation on a quiet box without the
+    // full run
+    private def selected(marker: String): Boolean = only.forall(marker.contains(_))
+    private def section(marker: String)(body: => Unit): Unit = if (selected(marker)) body
+
+    private val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "lang", "source", "text", "n_chars")
-    val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val nDocs0 = docs0.select("doc_id").distinct().count()
+    private val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    private val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    private def events = graft.Tables.load(spark, sfDir, "events")
+    private def docsN(n: Int) = replicas(docs0, "doc_id", n)
+    private def embN(n: Int) = replicas(emb0, "vec_id", n)
+    private def eventsN(n: Int) = replicas(events, "user_id", n)
 
-    def replicate(df: DataFrame, idCol: String, n: Int): DataFrame =
-      (0 until n).map(i => df.withColumn(idCol,
-        col(idCol) + lit(i.toLong * 100000000L))).reduce(_ union _)
-
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-
-    // per-scale temp stores (merged corpora, persisted refresh states)
-    // are deleted as soon as their timed comparison has collected — at
-    // 16x they are a sizable parquet footprint, and a ScaleCheck run
-    // must not leak it into /tmp (r15 advice)
-    def rmTree(p: String): Unit = {
-      val root = java.nio.file.Paths.get(p)
-      if (java.nio.file.Files.exists(root))
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    }
-
-    // x68's fixed train-once artifact (built on the 1x corpus, strictly
-    // BEFORE any timed region so the 1x datum isn't flattered by
-    // carrying the train cost — the deployment shape)
-    val dsirRatio1x: (Map[Long, Double], Double) =
-      graft.ext.TrainSet.dsirRatioMap(
-        docs0, docs0.filter(col("lang") === "en"), "text", "doc_id", 1024)
-
+    // The 1x anchors are lazy: each is first forced by its case's 1x
+    // warm-up, outside any timed region (a train-once artifact carried
+    // inside the timed 1x run would flatten the scaling read), and a
+    // filtered run builds only the ones it needs.
+    private lazy val nDocs0 = docs0.select("doc_id").distinct().count()
+    // x68's fixed train-once artifact (the deployment shape)
+    private lazy val dsirRatio1x: (Map[Long, Double], Double) = TrainSet.dsirRatioMap(
+      docs0, docs0.filter(col("lang") === "en"), "text", "doc_id", 1024)
     // x69's merge witness anchor: replicas keep text identical, so the
     // survivor count at every scale must equal the 1x distinct contents
-    val distinctTexts0: Long = docs0.select(col("text")).distinct().count()
-
-    // x71's fixed train-once model (1x corpus, outside any timed region)
-    val nbModel1x: graft.ext.TextStats.NbModel =
-      graft.ext.TextStats.nbTrain(docs0, "text", "lang", "doc_id", 1024)
-
-    // x73's fixed train-once vocab; x74's 1x chunk anchors (replicas
-    // carry identical text, so the chunk-hash SET must not grow)
-    val vocab1x: Seq[String] =
-      graft.ext.TextStats.topVocab(docs0, "text", 16).toSeq
+    private lazy val distinctTexts0: Long = docs0.select(col("text")).distinct().count()
+    // x71's fixed train-once model
+    private lazy val nbModel1x = TextStats.nbTrain(docs0, "text", "lang", "doc_id", 1024)
+    // x73's fixed train-once vocab
+    private lazy val vocab1x: Seq[String] = TextStats.topVocab(docs0, "text", 16).toSeq
     // x77's 1x anchor: per-source (n_docs, n_grams, KL) of the
     // unreplicated corpus
-    val drift1x: Map[String, (Long, Long, Double)] =
-      graft.ext.TextStats.sourceDrift(docs0, "text", "source", 256)
-        .collect().map(r => r.getString(0) ->
-          (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
-    val (cdcRows1x, cdcHashes1x) = {
-      val c = graft.ext.Curation.cdcChunks(docs0, "text", "doc_id")
+    private lazy val drift1x = sourceDrift(docs0)
+    private def sourceDrift(docs: DataFrame): Map[String, (Long, Long, Double)] =
+      TextStats.sourceDrift(docs, "text", "source", 256).collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
+    // x74's 1x chunk anchors (replicas carry identical text, so the
+    // chunk-hash SET must not grow)
+    private lazy val (cdcRows1x, cdcHashes1x) = {
+      val c = Curation.cdcChunks(docs0, "text", "doc_id")
         .agg(count(lit(1)), countDistinct(col("chunk_hash"))).head
       (c.getLong(0), c.getLong(1))
     }
-
-    // x98's fixed train-once student (1x teacher labels, OUTSIDE any
-    // timed region — the x68/x71 convention: carrying the constant train
-    // cost inside the case would flatten the scaling read)
-    val student1x: graft.ext.TextStats.NbModel =
-      graft.ext.TextStats.nbTrain(
-        docs0.withColumn("teacher",
-          graft.ext.Curation.teacherLabel(col("text"))),
-        "text", "teacher", "doc_id", 1024)
-
+    // x98's fixed train-once student (1x teacher labels)
+    private lazy val student1x = TextStats.nbTrain(
+      docs0.withColumn("teacher", Curation.teacherLabel(col("text"))),
+      "text", "teacher", "doc_id", 1024)
     // x102's 1x anchor: the normalized-group domain of the corpus
     // unioned with its variant twins — replication must never grow it
-    val normGroups1x: Long = graft.ext.Dedup.normalizedDedup(
-      docs0.select(col("doc_id"), col("text")).unionByName(
-        docs0.select((col("doc_id") + 50000000L).as("doc_id"),
-          concat(upper(coalesce(col("text"), lit(""))), lit("  !!  ")).as("text"))),
-      "text", "doc_id").count()
-
+    private def withVariantTwins(docs: DataFrame): DataFrame =
+      docs.select(col("doc_id"), col("text")).unionByName(
+        docs.select((col("doc_id") + 50000000L).as("doc_id"),
+          concat(upper(coalesce(col("text"), lit(""))), lit("  !!  ")).as("text")))
+    private lazy val normGroups1x: Long =
+      Dedup.normalizedDedup(withVariantTwins(docs0), "text", "doc_id").count()
     // x99's 1x anchor: (group count, kept fraction) of the unreplicated
     // corpus — the frozen-distribution invariant the scaled runs re-hit
-    val quantileGate1x: (Long, Double) = {
-      val r = graft.ext.Curation.quantileGate(docs0, "lang", "doc_id",
-          graft.ext.TextStats.qualityScore(col("text")),
-          graft.ext.TextStats.tokenCount(col("text")), frac = 0.10)
+    private def quantileGate(docs: DataFrame): DataFrame =
+      Curation.quantileGate(docs, "lang", "doc_id", TextStats.qualityScore(col("text")),
+        TextStats.tokenCount(col("text")), frac = 0.10)
+    private lazy val quantileGate1x: (Long, Double) = {
+      val r = quantileGate(docs0)
         .agg(count(lit(1)), sum(col("n_kept")), sum(col("n_docs"))).head
       (r.getLong(0), r.getLong(1).toDouble / r.getLong(2))
     }
-
-    // x105's fixed train-once reference LM (1x reference slice, outside
-    // any timed region — the deployment shape: retrain per corpus
-    // refresh, score every ingest batch through the frozen kilobytes)
-    val refLm1x: graft.ext.TextStats.RefLm =
-      graft.ext.TextStats.refLmTrain(docs0, "text", "lang",
-        col("source").isin("src0", "src1"), numBuckets = 1024)
-    val scoreable1x: Long = docs0
+    // x105's fixed train-once reference LM (the deployment shape:
+    // retrain per corpus refresh, score every ingest batch through the
+    // frozen kilobytes)
+    private lazy val refLm1x = TextStats.refLmTrain(docs0, "text", "lang",
+      col("source").isin("src0", "src1"), numBuckets = 1024)
+    private def nTokens = size(Dedup.tokens(coalesce(col("text"), lit(""))))
+    private lazy val scoreable1x: Long = docs0
       .filter(col("doc_id").isNotNull && col("lang").isNotNull)
-      .filter(size(graft.ext.Dedup.tokens(coalesce(col("text"), lit("")))) >= 2)
-      .count()
+      .filter(nTokens >= 2).count()
     // x106's 1x token supply (the budget tracks the corpus so repeats
     // stay scale-invariant — the realistic recipe re-run mode)
-    val tokens1x: Long = docs0.filter(col("lang").isNotNull)
-      .agg(sum(size(graft.ext.Dedup.tokens(coalesce(col("text"), lit("")))))
-        .cast("long")).head.getLong(0)
-
+    private lazy val tokens1x: Long = docs0.filter(col("lang").isNotNull)
+      .agg(sum(nTokens).cast("long")).head.getLong(0)
     // x117's 1x anchor: the trained unigram table (the n-fold witness
     // scales minCount with n so the candidate floor tracks the corpus)
-    val unigram1x: Array[(String, Long)] =
-      graft.ext.TextStats.unigramTrain(docs0, "text",
-        maxPieceLen = 4, minCount = 2, rounds = 3)
-
+    private lazy val unigram1x =
+      TextStats.unigramTrain(docs0, "text", maxPieceLen = 4, minCount = 2, rounds = 3)
     // x125's 1x anchor: the trained WordPiece merge table — replication
     // multiplies pair AND symbol counts by n, so every likelihood-gain
     // score ln c − ln cl − ln cr shifts UNIFORMLY by −ln n and the
     // argmax sequence must be preserved exactly (minCount scales with
     // n like x117's candidate floor)
-    val wp1x: Array[(String, String, Long, Double)] =
-      graft.ext.TextStats.wordPieceTrain(docs0, "text", numMerges = 12)
+    private lazy val wp1x = TextStats.wordPieceTrain(docs0, "text", numMerges = 12)
 
-    val scales = Seq(1, 4, 16)
+    // replicas keep every doc's content: its 1x original is id % Stride
+    private def perOriginal(docs: DataFrame, label: Column): Long =
+      docs.select((col("doc_id") % Stride).as("orig"), label.as("pl"))
+        .groupBy("orig").agg(countDistinct(col("pl")).as("nd"))
+        .agg(max(col("nd"))).head.getLong(0)
+
+    def all(): Unit = {
+      report.text("# SCALE — linear-scaling evidence (auto-generated)\n\n" +
+        s"Generated by `graft.tools.ScaleCheck` against `$sfDir` replicated\n" +
+        "1x / 4x / 16x with per-replica id remapping (key cardinality\n" +
+        "scales with the data). `t16/t1` near 16 = linear; well under 16 =\n" +
+        "fixed overhead still dominating at this size.\n\n")
+      operatorTable()
+      pairTable()
+      compositions()
+      refreshes()
+      skew()
+      reportOperators()
+      generator()
+    }
+
+    private def operatorTable(): Unit = {
+      report.table("case", "1x (s)", "4x (s)", "16x (s)", "t16/t1")
+      for ((name, run) <- operatorCases if selected(name)) {
+        val t = timedWitness(name)(run)()
+        report.row(name +: t.secs.map(s2) :+ f"${t.secs(2) / t.secs(0)}%.1f": _*)
+      }
+      // blocked-decontam recall is scale-INVARIANT by construction (cell
+      // assignment depends only on the fixed benchmark, so a replicated
+      // vector probes exactly the cells its original does) — verified
+      // here rather than assumed, at 1x and 16x, OUTSIDE the timed bodies
+      report.text("\n## Cell-blocked decontam recall vs exact (scale-invariance check)\n\n")
+      report.table("scale", "exact flagged", "blocked flagged", "recall")
+      section("x36 cell-blocked decontam recall") {
+        for (n <- Seq(1, 16)) {
+          val corpus = embN(n).filter(col("vec_id") % 37 =!= 0)
+          val bench = emb0.filter(col("vec_id") % 37 === 0)
+          val nExact = Curation.semanticDecontam(
+            corpus, bench, threshold = 0.35).count()
+          val nBlocked = Curation.semanticDecontamBlocked(
+            corpus, bench, threshold = 0.35, nlist = 16, nprobe = 8).count()
+          val recall = if (nExact == 0) 1.0 else nBlocked.toDouble / nExact
+          assert(recall >= 0.85 && nBlocked <= nExact,
+            s"blocked decontam recall $recall out of band at ${n}x ($nBlocked/$nExact)")
+          report.row(s"${n}x", s"$nExact", s"$nBlocked", f"$recall%.3f")
+        }
+      }
+    }
+
     // (name, per-scale runnable built on the scaled frame)
-    val cases: Seq[(String, Int => Unit)] = Seq(
+    private def operatorCases: Seq[(String, Int => Unit)] = Seq(
       "q01-style lineitem aggregation" -> { n =>
-        replicate(li0, "l_orderkey", n)
-          .groupBy("l_returnflag", "l_linestatus")
-          .agg(sum("l_quantity"), avg("l_extendedprice"), count(lit(1)))
-          .collect()
+        replicas(li0, "l_orderkey", n).groupBy("l_returnflag", "l_linestatus")
+          .agg(sum("l_quantity"), avg("l_extendedprice"), count(lit(1))).collect()
       },
       "x01 exact dedup (documents)" -> { n =>
-        graft.ext.Dedup.exact(replicate(docs0, "doc_id", n), "text", "doc_id")
-          .select(sum(col("n_copies"))).collect()
+        Dedup.exact(docsN(n), "text", "doc_id").select(sum(col("n_copies"))).collect()
       },
       "x05 token stats (documents)" -> { n =>
-        replicate(docs0, "doc_id", n)
-          .select(graft.ext.TextStats.tokenCount(col("text")).as("t"))
-          .agg(sum("t")).collect()
+        docsN(n).select(TextStats.tokenCount(col("text")).as("t")).agg(sum("t")).collect()
       },
       "x19 repetition ratio (documents)" -> { n =>
-        replicate(docs0, "doc_id", n)
-          .select(graft.ext.Curation.repetitionRatio(col("text")).as("r"))
-          .agg(avg("r")).collect()
+        docsN(n).select(Curation.repetitionRatio(col("text")).as("r")).agg(avg("r")).collect()
       },
       "x21 hash-gate sampling (documents)" -> { n =>
-        assert(replicate(docs0, "doc_id", n)
-          .filter(graft.ext.Curation.hashKeep(col("doc_id"), lit("40"))).count() > 0)
+        assert(docsN(n).filter(Curation.hashKeep(col("doc_id"), lit("40"))).count() > 0)
       },
       "x65 mixture sample (documents, 5-lang recipe)" -> { n =>
         // budget scales with the corpus so the gate keeps a constant
         // fraction — the realistic growth mode for a recipe re-run
-        assert(graft.ext.Curation.mixtureSample(
-          replicate(docs0, "doc_id", n), "lang", "text", "doc_id",
-          Seq("en" -> 0.4, "fr" -> 0.15, "es" -> 0.15,
-            "zh" -> 0.15, "de" -> 0.15), 10000L * n).count() > 0)
+        assert(Curation.mixtureSample(docsN(n), "lang", "text", "doc_id",
+          Seq("en" -> 0.4, "fr" -> 0.15, "es" -> 0.15, "zh" -> 0.15, "de" -> 0.15),
+          10000L * n).count() > 0)
       },
       "x24 BM25 top-20 (documents)" -> { n =>
-        graft.ext.Search.bm25TopK(replicate(docs0, "doc_id", n), "text", "doc_id",
+        Search.bm25TopK(docsN(n), "text", "doc_id",
           Seq("spark", "vector", "stream"), k = 20).collect()
       },
       "x03 top-k cosine agg (embeddings, fixed 40 queries)" -> { n =>
-        val corpus = replicate(emb0, "vec_id", n)
-        graft.ext.Similarity.bruteForceTopKAgg(
-          emb0.filter(col("vec_id") % 50 === 0), corpus, k = 5)
+        Similarity.bruteForceTopKAgg(emb0.filter(col("vec_id") % 50 === 0), embN(n), k = 5)
           .select(count(lit(1))).collect()
       },
       "x22 sub-sharded packing (documents, nShards=8)" -> { n =>
-        graft.ext.Curation.packChunks(replicate(docs0, "doc_id", n),
-          "lang", "doc_id", graft.ext.TextStats.tokenCount(col("text")),
+        Curation.packChunks(docsN(n), "lang", "doc_id", TextStats.tokenCount(col("text")),
           capacity = 2048, nShards = 8)
-          .groupBy("lang", "shard", "chunk_id").count()
-          .select(count(lit(1))).collect()
+          .groupBy("lang", "shard", "chunk_id").count().select(count(lit(1))).collect()
       },
       "x35 chunk overlap (documents, 80/40)" -> { n =>
         // sum over chunk text lengths forces every window to materialize
-        graft.ext.Curation.chunkWithOverlap(
-          replicate(docs0, "doc_id", n), "text", "doc_id", 80, 40)
+        Curation.chunkWithOverlap(docsN(n), "text", "doc_id", 80, 40)
           .agg(count(lit(1)), sum(length(col("chunk_text")))).collect()
       },
       "x36 semantic decontam (scaled corpus, fixed benchmark)" -> { n =>
         // benchmark stays 1x (benchmarks don't grow with the corpus);
         // cost is corpus-linear: m cosines per row, partial max
-        graft.ext.Curation.semanticDecontam(
-          replicate(emb0, "vec_id", n).filter(col("vec_id") % 37 =!= 0),
+        Curation.semanticDecontam(embN(n).filter(col("vec_id") % 37 =!= 0),
           emb0.filter(col("vec_id") % 37 === 0), threshold = 0.35)
           .select(count(lit(1))).collect()
       },
       "x38 bigram log-prob (documents)" -> { n =>
         // term-pair-shaped shuffles: bigram/prefix counts + per-doc avg
-        graft.ext.Curation.bigramLogProb(
-          replicate(docs0, "doc_id", n), "text", "doc_id")
+        Curation.bigramLogProb(docsN(n), "text", "doc_id")
           .agg(count(lit(1)), sum(col("n_bigrams"))).collect()
       },
       "x36 cell-blocked decontam (scaled corpus, fixed benchmark)" -> { n =>
         // corpus-linear like the exact form but ~nprobe/nlist of the
         // cosines per row; nlist stays fixed because the BENCHMARK is
         // what gets clustered and it does not grow with the corpus
-        graft.ext.Curation.semanticDecontamBlocked(
-          replicate(emb0, "vec_id", n).filter(col("vec_id") % 37 =!= 0),
-          emb0.filter(col("vec_id") % 37 === 0), threshold = 0.35,
-          nlist = 16, nprobe = 8)
+        Curation.semanticDecontamBlocked(embN(n).filter(col("vec_id") % 37 =!= 0),
+          emb0.filter(col("vec_id") % 37 === 0), threshold = 0.35, nlist = 16, nprobe = 8)
           .select(count(lit(1))).collect()
       },
       "x47 as-of join (events, per-user series)" -> { n =>
         // user_id remap scales the key cardinality; per-key series keep
         // their shape, so the single-shuffle window plan must be linear
-        val ev = replicate(
-          graft.Tables.load(spark, sfDir, "events"), "user_id", n)
-        graft.operators.AsofJoin.asofJoin(
-          ev.filter(col("event_id") % 7 === 0),
-          ev.filter(col("event_id") % 7 =!= 0),
-          "user_id", "ts", "event_id", "event_id")
+        val ev = eventsN(n)
+        AsofJoin.asofJoin(ev.filter(col("event_id") % 7 === 0),
+          ev.filter(col("event_id") % 7 =!= 0), "user_id", "ts", "event_id", "event_id")
           .agg(count(lit(1)), count(col("matched_id"))).collect()
       },
       "x48 interval join (events, binned)" -> { n =>
-        val ev = replicate(
-          graft.Tables.load(spark, sfDir, "events"), "user_id", n)
-          .filter(col("ts").isNotNull)
+        val ev = eventsN(n).filter(col("ts").isNotNull)
         val intervals = ev.filter(col("event_id") % 11 === 0)
           .select(col("event_id"), col("user_id"), col("ts").as("t_start"),
             (col("ts") + expr("INTERVAL 2 HOURS")).as("t_end"))
-        graft.operators.RangeJoin.intervalJoin(
-          intervals, ev.filter(col("event_id") % 11 =!= 0),
+        RangeJoin.intervalJoin(intervals, ev.filter(col("event_id") % 11 =!= 0),
           "user_id", "t_start", "t_end", "ts", "event_id", "event_id")
           .agg(count(lit(1))).collect()
       },
       "x44 int8 quantization (embeddings)" -> { n =>
         // map-only: scale + 64 rounds per row, drained via an agg
-        graft.ext.Similarity.quantizeInt8(replicate(emb0, "vec_id", n))
+        Similarity.quantizeInt8(embN(n))
           .agg(sum(col("scale")), sum(element_at(col("q"), 1))).collect()
       },
       "x45 banded LSH ANN (embeddings, fixed 40 queries)" -> { n =>
         // corpus bucketing is map-only; candidate volume per query grows
         // with the corpus at a fixed bucket-collision rate -> linear
-        graft.ext.Similarity.lshTopKBanded(
-          emb0.filter(col("vec_id") % 50 === 0),
-          replicate(emb0, "vec_id", n), k = 5,
-          bands = 16, bitsPerBand = 4, dim = 64)
-          .select(count(lit(1))).collect()
+        Similarity.lshTopKBanded(emb0.filter(col("vec_id") % 50 === 0), embN(n), k = 5,
+          bands = 16, bitsPerBand = 4, dim = 64).select(count(lit(1))).collect()
       },
       "x50 rolling stats (events, trailing hour)" -> { n =>
         // one RANGE window per key; the two-pointer frame walk is
         // O(rows) per key, so key-remapped replication must be linear
-        graft.operators.Rolling.rollingStats(
-          replicate(graft.Tables.load(spark, sfDir, "events"), "user_id", n),
-          "user_id", "ts", "event_id", "value")
+        Rolling.rollingStats(eventsN(n), "user_id", "ts", "event_id", "value")
           .agg(count(lit(1)), sum(col("roll_cnt"))).collect()
       },
       "x51 session windows (events)" -> { n =>
         // native session merge: hash agg keyed by (user, merged window)
-        graft.operators.SessionWindows.sessionCounts(
-          replicate(graft.Tables.load(spark, sfDir, "events"), "user_id", n),
-          "user_id", "ts")
+        SessionWindows.sessionCounts(eventsN(n), "user_id", "ts")
           .agg(count(lit(1)), sum(col("n_events"))).collect()
       },
       "x52 latest compaction (events)" -> { n =>
         // one greatest-row-struct hash agg: partial max map-side, the
         // shuffle carries one struct per (task, key) — must be linear
-        graft.operators.Compaction.latestByKey(
-          replicate(graft.Tables.load(spark, sfDir, "events"), "user_id", n),
-          "user_id", "ts", "event_id", Seq("event_type", "value"))
+        Compaction.latestByKey(eventsN(n), "user_id", "ts", "event_id", Seq("event_type", "value"))
           .agg(count(lit(1)), sum(col("last_event_id"))).collect()
       },
       "x53 epoch shuffle (documents, 32 shards)" -> { n =>
         // one shard-hash exchange + in-shard sort; also witnesses the
         // md5 shard BALANCE the no-global-sort plan depends on
-        val sizes = graft.ext.TrainSet.epochShuffle(
-          replicate(docs0, "doc_id", n), "doc_id", "e1", 32)
-          .groupBy("shard").agg(count(lit(1)).as("c"))
-          .collect().map(_.getLong(1))
+        val sizes = TrainSet.epochShuffle(docsN(n), "doc_id", "e1", 32)
+          .groupBy("shard").agg(count(lit(1)).as("c")).collect().map(_.getLong(1))
         val mean = sizes.sum.toDouble / sizes.length
         // size-aware bound: 1.2x mean once shards are populated, but
         // never tighter than a ~4-sigma binomial band — at sf0.001's
@@ -311,16 +500,14 @@ object ScaleCheck {
         // bounded-heap: map-side partials keep <= cap rows per (task,
         // group), and the OUTPUT is constant-size as the input grows —
         // 20 sources x 15 regardless of n
-        val kept = graft.ext.Curation.capPerGroup(
-          replicate(docs0, "doc_id", n), "source", "doc_id", 15).count()
+        val kept = Curation.capPerGroup(docsN(n), "source", "doc_id", 15).count()
         assert(kept == 20L * 15, s"cap output not saturated: $kept")
       },
       "x67 DSIR resample (documents, fixed en target, k=60)" -> { n =>
         // corpus featurize + histogram are scan-linear; the log-ratio
         // table is <= numBuckets rows (broadcast, constant in n); the
         // global top-k is the bounded heap — output constant-size
-        val kept = graft.ext.TrainSet.dsirResample(
-          replicate(docs0, "doc_id", n), docs0.filter(col("lang") === "en"),
+        val kept = TrainSet.dsirResample(docsN(n), docs0.filter(col("lang") === "en"),
           "text", "doc_id", k = 60, numBuckets = 1024).count()
         assert(kept == 60L, s"resample output not k-sized: $kept")
       },
@@ -328,11 +515,10 @@ object ScaleCheck {
         // train once on the 1x corpus (fixed artifact, the stream-apply
         // deployment shape); scoring the replicated corpus is pure
         // map-only — time must stay scan-linear
-        val docsN = replicate(docs0, "doc_id", n)
-        val scored = docsN.select(col("doc_id"),
-          graft.ext.TrainSet.dsirLogWeight(
-            col("text"), dsirRatio1x._1, dsirRatio1x._2, 1024).as("w"))
-        assert(scored.filter(col("w") =!= 0.0).count() >= docsN.count() * 9 / 10,
+        val docs = docsN(n)
+        val scored = docs.select(col("doc_id"), TrainSet.dsirLogWeight(
+          col("text"), dsirRatio1x._1, dsirRatio1x._2, 1024).as("w"))
+        assert(scored.filter(col("w") =!= 0.0).count() >= docs.count() * 9 / 10,
           "scorer degenerated to zeros")
       },
       "x69 corpus merge (3 sources over replicated documents)" -> { n =>
@@ -341,78 +527,61 @@ object ScaleCheck {
         // count while n_copies absorbs the growth — the shuffle carries
         // (32-byte hash, 4-field struct) rows, never text, and the hot
         // content reduces map-side via the greatest_row partial
-        val docsN = replicate(docs0, "doc_id", n)
-        val union = docsN.select(col("doc_id"), col("text"), lit("curated").as("src"))
-          .unionByName(docsN.select((col("doc_id") + 1000000L).as("doc_id"),
+        val docs = docsN(n)
+        val union = docs.select(col("doc_id"), col("text"), lit("curated").as("src"))
+          .unionByName(docs.select((col("doc_id") + 1000000L).as("doc_id"),
             col("text"), lit("web").as("src")))
-          .unionByName(docsN.filter(col("doc_id") % 2 === 0)
+          .unionByName(docs.filter(col("doc_id") % 2 === 0)
             .select((col("doc_id") + 2000000L).as("doc_id"), col("text"),
               lit("mirror").as("src")))
-        val m = graft.ext.Dedup.mergeByPrecedence(
+        val m = Dedup.mergeByPrecedence(
             union, "text", "doc_id", "src", Map("curated" -> 2, "web" -> 1))
-          .agg(count(lit(1)).as("rows"), sum(col("n_copies")).as("copies"))
-          .head
+          .agg(count(lit(1)).as("rows"), sum(col("n_copies")).as("copies")).head
         val inRows = union.count()
         assert(m.getLong(0) == distinctTexts0,
           s"survivors ${m.getLong(0)} != 1x distinct contents $distinctTexts0")
-        assert(m.getLong(1) == inRows,
-          s"copies ${m.getLong(1)} != merge input rows $inRows")
+        assert(m.getLong(1) == inRows, s"copies ${m.getLong(1)} != merge input rows $inRows")
       },
       "x71 NB classifier (documents, fixed 1x-trained model)" -> { n =>
         // train once on the 1x corpus; inference over the replicated
         // corpus is the bucket_lookup expression — scan-linear, and
         // replicas must predict exactly what their 1x originals did
-        val preds = graft.ext.TextStats.nbPredict(
-          graft.ext.TextStats.nbGramBuckets(col("text"), 1024), nbModel1x)
-        val docsN = replicate(docs0, "doc_id", n)
-        val perReplica = docsN.select((col("doc_id") % 100000000L).as("orig"),
-            preds.getField("lang").as("pl"))
-          .groupBy("orig").agg(countDistinct(col("pl")).as("nd"))
-          .agg(max(col("nd"))).head.getLong(0)
+        val perReplica = perOriginal(docsN(n), TextStats.nbPredict(
+          TextStats.nbGramBuckets(col("text"), 1024), nbModel1x).getField("lang"))
         assert(perReplica == 1L, s"replica predictions diverged: $perReplica")
       },
       "x70 random projection (embeddings 64->16, map-only)" -> { n =>
         // one array literal (codegen reference object) + per-row fold:
         // no shuffle at any size, time must stay scan-linear
-        val embN = replicate(emb0, "vec_id", n)
-        val cnt = embN.select(graft.ext.Similarity.randomProjection(
-            col("embedding"), 16, 64).as("p"))
+        val emb = embN(n)
+        val cnt = emb.select(Similarity.randomProjection(col("embedding"), 16, 64).as("p"))
           .filter(element_at(col("p"), 16).isNotNull).count()
-        assert(cnt == embN.count(), s"projection dropped rows: $cnt")
+        assert(cnt == emb.count(), s"projection dropped rows: $cnt")
       },
       "x72 budget fill (documents, fixed 15k-token budget)" -> { n =>
         // the selection is BUDGET-bound, not corpus-bound: however large
         // the corpus grows, the kept index stops at the budget crossing
         // (slim rows on the range exchange, text never shuffles)
-        val sel = graft.ext.TrainSet.budgetFill(
-          replicate(docs0, "doc_id", n), "doc_id",
-          graft.ext.TextStats.qualityScore(col("text")),
-          graft.ext.TextStats.tokenCount(col("text")), budget = 15000L)
-        val r = sel.agg(max(col("cum_before")).as("mx"),
-          sum(col("n_tokens")).as("mass")).head
+        val sel = TrainSet.budgetFill(docsN(n), "doc_id", TextStats.qualityScore(col("text")),
+          TextStats.tokenCount(col("text")), budget = 15000L)
+        val r = sel.agg(max(col("cum_before")).as("mx"), sum(col("n_tokens")).as("mass")).head
         assert(r.getLong(0) < 15000L, s"kept a doc past the budget: ${r.getLong(0)}")
-        assert(r.getLong(1) >= 15000L,
-          s"budget not filled on an ample corpus: ${r.getLong(1)}")
+        assert(r.getLong(1) >= 15000L, s"budget not filled on an ample corpus: ${r.getLong(1)}")
       },
       "x73 vocab OOV (documents, fixed 1x vocab)" -> { n =>
         // vocab trained once on the 1x corpus; scoring the replicated
         // corpus is a map-only isin filter pass — and a replica must
         // report exactly its original's counts
-        val docsN = replicate(docs0, "doc_id", n)
-        val diverged = docsN.select((col("doc_id") % 100000000L).as("orig"),
-            graft.ext.TextStats.oovCounts(col("text"), vocab1x).as("c"))
-          .groupBy("orig").agg(countDistinct(col("c.n_oov")).as("nd"))
-          .agg(max(col("nd"))).head.getLong(0)
+        val diverged = perOriginal(docsN(n),
+          TextStats.oovCounts(col("text"), vocab1x).getField("n_oov"))
         assert(diverged == 1L, s"replica OOV counts diverged: $diverged")
       },
       "x74 CDC chunks (documents, map-only)" -> { n =>
         // content-anchored boundaries: replicas carry identical text, so
         // chunk rows grow n-fold while the chunk-hash SET stays exactly
         // the 1x set (the shareable dedup state is corpus-content-sized)
-        val docsN = replicate(docs0, "doc_id", n)
-        val ch = graft.ext.Curation.cdcChunks(docsN, "text", "doc_id")
-        val stats = ch.agg(count(lit(1)).as("rows"),
-          countDistinct(col("chunk_hash")).as("hashes")).head
+        val stats = Curation.cdcChunks(docsN(n), "text", "doc_id")
+          .agg(count(lit(1)).as("rows"), countDistinct(col("chunk_hash")).as("hashes")).head
         assert(stats.getLong(0) == cdcRows1x * n,
           s"chunk rows ${stats.getLong(0)} != ${cdcRows1x * n}")
         assert(stats.getLong(1) == cdcHashes1x,
@@ -421,13 +590,13 @@ object ScaleCheck {
       "x76 export manifest (documents, 8 md5 shards)" -> { n =>
         // shard doc counts partition the corpus at any scale and the
         // output stays numShards rows — pure metadata
-        val docsN = replicate(docs0, "doc_id", n)
-        val m = graft.ext.TrainSet.exportManifest(docsN, "doc_id",
-          graft.ext.TextStats.tokenCount(coalesce(col("text"), lit(""))),
+        val docs = docsN(n)
+        val m = TrainSet.exportManifest(docs, "doc_id",
+          TextStats.tokenCount(coalesce(col("text"), lit(""))),
           seed = "graft-export", numShards = 8)
         val r = m.agg(count(lit(1)).as("shards"), sum(col("n_docs")).as("docs")).head
         assert(r.getLong(0) <= 8L, s"shard domain grew: ${r.getLong(0)}")
-        assert(r.getLong(1) == docsN.count(), s"doc partition broken: ${r.getLong(1)}")
+        assert(r.getLong(1) == docs.count(), s"doc partition broken: ${r.getLong(1)}")
       },
       "x77 source drift (documents, per-source KL)" -> { n =>
         // replicas carry identical text under the same sources, so the
@@ -437,10 +606,7 @@ object ScaleCheck {
         // the group domain is unchanged, and every KL stays in
         // [0, 1x-value + 1e-6] — the smoothed KL can only decay toward
         // the unsmoothed divergence of the frozen distributions
-        val got = graft.ext.TextStats.sourceDrift(
-            replicate(docs0, "doc_id", n), "text", "source", 256)
-          .collect().map(r => r.getString(0) ->
-            (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
+        val got = sourceDrift(docsN(n))
         assert(got.keySet == drift1x.keySet, "group domain changed")
         got.foreach { case (g, (docs, grams, kl)) =>
           val (d1, g1, k1) = drift1x(g)
@@ -460,13 +626,11 @@ object ScaleCheck {
         import spark.implicits._
         val media = spark.range(0L, 500L * n).as[Long].map { id =>
           val base = if (id % 4 == 1) id - 1 else id
-          graft.ext.Multimodal.MediaRow(id, "image",
-            graft.ext.Multimodal.encodeGradientImage("png", 18, 16,
-              (base % 5 + 1).toInt * 37, ((base * 3) % 7 + 1).toInt * 23,
-              if (id % 4 == 1) 60 else 20))
+          Multimodal.MediaRow(id, "image", Multimodal.encodeGradientImage("png", 18, 16,
+            (base % 5 + 1).toInt * 37, ((base * 3) % 7 + 1).toInt * 23,
+            if (id % 4 == 1) 60 else 20))
         }
-        val g = graft.ext.Multimodal.perceptualGroups(
-          graft.ext.Multimodal.decodeReal(media))
+        val g = Multimodal.perceptualGroups(Multimodal.decodeReal(media))
           .agg(count(lit(1)).as("groups"), sum(col("n_images")).as("imgs")).head
         assert(g.getLong(0) == 35L,
           s"fingerprint domain grew with the corpus: ${g.getLong(0)} groups")
@@ -481,13 +645,8 @@ object ScaleCheck {
         // region, so the datum is the SCORING slope alone.
         assert(student1x.tables.map(_.size).sum <= student1x.labels.length * 1024,
           "student table domain exceeded labels x buckets")
-        val docsN = replicate(docs0, "doc_id", n)
-        val diverged = docsN.select((col("doc_id") % 100000000L).as("orig"),
-            graft.ext.TextStats.nbPredict(
-              graft.ext.TextStats.nbGramBuckets(col("text"), 1024), student1x)
-              .getField("lang").as("pl"))
-          .groupBy("orig").agg(countDistinct(col("pl")).as("nd"))
-          .agg(max(col("nd"))).head.getLong(0)
+        val diverged = perOriginal(docsN(n), TextStats.nbPredict(
+          TextStats.nbGramBuckets(col("text"), 1024), student1x).getField("lang"))
         assert(diverged == 1L, s"replica student labels diverged: $diverged")
       },
       "x99 quantile gate (documents, per-lang p10)" -> { n =>
@@ -498,11 +657,7 @@ object ScaleCheck {
         // discrete ties mean "keep >= p10" keeps ~96%, not 90% — the
         // anchor, not a textbook 0.9, is the invariant), and the report
         // stays one row per group
-        val rep = graft.ext.Curation.quantileGate(
-          replicate(docs0, "doc_id", n), "lang", "doc_id",
-          graft.ext.TextStats.qualityScore(col("text")),
-          graft.ext.TextStats.tokenCount(col("text")), frac = 0.10)
-        val r = rep.agg(count(lit(1)).as("groups"),
+        val r = quantileGate(docsN(n)).agg(count(lit(1)).as("groups"),
           sum(col("n_kept")).as("kept"), sum(col("n_docs")).as("docs")).head
         assert(r.getLong(0) == quantileGate1x._1, s"group domain grew: ${r.getLong(0)}")
         val frac = r.getLong(1).toDouble / r.getLong(2)
@@ -515,11 +670,7 @@ object ScaleCheck {
         // n-fold — the x01/x74 witness shape, with each replica unioned
         // with a byte-different variant twin that must merge into its
         // original's group (n_raw >= 2 everywhere twins exist)
-        val base = replicate(docs0, "doc_id", n)
-        val twins = base.select((col("doc_id") + 50000000L).as("doc_id"),
-          concat(upper(coalesce(col("text"), lit(""))), lit("  !!  ")).as("text"))
-        val g = graft.ext.Dedup.normalizedDedup(
-            base.select("doc_id", "text").unionByName(twins), "text", "doc_id")
+        val g = Dedup.normalizedDedup(withVariantTwins(docsN(n)), "text", "doc_id")
           .agg(count(lit(1)).as("groups"), sum(col("n_docs")).as("docs"),
             min(col("n_raw")).as("minraw")).head
         assert(g.getLong(0) == normGroups1x,
@@ -534,27 +685,21 @@ object ScaleCheck {
         // token), however large the corpus grows — the collect_list can
         // never go corpus-shaped; and the manifest partitions the corpus
         // exactly (every doc appears in exactly one chunk row)
-        val fx = replicate(docs0, "doc_id", n)
-          .select(col("doc_id"),
-            graft.ext.TextStats.tokenCount(coalesce(col("text"), lit("")))
-              .cast("long").as("tok"))
+        val fx = docsN(n).select(col("doc_id"),
+            TextStats.tokenCount(coalesce(col("text"), lit(""))).cast("long").as("tok"))
           .filter(col("tok") > 0).withColumn("g", lit(0L))
         val nDocs = fx.count()
-        val st = graft.ext.Curation.packBoundaries(
-            fx, "g", "doc_id", col("tok"), 128, nShards = 4)
+        val st = Curation.packBoundaries(fx, "g", "doc_id", col("tok"), 128, nShards = 4)
           .agg(sum(col("n_docs")).as("docs"), max(col("n_docs")).as("mx")).head
-        assert(st.getLong(0) == nDocs,
-          s"manifest lost docs: ${st.getLong(0)} vs $nDocs")
-        assert(st.getLong(1) <= 128L,
-          s"a chunk row went past capacity docs: ${st.getLong(1)}")
+        assert(st.getLong(0) == nDocs, s"manifest lost docs: ${st.getLong(0)} vs $nDocs")
+        assert(st.getLong(1) <= 128L, s"a chunk row went past capacity docs: ${st.getLong(1)}")
       },
       "x105 perplexity tiers (documents, frozen 1x reference LM)" -> { n =>
         // the timed region is the MAP-ONLY scoring fold + the lang-keyed
         // tertile aggregate; replicas carry identical text so the scored
         // multiset is the 1x multiset n-fold — total tier mass must
         // scale exactly (per-tier splits re-derive their own boundaries)
-        val t = graft.ext.TextStats.perplexityTiers(
-            replicate(docs0, "doc_id", n), "text", "lang", "doc_id", refLm1x)
+        val t = TextStats.perplexityTiers(docsN(n), "text", "lang", "doc_id", refLm1x)
           .agg(sum(col("n_docs")).as("docs"), count(lit(1)).as("rows")).head
         assert(t.getLong(0) == n * scoreable1x,
           s"tier mass: ${t.getLong(0)} vs ${n * scoreable1x}")
@@ -570,18 +715,14 @@ object ScaleCheck {
         // the rescue to 'de') — boilerplate (title, nav, script,
         // comment, footer, link farm) never leaks through, asserted
         // directly on the joined text
-        val ext = replicate(docs0, "doc_id", n)
-          .filter(col("doc_id").isNotNull)
-          .withColumn("html", graft.ext.Extract.htmlWrap(col("doc_id"),
-            col("text")))
-          .withColumn("_bf", graft.ext.Extract.blockFeatures(col("html")))
-          .select(graft.ext.Extract.keptCountOf(col("_bf")).as("k"),
-            graft.ext.Extract.textOf(col("_bf")).as("ct"))
+        val ext = docsN(n).filter(col("doc_id").isNotNull)
+          .withColumn("html", Extract.htmlWrap(col("doc_id"), col("text")))
+          .withColumn("_bf", Extract.blockFeatures(col("html")))
+          .select(Extract.keptCountOf(col("_bf")).as("k"), Extract.textOf(col("_bf")).as("ct"))
         val r = ext.agg(count(lit(1)).as("rows"),
           min(col("k")).as("kmin"), max(col("k")).as("kmax"),
           min(col("ct").startsWith("Q&A <notes> ")).as("pfx"),
-          max(col("ct").contains("Copyright") ||
-            col("ct").contains("Home About Contact") ||
+          max(col("ct").contains("Copyright") || col("ct").contains("Home About Contact") ||
             col("ct").contains("var a=1")).as("leak")).head
         assert(r.getLong(0) == n * nDocs0, s"rows: ${r.getLong(0)}")
         assert(r.getInt(1) >= 1 && r.getInt(2) <= 3,
@@ -597,14 +738,12 @@ object ScaleCheck {
         // must be the 1x table with counts scaled by n, which exercises
         // the whole train loop (seeding, three distributed segmentation
         // passes, count folds) at scale and pins its determinism
-        val t = graft.ext.TextStats.unigramTrain(
-          replicate(docs0, "doc_id", n), "text",
+        val t = TextStats.unigramTrain(docsN(n), "text",
           maxPieceLen = 4, minCount = 2L * n, rounds = 3)
         assert(t.length == unigram1x.length,
           s"vocab size moved: ${t.length} vs ${unigram1x.length}")
         t.zip(unigram1x).foreach { case ((p, c), (p1, c1)) =>
-          assert(p == p1 && c == n * c1,
-            s"table drifted at ${n}x: ($p,$c) vs ($p1,${n * c1})")
+          assert(p == p1 && c == n * c1, s"table drifted at ${n}x: ($p,$c) vs ($p1,${n * c1})")
         }
       },
       "x125 wordpiece training (documents, replication invariance)" -> { n =>
@@ -613,11 +752,8 @@ object ScaleCheck {
         // exactly, and each 6dp score lands within rounding of the
         // shifted 1x score — exercising the whole likelihood-gain loop
         // (pair fold, symbol fold, broadcast joins, argmax) at scale
-        val t = graft.ext.TextStats.wordPieceTrain(
-          replicate(docs0, "doc_id", n), "text", numMerges = 12,
-          minCount = 2L * n)
-        assert(t.length == wp1x.length,
-          s"merge count moved: ${t.length} vs ${wp1x.length}")
+        val t = TextStats.wordPieceTrain(docsN(n), "text", numMerges = 12, minCount = 2L * n)
+        assert(t.length == wp1x.length, s"merge count moved: ${t.length} vs ${wp1x.length}")
         val shift = math.log(n.toDouble)
         t.zip(wp1x).foreach { case ((l, r, c, sc), (l1, r1, c1, sc1)) =>
           assert(l == l1 && r == r1 && c == n * c1,
@@ -633,29 +769,20 @@ object ScaleCheck {
         // distinct canonical set, not the crawl), and every input row
         // lands in exactly one group (sum of n_dups == rows in)
         val d = col("doc_id")
-        val url = concat(
-          when(d % 2 === 0, lit("https")).otherwise(lit("Http")),
-          lit("://"),
+        val url = concat(when(d % 2 === 0, lit("https")).otherwise(lit("Http")), lit("://"),
           when(d % 5 === 0, lit("example.com"))
             .when(d % 5 === 1, lit("www.Example.com"))
             .when(d % 5 === 2, lit("news.example.co.uk"))
             .when(d % 5 === 3, lit("blog.sample.org"))
             .otherwise(lit("WWW.news.example.co.uk")),
-          when(d % 7 === 1, lit(":443"))
-            .when(d % 7 === 2, lit(":8080")).otherwise(lit("")),
-          lit("/A/"), (d % 20).cast("string"),
-          when(d % 3 === 0, lit("/")).otherwise(lit("")))
-        val rowsIn = n.toLong *
-          docs0.filter(col("doc_id").isNotNull).count()
-        val out = graft.ext.Urls.urlDedup(
-          replicate(docs0, "doc_id", n).filter(d.isNotNull)
-            .select(d.as("doc_id"), url.as("url")),
-          "url", "doc_id")
+          when(d % 7 === 1, lit(":443")).when(d % 7 === 2, lit(":8080")).otherwise(lit("")),
+          lit("/A/"), (d % 20).cast("string"), when(d % 3 === 0, lit("/")).otherwise(lit("")))
+        val rowsIn = n.toLong * docs0.filter(col("doc_id").isNotNull).count()
+        val out = Urls.urlDedup(
+          docsN(n).filter(d.isNotNull).select(d.as("doc_id"), url.as("url")), "url", "doc_id")
           .agg(count(lit(1)), sum(col("n_dups"))).head
-        assert(out.getLong(1) == rowsIn,
-          s"mass broke: ${out.getLong(1)} vs $rowsIn")
-        assert(out.getLong(0) <= 2000,
-          s"survivors not bounded: ${out.getLong(0)}")
+        assert(out.getLong(1) == rowsIn, s"mass broke: ${out.getLong(1)} vs $rowsIn")
+        assert(out.getLong(0) <= 2000, s"survivors not bounded: ${out.getLong(0)}")
       },
       "x106 epoch upsample (documents, budget 2x corpus tokens)" -> { n =>
         // repeats = w*B/T is scale-invariant when the budget tracks the
@@ -663,12 +790,10 @@ object ScaleCheck {
         // mass — each in-recipe group's realized token mass must sit on
         // its w*B expectation (the md5 fractional gate's deviation is
         // O(sqrt(docs)·avg_tok), far inside 2% at this corpus size)
-        val targets = Seq("en" -> 0.5, "zh" -> 0.25, "de" -> 0.15,
-          "fr" -> 0.07, "es" -> 0.03)
+        val targets = Seq("en" -> 0.5, "zh" -> 0.25, "de" -> 0.15, "fr" -> 0.07, "es" -> 0.03)
         val budget = 2L * n * tokens1x
-        val rep = graft.ext.Curation.epochUpsampleReport(
-          replicate(docs0, "doc_id", n), "lang", "doc_id", "text",
-          targets, budget).collect()
+        val rep = Curation.epochUpsampleReport(
+          docsN(n), "lang", "doc_id", "text", targets, budget).collect()
         val tmap = targets.toMap
         rep.filter(r => tmap.getOrElse(r.getString(0), 0.0) > 0).foreach { r =>
           val want = tmap(r.getString(0)) * budget
@@ -677,8 +802,7 @@ object ScaleCheck {
           // sigma of sqrt(n_docs)·avg_tok (the small 3%-share group
           // sits ~2.6% wide at sf0.1 — a systematic repeats error is
           // 100%+ and still trips)
-          val sd = math.sqrt(r.getLong(1).toDouble) *
-            (r.getLong(2).toDouble / r.getLong(1))
+          val sd = math.sqrt(r.getLong(1).toDouble) * (r.getLong(2).toDouble / r.getLong(1))
           assert(math.abs(got - want) <= 5 * sd + 2,
             s"${r.getString(0)}: emitted $got vs expectation $want (5sd=${5 * sd})")
         }
@@ -687,9 +811,8 @@ object ScaleCheck {
         // WindowGroupLimit caps every partition at K rows per stratum
         // map-side; the shuffle is O(partitions x strata x K) — the
         // measured time must stay scan-dominated (linear)
-        assert(graft.ext.TrainSet.weightedSample(
-          replicate(docs0, "doc_id", n).withColumn("w",
-            (length(col("text")) + 1).cast("double")),
+        assert(TrainSet.weightedSample(
+          docsN(n).withColumn("w", (length(col("text")) + 1).cast("double")),
           "lang", "doc_id", "w", 50).count() > 0)
       },
       "x58 KLL quantile sketch (documents, per-lang k=200)" -> { n =>
@@ -698,13 +821,10 @@ object ScaleCheck {
         // duplicate every n_chars value so the distribution — and hence
         // every quantile — is scale-INVARIANT: the estimate must stay
         // within the rank bound of the 1x empirical quantile
-        val q50 = graft.ext.Sketches.kllPerGroup(
-          replicate(docs0, "doc_id", n), "lang", "n_chars")
-          .agg(graft.ext.Sketches.kllUnion().as("sk"))
-          .select(graft.ext.Sketches.kllQuantile("sk", 0.5))
+        val q50 = Sketches.kllPerGroup(docsN(n), "lang", "n_chars")
+          .agg(Sketches.kllUnion().as("sk")).select(Sketches.kllQuantile("sk", 0.5))
           .collect()(0).getDouble(0)
-        val rank = docs0.filter(col("n_chars") <= q50).count().toDouble /
-          docs0.count()
+        val rank = docs0.filter(col("n_chars") <= q50).count().toDouble / docs0.count()
         assert(math.abs(rank - 0.5) <= 0.03,
           s"replicated-corpus q50 rank drifted: $q50 -> $rank")
       },
@@ -713,16 +833,12 @@ object ScaleCheck {
         // scan is corpus-linear per query batch (compression, not
         // pruning — compose with IVF to prune); fixed query set, so
         // the whole pipeline must scale linearly with the corpus
-        val q = emb0.limit(40)
-        assert(graft.ext.Similarity.pqTopK(q, replicate(emb0, "vec_id", n),
-          k = 5, m = 8, dim = 64).count() > 0)
+        assert(Similarity.pqTopK(emb0.limit(40), embN(n), k = 5, m = 8, dim = 64).count() > 0)
       },
       "x62 IVF-PQ ANN (embeddings, nlist=32 nprobe=12, fixed 40 queries)" -> { n =>
         // the production composition: the probe join touches ~nprobe/
         // nlist of the corpus, so growth should track the pruned scan
-        val q = emb0.limit(40)
-        assert(graft.ext.Similarity.ivfPqTopK(q, replicate(emb0, "vec_id", n),
-          k = 5).count() > 0)
+        assert(Similarity.ivfPqTopK(emb0.limit(40), embN(n), k = 5).count() > 0)
       },
       "x60 heavy hitters (documents tokens, maxMapSize=1024)" -> { n =>
         // replication multiplies every exact term count by n while the
@@ -730,16 +846,14 @@ object ScaleCheck {
         // (est <= true <= est + maxError) must hold for the exact
         // top-20 at every stream length
         import graft.functions.FreqSketch._
-        val toks = replicate(docs0, "doc_id", n)
-          .select(explode(graft.ext.Dedup.tokens(col("text"))).as("term"))
+        val toks = docsN(n).select(explode(Dedup.tokens(col("text"))).as("term"))
         val sk = toks.agg(freq_sketch_agg(col("term"), 1024).as("sk"))
         val top = toks.groupBy("term").agg(count(lit(1)).as("cnt"))
           .orderBy(col("cnt").desc, col("term").asc).limit(20)
         val bad = top.crossJoin(broadcast(sk))
           .select(col("cnt"), freq_estimate(col("sk"), col("term")).as("est"),
             freq_max_error(col("sk")).as("me"))
-          .filter(!(col("est") <= col("cnt") &&
-            col("cnt") <= col("est") + col("me")))
+          .filter(!(col("est") <= col("cnt") && col("cnt") <= col("est") + col("me")))
           .count()
         assert(bad == 0L, s"$bad of top-20 outside the Misra-Gries bound")
       },
@@ -749,16 +863,14 @@ object ScaleCheck {
         // and intersect(replicated, originals) = nDocs0. 1x sits in the
         // exact regime (< 16384 nominal); 16x (80k ids) exercises the
         // sampling regime — both must land within 5%
-        val skAll = replicate(docs0, "doc_id", n)
-          .agg(theta_sketch_agg(col("doc_id"), 14).as("ska"))
+        val skAll = docsN(n).agg(theta_sketch_agg(col("doc_id"), 14).as("ska"))
         val skOrig = docs0.agg(theta_sketch_agg(col("doc_id"), 14).as("skb"))
         val r = skAll.crossJoin(skOrig).select(
           // lgK=14 explicitly — the two-arg default (lgK=12) silently
           // downsamples a union of lgK=14 inputs into estimation mode,
           // the exact x59 pitfall this witness exists to pin
           theta_sketch_estimate(theta_union(col("ska"), col("skb"), lit(14))),
-          theta_sketch_estimate(theta_intersection(col("ska"), col("skb"))))
-          .collect()(0)
+          theta_sketch_estimate(theta_intersection(col("ska"), col("skb")))).collect()(0)
         assert(math.abs(r.getLong(0) - n * nDocs0) <= 0.05 * n * nDocs0,
           s"theta union estimate drifted: ${r.getLong(0)} vs ${n * nDocs0}")
         assert(math.abs(r.getLong(1) - nDocs0) <= 0.05 * n * nDocs0,
@@ -770,1690 +882,1139 @@ object ScaleCheck {
         // measured time must stay scan-dominated (linear); replicas
         // carry offset ids, so the unioned estimate must track the
         // n-times-larger TRUE distinct count within the lgK=12 bound
-        val est = graft.ext.Sketches.hllPerGroup(
-          replicate(docs0, "doc_id", n), "lang", "doc_id")
-          .agg(graft.ext.Sketches.hllUnionEstimate().as("e"))
-          .collect()(0).getLong(0)
+        val est = Sketches.hllPerGroup(docsN(n), "lang", "doc_id")
+          .agg(Sketches.hllUnionEstimate().as("e")).collect()(0).getLong(0)
         val want = n * nDocs0
         assert(math.abs(est - want) / want.toDouble <= 0.05,
           s"sketch estimate drifted: $est vs $want")
       })
 
-    // --- dup-structure-preserving replication for the pair operators ---
-    // text: bijectively retag every token per replica ("word" -> "x3word"):
-    // within-replica shingle sets (and so jaccard/minhash structure) are
-    // preserved exactly; across replicas the shingle spaces are disjoint.
-    // prefix is SELF-DELIMITING ("x3z" + token): a bare "x$i" prefix is
-    // ambiguous when tokens start with digits (replica 1 on "5foo" ->
-    // "x15foo" == replica 15 on "foo"), which would leak cross-replica
-    // shingle collisions into the witness counts at n >= 10
-    def replicateDocsPerturbed(n: Int): DataFrame =
-      (0 until n).map { i =>
-        docs0.withColumn("doc_id", col("doc_id") + lit(i.toLong * 100000000L))
-          .withColumn("text",
-            regexp_replace(col("text"), "([a-zA-Z0-9]+)", s"x${i}z$$1"))
-      }.reduce(_ union _)
-    // embeddings: per-replica diagonal +-1 sign pattern D_i (orthogonal):
-    // cos(D_i a, D_i b) = cos(a, b), so within-replica pairs keep their
-    // sims bit-for-bit; cross-replica sims are sign-scrambled to ~0.
-    // Each replica also carries DESIGNED strong twins (every 10th vector,
-    // twin id = id + 50000000, sim ~ 1): the fixture's own pairs are all
-    // weak (sim 0.45-0.55), whose blocking recall legitimately decays as
-    // the probe fraction nprobe/nlist shrinks — the scale-invariant
-    // recall claim, and so the linearity assert, is about STRONG pairs.
-    def replicateEmbPerturbed(n: Int): DataFrame =
-      (0 until n).map { i =>
-        val base = emb0.withColumn("vec_id", col("vec_id") + lit(i.toLong * 100000000L))
-          .withColumn("embedding",
-            transform(col("embedding").cast("array<double>"),
-              (x, pos) => when(pmod(xxhash64(pos + lit(i.toLong * 97L)), lit(2L)) === 0, x)
-                .otherwise(-x)))
-        val twins = base.filter(col("vec_id") % 10 === 0)
-          .withColumn("vec_id", col("vec_id") + lit(50000000L))
-          .withColumn("embedding",
-            transform(col("embedding"), x => x * lit(1.0) + lit(1e-4)))
-        base.union(twins)
-      }.reduce(_ union _)
+    // text replicas under the retag bijection, replica 0 included
+    private def retagged(n: Int) = replicas(docs0, "doc_id", n, retag(0), retag)
+    // embedding replicas under the sign flip, replica 0 included
+    private def flipped(n: Int) = replicas(emb0, "vec_id", n, signFlip(0), signFlip)
 
-    // (name, scale -> pair frame). nlist for the blocked x16 twin scales
-    // WITH the corpus (constant target cell size) — the policy its
-    // docstring prescribes; fixed nlist would re-create the n^2 within
-    // ever-fatter cells.
-    // (name, scale -> pair frame, linearity witness): the witness column
-    // counts the pairs whose ~16x growth is asserted — ALL within-replica
-    // pairs for x09 (exact-verified, shingle spaces disjoint across
-    // replicas), the designed strong twins for x29 (weak-pair blocking
-    // recall decays with the probe fraction by design).
-    val sameReplica = floor(col("id_a") / 100000000L) === floor(col("id_b") / 100000000L)
-    val pairCases: Seq[(String, Int => DataFrame, Column)] = Seq(
-      ("x09 minhash LSH pairs (documents)", { n: Int =>
-        graft.ext.Dedup.minhashLshPairs(replicateDocsPerturbed(n),
-          "text", "doc_id", k = 3, threshold = 0.2)
-      }, sameReplica),
-      ("x29 cell-blocked embedding near-dup", { n: Int =>
-        graft.ext.Dedup.embeddingNearDupPairsBlocked(replicateEmbPerturbed(n),
-          threshold = 0.45, nlist = 16 * n, nprobe = 2)
-      }, col("id_b") - col("id_a") === 50000000L),
-      // x83's portable seeded cells under the same twin witness: nlist
-      // scales with the corpus (constant target cell size, the
-      // semanticCells docstring's sqrt(n) policy); the designed sim~1
-      // twins rank cells near-identically at any nlist, so their pair
-      // count must track the replication factor exactly while weak
-      // cross-replica sims stay scrambled
-      ("x83 semantic-dedup within-cell pairs", { n: Int =>
-        graft.ext.Dedup.semanticDedupPairs(
-          graft.ext.Dedup.semanticCells(replicateEmbPerturbed(n),
-            nlist = 8 * n, nprobe = 3),
-          threshold = 0.45)
-      }, col("id_b") - col("id_a") === 50000000L),
-      // witness = hamming-0 pairs: identical texts retag to identical
-      // texts (fingerprints equal under the bijection), so their count
-      // tracks the replication factor exactly; hamming 1-3 pairs can
-      // wobble per replica (different token hash bits) and land in
-      // `other`
-      ("x33 simhash banded pairs (documents)", { n: Int =>
-        graft.ext.Dedup.simhashPairs(replicateDocsPerturbed(n),
-          "text", "doc_id")
-      }, col("hamming") === 0),
-      // containment: same disjoint-shingle-space argument as x09 — every
-      // directional pair lives within one replica, count tracks n exactly
-      ("x43 containment pairs (documents)", { n: Int =>
-        graft.ext.Dedup.containmentPairs(replicateDocsPerturbed(n),
-          "text", "doc_id", k = 3, threshold = 0.3)
-      }, sameReplica),
-      // cross-doc dup spans: the retag bijection preserves every
-      // replica's corpus-wide gram multiplicities (disjoint gram spaces
-      // across replicas), so each replica emits the fixture's exact
-      // span set -> witness (span rows) tracks n exactly while the
-      // anchor join and merge window carry n x the duplicated anchors
-      ("x63 dup spans (documents, n=5)", { n: Int =>
-        graft.ext.Curation.dupSpans(replicateDocsPerturbed(n),
-          "text", "doc_id", 5)
-      }, col("span_len") >= 5),
-      // r18 keeper-preserving variant: disjoint gram spaces per replica
-      // mean each replica elects its own keepers and emits the
-      // fixture's exact NON-KEEPER span set -> span rows track n
-      // exactly; keeper election adds one grouped min-struct to the
-      // same slim-anchor plan
-      ("x133 xdoc substr spans (documents, n=5)", { n: Int =>
-        graft.ext.Curation.xdocSubstrSpans(replicateDocsPerturbed(n),
-          "text", "doc_id", 5)
-      }, col("span_len") >= 5),
-      // dup-ngram coverage is a WITHIN-doc metric: verbatim replication
-      // (id-remapped) is already interaction-free, every replica's
-      // per-doc output is identical -> witness 16x exactly
-      ("x46 dup-ngram coverage (documents)", { n: Int =>
-        graft.ext.Curation.dupNgramCoverage(
-          replicate(docs0, "doc_id", n), "text", "doc_id", 3)
-      }, col("n_covered") > 0),
-      // boilerplate: the retag bijection preserves each replica's df
-      // structure exactly (a shingle with df=d maps to a distinct
-      // shingle with df=d), so boiler-positive docs replicate 16x while
-      // the vocabulary (df-frame size) grows 16x too — the honest
-      // growth mode for a web corpus
-      ("x42 boilerplate fraction (documents)", { n: Int =>
-        graft.ext.Curation.boilerplateFraction(replicateDocsPerturbed(n),
-          "text", "doc_id", k = 3, minDf = 3)
-      }, col("n_common") > 0))
+    private def pairTable(): Unit = {
+      // nlist for the blocked x16 twin scales WITH the corpus (constant
+      // target cell size) — the policy its docstring prescribes; fixed
+      // nlist would re-create the n^2 within ever-fatter cells.
+      // (name, scale -> pair frame, linearity witness): the witness
+      // column counts the pairs whose ~16x growth is asserted — ALL
+      // within-replica pairs for x09 (exact-verified, shingle spaces
+      // disjoint across replicas), the designed strong twins for x29
+      // (weak-pair blocking recall decays with the probe fraction by
+      // design).
+      val sameReplica = floor(col("id_a") / Stride) === floor(col("id_b") / Stride)
+      val twin = col("id_b") - col("id_a") === 50000000L
+      val pairCases: Seq[(String, Int => DataFrame, Column)] = Seq(
+        ("x09 minhash LSH pairs (documents)", n =>
+          Dedup.minhashLshPairs(retagged(n), "text", "doc_id", k = 3, threshold = 0.2),
+          sameReplica),
+        ("x29 cell-blocked embedding near-dup", n =>
+          Dedup.embeddingNearDupPairsBlocked(flipped(n),
+            threshold = 0.45, nlist = 16 * n, nprobe = 2), twin),
+        // x83's portable seeded cells under the same twin witness: nlist
+        // scales with the corpus (constant target cell size, the
+        // semanticCells docstring's sqrt(n) policy); the designed sim~1
+        // twins rank cells near-identically at any nlist, so their pair
+        // count must track the replication factor exactly while weak
+        // cross-replica sims stay scrambled
+        ("x83 semantic-dedup within-cell pairs", n =>
+          Dedup.semanticDedupPairs(Dedup.semanticCells(flipped(n), nlist = 8 * n, nprobe = 3),
+            threshold = 0.45), twin),
+        // witness = hamming-0 pairs: identical texts retag to identical
+        // texts (fingerprints equal under the bijection), so their count
+        // tracks the replication factor exactly; hamming 1-3 pairs can
+        // wobble per replica (different token hash bits) and land in
+        // `other`
+        ("x33 simhash banded pairs (documents)", n =>
+          Dedup.simhashPairs(retagged(n), "text", "doc_id"), col("hamming") === 0),
+        // containment: same disjoint-shingle-space argument as x09 — every
+        // directional pair lives within one replica, count tracks n exactly
+        ("x43 containment pairs (documents)", n =>
+          Dedup.containmentPairs(retagged(n), "text", "doc_id", k = 3, threshold = 0.3),
+          sameReplica),
+        // cross-doc dup spans: the retag bijection preserves every
+        // replica's corpus-wide gram multiplicities (disjoint gram spaces
+        // across replicas), so each replica emits the fixture's exact
+        // span set -> witness (span rows) tracks n exactly while the
+        // anchor join and merge window carry n x the duplicated anchors
+        ("x63 dup spans (documents, n=5)", n =>
+          Curation.dupSpans(retagged(n), "text", "doc_id", 5), col("span_len") >= 5),
+        // r18 keeper-preserving variant: disjoint gram spaces per replica
+        // mean each replica elects its own keepers and emits the
+        // fixture's exact NON-KEEPER span set -> span rows track n
+        // exactly; keeper election adds one grouped min-struct to the
+        // same slim-anchor plan
+        ("x133 xdoc substr spans (documents, n=5)", n =>
+          Curation.xdocSubstrSpans(retagged(n), "text", "doc_id", 5), col("span_len") >= 5),
+        // dup-ngram coverage is a WITHIN-doc metric: verbatim replication
+        // (id-remapped) is already interaction-free, every replica's
+        // per-doc output is identical -> witness 16x exactly
+        ("x46 dup-ngram coverage (documents)", n =>
+          Curation.dupNgramCoverage(docsN(n), "text", "doc_id", 3), col("n_covered") > 0),
+        // boilerplate: the retag bijection preserves each replica's df
+        // structure exactly (a shingle with df=d maps to a distinct
+        // shingle with df=d), so boiler-positive docs replicate 16x while
+        // the vocabulary (df-frame size) grows 16x too — the honest
+        // growth mode for a web corpus
+        ("x42 boilerplate fraction (documents)", n =>
+          Curation.boilerplateFraction(retagged(n), "text", "doc_id", k = 3, minDf = 3),
+          col("n_common") > 0))
 
-    // builder-iteration filter (the bench's SPARK_GRAFT_BENCH_ONLY
-    // precedent): SPARK_GRAFT_SCALE_ONLY=<substring> runs only the
-    // matching sections/witness rows — for adjudicating ONE ordering
-    // violation on a quiet box without the ~45-minute full run. A
-    // filtered run never writes SCALE.md (partial content must not
-    // replace the full document).
-    val scaleOnly = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-    def section(marker: String)(body: => Unit): Unit =
-      if (scaleOnly.forall(marker.contains(_))) body
-
-    val sb = new StringBuilder
-    sb.append("# SCALE — linear-scaling evidence (auto-generated)\n\n")
-    sb.append(s"Generated by `graft.tools.ScaleCheck` against `$sfDir` replicated\n")
-    sb.append("1x / 4x / 16x with per-replica id remapping (key cardinality\n")
-    sb.append("scales with the data). `t16/t1` near 16 = linear; well under 16 =\n")
-    sb.append("fixed overhead still dominating at this size.\n\n")
-    sb.append("| case | 1x (s) | 4x (s) | 16x (s) | t16/t1 |\n")
-    sb.append("|---|---|---|---|---|\n")
-    cases.filter(c => scaleOnly.forall(c._1.contains(_)))
-      .foreach { case (name, run) =>
-      run(1) // warm-up: codegen + JIT
-      val ts = scales.map(n => time(run(n)))
-      sb.append(f"| $name | ${ts(0)}%.2f | ${ts(1)}%.2f | ${ts(2)}%.2f | ${ts(2) / ts(0)}%.1f |\n")
-      println(f"SCALE $name ${ts.map(t => f"$t%.2f").mkString(" / ")}")
-    }
-    // blocked-decontam recall is scale-INVARIANT by construction (cell
-    // assignment depends only on the fixed benchmark, so a replicated
-    // vector probes exactly the cells its original does) — verified
-    // here rather than assumed, at 1x and 16x, OUTSIDE the timed bodies
-    sb.append("\n## Cell-blocked decontam recall vs exact (scale-invariance check)\n\n")
-    sb.append("| scale | exact flagged | blocked flagged | recall |\n|---|---|---|---|\n")
-    for (n <- Seq(1, 16)) {
-      val corpus = replicate(emb0, "vec_id", n).filter(col("vec_id") % 37 =!= 0)
-      val bench = emb0.filter(col("vec_id") % 37 === 0)
-      val nExact = graft.ext.Curation.semanticDecontam(
-        corpus, bench, threshold = 0.35).count()
-      val nBlocked = graft.ext.Curation.semanticDecontamBlocked(
-        corpus, bench, threshold = 0.35, nlist = 16, nprobe = 8).count()
-      val recall = if (nExact == 0) 1.0 else nBlocked.toDouble / nExact
-      assert(recall >= 0.85 && nBlocked <= nExact,
-        s"blocked decontam recall $recall out of band at ${n}x ($nBlocked/$nExact)")
-      sb.append(f"| ${n}x | $nExact | $nBlocked | $recall%.3f |\n")
-      println(f"SCALE x36 blocked recall ${n}x: $nBlocked/$nExact = $recall%.3f")
-    }
-
-    sb.append("\n## Near-dup pair operators (dup-structure-preserving replication)\n\n")
-    sb.append("Replicas are content-bijected (per-replica token retag for text;\n")
-    sb.append("orthogonal sign-flip for embeddings) so within-replica dup structure\n")
-    sb.append("is preserved bit-for-bit while cross-replica similarity is scrambled.\n")
-    sb.append("The `witness` column counts the pairs whose ~16x growth is ASSERTED\n")
-    sb.append("(8x..24x): all within-replica pairs for x09 (exact-verified,\n")
-    sb.append("replica shingle spaces disjoint), the designed sim~1 twins for x29 —\n")
-    sb.append("weak-pair (sim 0.45-0.55) blocking recall decays with the probe\n")
-    sb.append("fraction nprobe/nlist by construction, while strong pairs rank cells\n")
-    sb.append("near-identically at any nlist; dedup's recall claim is the strong\n")
-    sb.append("regime. `other` pairs for x29 are the fixture's weak pairs plus the\n")
-    sb.append("scaled corpus's own random-similarity tail (dim-64 scrambled cosines\n")
-    sb.append("have sd ~ 0.125, so threshold 0.45 sits ~3.6 sigma out) — they gate\n")
-    sb.append("only output rows, not candidate work. `exp = log16(t16/t1)`;\n")
-    sb.append("1.0 = linear, 2.0 = quadratic. The blocked x16 twin scales nlist\n")
-    sb.append("with the corpus (constant cell size), per its prescribed policy.\n")
-    sb.append("Asserted: exp < 1.5 and witness-pair growth linear.\n\n")
-    sb.append("| case | 1x (s / witness / other) | 4x (s / w / o) | 16x (s / w / o) | exp |\n")
-    sb.append("|---|---|---|---|---|\n")
-    pairCases.filter(c => scaleOnly.forall(c._1.contains(_)))
-      .foreach { case (name, run, witness) =>
-      run(1).count() // warm-up
-      val timed = scales.map { n =>
-        val t0 = System.nanoTime()
+      report.text("\n## Near-dup pair operators (dup-structure-preserving replication)\n\n" +
+        "Replicas are content-bijected (per-replica token retag for text;\n" +
+        "orthogonal sign-flip for embeddings) so within-replica dup structure\n" +
+        "is preserved bit-for-bit while cross-replica similarity is scrambled.\n" +
+        "The `witness` column counts the pairs whose ~16x growth is ASSERTED\n" +
+        "(8x..24x): all within-replica pairs for x09 (exact-verified,\n" +
+        "replica shingle spaces disjoint), the designed sim~1 twins for x29 —\n" +
+        "weak-pair (sim 0.45-0.55) blocking recall decays with the probe\n" +
+        "fraction nprobe/nlist by construction, while strong pairs rank cells\n" +
+        "near-identically at any nlist; dedup's recall claim is the strong\n" +
+        "regime. `other` pairs for x29 are the fixture's weak pairs plus the\n" +
+        "scaled corpus's own random-similarity tail (dim-64 scrambled cosines\n" +
+        "have sd ~ 0.125, so threshold 0.45 sits ~3.6 sigma out) — they gate\n" +
+        "only output rows, not candidate work. `exp = log16(t16/t1)`;\n" +
+        "1.0 = linear, 2.0 = quadratic. The blocked x16 twin scales nlist\n" +
+        "with the corpus (constant cell size), per its prescribed policy.\n" +
+        "Asserted: exp < 1.5 and witness-pair growth linear.\n\n")
+      report.table("case", "1x (s / witness / other)", "4x (s / w / o)", "16x (s / w / o)", "exp")
+      for ((name, pairs, witness) <- pairCases if selected(name)) {
         // one pass: total time + witness/other pair split
-        val r = run(n).agg(
-          sum(when(witness, 1L).otherwise(0L)).as("witness"),
-          sum(when(witness, 0L).otherwise(1L)).as("other"))
-          .collect()(0)
-        def get(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
-        ((System.nanoTime() - t0) / 1e9, get(0), get(1))
+        val t = timedWitness(name, maxExp = Some(1.5)) { n =>
+          val r = pairs(n).agg(sum(when(witness, 1L).otherwise(0L)).as("witness"),
+            sum(when(witness, 0L).otherwise(1L)).as("other")).collect()(0)
+          def get(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
+          (get(0), get(1))
+        } { (n, out, base) =>
+          // the structure-preserved witness pairs must track the
+          // replication factor — superlinear growth would mean
+          // cross-replica contamination of the designed dup structure,
+          // sublinear would mean the operator's recall decays with corpus
+          // size on the pairs it is supposed to hold; either invalidates
+          // the claim
+          if (n == 16) assert(out._1 >= 8L * base._1 && out._1 <= 24L * base._1,
+            s"$name: witness pairs not ~16x (${base._1} -> ${out._1})")
+        }
+        report.row(name +: t.secs.zip(t.outs).map { case (s, (w, o)) => s"${s2(s)} / $w / $o" } :+
+          s2(t.exp): _*)
       }
-      val exp = math.log(timed(2)._1 / timed(0)._1) / math.log(16.0)
-      val (w1, w16) = (timed(0)._2, timed(2)._2)
-      // the structure-preserved witness pairs must track the replication
-      // factor — superlinear growth would mean cross-replica
-      // contamination of the designed dup structure, sublinear would mean
-      // the operator's recall decays with corpus size on the pairs it is
-      // supposed to hold; either invalidates the claim
-      assert(w16 >= 8L * w1 && w16 <= 24L * w1,
-        s"$name: witness pairs not ~16x ($w1 -> $w16)")
-      assert(exp < 1.5, f"$name: growth exponent $exp%.2f not sub-quadratic")
-      sb.append(f"| $name | ${timed(0)._1}%.2f / ${timed(0)._2} / ${timed(0)._3} " +
-        f"| ${timed(1)._1}%.2f / ${timed(1)._2} / ${timed(1)._3} " +
-        f"| ${timed(2)._1}%.2f / ${timed(2)._2} / ${timed(2)._3} | $exp%.2f |\n")
-      println(f"SCALE $name exp=$exp%.2f " +
-        timed.map { case (t, w, c) => f"$t%.2f/$w/$c" }.mkString(" "))
     }
-    // --- x30 curation e2e at scale -----------------------------------
-    // The full 100 TB composition (MinHash LSH pair-finding -> CC dedup
-    // -> map-only gates -> left_anti survivor drop) over the perturbed
-    // replication. Witness: replica 0 is byte-identical to the 1x corpus
-    // and its pairs/clusters cannot cross replicas (disjoint shingle
-    // spaces), so its survivor set must be EXACTLY the 1x survivor set
-    // at every scale — any drift means the scale path silently lost (or
-    // invented) a duplicate cluster as the corpus grew.
-    sb.append("\n## Curation e2e at scale (x30 composition)\n\n")
-    sb.append("Same perturbed replication as above; survivors = gate output after\n")
-    sb.append("LSH near-dup cluster drop. Replica-0 survivor set asserted invariant\n")
-    sb.append("across scales (recall stability), exp asserted < 1.5.\n\n")
-    sb.append("| case | 1x (s / survivors) | 4x | 16x | exp |\n")
-    sb.append("|---|---|---|---|---|\n")
-    // replica 0 keeps its ORIGINAL text here (unlike the pair harness):
-    // the gates are content-sensitive (langId / stopword quality), so a
+
+    // the composed pipelines' rows: the 1x column carries their witness
+    private def expRow(name: String, t: Timed[_], at1x: Any): Unit =
+      report.row(name, s"${s2(t.secs(0))} / $at1x", s2(t.secs(1)), s2(t.secs(2)), s2(t.exp))
+
+    private def sameAsBase[T](what: String)(n: Int, out: T, base: T): Unit =
+      assert(out == base, s"$what drifted at ${n}x\n  1x: $base\n  ${n}x: $out")
+
+    // replica 0 keeps its ORIGINAL text (unlike the pair harness): the
+    // gates are content-sensitive (langId / stopword quality), so a
     // retagged replica 0 would fail the language gate and void the
     // witness. Retagged replicas >= 1 still contribute full pair-finding
     // volume (the expensive part) and are dropped only at the cheap
     // map-only gates.
-    def replicateDocsKeep0(n: Int): DataFrame =
-      (0 until n).map { i =>
-        val base = docs0.withColumn("doc_id", col("doc_id") + lit(i.toLong * 100000000L))
-        if (i == 0) base
-        else base.withColumn("text",
-          regexp_replace(col("text"), "([a-zA-Z0-9]+)", s"x${i}z$$1"))
-      }.reduce(_ union _)
-    // x110's variant: replicas >= 1 additionally exclude CJK documents —
-    // ideographs survive the [a-zA-Z0-9] retag, making them the one
-    // channel into the frozen zh reference-LM slice (see the x110
-    // section's invariance argument)
-    def replicateDocsKeep0x110(n: Int): DataFrame =
-      (0 until n).map { i =>
-        val base = docs0.withColumn("doc_id", col("doc_id") + lit(i.toLong * 100000000L))
-        if (i == 0) base
-        else base.filter(!coalesce(col("text"), lit(""))
-            .rlike("[\\x{4e00}-\\x{9fff}]"))
-          .withColumn("text",
-            regexp_replace(col("text"), "([a-zA-Z0-9]+)", s"x${i}z$$1"))
-      }.reduce(_ union _)
-    def x30Survivors(n: Int): DataFrame = {
-      val docs = replicateDocsKeep0(n)
-      val dropDups = graft.ext.Dedup.dupClusters(
-        graft.ext.Dedup.minhashLshPairs(docs, "text", "doc_id", k = 3, threshold = 0.2))
-        .filter(col("doc_id") =!= col("cluster_id")).select("doc_id")
-      graft.ext.Curation.standardGates(docs)
-        .join(dropDups, Seq("doc_id"), "left_anti")
-        .select("doc_id")
-    }
-    section("x30 curation e2e at scale") {
-      x30Survivors(1).count() // warm-up
-      val timed = scales.map { n =>
-        val t0 = System.nanoTime()
-        val replica0 = x30Survivors(n).filter(col("doc_id") < 100000000L)
-          .collect().map(_.getLong(0)).toSet
-        ((System.nanoTime() - t0) / 1e9, replica0)
-      }
-      val base = timed(0)._2
-      assert(base.nonEmpty, "x30 scale: 1x produced no survivors")
-      timed.zip(scales).foreach { case ((_, s), n) =>
-        assert(s == base,
-          s"x30 scale: replica-0 survivors drifted at ${n}x " +
+    private def keep0(n: Int) = replicas(docs0, "doc_id", n, rest = retag)
+
+    private def compositions(): Unit = {
+      // --- x30 curation e2e at scale -----------------------------------
+      // The full 100 TB composition (MinHash LSH pair-finding -> CC dedup
+      // -> map-only gates -> left_anti survivor drop) over the perturbed
+      // replication. Witness: replica 0 is byte-identical to the 1x corpus
+      // and its pairs/clusters cannot cross replicas (disjoint shingle
+      // spaces), so its survivor set must be EXACTLY the 1x survivor set
+      // at every scale — any drift means the scale path silently lost (or
+      // invented) a duplicate cluster as the corpus grew.
+      report.text("\n## Curation e2e at scale (x30 composition)\n\n" +
+        "Same perturbed replication as above; survivors = gate output after\n" +
+        "LSH near-dup cluster drop. Replica-0 survivor set asserted invariant\n" +
+        "across scales (recall stability), exp asserted < 1.5.\n\n")
+      report.table("case", "1x (s / survivors)", "4x", "16x", "exp")
+      section("x30 curation e2e at scale") {
+        val t = timedWitness("x30 e2e", maxExp = Some(1.5)) { n =>
+          val docs = keep0(n)
+          val dropDups = Dedup.dupClusters(
+            Dedup.minhashLshPairs(docs, "text", "doc_id", k = 3, threshold = 0.2))
+            .filter(col("doc_id") =!= col("cluster_id")).select("doc_id")
+          Curation.standardGates(docs).join(dropDups, Seq("doc_id"), "left_anti")
+            .select("doc_id").filter(col("doc_id") < Stride).collect().map(_.getLong(0)).toSet
+        } { (n, s, base) =>
+          assert(base.nonEmpty, "x30 scale: 1x produced no survivors")
+          assert(s == base, s"x30 scale: replica-0 survivors drifted at ${n}x " +
             s"(missing=${(base -- s).take(5)}, extra=${(s -- base).take(5)})")
-      }
-      val exp = math.log(timed(2)._1 / timed(0)._1) / math.log(16.0)
-      assert(exp < 1.5, f"x30 e2e: growth exponent $exp%.2f not sub-quadratic")
-      sb.append(f"| x30 curation e2e (LSH path) | ${timed(0)._1}%.2f / ${base.size} " +
-        f"| ${timed(1)._1}%.2f | ${timed(2)._1}%.2f | $exp%.2f |\n")
-      println(f"SCALE x30 e2e exp=$exp%.2f " +
-        timed.map { case (t, _) => f"$t%.2f" }.mkString(" "))
-
-      // x41 cross-dedup: a FIXED incoming batch against a growing
-      // existing corpus (replica 0 original, replicas >= 1 retagged).
-      // Time grows with the existing side (its signatures are recomputed
-      // here; a real refresh reuses a precomputed banded index) but the
-      // PAIR SET must not — the batch's true near-dups all live in
-      // replica 0, so the result is scale-invariant by construction,
-      // and that is asserted, not assumed.
-      sb.append("\n## Cross-dedup pair-set invariance (fixed batch, growing corpus)\n\n")
-      sb.append("| corpus scale | time (s) | cross pairs |\n|---|---|---|\n")
-      val batch = docs0.filter(col("doc_id") % 5 === 0)
-      var basePairs = -1L
-      for (n <- Seq(1, 4, 16)) {
-        val existing = replicateDocsKeep0(n).filter(col("doc_id") % 5 =!= 0)
-        val t0 = System.nanoTime()
-        val pairs = graft.ext.Dedup.crossDupPairs(batch, existing,
-          "text", "doc_id", k = 3, threshold = 0.2).count()
-        val t = (System.nanoTime() - t0) / 1e9
-        if (basePairs < 0) basePairs = pairs
-        assert(pairs == basePairs,
-          s"cross-dedup pair set changed with corpus scale: $pairs vs $basePairs at ${n}x")
-        sb.append(f"| ${n}x | $t%.2f | $pairs |\n")
-        println(f"SCALE x41 cross-dedup ${n}x: $t%.2f s, $pairs pairs")
-      }
-    }
-
-    // --- x78 composed assembly pipeline at scale ----------------------
-    // The FULL chain (merge -> cluster+survivor drop -> gates ->
-    // decontam -> mixture -> budget fill -> shuffle+manifest) over the
-    // same perturbed replication. Replica >= 1 rows carry retagged
-    // tokens, so they add full merge/cluster/pair volume (the expensive
-    // stages) but die at the content-sensitive language gate — the
-    // post-gate corpus, the mixture rates computed FROM it, the greedy
-    // fill and the export manifest are therefore provably
-    // scale-invariant. Witness: the final manifest (counts, token
-    // masses, xor membership checksums, shuffle lead docs) is
-    // BIT-IDENTICAL at every scale — one drifted row at any stage of
-    // the composition changes a checksum — and wall growth stays
-    // sub-quadratic while the corpus grows 16x.
-    section("x78 composed assembly pipeline at scale") {
-      import graft.queries.Declared
-      def manifest(n: Int): Seq[(Long, Long, Long, Long, Long)] = {
-        val docs = replicateDocsKeep0(n)
-        val union = Declared.assemblyUnion(docs)
-        val merged = Declared.assemblyMerged(union)
-        val drop = Declared.assemblyDropDups(merged)
-        Declared.assemblyResult(Declared.assemblyMixed(docs, merged, drop))
-          .collect().toSeq
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-            r.getLong(4)))
-      }
-      manifest(1) // warm-up
-      val timed = scales.map { n =>
-        val t0 = System.nanoTime()
-        val m = manifest(n)
-        ((System.nanoTime() - t0) / 1e9, m)
-      }
-      val base = timed(0)._2
-      assert(base.nonEmpty, "x78 scale: 1x produced an empty manifest")
-      timed.zip(scales).foreach { case ((_, m), n) =>
-        assert(m == base,
-          s"x78 scale: manifest drifted at ${n}x\n  1x: $base\n  ${n}x: $m")
-      }
-      val exp = math.log(timed(2)._1 / timed(0)._1) / math.log(16.0)
-      assert(exp < 1.5, f"x78 assembly e2e: growth exponent $exp%.2f not sub-quadratic")
-      sb.append("\n## Assembly e2e at scale (x78 composition)\n\n")
-      sb.append("Perturbed replication; the final export manifest asserted\n")
-      sb.append("bit-identical at every scale (xor membership checksums + shuffle\n")
-      sb.append("lead docs), wall growth exp asserted < 1.5.\n\n")
-      sb.append("| case | 1x (s / shards) | 4x | 16x | exp |\n|---|---|---|---|---|\n")
-      sb.append(f"| x78 assembly e2e | ${timed(0)._1}%.2f / ${base.size} " +
-        f"| ${timed(1)._1}%.2f | ${timed(2)._1}%.2f | $exp%.2f |\n")
-      println(f"SCALE x78 e2e exp=$exp%.2f " +
-        timed.map { case (t, _) => f"$t%.2f" }.mkString(" "))
-    }
-
-    // --- x107 line-level dedup at scale (hot-line election) -----------
-    // The r13 verdict's named scenario: a boilerplate line planted in
-    // EVERY document (a nav bar), so its occurrence list grows 16x
-    // under replication (~1M rows at 16x on sf0.1). The no-window
-    // election claim is that this hot hash never funnels an occurrence
-    // LIST anywhere: the histogram is a partial-agg'd groupBy whose
-    // hot-key work is a per-task reduce (PlanSpec pins the partial_min
-    // shape; here the WALL is witnessed sub-quadratic while the hot
-    // line's occurrences grow 16x, and the election's output is pinned:
-    // exactly ONE surviving copy of the planted line at every scale,
-    // every document accounted for).
-    section("x107 line-level dedup at scale (hot-line election)") {
-      val nav = "x107navboilerplate home products docs pricing about " +
-        "careers blog contact signin signup search"
-      val nonNull1x = docs0.filter(col("doc_id").isNotNull).count()
-      def run(n: Int): (Long, Long, Long) = {
-        val fx = replicate(docs0, "doc_id", n)
-          .withColumn("_t", concat_ws("\n", lit(nav), coalesce(col("text"), lit(""))))
-        val r = graft.ext.Dedup.lineDedupRewrite(
-            fx, "doc_id", split(col("_t"), "\n"), minDocs = 2)
-          .agg(count(lit(1)).as("docs"),
-            sum(when(col("clean_text").contains("x107navboilerplate"), 1L)
-              .otherwise(0L)).as("nav_kept"),
-            sum(col("n_dropped")).as("dropped")).head
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }
-      run(1) // warm-up
-      val timed = scales.map { n =>
-        val t0 = System.nanoTime(); val m = run(n)
-        ((System.nanoTime() - t0) / 1e9, m)
-      }
-      timed.zip(scales).foreach { case ((_, (docsN, navKept, dropped)), n) =>
-        assert(docsN == n * nonNull1x,
-          s"x107 scale: lost docs at ${n}x: $docsN vs ${n * nonNull1x}")
-        assert(navKept == 1L,
-          s"x107 scale: hot line kept $navKept copies at ${n}x (want 1)")
-        assert(dropped >= n * nonNull1x - 1,
-          s"x107 scale: ${n}x dropped only $dropped lines")
-      }
-      val exp = math.log(timed(2)._1 / timed(0)._1) / math.log(16.0)
-      assert(exp < 1.5, f"x107 line dedup: growth exponent $exp%.2f not sub-quadratic")
-      sb.append("\n## Line-level dedup at scale (x107, hot-line election)\n\n")
-      sb.append("A 12-token nav-bar line planted in EVERY document; its occurrence\n")
-      sb.append("count grows 16x under replication. Asserted at every scale: exactly\n")
-      sb.append("ONE surviving copy corpus-wide, every document present in the\n")
-      sb.append("rewrite, and sub-quadratic wall — the min-over-struct election\n")
-      sb.append("reduces the hot hash per-task (no occurrence-list window).\n\n")
-      sb.append("| case | 1x (s / hot-line occurrences) | 4x | 16x | exp |\n")
-      sb.append("|---|---|---|---|---|\n")
-      sb.append(f"| x107 line dedup rewrite | ${timed(0)._1}%.2f / $nonNull1x " +
-        f"| ${timed(1)._1}%.2f / ${4 * nonNull1x} " +
-        f"| ${timed(2)._1}%.2f / ${16 * nonNull1x} | $exp%.2f |\n")
-      println(f"SCALE x107 line dedup exp=$exp%.2f " +
-        timed.map { case (t, _) => f"$t%.2f" }.mkString(" "))
-    }
-
-    // --- x108 CCNet composition at scale (frozen 1x reference LM) -----
-    // Verbatim replicas make every line a cross-replica duplicate whose
-    // first owner is its replica-0 occurrence, so the composed chain
-    // (line election over an n-times-hotter histogram -> rebuild ->
-    // langid -> scoring -> tertiles) must emit EXACTLY the 1x tier
-    // report at every scale: replica-0 documents keep their 1x cleaned
-    // text bit-for-bit, replicas >= 1 clean to empty (sub-2-token, out
-    // of scope). One drifted election, rebuild index, language call or
-    // score anywhere in the chain changes a row; asserted bit-identical
-    // (the x78 manifest convention) while the election load grows 16x.
-    section("x108 CCNet composition at scale (frozen 1x reference LM)") {
-      import graft.queries.Declared
-      val ccLm: graft.ext.TextStats.RefLm =
-        graft.ext.TextStats.refLmTrain(Declared.ccnetCleaned(docs0),
-          "clean_text", "lang_pred",
-          col("source").isin("src0", "src1") && col("doc_id").isNotNull,
-          numBuckets = 1024)
-      def run(n: Int): Seq[String] =
-        graft.ext.TextStats.perplexityTiers(
-            Declared.ccnetCleaned(replicate(docs0, "doc_id", n)),
-            "clean_text", "lang_pred", "doc_id", ccLm)
-          .collect().toSeq.map(_.toString)
-      run(1) // warm-up
-      val timed = scales.map { n =>
-        val t0 = System.nanoTime(); val m = run(n)
-        ((System.nanoTime() - t0) / 1e9, m)
-      }
-      val base = timed(0)._2
-      assert(base.size >= 3, s"x108 scale: degenerate 1x tiers (${base.size} rows)")
-      timed.zip(scales).foreach { case ((_, m), n) =>
-        assert(m == base,
-          s"x108 scale: tier report drifted at ${n}x\n  1x: $base\n  ${n}x: $m")
-      }
-      val exp = math.log(timed(2)._1 / timed(0)._1) / math.log(16.0)
-      assert(exp < 1.5, f"x108 ccnet e2e: growth exponent $exp%.2f not sub-quadratic")
-      sb.append("\n## CCNet composition at scale (x108, frozen 1x LM)\n\n")
-      sb.append("Verbatim replication: every line's first owner stays its replica-0\n")
-      sb.append("occurrence, so the full chain's tier report is asserted\n")
-      sb.append("BIT-IDENTICAL at every scale while the line histogram load grows\n")
-      sb.append("16x; wall growth exp asserted < 1.5.\n\n")
-      sb.append("| case | 1x (s / tier rows) | 4x | 16x | exp |\n|---|---|---|---|---|\n")
-      sb.append(f"| x108 ccnet e2e | ${timed(0)._1}%.2f / ${base.size} " +
-        f"| ${timed(1)._1}%.2f | ${timed(2)._1}%.2f | $exp%.2f |\n")
-      println(f"SCALE x108 ccnet exp=$exp%.2f " +
-        timed.map { case (t, _) => f"$t%.2f" }.mkString(" "))
-    }
-
-    // --- x109 embedding outlier gate at scale --------------------------
-    // Verbatim replicas leave every per-label centroid EXACTLY invariant
-    // (the scaled-long dimension sums multiply by n in both numerator
-    // and count), so per-replica sims are bit-identical and the p10
-    // cutoff sits in the same order-statistic neighborhood; the gate's
-    // joins stay label-sized broadcasts at any corpus size. Asserted:
-    // label domain fixed, n_vecs exactly n-fold, cutoff within 1e-2,
-    // kept fraction within 2% of 1x, wall sub-quadratic.
-    section("x109 embedding outlier gate at scale") {
-      def run(n: Int): Map[Any, (Long, Double, Long)] =
-        graft.ext.Curation.embeddingOutlierGate(
-            replicate(emb0, "vec_id", n), "label", "vec_id", "embedding",
-            frac = 0.10)
-          .collect().map(r => (r.get(0), (r.getLong(1), r.getDouble(2),
-            r.getLong(3)))).toMap
-      run(1) // warm-up
-      val timed = scales.map { n =>
-        val t0 = System.nanoTime(); val m = run(n)
-        ((System.nanoTime() - t0) / 1e9, m)
-      }
-      val base = timed(0)._2
-      timed.zip(scales).foreach { case ((_, m), n) =>
-        assert(m.keySet == base.keySet, s"x109 scale: label domain changed at ${n}x")
-        m.foreach { case (lbl, (nv, thr, nk)) =>
-          val (nv1, thr1, nk1) = base(lbl)
-          assert(nv == n * nv1, s"x109 scale: $lbl n_vecs $nv vs ${n * nv1} at ${n}x")
-          assert(math.abs(thr - thr1) <= 1e-2,
-            s"x109 scale: $lbl cutoff drifted $thr1 -> $thr at ${n}x")
-          val (f, f1) = (nk.toDouble / nv, nk1.toDouble / nv1)
-          assert(math.abs(f - f1) <= 0.02,
-            s"x109 scale: $lbl kept fraction drifted $f1 -> $f at ${n}x")
         }
+        expRow("x30 curation e2e (LSH path)", t, t.outs(0).size)
+
+        // x41 cross-dedup: a FIXED incoming batch against a growing
+        // existing corpus (replica 0 original, replicas >= 1 retagged).
+        // Time grows with the existing side (its signatures are recomputed
+        // here; a real refresh reuses a precomputed banded index) but the
+        // PAIR SET must not — the batch's true near-dups all live in
+        // replica 0, so the result is scale-invariant by construction,
+        // and that is asserted, not assumed.
+        report.text("\n## Cross-dedup pair-set invariance (fixed batch, growing corpus)\n\n")
+        report.table("corpus scale", "time (s)", "cross pairs")
+        val batch = docs0.filter(col("doc_id") % 5 === 0)
+        val x41 = timedWitness("x41 cross-dedup", warmUp = false) { n =>
+          Dedup.crossDupPairs(batch, keep0(n).filter(col("doc_id") % 5 =!= 0),
+            "text", "doc_id", k = 3, threshold = 0.2).count()
+        } { (n, pairs, base) =>
+          assert(pairs == base,
+            s"cross-dedup pair set changed with corpus scale: $pairs vs $base at ${n}x")
+        }
+        for (i <- scales.indices)
+          report.row(s"${scales(i)}x", s2(x41.secs(i)), s"${x41.outs(i)}")
       }
-      val exp = math.log(timed(2)._1 / timed(0)._1) / math.log(16.0)
-      assert(exp < 1.5, f"x109 outlier gate: growth exponent $exp%.2f not sub-quadratic")
-      sb.append("\n## Embedding outlier gate at scale (x109)\n\n")
-      sb.append("Verbatim replication: centroids exactly invariant, label-sized\n")
-      sb.append("broadcast joins at any corpus size. Label domain, exact n-fold\n")
-      sb.append("n_vecs, cutoff (1e-2) and kept fraction (2%) asserted stable;\n")
-      sb.append("wall growth exp asserted < 1.5.\n\n")
-      sb.append("| case | 1x (s / labels) | 4x | 16x | exp |\n|---|---|---|---|---|\n")
-      sb.append(f"| x109 embedding outlier gate | ${timed(0)._1}%.2f / ${base.size} " +
-        f"| ${timed(1)._1}%.2f | ${timed(2)._1}%.2f | $exp%.2f |\n")
-      println(f"SCALE x109 outlier gate exp=$exp%.2f " +
-        timed.map { case (t, _) => f"$t%.2f" }.mkString(" "))
+
+      // --- x78 composed assembly pipeline at scale ----------------------
+      // The FULL chain (merge -> cluster+survivor drop -> gates ->
+      // decontam -> mixture -> budget fill -> shuffle+manifest) over the
+      // same perturbed replication. Replica >= 1 rows carry retagged
+      // tokens, so they add full merge/cluster/pair volume (the expensive
+      // stages) but die at the content-sensitive language gate — the
+      // post-gate corpus, the mixture rates computed FROM it, the greedy
+      // fill and the export manifest are therefore provably
+      // scale-invariant. Witness: the final manifest (counts, token
+      // masses, xor membership checksums, shuffle lead docs) is
+      // BIT-IDENTICAL at every scale — one drifted row at any stage of
+      // the composition changes a checksum — and wall growth stays
+      // sub-quadratic while the corpus grows 16x.
+      def manifestOf(docs: DataFrame, corpus: DataFrame): Seq[(Long, Long, Long, Long, Long)] =
+        Declared.assemblyResult(Declared.assemblyMixed(docs, corpus,
+            Declared.assemblyDropDups(corpus))).collect().toSeq
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+      def nonEmptyAndSame[T <: Iterable[_]](what: String)(n: Int, m: T, base: T): Unit = {
+        assert(base.nonEmpty, s"$what: 1x produced an empty manifest")
+        sameAsBase(s"$what: manifest")(n, m, base)
+      }
+      section("x78 composed assembly pipeline at scale") {
+        val t = timedWitness("x78 assembly e2e", maxExp = Some(1.5)) { n =>
+          val docs = keep0(n)
+          manifestOf(docs, Declared.assemblyMerged(Declared.assemblyUnion(docs)))
+        }(nonEmptyAndSame("x78 scale"))
+        report.text("\n## Assembly e2e at scale (x78 composition)\n\n" +
+          "Perturbed replication; the final export manifest asserted\n" +
+          "bit-identical at every scale (xor membership checksums + shuffle\n" +
+          "lead docs), wall growth exp asserted < 1.5.\n\n")
+        report.table("case", "1x (s / shards)", "4x", "16x", "exp")
+        expRow("x78 assembly e2e", t, t.outs(0).size)
+      }
+
+      // --- x107 line-level dedup at scale (hot-line election) -----------
+      // The r13 verdict's named scenario: a boilerplate line planted in
+      // EVERY document (a nav bar), so its occurrence list grows 16x
+      // under replication (~1M rows at 16x on sf0.1). The no-window
+      // election claim is that this hot hash never funnels an occurrence
+      // LIST anywhere: the histogram is a partial-agg'd groupBy whose
+      // hot-key work is a per-task reduce (PlanSpec pins the partial_min
+      // shape; here the WALL is witnessed sub-quadratic while the hot
+      // line's occurrences grow 16x, and the election's output is pinned:
+      // exactly ONE surviving copy of the planted line at every scale,
+      // every document accounted for).
+      section("x107 line-level dedup at scale (hot-line election)") {
+        val nav = "x107navboilerplate home products docs pricing about " +
+          "careers blog contact signin signup search"
+        val nonNull1x = docs0.filter(col("doc_id").isNotNull).count()
+        val t = timedWitness("x107 line dedup", maxExp = Some(1.5)) { n =>
+          val fx = docsN(n)
+            .withColumn("_t", concat_ws("\n", lit(nav), coalesce(col("text"), lit(""))))
+          val r = Dedup.lineDedupRewrite(fx, "doc_id", split(col("_t"), "\n"), minDocs = 2)
+            .agg(count(lit(1)).as("docs"),
+              sum(when(col("clean_text").contains("x107navboilerplate"), 1L)
+                .otherwise(0L)).as("nav_kept"),
+              sum(col("n_dropped")).as("dropped")).head
+          (r.getLong(0), r.getLong(1), r.getLong(2))
+        } { case (n, (docs, navKept, dropped), _) =>
+          assert(docs == n * nonNull1x,
+            s"x107 scale: lost docs at ${n}x: $docs vs ${n * nonNull1x}")
+          assert(navKept == 1L, s"x107 scale: hot line kept $navKept copies at ${n}x (want 1)")
+          assert(dropped >= n * nonNull1x - 1, s"x107 scale: ${n}x dropped only $dropped lines")
+        }
+        report.text("\n## Line-level dedup at scale (x107, hot-line election)\n\n" +
+          "A 12-token nav-bar line planted in EVERY document; its occurrence\n" +
+          "count grows 16x under replication. Asserted at every scale: exactly\n" +
+          "ONE surviving copy corpus-wide, every document present in the\n" +
+          "rewrite, and sub-quadratic wall — the min-over-struct election\n" +
+          "reduces the hot hash per-task (no occurrence-list window).\n\n")
+        report.table("case", "1x (s / hot-line occurrences)", "4x", "16x", "exp")
+        report.row("x107 line dedup rewrite" +: scales.indices.map(i =>
+          s"${s2(t.secs(i))} / ${scales(i) * nonNull1x}") :+ s2(t.exp): _*)
+      }
+
+      // --- x108 CCNet composition at scale (frozen 1x reference LM) -----
+      // Verbatim replicas make every line a cross-replica duplicate whose
+      // first owner is its replica-0 occurrence, so the composed chain
+      // (line election over an n-times-hotter histogram -> rebuild ->
+      // langid -> scoring -> tertiles) must emit EXACTLY the 1x tier
+      // report at every scale: replica-0 documents keep their 1x cleaned
+      // text bit-for-bit, replicas >= 1 clean to empty (sub-2-token, out
+      // of scope). One drifted election, rebuild index, language call or
+      // score anywhere in the chain changes a row; asserted bit-identical
+      // (the x78 manifest convention) while the election load grows 16x.
+      section("x108 CCNet composition at scale (frozen 1x reference LM)") {
+        val ccLm = TextStats.refLmTrain(Declared.ccnetCleaned(docs0), "clean_text", "lang_pred",
+          col("source").isin("src0", "src1") && col("doc_id").isNotNull, numBuckets = 1024)
+        val t = timedWitness("x108 ccnet e2e", maxExp = Some(1.5)) { n =>
+          TextStats.perplexityTiers(Declared.ccnetCleaned(docsN(n)),
+            "clean_text", "lang_pred", "doc_id", ccLm).collect().toSeq.map(_.toString)
+        } { (n, m, base) =>
+          assert(base.size >= 3, s"x108 scale: degenerate 1x tiers (${base.size} rows)")
+          sameAsBase("x108 scale: tier report")(n, m, base)
+        }
+        report.text("\n## CCNet composition at scale (x108, frozen 1x LM)\n\n" +
+          "Verbatim replication: every line's first owner stays its replica-0\n" +
+          "occurrence, so the full chain's tier report is asserted\n" +
+          "BIT-IDENTICAL at every scale while the line histogram load grows\n" +
+          "16x; wall growth exp asserted < 1.5.\n\n")
+        report.table("case", "1x (s / tier rows)", "4x", "16x", "exp")
+        expRow("x108 ccnet e2e", t, t.outs(0).size)
+      }
+
+      // --- x109 embedding outlier gate at scale --------------------------
+      // Verbatim replicas leave every per-label centroid EXACTLY invariant
+      // (the scaled-long dimension sums multiply by n in both numerator
+      // and count), so per-replica sims are bit-identical and the p10
+      // cutoff sits in the same order-statistic neighborhood; the gate's
+      // joins stay label-sized broadcasts at any corpus size. Asserted:
+      // label domain fixed, n_vecs exactly n-fold, cutoff within 1e-2,
+      // kept fraction within 2% of 1x, wall sub-quadratic.
+      section("x109 embedding outlier gate at scale") {
+        val t = timedWitness("x109 outlier gate", maxExp = Some(1.5)) { n =>
+          Curation.embeddingOutlierGate(embN(n), "label", "vec_id", "embedding", frac = 0.10)
+            .collect().map(r => (r.get(0), (r.getLong(1), r.getDouble(2), r.getLong(3)))).toMap
+        } { (n, m, base) =>
+          assert(m.keySet == base.keySet, s"x109 scale: label domain changed at ${n}x")
+          m.foreach { case (lbl, (nv, thr, nk)) =>
+            val (nv1, thr1, nk1) = base(lbl)
+            assert(nv == n * nv1, s"x109 scale: $lbl n_vecs $nv vs ${n * nv1} at ${n}x")
+            assert(math.abs(thr - thr1) <= 1e-2,
+              s"x109 scale: $lbl cutoff drifted $thr1 -> $thr at ${n}x")
+            val (f, f1) = (nk.toDouble / nv, nk1.toDouble / nv1)
+            assert(math.abs(f - f1) <= 0.02,
+              s"x109 scale: $lbl kept fraction drifted $f1 -> $f at ${n}x")
+          }
+        }
+        report.text("\n## Embedding outlier gate at scale (x109)\n\n" +
+          "Verbatim replication: centroids exactly invariant, label-sized\n" +
+          "broadcast joins at any corpus size. Label domain, exact n-fold\n" +
+          "n_vecs, cutoff (1e-2) and kept fraction (2%) asserted stable;\n" +
+          "wall growth exp asserted < 1.5.\n\n")
+        report.table("case", "1x (s / labels)", "4x", "16x", "exp")
+        expRow("x109 embedding outlier gate", t, t.outs(0).size)
+      }
+
+      // --- x110 CCNet-extended assembly at scale -------------------------
+      // The r14 composition (merge -> line dedup -> langid -> perplexity
+      // keep-gate -> clusters/survivors -> gates -> decontam -> mixture ->
+      // fill -> manifest) over the same perturbed replication as x78.
+      // Replicas >= 1 carry retagged tokens, so they die at the 'und'
+      // language filter BEFORE the LM ever trains — except CJK documents,
+      // whose ideographs survive the [a-zA-Z0-9] retag and would scale the
+      // zh reference histograms with n (add-one smoothing is not
+      // count-homogeneous, so zh thresholds would drift); they are the one
+      // channel that crosses the language gate and are excluded from
+      // replicas >= 1 to keep the trained slice frozen EXACTLY. The final
+      // manifest is then asserted bit-identical at every scale while the
+      // line election + merge + pair volume grows with the corpus.
+      section("x110 CCNet-extended assembly at scale") {
+        val t = timedWitness("x110 ccnet assembly", maxExp = Some(1.5)) { n =>
+          val docs = replicas(docs0, "doc_id", n, rest = i => df =>
+            retag(i)(df.filter(!coalesce(col("text"), lit("")).rlike("[\\x{4e00}-\\x{9fff}]"))))
+          val cleaned = Declared.ccnetAssemblyCleaned(docs).localCheckpoint(true)
+          val lm = TextStats.refLmTrain(cleaned, "clean_text", "lang_pred",
+            col("src") === "curated" && col("doc_id").isNotNull, numBuckets = 1024)
+          val kept = TextStats.perplexityKeep(cleaned, "clean_text",
+            "lang_pred", "doc_id", lm)
+          manifestOf(docs, cleaned.join(kept.select("doc_id"), Seq("doc_id"))
+            .select(col("doc_id"), col("clean_text").as("text"), col("src")))
+        }(nonEmptyAndSame("x110 scale"))
+        report.text("\n## CCNet-extended assembly at scale (x110 composition)\n\n" +
+          "Perturbed replication (replica >= 1 CJK docs excluded — the one\n" +
+          "retag-surviving channel into the frozen zh training slice); the\n" +
+          "final export manifest asserted bit-identical at every scale, wall\n" +
+          "growth exp asserted < 1.5.\n\n")
+        report.table("case", "1x (s / shards)", "4x", "16x", "exp")
+        expRow("x110 ccnet assembly e2e", t, t.outs(0).size)
+      }
     }
 
-    // --- x110 CCNet-extended assembly at scale -------------------------
-    // The r14 composition (merge -> line dedup -> langid -> perplexity
-    // keep-gate -> clusters/survivors -> gates -> decontam -> mixture ->
-    // fill -> manifest) over the same perturbed replication as x78.
-    // Replicas >= 1 carry retagged tokens, so they die at the 'und'
-    // language filter BEFORE the LM ever trains — except CJK documents,
-    // whose ideographs survive the [a-zA-Z0-9] retag and would scale the
-    // zh reference histograms with n (add-one smoothing is not
-    // count-homogeneous, so zh thresholds would drift); they are the one
-    // channel that crosses the language gate and are excluded from
-    // replicas >= 1 to keep the trained slice frozen EXACTLY. The final
-    // manifest is then asserted bit-identical at every scale while the
-    // line election + merge + pair volume grows with the corpus.
-    section("x110 CCNet-extended assembly at scale") {
-      import graft.queries.Declared
-      def manifest(n: Int): Seq[(Long, Long, Long, Long, Long)] = {
-        val docs = replicateDocsKeep0x110(n)
-        val cleaned = Declared.ccnetAssemblyCleaned(docs).localCheckpoint(true)
-        val lm = graft.ext.TextStats.refLmTrain(cleaned, "clean_text",
-          "lang_pred",
-          col("src") === "curated" && col("doc_id").isNotNull,
-          numBuckets = 1024)
-        val kept = graft.ext.TextStats.perplexityKeep(cleaned, "clean_text",
-          "lang_pred", "doc_id", lm)
-        val corpus = cleaned.join(kept.select("doc_id"), Seq("doc_id"))
-          .select(col("doc_id"), col("clean_text").as("text"), col("src"))
-        val drop = Declared.assemblyDropDups(corpus)
-        Declared.assemblyResult(Declared.assemblyMixed(docs, corpus, drop))
-          .collect().toSeq
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-            r.getLong(4)))
+    // the refresh rows: per-scale walls, then the row's witness cells
+    private def wallRow(name: String, secs: Seq[Double], tail: String*): Unit =
+      report.row(name +: secs.map(s2) ++: tail: _*)
+
+    // The 16x walls of a constant-delta refresh and its rebuild, asserted
+    // refresh < rebuild. With `retry`, a single-sample ordering violation
+    // at a few-percent margin is scheduling noise, so it re-times the 16x
+    // pair once and asserts on per-path minima (the bench retry
+    // discipline; the refresh == rebuild gate stays unconditional).
+    private def cheaperAt16(what: String, than: String, runs: Seq[RefreshRun[_]],
+        retry: Option[() => RefreshRun[_]] = None): (Double, Double) = {
+      val last = runs.last
+      val (ref, reb) = retry match {
+        case Some(again) if last.refresh >= last.rebuild =>
+          val r = again()
+          (math.min(last.refresh, r.refresh), math.min(last.rebuild, r.rebuild))
+        case _ => (last.refresh, last.rebuild)
       }
-      manifest(1) // warm-up
-      val timed = scales.map { n =>
-        val t0 = System.nanoTime()
-        val m = manifest(n)
-        ((System.nanoTime() - t0) / 1e9, m)
-      }
-      val base = timed(0)._2
-      assert(base.nonEmpty, "x110 scale: 1x produced an empty manifest")
-      timed.zip(scales).foreach { case ((_, m), n) =>
-        assert(m == base,
-          s"x110 scale: manifest drifted at ${n}x\n  1x: $base\n  ${n}x: $m")
-      }
-      val exp = math.log(timed(2)._1 / timed(0)._1) / math.log(16.0)
-      assert(exp < 1.5, f"x110 ccnet assembly: growth exponent $exp%.2f not sub-quadratic")
-      sb.append("\n## CCNet-extended assembly at scale (x110 composition)\n\n")
-      sb.append("Perturbed replication (replica >= 1 CJK docs excluded — the one\n")
-      sb.append("retag-surviving channel into the frozen zh training slice); the\n")
-      sb.append("final export manifest asserted bit-identical at every scale, wall\n")
-      sb.append("growth exp asserted < 1.5.\n\n")
-      sb.append("| case | 1x (s / shards) | 4x | 16x | exp |\n|---|---|---|---|---|\n")
-      sb.append(f"| x110 ccnet assembly e2e | ${timed(0)._1}%.2f / ${base.size} " +
-        f"| ${timed(1)._1}%.2f | ${timed(2)._1}%.2f | $exp%.2f |\n")
-      println(f"SCALE x110 ccnet assembly exp=$exp%.2f " +
-        timed.map { case (t, _) => f"$t%.2f" }.mkString(" "))
+      assert(ref < reb, f"$what ($ref%.2f s) not cheaper than $than ($reb%.2f s) at 16x")
+      (ref, reb)
     }
 
-    // --- x112 incremental CCNet-head refresh at scale ------------------
-    // x85's witness shape for the frozen-LM CCNet head: token-permuted
-    // replicas (langid-invariant token multisets, replica-local line
-    // content — so the election and the affected set stay delta-bound
-    // instead of rippling through verbatim line copies), the whole
-    // v1→v2 delta confined to replica 0. Witnesses: (a) refresh kept
-    // report == rebuild kept report at EVERY scale (the x112 equality
-    // under a growing standing corpus); (b) with the delta constant,
-    // refresh wall stays well under rebuild wall at 16x — only
-    // affected ∪ fresh documents re-clean/re-score, and the
-    // corpus-proportional refresh costs are the slim diff scan and
-    // hash-only histogram work.
-    section("x112 incremental CCNet-head refresh at scale") {
-      import graft.ext.{Refresh, TextStats}
-      val R0 = 100000000L
-      val lines12: org.apache.spark.sql.Column = {
-        val toks = graft.ext.Dedup.tokens(coalesce(col("text"), lit("")))
-        when(size(toks) > 0,
-          transform(sequence(lit(0),
-            floor((size(toks) + lit(11)) / lit(12)).cast("int") - 1),
-            i => array_join(slice(toks, i * lit(12) + 1, lit(12)), " ")))
-          .otherwise(array().cast("array<string>"))
-      }
-      def permuted(n: Int): DataFrame =
-        (0 until n).map { i =>
-          val base = docs0.withColumn("doc_id",
-            col("doc_id") + lit(i.toLong * R0))
-          if (i == 0) base
-          else base.withColumn("text", concat_ws(" ",
-            transform(array_sort(transform(
-              filter(split(lower(col("text")), "[^a-z0-9]+"), t => t =!= ""),
-              (tok, pos) => struct(
-                md5(concat(tok, lit(s"#$i#"), pos.cast("string"))).as("k"),
-                tok.as("t")))),
-              s => s.getField("t"))))
-        }.reduce(_ union _)
-      def v1(n: Int) = permuted(n)
-        .filter(!(col("doc_id") % 17 === 5 && col("doc_id") < R0))
-      def v2(n: Int) = permuted(n)
-        .filter(!(col("doc_id") % 19 === 7 && col("doc_id") < R0))
-        .withColumn("text",
-          when(col("doc_id") % 13 === 4 && col("doc_id") < R0,
-            concat(col("text"), lit(" spark refresh delta")))
-            .otherwise(col("text")))
-      def runC(n: Int): (Int, Double, Double, Long, Long) = {
-        // deployment shape, setup untimed: stored corpora, persisted
-        // state, frozen LM + thresholds from the v1 re-baseline
-        val base = java.nio.file.Files
-          .createTempDirectory(s"x112-scale-$n").toString
-        v1(n).write.mode("overwrite").parquet(s"$base/v1")
-        v2(n).write.mode("overwrite").parquet(s"$base/v2")
-        val v1p = spark.read.parquet(s"$base/v1")
-        val v2p = spark.read.parquet(s"$base/v2")
-        val lm = TextStats.refLmTrain(
-          v1p.withColumn("lang_pred", TextStats.langId(col("text"))),
-          "text", "lang_pred",
-          col("lang_pred") =!= "und" && col("doc_id").isNotNull,
-          numBuckets = 1024)
-        val st = Refresh.ccnetBuildState(v1p, lines12, lm).persisted(base)
-        val thr = Refresh.ccnetTailThr(st.scored)
-        val t0 = System.nanoTime()
-        val delta = Refresh.ccnetRefreshDelta(st, v1p, v2p, lines12, lm)
-        val inc = Refresh.ccnetKeptReport(delta.state2.scored, thr)
-          .collect().map(_.toSeq).toSet
-        val tRef = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val full = Refresh.ccnetKeptReport(
-            Refresh.ccnetBuildState(v2p, lines12, lm).scored, thr)
-          .collect().map(_.toSeq).toSet
-        val tReb = (System.nanoTime() - t1) / 1e9
-        assert(inc == full,
-          s"x112 scale: refresh != rebuild at ${n}x\n inc: $inc\n reb: $full")
-        // the WORK the refresh re-did, counted after the clock stops
-        // (scoredDelta is the recomputed slice; everything else
-        // carried forward)
-        val nRescored = delta.scoredDelta.count()
-        val nCorpus = v2p.count()
-        rmTree(base)
-        (n, tRef, tReb, nRescored, nCorpus)
-      }
-      val timedC = scales.map(runC)
-      // r18: the 16x WALL ordering gate is retired for this head — the
-      // two paths converged to ~4 s each after the r16 broadcast
-      // routing (fixed per-job overhead dominates this light head at
-      // fixture scale), so the wall gate was a coin flip that had to
-      // be re-adjudicated in r16, r17 AND r18. The delta-boundedness
-      // CLAIM is asserted where it is deterministic: the refresh
-      // re-scores a SCALE-INVARIANT row set (the v1→v2 delta is
-      // confined to replica 0) while the rebuild re-scores the whole
-      // corpus — recomputed-row counts cannot be scheduling noise.
-      // Walls stay in the table as information. (x121's wall gate
-      // KEEPS its teeth — extraction dominates there by construction,
-      // 6.6 s vs 45.6 s at 16x.)
-      val (_, _, _, rescored1, corpus1) = timedC(0)
-      val (_, _, _, rescored16, corpus16) = timedC(2)
-      // not exactly invariant: ORDER-INVARIANT short lines (single-token
-      // chunks) coincide across the token-permuted replicas, so a few
-      // election flips couple replicas weakly — measured 548 → 1216
-      // rows for a 16x corpus, i.e. 2.2x where the rebuild pays 16x
-      assert(rescored16 <= 4 * rescored1,
-        s"x112 scale: recomputed rows not delta-bound " +
-          s"($rescored1 at 1x vs $rescored16 at 16x — rebuild-like growth)")
-      assert(corpus16 >= 15 * corpus1 && rescored16 * 8 < corpus16,
-        s"x112 scale: delta not << corpus at 16x " +
-          s"($rescored16 rescored vs $corpus16 corpus rows)")
-      sb.append("\n## Incremental CCNet-head refresh at scale (x112, constant delta)\n\n")
-      sb.append("Token-permuted replication (replica-local lines, langid-invariant);\n")
-      sb.append("the v1->v2 delta lives in replica 0. Refresh kept report asserted ==\n")
-      sb.append("rebuild at every scale; delta-boundedness asserted on recomputed-ROW\n")
-      sb.append("counts (sub-linear for the refresh — order-invariant short lines\n")
-      sb.append("couple replicas weakly — corpus-sized for the\n")
-      sb.append("rebuild) — the r18 rule: the two walls converged to ~4 s of fixed\n")
-      sb.append("per-job overhead at fixture scale, so a wall ordering there is\n")
-      sb.append("scheduling noise, not evidence. Walls below are informational.\n\n")
-      sb.append("| case | 1x (s) | 4x (s) | 16x (s) | rescored rows 1x/16x |\n|---|---|---|---|---|\n")
-      sb.append(f"| x112 refresh (delta fixed) | ${timedC(0)._2}%.2f | " +
-        f"${timedC(1)._2}%.2f | ${timedC(2)._2}%.2f | $rescored1/$rescored16 |\n")
-      sb.append(f"| x112 full rebuild | ${timedC(0)._3}%.2f | " +
-        f"${timedC(1)._3}%.2f | ${timedC(2)._3}%.2f | $corpus1/$corpus16 |\n")
-      println(f"SCALE x112 refresh " +
-        timedC.map { case (_, a, b, _, _) => f"$a%.2f/$b%.2f" }.mkString(" ") +
-        s" rescored=$rescored1/$rescored16 corpus=$corpus1/$corpus16")
-    }
-
-    // --- x136 incremental cross-doc substring refresh at scale ---------
-    // The r18 substring-dedup family's deployment frame, under the x112
-    // discipline: retag-bijected replication (disjoint window spaces per
-    // replica), the v1->v2 delta confined to replica 0 (removed %19
-    // slice, changed %13 marker append, fresh full-duplicate copies of
-    // the %23 slice under new ids above their sources). Disjoint spaces
-    // make every mark flip replica-0-local, so the recut row set is
-    // IDENTICAL at every scale — asserted exactly, the deterministic
-    // delta-boundedness claim — while the rebuild's cut output is
-    // corpus-sized. Refresh == rebuild asserted bit-for-bit by a
-    // distributed full-outer compare (no corpus collect). Walls stay
-    // informational (the r18 x112 rule: row counts, not schedulers).
-    section("x136 incremental xdoc-substr refresh at scale") {
-      import graft.ext.Refresh
-      val R0 = 100000000L
-      def v1p(n: Int): DataFrame =
-        replicateDocsPerturbed(n).filter(col("doc_id").isNotNull)
-      def v2p(n: Int): DataFrame = {
-        val base = v1p(n)
-        base.filter(!(col("doc_id") < R0 && col("doc_id") % 19 === 7))
-          .withColumn("text",
-            when(col("doc_id") < R0 && col("doc_id") % 13 === 4,
-              concat(col("text"), lit(" x136 scale delta")))
-              .otherwise(col("text")))
-          .unionByName(base
-            .filter(col("doc_id") < R0 && col("doc_id") % 23 === 3)
-            .withColumn("doc_id", col("doc_id") + 50000000L))
-      }
-      def run(n: Int): (Double, Double, Long, Long) = {
-        // deployment shape, setup untimed: persisted+reloaded standing
-        // state, the v2 corpus store checkpointed once (both paths
-        // read it)
-        val base = java.nio.file.Files
-          .createTempDirectory("graft-x136-scale").toString
-        val st = Refresh.xdocBuildState(v1p(n), "text", "doc_id", 5)
-          .persisted(base)
-        val v2 = v2p(n).localCheckpoint(true)
-        val t0 = System.nanoTime()
-        val d = Refresh.xdocRefresh(st, v2, "text", "doc_id", 5)
-        val cut2 = d.state2.cut.localCheckpoint(true)
-        val tRef = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val full = graft.ext.Curation.cutXdocSubstr(v2, "text", "doc_id", 5)
-          .localCheckpoint(true)
-        val tReb = (System.nanoTime() - t1) / 1e9
-        val bad = full.as("f").join(cut2.as("i"), Seq("doc_id"), "full_outer")
-          .filter(!(col("f.n_tokens") <=> col("i.n_tokens")) ||
-            !(col("f.n_cut") <=> col("i.n_cut")) ||
-            !(col("f.clean_text") <=> col("i.clean_text"))).count()
-        assert(bad == 0L,
-          s"x136 scale: refresh != rebuild at ${n}x ($bad mismatched rows)")
-        val nRecut = d.recut.count()
-        val nCorpus = full.count()
-        rmTree(base)
-        (tRef, tReb, nRecut, nCorpus)
-      }
-      val timed = scales.map(run)
-      val (_, _, recut1, corpus1) = timed(0)
-      val (_, _, recut16, corpus16) = timed(2)
-      assert(recut16 == recut1,
-        s"x136 scale: recut set not replica-0-confined " +
-          s"($recut1 at 1x vs $recut16 at 16x)")
-      assert(corpus16 >= 15 * corpus1 && recut16 * 8 < corpus16,
-        s"x136 scale: delta not << corpus at 16x " +
-          s"($recut16 recut vs $corpus16 corpus rows)")
-      sb.append("\n## Incremental cross-doc substring refresh at scale (x136, constant delta)\n\n")
-      sb.append("Retag-bijected replication (disjoint window spaces); the v1->v2 delta\n")
-      sb.append("lives in replica 0. Refresh cut corpus asserted == rebuild bit-for-bit\n")
-      sb.append("at every scale (distributed compare); delta-boundedness asserted on\n")
-      sb.append("recut-ROW counts — the recut set is exactly scale-invariant while the\n")
-      sb.append("rebuild re-cuts the whole corpus. Walls informational.\n\n")
-      sb.append("| case | 1x (s) | 4x (s) | 16x (s) | recut/corpus rows 1x,16x |\n|---|---|---|---|---|\n")
-      sb.append(f"| x136 refresh (delta fixed) | ${timed(0)._1}%.2f | " +
-        f"${timed(1)._1}%.2f | ${timed(2)._1}%.2f | $recut1/$corpus1, $recut16/$corpus16 |\n")
-      sb.append(f"| x136 full rebuild | ${timed(0)._2}%.2f | " +
-        f"${timed(1)._2}%.2f | ${timed(2)._2}%.2f | — |\n")
-      println(f"SCALE x136 refresh " +
-        timed.map { case (a, b, _, _) => f"$a%.2f/$b%.2f" }.mkString(" ") +
-        s" recut=$recut1/$recut16 corpus=$corpus1/$corpus16")
-    }
-
-    // --- x114 incremental CCNet-extended ASSEMBLY refresh at scale -----
-    // The composed chain under x112's witness shape: token-permuted
-    // replicas, the whole v1→v2 delta confined to replica 0, merged
-    // corpora + the full AsmState persisted untimed (stored corpora +
-    // the cross-job state hand-off). Witnesses: (a) refresh manifest ==
-    // rebuild manifest at EVERY scale (the x114 equality under a
-    // growing standing corpus); (b) with the delta constant, refresh
-    // wall stays under rebuild wall at 16x — the rebuild re-cleans,
-    // re-scores, re-shingles and re-clusters the whole corpus while the
-    // refresh pays slim diff/histogram scans plus delta-bound text
-    // work.
-    section("x114 incremental CCNet-extended ASSEMBLY refresh at scale") {
-      import graft.ext.{Refresh, TextStats}
-      import graft.queries.Declared
-      val R0 = 100000000L
-      val lines12: org.apache.spark.sql.Column = {
-        val toks = graft.ext.Dedup.tokens(coalesce(col("text"), lit("")))
-        when(size(toks) > 0,
-          transform(sequence(lit(0),
-            floor((size(toks) + lit(11)) / lit(12)).cast("int") - 1),
-            i => array_join(slice(toks, i * lit(12) + 1, lit(12)), " ")))
-          .otherwise(array().cast("array<string>"))
-      }
-      def permuted(n: Int): DataFrame =
-        (0 until n).map { i =>
-          val base = docs0.withColumn("doc_id",
-            col("doc_id") + lit(i.toLong * R0))
-          if (i == 0) base
-          else base.withColumn("text", concat_ws(" ",
-            transform(array_sort(transform(
-              filter(split(lower(col("text")), "[^a-z0-9]+"), t => t =!= ""),
-              (tok, pos) => struct(
-                md5(concat(tok, lit(s"#$i#"), pos.cast("string"))).as("k"),
-                tok.as("t")))),
-              s => s.getField("t"))))
-        }.reduce(_ union _)
-      def v1(n: Int) = permuted(n)
-        .filter(!(col("doc_id") % 17 === 5 && col("doc_id") < R0))
-      def v2(n: Int) = permuted(n)
-        .filter(!(col("doc_id") % 19 === 7 && col("doc_id") < R0))
-        .withColumn("text",
-          when(col("doc_id") % 13 === 4 && col("doc_id") < R0,
-            concat(col("text"), lit(" spark refresh delta")))
-            .otherwise(col("text")))
+    private def refreshes(): Unit = {
+      val lines12 = Declared.tokenLines12
+      def versions(n: Int) = (refreshReplicas(docs0, n, Declared.refreshV1),
+        refreshReplicas(docs0, n, Declared.refreshV2))
+      def langLm(v: DataFrame) = TextStats.refLmTrain(
+        v.withColumn("lang_pred", TextStats.langId(col("text"))), "text", "lang_pred",
+        col("lang_pred") =!= "und" && col("doc_id").isNotNull, numBuckets = 1024)
+      def mergedLm(m: DataFrame) = TextStats.refLmTrain(Declared.ccnetCleanedOfMerged(m),
+        "clean_text", "lang_pred", col("src") === "curated" && col("doc_id").isNotNull,
+        numBuckets = 1024)
+      def merged(docs: DataFrame) = Declared.assemblyMerged(Declared.assemblyUnion(docs))
       val bench = docs0.filter(col("doc_id") % 37 === 0)
-      val timedA = scales.map { n =>
-        val base = java.nio.file.Files
-          .createTempDirectory(s"x114-scale-$n").toString
-        Declared.assemblyMerged(Declared.assemblyUnion(v1(n)))
-          .write.mode("overwrite").parquet(s"$base/m1")
-        Declared.assemblyMerged(Declared.assemblyUnion(v2(n)))
-          .write.mode("overwrite").parquet(s"$base/m2")
-        val m1 = spark.read.parquet(s"$base/m1")
-        val m2 = spark.read.parquet(s"$base/m2")
-        val lm = TextStats.refLmTrain(Declared.ccnetCleanedOfMerged(m1),
-          "clean_text", "lang_pred",
-          col("src") === "curated" && col("doc_id").isNotNull,
-          numBuckets = 1024)
-        val thr = Refresh.ccnetTailThr(
-          Refresh.ccnetBuildState(m1, lines12, lm).scored)
-        val st = Refresh.asmBuildState(m1, lines12, lm, thr, bench)
-          .persisted(base)
-        val t0 = System.nanoTime()
-        val st2 = Refresh.asmRefresh(st, m1, m2, lines12, lm, thr, bench)
-        val inc = Refresh.asmManifestFrom(st2.dedup.meta, st2.clusters)
-          .collect().map(_.toSeq).toSet
-        val tRef = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val fullSt = Refresh.asmBuildState(m2, lines12, lm, thr, bench)
-        val full = Refresh.asmManifestFrom(fullSt.dedup.meta, fullSt.clusters)
-          .collect().map(_.toSeq).toSet
-        val tReb = (System.nanoTime() - t1) / 1e9
-        assert(inc == full,
-          s"x114 scale: refresh != rebuild at ${n}x\n inc: $inc\n reb: $full")
-        rmTree(base)
-        (n, tRef, tReb)
-      }
-      val (_, ref16a, reb16a) = timedA(2)
-      assert(ref16a < reb16a,
-        f"x114 scale: constant-delta assembly refresh ($ref16a%.2f s) not " +
-          f"cheaper than rebuild ($reb16a%.2f s) at 16x")
-      sb.append("\n## Incremental CCNet-extended ASSEMBLY refresh at scale (x114, constant delta)\n\n")
-      sb.append("x112's witness shape composed through all eleven stages: merged\n")
-      sb.append("corpora + full AsmState persisted untimed; refresh manifest asserted\n")
-      sb.append("== rebuild manifest at every scale; constant-delta refresh asserted\n")
-      sb.append("cheaper than the rebuild at 16x.\n\n")
-      sb.append("| case | 1x (s) | 4x (s) | 16x (s) |\n|---|---|---|---|\n")
-      sb.append(f"| x114 assembly refresh (delta fixed) | ${timedA(0)._2}%.2f | " +
-        f"${timedA(1)._2}%.2f | ${timedA(2)._2}%.2f |\n")
-      sb.append(f"| x114 assembly full rebuild | ${timedA(0)._3}%.2f | " +
-        f"${timedA(1)._3}%.2f | ${timedA(2)._3}%.2f |\n")
-      println(f"SCALE x114 assembly refresh " +
-        timedA.map { case (_, a, b) => f"$a%.2f/$b%.2f" }.mkString(" "))
-    }
 
-    // --- x121 web-pipeline refresh at scale ----------------------------
-    // The x112 witness with EXTRACTION composed in front: corpora stored
-    // as RAW MARKUP (each token-permuted doc wrapped in the
-    // deterministic x113 page), the whole v1→v2 delta in replica 0.
-    // Witnesses: (a) markup-diff refresh kept report == full-extraction
-    // rebuild kept report at EVERY scale (webExtractRefresh's purity
-    // argument, asserted); (b) with the delta constant, refresh wall <
-    // rebuild wall at 16x — the rebuild re-extracts and re-scores the
-    // whole corpus while the refresh extracts only the delta pages.
-    section("x121 web-pipeline refresh at scale") {
-      import graft.ext.{Extract, Refresh, TextStats}
-      val R0 = 100000000L
-      val lines12: org.apache.spark.sql.Column = {
-        val toks = graft.ext.Dedup.tokens(coalesce(col("text"), lit("")))
-        when(size(toks) > 0,
-          transform(sequence(lit(0),
-            floor((size(toks) + lit(11)) / lit(12)).cast("int") - 1),
-            i => array_join(slice(toks, i * lit(12) + 1, lit(12)), " ")))
-          .otherwise(array().cast("array<string>"))
-      }
-      def permuted(n: Int): DataFrame =
-        (0 until n).map { i =>
-          val base = docs0.withColumn("doc_id",
-            col("doc_id") + lit(i.toLong * R0))
-          if (i == 0) base
-          else base.withColumn("text", concat_ws(" ",
-            transform(array_sort(transform(
-              filter(split(lower(col("text")), "[^a-z0-9]+"), t => t =!= ""),
-              (tok, pos) => struct(
-                md5(concat(tok, lit(s"#$i#"), pos.cast("string"))).as("k"),
-                tok.as("t")))),
-              s => s.getField("t"))))
-        }.reduce(_ union _)
-      def v1(n: Int) = permuted(n)
-        .filter(!(col("doc_id") % 17 === 5 && col("doc_id") < R0))
-      def v2(n: Int) = permuted(n)
-        .filter(!(col("doc_id") % 19 === 7 && col("doc_id") < R0))
-        .withColumn("text",
-          when(col("doc_id") % 13 === 4 && col("doc_id") < R0,
-            concat(col("text"), lit(" spark refresh delta")))
-            .otherwise(col("text")))
-      // r18: pad every page with a deterministic link-farm band. The
-      // band is DROPPED by the keep rule (anchor share), so extracted
-      // text — and the refresh == rebuild equality assert — is
-      // byte-identical with or without it; what it changes is the COST
-      // shape: the fixture's one-paragraph pages are so light that
-      // block parsing was a rounding error next to the shared head
-      // fold, and the 16x ordering (refresh < rebuild) sat on a
-      // few-percent margin that r17's (documented) heavier extraction
-      // erased — an r16-code control read fold 15.5 s vs rebuild
-      // 15.3 s, i.e. the margin never priced extraction at all. Real
-      // crawl pages are markup-dominated; the pad restores that ratio
-      // so the witness prices the claim it states (the rebuild
-      // re-parses every page, the refresh parses only the delta).
-      val padMarkup = (1 to 12).map(j =>
-        s"""<div><p><a href="/pad$j">pad link farm $j one two three """ +
-          "four five six seven eight nine ten</a></p></div>").mkString
-      def wrapped(df: DataFrame): DataFrame =
-        df.select(col("doc_id"), col("source"),
-          regexp_replace(Extract.htmlWrap(col("doc_id"), col("text")),
-            "<footer>", padMarkup + "<footer>").as("html"))
-      def extractAll(html: DataFrame): DataFrame =
-        html.withColumn("text", Extract.htmlToText(col("html")))
-          .select("doc_id", "source", "text")
-      def runW(n: Int): (Int, Double, Double) = {
-        // deployment shape, setup untimed: stored MARKUP corpora, the
-        // standing extracted corpus, persisted head state, frozen LM
-        val base = java.nio.file.Files
-          .createTempDirectory(s"x121-scale-$n").toString
-        wrapped(v1(n)).write.mode("overwrite").parquet(s"$base/h1")
-        wrapped(v2(n)).write.mode("overwrite").parquet(s"$base/h2")
-        val h1 = spark.read.parquet(s"$base/h1")
-        val h2 = spark.read.parquet(s"$base/h2")
-        extractAll(h1).write.mode("overwrite").parquet(s"$base/ex1")
-        val ex1 = spark.read.parquet(s"$base/ex1")
-        val lm = TextStats.refLmTrain(
-          ex1.withColumn("lang_pred", TextStats.langId(col("text"))),
-          "text", "lang_pred",
-          col("lang_pred") =!= "und" && col("doc_id").isNotNull,
-          numBuckets = 1024)
-        val st = Refresh.ccnetBuildState(ex1, lines12, lm).persisted(base)
-        val thr = Refresh.ccnetTailThr(st.scored)
-        val t0 = System.nanoTime()
-        // timed INCLUDING the one-shot materialization — deployment
-        // writes the refreshed corpus as the new standing store; the
-        // fold then reads it instead of replaying the corpus-sized
-        // markup diff per consumption (the declared x121 shape)
-        val ex2 = Refresh.webExtractRefresh(ex1, h1, h2)
-          .localCheckpoint(true)
-        val inc = Refresh.ccnetKeptReport(
-            Refresh.ccnetRefresh(st, ex1, ex2, lines12, lm).scored, thr)
-          .collect().map(_.toSeq).toSet
-        val tRef = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val full = Refresh.ccnetKeptReport(
-            Refresh.ccnetBuildState(extractAll(h2), lines12, lm).scored, thr)
-          .collect().map(_.toSeq).toSet
-        val tReb = (System.nanoTime() - t1) / 1e9
-        assert(inc == full,
-          s"x121 scale: web refresh != rebuild at ${n}x\n inc: $inc\n reb: $full")
-        rmTree(base)
-        (n, tRef, tReb)
-      }
-      val timedW = scales.map(runW)
-      val (_, ref16wa, reb16wa) = timedW(2)
-      // same margin class as x112 after the r16 broadcast routing: a
-      // single-sample ordering violation at a few-percent margin is
-      // scheduling noise, so a violated ordering re-times the 16x pair
-      // once and asserts on per-path minima (the bench retry
-      // discipline; the hard refresh == rebuild gate is unconditional
-      // inside runW above)
-      val (ref16w, reb16w) =
-        if (ref16wa < reb16wa) (ref16wa, reb16wa)
-        else {
-          val (_, r2, b2) = runW(16)
-          (math.min(ref16wa, r2), math.min(reb16wa, b2))
+      // --- x112 incremental CCNet-head refresh at scale ------------------
+      // x85's witness shape for the frozen-LM CCNet head: token-permuted
+      // replicas (langid-invariant token multisets, replica-local line
+      // content — so the election and the affected set stay delta-bound
+      // instead of rippling through verbatim line copies), the whole
+      // v1→v2 delta confined to replica 0. Witnesses: (a) refresh kept
+      // report == rebuild kept report at EVERY scale (the x112 equality
+      // under a growing standing corpus); (b) with the delta constant,
+      // refresh wall stays well under rebuild wall at 16x — only
+      // affected ∪ fresh documents re-clean/re-score, and the
+      // corpus-proportional refresh costs are the slim diff scan and
+      // hash-only histogram work.
+      section("x112 incremental CCNet-head refresh at scale") {
+        val runs = scales.map { n =>
+          val (v1, v2) = versions(n)
+          refreshAtScale("x112", n, v1, v2) { (dir, v1p, v2p) =>
+            // deployment shape, setup untimed: stored corpora, persisted
+            // state, frozen LM + thresholds from the v1 re-baseline
+            val lm = langLm(v1p)
+            val st = Refresh.ccnetBuildState(v1p, lines12, lm).persisted(dir)
+            val thr = Refresh.ccnetTailThr(st.scored)
+            legs({
+              val delta = Refresh.ccnetRefreshDelta(st, v1p, v2p, lines12, lm)
+              (rowSet(Refresh.ccnetKeptReport(delta.state2.scored, thr)), delta)
+            }, rowSet(Refresh.ccnetKeptReport(
+              Refresh.ccnetBuildState(v2p, lines12, lm).scored, thr)))(
+              (inc, full) => sameRows(inc._1, full))(
+              // the WORK the refresh re-did, counted after the clock stops
+              // (scoredDelta is the recomputed slice; everything else
+              // carried forward)
+              (inc, _) => (inc._2.scoredDelta.count(), v2p.count()))
+          }
         }
-      assert(ref16w < reb16w,
-        f"x121 scale: constant-delta web refresh ($ref16w%.2f s) not cheaper " +
-          f"than extract-everything rebuild ($reb16w%.2f s) at 16x")
-      sb.append("\n## Web-pipeline refresh at scale (x121, constant delta)\n\n")
-      sb.append("The x112 witness with extraction composed in front: markup corpora\n")
-      sb.append("stored, the delta in replica 0. Refresh (markup diff -> delta-only\n")
-      sb.append("extraction -> head fold) kept report asserted == full-extraction\n")
-      sb.append("rebuild at every scale; constant-delta refresh asserted cheaper than\n")
-      sb.append("the rebuild at 16x.\n\n")
-      sb.append("| case | 1x (s) | 4x (s) | 16x (s) |\n|---|---|---|---|\n")
-      // 16x prints the adjudicated pair (per-path minima when the
-      // single-sample ordering was re-timed), matching the assert
-      sb.append(f"| x121 web refresh (delta fixed) | ${timedW(0)._2}%.2f | " +
-        f"${timedW(1)._2}%.2f | $ref16w%.2f |\n")
-      sb.append(f"| x121 full re-extract rebuild | ${timedW(0)._3}%.2f | " +
-        f"${timedW(1)._3}%.2f | $reb16w%.2f |\n")
-      println(f"SCALE x121 web refresh " +
-        timedW.map { case (_, a, b) => f"$a%.2f/$b%.2f" }.mkString(" "))
-    }
+        // r18: the 16x WALL ordering gate is retired for this head — the
+        // two paths converged to ~4 s each after the r16 broadcast
+        // routing (fixed per-job overhead dominates this light head at
+        // fixture scale), so the wall gate was a coin flip that had to
+        // be re-adjudicated in r16, r17 AND r18. The delta-boundedness
+        // CLAIM is asserted where it is deterministic: the refresh
+        // re-scores a SCALE-INVARIANT row set (the v1→v2 delta is
+        // confined to replica 0) while the rebuild re-scores the whole
+        // corpus — recomputed-row counts cannot be scheduling noise.
+        // Walls stay in the table as information. (x121's wall gate
+        // KEEPS its teeth — extraction dominates there by construction,
+        // 6.6 s vs 45.6 s at 16x.)
+        val (rescored1, corpus1) = runs.head.witness
+        val (rescored16, corpus16) = runs.last.witness
+        // not exactly invariant: ORDER-INVARIANT short lines (single-token
+        // chunks) coincide across the token-permuted replicas, so a few
+        // election flips couple replicas weakly — measured 548 → 1216
+        // rows for a 16x corpus, i.e. 2.2x where the rebuild pays 16x
+        assert(rescored16 <= 4 * rescored1,
+          s"x112 scale: recomputed rows not delta-bound " +
+            s"($rescored1 at 1x vs $rescored16 at 16x — rebuild-like growth)")
+        assert(corpus16 >= 15 * corpus1 && rescored16 * 8 < corpus16,
+          s"x112 scale: delta not << corpus at 16x " +
+            s"($rescored16 rescored vs $corpus16 corpus rows)")
+        report.text("\n## Incremental CCNet-head refresh at scale (x112, constant delta)\n\n" +
+          "Token-permuted replication (replica-local lines, langid-invariant);\n" +
+          "the v1->v2 delta lives in replica 0. Refresh kept report asserted ==\n" +
+          "rebuild at every scale; delta-boundedness asserted on recomputed-ROW\n" +
+          "counts (sub-linear for the refresh — order-invariant short lines\n" +
+          "couple replicas weakly — corpus-sized for the\n" +
+          "rebuild) — the r18 rule: the two walls converged to ~4 s of fixed\n" +
+          "per-job overhead at fixture scale, so a wall ordering there is\n" +
+          "scheduling noise, not evidence. Walls below are informational.\n\n")
+        report.table("case", "1x (s)", "4x (s)", "16x (s)", "rescored rows 1x/16x")
+        wallRow("x112 refresh (delta fixed)", runs.map(_.refresh), s"$rescored1/$rescored16")
+        wallRow("x112 full rebuild", runs.map(_.rebuild), s"$corpus1/$corpus16")
+      }
 
-    // --- x131 crawl-assembly refresh at scale --------------------------
-    // The r17 composition's duality under the standing witness shape:
-    // token-permuted replicas (replica-local line structure), real
-    // on-disk WARC containers for both snapshots, the v2 delta (changed
-    // pages + new URLs) confined to replica 0, URL index + extracted
-    // corpus + full AsmState persisted untimed (the cross-job
-    // hand-off). Witnesses: (a) refresh manifest == rebuild manifest at
-    // EVERY scale; (b) with the delta constant, the index-fold refresh
-    // stays under the read-everything rebuild at 16x — the rebuild
-    // re-reads BOTH containers, re-dedups every URL, re-extracts every
-    // keeper and rebuilds the assembly state, while the refresh pays a
-    // v2-container read, an index-sized fold and delta-bound
-    // extraction/assembly work.
-    section("x131 crawl-assembly refresh at scale") {
-      import graft.ext.{Refresh, TextStats, Urls}
-      import graft.queries.Declared
-      import graft.sources.FileSources
-      val R0 = 100000000L
-      val V2Off = 1000000000000L // past every replica's v1 fetch ids
-      val lines12: org.apache.spark.sql.Column = {
-        val toks = graft.ext.Dedup.tokens(coalesce(col("text"), lit("")))
-        when(size(toks) > 0,
-          transform(sequence(lit(0),
-            floor((size(toks) + lit(11)) / lit(12)).cast("int") - 1),
-            i => array_join(slice(toks, i * lit(12) + 1, lit(12)), " ")))
-          .otherwise(array().cast("array<string>"))
-      }
-      def permuted(n: Int): DataFrame =
-        (0 until n).map { i =>
-          val base = docs0.withColumn("doc_id",
-            col("doc_id") + lit(i.toLong * R0))
-          if (i == 0) base
-          else base.withColumn("text", concat_ws(" ",
-            transform(array_sort(transform(
-              filter(split(lower(col("text")), "[^a-z0-9]+"), t => t =!= ""),
-              (tok, pos) => struct(
-                md5(concat(tok, lit(s"#c$i#"), pos.cast("string"))).as("k"),
-                tok.as("t")))),
-              s => s.getField("t"))))
-        }.reduce(_ union _)
-      def v1docs(n: Int): DataFrame = permuted(n)
-        .filter(!(col("doc_id") % 17 === 5 && col("doc_id") < R0))
-      def v2docs(): DataFrame = permuted(1)
-        .filter(col("doc_id") % 13 === 4 || col("doc_id") % 23 === 3)
-        .withColumn("text", when(col("doc_id") % 13 === 4,
-          concat(coalesce(col("text"), lit("")), lit(" crawl refresh delta")))
-          .otherwise(col("text")))
-      def runX(n: Int): (Int, Double, Double) = {
-        val base = java.nio.file.Files
-          .createTempDirectory(s"x131-scale-$n").toString
-        FileSources.writeWarc(
-          Declared.crawlRecords(v1docs(n), col("doc_id")), s"$base/v1")
-        FileSources.writeWarc(
-          Declared.crawlRecords(v2docs(), col("doc_id") + V2Off,
-            Some(Declared.crawlV2Url)), s"$base/v2")
-        val pages1 = Declared.crawlPages(
-          FileSources.readWarc(spark, s"$base/v1"))
-        graft.ext.Artifacts.saveIndex(
-          Urls.urlDedup(pages1.select(col("url"), col("fetch_id")),
-            "url", "fetch_id", latestWins = true), s"$base/idx1")
-        val idx1 = graft.ext.Artifacts.loadIndex(spark, s"$base/idx1")
-        graft.ext.Artifacts.saveIndex(
-          Declared.crawlKeeperCorpus(pages1,
-            idx1.select(col("keeper_id").as("fetch_id"))), s"$base/ex1")
-        val ex1 = graft.ext.Artifacts.loadIndex(spark, s"$base/ex1")
-        val merged1 = Declared.assemblyMerged(Declared.assemblyUnion(ex1))
-          .localCheckpoint(true)
-        val bench = docs0.filter(col("doc_id") % 37 === 0)
-        val lm = TextStats.refLmTrain(Declared.ccnetCleanedOfMerged(merged1),
-          "clean_text", "lang_pred",
-          col("src") === "curated" && col("doc_id").isNotNull,
-          numBuckets = 1024)
-        val thr = Refresh.ccnetTailThr(
-          Refresh.ccnetBuildState(merged1, lines12, lm).scored)
-        val st = Refresh.asmBuildState(merged1, lines12, lm, thr, bench,
-          Declared.CrawlAsmParams).persisted(base)
-        val t0 = System.nanoTime()
-        val pages2 = Declared.crawlPages(
-            FileSources.readWarc(spark, s"$base/v2"))
-          .localCheckpoint(true)
-        val idx2 = Urls.urlDedupRefresh(idx1,
-          pages2.select(col("url"), col("fetch_id")), "url", "fetch_id",
-          latestWins = true)
-        val ex2 = Refresh.crawlExtractRefresh(ex1, idx1, idx2, pages2)
-        val merged2 = Declared.assemblyMerged(Declared.assemblyUnion(ex2))
-          .localCheckpoint(true)
-        val st2 = Refresh.asmRefresh(st, merged1, merged2, lines12, lm,
-          thr, bench, Declared.CrawlAsmParams)
-        val inc = Refresh.asmManifestFrom(st2.dedup.meta, st2.clusters)
-          .collect().map(_.toSeq).toSet
-        val tRef = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val pagesAll = Declared.crawlPages(
-            FileSources.readWarc(spark, s"$base/v1"))
-          .unionByName(pages2)
-        val keepAll = Urls.urlDedup(
-            pagesAll.select(col("url"), col("fetch_id")), "url", "fetch_id",
-            latestWins = true)
-          .select(col("keeper_id").as("fetch_id"))
-        val mergedF = Declared.assemblyMerged(Declared.assemblyUnion(
-            Declared.crawlKeeperCorpus(pagesAll, keepAll)))
-          .localCheckpoint(true)
-        val fullSt = Refresh.asmBuildState(mergedF, lines12, lm, thr, bench,
-          Declared.CrawlAsmParams)
-        val full = Refresh.asmManifestFrom(fullSt.dedup.meta, fullSt.clusters)
-          .collect().map(_.toSeq).toSet
-        val tReb = (System.nanoTime() - t1) / 1e9
-        assert(inc == full,
-          s"x131 scale: crawl refresh != rebuild at ${n}x\n inc: $inc\n reb: $full")
-        rmTree(base)
-        (n, tRef, tReb)
-      }
-      val timedX = scales.map(runX)
-      val (_, ref16xa, reb16xa) = timedX(2)
-      // the x112/x121 retry discipline: a single-sample ordering
-      // violation re-times the 16x pair once, assert + print per-path
-      // minima (the refresh == rebuild hard gate is unconditional)
-      val (ref16x, reb16x) =
-        if (ref16xa < reb16xa) (ref16xa, reb16xa)
-        else {
-          val (_, r2, b2) = runX(16)
-          (math.min(ref16xa, r2), math.min(reb16xa, b2))
+      // --- x136 incremental cross-doc substring refresh at scale ---------
+      // The r18 substring-dedup family's deployment frame, under the x112
+      // discipline: retag-bijected replication (disjoint window spaces per
+      // replica), the v1->v2 delta confined to replica 0 (removed %19
+      // slice, changed %13 marker append, fresh full-duplicate copies of
+      // the %23 slice under new ids above their sources). Disjoint spaces
+      // make every mark flip replica-0-local, so the recut row set is
+      // IDENTICAL at every scale — asserted exactly, the deterministic
+      // delta-boundedness claim — while the rebuild's cut output is
+      // corpus-sized. Refresh == rebuild asserted bit-for-bit by a
+      // distributed full-outer compare (no corpus collect). Walls stay
+      // informational (the r18 x112 rule: row counts, not schedulers).
+      section("x136 incremental xdoc-substr refresh at scale") {
+        val runs = scales.map { n =>
+          val v1 = retagged(n).filter(col("doc_id").isNotNull)
+          val v2 = v1.filter(!(col("doc_id") < Stride && col("doc_id") % 19 === 7))
+            .withColumn("text", when(col("doc_id") < Stride && col("doc_id") % 13 === 4,
+              concat(col("text"), lit(" x136 scale delta"))).otherwise(col("text")))
+            .unionByName(v1.filter(col("doc_id") < Stride && col("doc_id") % 23 === 3)
+              .withColumn("doc_id", col("doc_id") + 50000000L))
+          // deployment shape, setup untimed: the corpus versions
+          // checkpointed once (both paths read v2), the standing state
+          // persisted and reloaded
+          refreshAtScale("x136", n, v1, v2, (df, _) => df.localCheckpoint(true)) {
+            (dir, v1c, v2c) =>
+              val st = Refresh.xdocBuildState(v1c, "text", "doc_id", 5).persisted(dir)
+              legs({
+                val d = Refresh.xdocRefresh(st, v2c, "text", "doc_id", 5)
+                (d.state2.cut.localCheckpoint(true), d)
+              }, Curation.cutXdocSubstr(v2c, "text", "doc_id", 5).localCheckpoint(true)) {
+                (inc, full) =>
+                  val bad = full.as("f").join(inc._1.as("i"), Seq("doc_id"), "full_outer")
+                    .filter(!(col("f.n_tokens") <=> col("i.n_tokens")) ||
+                      !(col("f.n_cut") <=> col("i.n_cut")) ||
+                      !(col("f.clean_text") <=> col("i.clean_text"))).count()
+                  if (bad == 0L) None else Some(s" ($bad mismatched rows)")
+              }((inc, full) => (inc._2.recut.count(), full.count()))
+          }
         }
-      assert(ref16x < reb16x,
-        f"x131 scale: constant-delta crawl refresh ($ref16x%.2f s) not cheaper " +
-          f"than cumulative-history rebuild ($reb16x%.2f s) at 16x")
-      sb.append("\n## Crawl-assembly refresh at scale (x131, constant delta)\n\n")
-      sb.append("The x114 witness with the crawl front door composed in: WARC\n")
-      sb.append("containers for both snapshots, the v2 delta in replica 0. Refresh\n")
-      sb.append("(URL-index fold -> delta-only extraction -> asmRefresh) manifest\n")
-      sb.append("asserted == cumulative-history rebuild at every scale;\n")
-      sb.append("constant-delta refresh asserted cheaper than the rebuild at 16x.\n\n")
-      sb.append("| case | 1x (s) | 4x (s) | 16x (s) |\n|---|---|---|---|\n")
-      sb.append(f"| x131 crawl refresh (delta fixed) | ${timedX(0)._2}%.2f | " +
-        f"${timedX(1)._2}%.2f | $ref16x%.2f |\n")
-      sb.append(f"| x131 cumulative rebuild | ${timedX(0)._3}%.2f | " +
-        f"${timedX(1)._3}%.2f | $reb16x%.2f |\n")
-      println(f"SCALE x131 crawl refresh " +
-        timedX.map { case (_, a, b) => f"$a%.2f/$b%.2f" }.mkString(" "))
-    }
+        val (recut1, corpus1) = runs.head.witness
+        val (recut16, corpus16) = runs.last.witness
+        assert(recut16 == recut1,
+          s"x136 scale: recut set not replica-0-confined ($recut1 at 1x vs $recut16 at 16x)")
+        assert(corpus16 >= 15 * corpus1 && recut16 * 8 < corpus16,
+          s"x136 scale: delta not << corpus at 16x " +
+            s"($recut16 recut vs $corpus16 corpus rows)")
+        report.text("\n## Incremental cross-doc substring refresh at scale (x136, constant delta)\n\n" +
+          "Retag-bijected replication (disjoint window spaces); the v1->v2 delta\n" +
+          "lives in replica 0. Refresh cut corpus asserted == rebuild bit-for-bit\n" +
+          "at every scale (distributed compare); delta-boundedness asserted on\n" +
+          "recut-ROW counts — the recut set is exactly scale-invariant while the\n" +
+          "rebuild re-cuts the whole corpus. Walls informational.\n\n")
+        report.table("case", "1x (s)", "4x (s)", "16x (s)", "recut/corpus rows 1x,16x")
+        wallRow("x136 refresh (delta fixed)", runs.map(_.refresh),
+          s"$recut1/$corpus1, $recut16/$corpus16")
+        wallRow("x136 full rebuild", runs.map(_.rebuild), "—")
+      }
 
-    // --- x79 BPE training at scale ------------------------------------
-    // Plain replication (same texts, shifted ids) multiplies every word
-    // frequency by n, so every pair count scales by exactly n and the
-    // argmax SEQUENCE is invariant — the witness asserts merges(n) ==
-    // merges(1) with counts scaled by n, which exercises the whole
-    // train loop (corpus scan → distinct-word table → per-iteration
-    // counts/argmax/rebuild) at 1x/4x and pins its determinism. Wall
-    // cost after the first scan is distinct-word-sized by design.
-    section("x79 BPE training at scale") {
-      def train(n: Int): Seq[(String, String, Long)] =
-        graft.ext.TextStats.bpeTrain(
-          replicate(docs0, "doc_id", n), "text", numMerges = 8).toSeq
-      val t1 = train(1)
-      val t4 = train(4)
-      assert(t1.size == 8, s"x79 scale: expected 8 merges at 1x, got ${t1.size}")
-      assert(t4.map(m => (m._1, m._2)) == t1.map(m => (m._1, m._2)),
-        s"x79 scale: merge sequence changed under replication\n 1x: $t1\n 4x: $t4")
-      assert(t4.map(_._3) == t1.map(_._3 * 4),
-        s"x79 scale: pair counts not exactly 4x\n 1x: $t1\n 4x: $t4")
-      sb.append("\n## BPE training replication invariance (x79)\n\n")
-      sb.append("Plain 4x replication: merge sequence identical, every pair count\n")
-      sb.append(s"exactly 4x (asserted). 1x merges: ${t1.map(m => m._1 + "+" + m._2).mkString(", ")}.\n")
-      println(s"SCALE x79 bpe merges invariant under 4x replication")
-    }
+      // --- x114 incremental CCNet-extended ASSEMBLY refresh at scale -----
+      // The composed chain under x112's witness shape: token-permuted
+      // replicas, the whole v1→v2 delta confined to replica 0, merged
+      // corpora + the full AsmState persisted untimed (stored corpora +
+      // the cross-job state hand-off). Witnesses: (a) refresh manifest ==
+      // rebuild manifest at EVERY scale (the x114 equality under a
+      // growing standing corpus); (b) with the delta constant, refresh
+      // wall stays under rebuild wall at 16x — the rebuild re-cleans,
+      // re-scores, re-shingles and re-clusters the whole corpus while the
+      // refresh pays slim diff/histogram scans plus delta-bound text
+      // work.
+      section("x114 incremental CCNet-extended ASSEMBLY refresh at scale") {
+        val runs = scales.map { n =>
+          val (v1, v2) = versions(n)
+          refreshAtScale("x114", n, merged(v1), merged(v2)) { (dir, m1, m2) =>
+            val lm = mergedLm(m1)
+            val thr = Refresh.ccnetTailThr(Refresh.ccnetBuildState(m1, lines12, lm).scored)
+            val st = Refresh.asmBuildState(m1, lines12, lm, thr, bench).persisted(dir)
+            rowLegs({
+              val st2 = Refresh.asmRefresh(st, m1, m2, lines12, lm, thr, bench)
+              Refresh.asmManifestFrom(st2.dedup.meta, st2.clusters)
+            }, {
+              val fullSt = Refresh.asmBuildState(m2, lines12, lm, thr, bench)
+              Refresh.asmManifestFrom(fullSt.dedup.meta, fullSt.clusters)
+            })(())
+          }
+        }
+        cheaperAt16("x114 scale: constant-delta assembly refresh", "rebuild", runs)
+        report.text("\n## Incremental CCNet-extended ASSEMBLY refresh at scale (x114, constant delta)\n\n" +
+          "x112's witness shape composed through all eleven stages: merged\n" +
+          "corpora + full AsmState persisted untimed; refresh manifest asserted\n" +
+          "== rebuild manifest at every scale; constant-delta refresh asserted\n" +
+          "cheaper than the rebuild at 16x.\n\n")
+        report.table("case", "1x (s)", "4x (s)", "16x (s)")
+        wallRow("x114 assembly refresh (delta fixed)", runs.map(_.refresh))
+        wallRow("x114 assembly full rebuild", runs.map(_.rebuild))
+      }
 
-    // --- x85 incremental refresh at scale -----------------------------
-    // Gate-preserving, dup-scrambling replication: replica 0 keeps the
-    // original text (the fixture's genuine pair structure AND the whole
-    // delta live there); replicas >= 1 PERMUTE each doc's token
-    // sequence by a per-(replica, position, token) hash key — the token
-    // MULTISET is unchanged (langId stopword counts, stopword /
-    // repetition ratios, token count all invariant), so replicas flow
-    // through the gates like real corpus growth, while the 3-shingle
-    // sets scramble, so cross-replica identity clusters don't explode
-    // quadratically (the harness's standing concern with verbatim
-    // replication of a near-dup operator's input).
-    // Witnesses: (a) refresh manifest == full-rebuild manifest at EVERY
-    // scale — the x85 equality claim under a growing standing corpus;
-    // (b) with the delta held constant (replica-0-sized) the refresh
-    // wall must stay well under the rebuild wall at 16x — corpus-scale
-    // text work (gates, shingles, MinHash) is delta-bound, and the only
-    // corpus-proportional refresh costs are the slim diff scan and the
-    // pair/meta/index anti-joins.
-    section("x85 incremental refresh at scale") {
-      import graft.ext.Refresh
-      val R0 = 100000000L // replica-0 ids are below the remap stride
-      def permuted(n: Int): DataFrame =
-        (0 until n).map { i =>
-          val base = docs0.withColumn("doc_id",
-            col("doc_id") + lit(i.toLong * R0))
-          if (i == 0) base
-          else base.withColumn("text", concat_ws(" ",
-            transform(array_sort(transform(
-              filter(split(lower(col("text")), "[^a-z0-9]+"), t => t =!= ""),
-              (tok, pos) => struct(
-                md5(concat(tok, lit(s"#$i#"), pos.cast("string"))).as("k"),
-                tok.as("t")))),
-              s => s.getField("t"))))
-        }.reduce(_ union _)
-      def v1(n: Int) = permuted(n)
-        .filter(!(col("doc_id") % 17 === 5 && col("doc_id") < R0))
-      def v2(n: Int) = permuted(n)
-        .filter(!(col("doc_id") % 19 === 7 && col("doc_id") < R0))
-        .withColumn("text",
-          when(col("doc_id") % 13 === 4 && col("doc_id") < R0,
-            concat(col("text"), lit(" spark refresh delta")))
+      // --- x121 web-pipeline refresh at scale ----------------------------
+      // The x112 witness with EXTRACTION composed in front: corpora stored
+      // as RAW MARKUP (each token-permuted doc wrapped in the
+      // deterministic x113 page), the whole v1→v2 delta in replica 0.
+      // Witnesses: (a) markup-diff refresh kept report == full-extraction
+      // rebuild kept report at EVERY scale (webExtractRefresh's purity
+      // argument, asserted); (b) with the delta constant, refresh wall <
+      // rebuild wall at 16x — the rebuild re-extracts and re-scores the
+      // whole corpus while the refresh extracts only the delta pages.
+      section("x121 web-pipeline refresh at scale") {
+        // r18: pad every page with a deterministic link-farm band. The
+        // band is DROPPED by the keep rule (anchor share), so extracted
+        // text — and the refresh == rebuild equality assert — is
+        // byte-identical with or without it; what it changes is the COST
+        // shape: the fixture's one-paragraph pages are so light that
+        // block parsing was a rounding error next to the shared head
+        // fold, and the 16x ordering (refresh < rebuild) sat on a
+        // few-percent margin that r17's (documented) heavier extraction
+        // erased — an r16-code control read fold 15.5 s vs rebuild
+        // 15.3 s, i.e. the margin never priced extraction at all. Real
+        // crawl pages are markup-dominated; the pad restores that ratio
+        // so the witness prices the claim it states (the rebuild
+        // re-parses every page, the refresh parses only the delta).
+        val padMarkup = (1 to 12).map(j =>
+          s"""<div><p><a href="/pad$j">pad link farm $j one two three """ +
+            "four five six seven eight nine ten</a></p></div>").mkString
+        def wrapped(df: DataFrame): DataFrame =
+          df.select(col("doc_id"), col("source"),
+            regexp_replace(Extract.htmlWrap(col("doc_id"), col("text")),
+              "<footer>", padMarkup + "<footer>").as("html"))
+        def extractAll(html: DataFrame): DataFrame =
+          html.withColumn("text", Extract.htmlToText(col("html")))
+            .select("doc_id", "source", "text")
+        def run(n: Int): RefreshRun[Unit] = {
+          val (v1, v2) = versions(n)
+          // deployment shape, setup untimed: stored MARKUP corpora, the
+          // standing extracted corpus, persisted head state, frozen LM
+          refreshAtScale("x121", n, wrapped(v1), wrapped(v2)) { (dir, h1, h2) =>
+            val ex1 = parquetStore(extractAll(h1), s"$dir/ex1")
+            val lm = langLm(ex1)
+            val st = Refresh.ccnetBuildState(ex1, lines12, lm).persisted(dir)
+            val thr = Refresh.ccnetTailThr(st.scored)
+            rowLegs({
+              // timed INCLUDING the one-shot materialization — deployment
+              // writes the refreshed corpus as the new standing store; the
+              // fold then reads it instead of replaying the corpus-sized
+              // markup diff per consumption (the declared x121 shape)
+              val ex2 = Refresh.webExtractRefresh(ex1, h1, h2).localCheckpoint(true)
+              Refresh.ccnetKeptReport(Refresh.ccnetRefresh(st, ex1, ex2, lines12, lm).scored, thr)
+            }, Refresh.ccnetKeptReport(
+              Refresh.ccnetBuildState(extractAll(h2), lines12, lm).scored, thr))(())
+          }
+        }
+        val runs = scales.map(run)
+        // same margin class as x112 after the r16 broadcast routing
+        val (ref16, reb16) = cheaperAt16("x121 scale: constant-delta web refresh",
+          "extract-everything rebuild", runs, Some(() => run(16)))
+        report.text("\n## Web-pipeline refresh at scale (x121, constant delta)\n\n" +
+          "The x112 witness with extraction composed in front: markup corpora\n" +
+          "stored, the delta in replica 0. Refresh (markup diff -> delta-only\n" +
+          "extraction -> head fold) kept report asserted == full-extraction\n" +
+          "rebuild at every scale; constant-delta refresh asserted cheaper than\n" +
+          "the rebuild at 16x.\n\n")
+        report.table("case", "1x (s)", "4x (s)", "16x (s)")
+        // 16x prints the adjudicated pair (per-path minima when the
+        // single-sample ordering was re-timed), matching the assert
+        wallRow("x121 web refresh (delta fixed)", runs.init.map(_.refresh) :+ ref16)
+        wallRow("x121 full re-extract rebuild", runs.init.map(_.rebuild) :+ reb16)
+      }
+
+      // --- x131 crawl-assembly refresh at scale --------------------------
+      // The r17 composition's duality under the standing witness shape:
+      // token-permuted replicas (replica-local line structure), real
+      // on-disk WARC containers for both snapshots, the v2 delta (changed
+      // pages + new URLs) confined to replica 0, URL index + extracted
+      // corpus + full AsmState persisted untimed (the cross-job
+      // hand-off). Witnesses: (a) refresh manifest == rebuild manifest at
+      // EVERY scale; (b) with the delta constant, the index-fold refresh
+      // stays under the read-everything rebuild at 16x — the rebuild
+      // re-reads BOTH containers, re-dedups every URL, re-extracts every
+      // keeper and rebuilds the assembly state, while the refresh pays a
+      // v2-container read, an index-sized fold and delta-bound
+      // extraction/assembly work.
+      section("x131 crawl-assembly refresh at scale") {
+        import graft.sources.FileSources
+        val V2Off = 1000000000000L // past every replica's v1 fetch ids
+        // v2 is a replica-0 delta only: changed pages + new URLs
+        val v2docs = docs0.filter(col("doc_id") % 13 === 4 || col("doc_id") % 23 === 3)
+          .withColumn("text", when(col("doc_id") % 13 === 4,
+            concat(coalesce(col("text"), lit("")), lit(" crawl refresh delta")))
             .otherwise(col("text")))
-      val timedR = scales.map { n =>
-        // deployment shape, all UNTIMED setup: the corpora are stored
-        // tables and the standing state is parquet-persisted (exactly
-        // what the declared x85 ships through Artifacts.saveIndex) —
-        // handing refresh() the raw lazy buildState frames instead
-        // re-runs full-corpus gating/shingling on every state use and
-        // measures that mistake, not the operator (first formulation
-        // of this witness did exactly that: 173 s refresh vs 76 s
-        // rebuild at 16x)
-        val base = java.nio.file.Files
-          .createTempDirectory(s"x85-scale-$n").toString
-        v1(n).write.mode("overwrite").parquet(s"$base/v1")
-        v2(n).write.mode("overwrite").parquet(s"$base/v2")
-        val v1p = spark.read.parquet(s"$base/v1")
-        val v2p = spark.read.parquet(s"$base/v2")
-        val st = Refresh.buildState(v1p).persisted(base)
-        val t0 = System.nanoTime()
-        val (_, inc) = Refresh.refresh(st, v1p, v2p, "scale-ref", 4)
-        val incRows = inc.collect().map(_.toSeq).toSet
-        val tRef = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val fullRows = Refresh.fullRebuild(v2p, "scale-ref", 4)
-          .collect().map(_.toSeq).toSet
-        val tReb = (System.nanoTime() - t1) / 1e9
-        assert(incRows == fullRows,
-          s"x85 scale: refresh != rebuild at ${n}x\n inc: $incRows\n reb: $fullRows")
-
-        // x87: the cluster stage alone, delta-bound. Standing clusters
-        // persist as the fifth state frame; both paths then consume the
-        // SAME persisted refreshed pair list (a deployment persists
-        // pairs2 — timing the lazy frame would re-run the pair legs
-        // inside both measurements and swamp the stage under test).
-        val c1 = graft.ext.Dedup.dupClusters(st.pairs)
-        graft.ext.Artifacts.saveIndex(c1, s"$base/clusters")
-        val c1p = graft.ext.Artifacts.loadIndex(spark, s"$base/clusters")
-        val d = Refresh.delta(st, v1p, v2p)
-        graft.ext.Artifacts.saveIndex(d.state2.pairs, s"$base/pairs2")
-        val pairs2 = graft.ext.Artifacts.loadIndex(spark, s"$base/pairs2")
-        val seeds = Refresh.seedsOf(d.touched, d.addedPairs)
-          .localCheckpoint(true)
-        val tc0 = System.nanoTime()
-        val incCl = Refresh.incrementalClusters(c1p, pairs2, d.touched,
-          d.addedPairs)
-          .collect().map(_.toSeq).toSet
-        val tIncCl = (System.nanoTime() - tc0) / 1e9
-        val tc1 = System.nanoTime()
-        val fullCl = graft.ext.Dedup.dupClusters(pairs2)
-          .collect().map(_.toSeq).toSet
-        val tFullCl = (System.nanoTime() - tc1) / 1e9
-        assert(incCl == fullCl,
-          s"x87 scale: incremental clusters != full recompute at ${n}x")
-        // edge-volume bound: the iterative stage's input (region
-        // edges) vs the full pair graph — the delta lives in replica
-        // 0, so the touched-component volume must NOT grow with the
-        // corpus while total pairs do
-        val tcl = c1p.join(broadcast(seeds), Seq("doc_id"), "left_semi")
-          .select("cluster_id").distinct()
-        val region = c1p.join(broadcast(tcl), Seq("cluster_id"), "left_semi")
-          .select("doc_id").unionByName(seeds).distinct()
-        val subEdges = pairs2.join(
-          broadcast(region.withColumnRenamed("doc_id", "id_a")),
-          Seq("id_a"), "left_semi").count()
-        val totEdges = pairs2.count()
-        rmTree(base)
-        (n, tRef, tReb, tIncCl, tFullCl, subEdges, totEdges)
+        def warcStore(records: DataFrame, path: String): DataFrame = {
+          FileSources.writeWarc(records, path)
+          Declared.crawlPages(FileSources.readWarc(spark, path))
+        }
+        def urlIndex(pages: DataFrame) = Urls.urlDedup(
+          pages.select(col("url"), col("fetch_id")), "url", "fetch_id", latestWins = true)
+        def run(n: Int): RefreshRun[Unit] = refreshAtScale("x131", n,
+            Declared.crawlRecords(refreshReplicas(docs0, n, Declared.crawlV1Docs, "c"),
+              col("doc_id")),
+            Declared.crawlRecords(v2docs, col("doc_id") + V2Off, Some(Declared.crawlV2Url)),
+            warcStore) { (dir, pages1, v2pages) =>
+          Artifacts.saveIndex(urlIndex(pages1), s"$dir/idx1")
+          val idx1 = Artifacts.loadIndex(spark, s"$dir/idx1")
+          val ex1 = parquetStore(Declared.crawlKeeperCorpus(pages1,
+            idx1.select(col("keeper_id").as("fetch_id"))), s"$dir/ex1")
+          val merged1 = merged(ex1).localCheckpoint(true)
+          val lm = mergedLm(merged1)
+          val thr = Refresh.ccnetTailThr(Refresh.ccnetBuildState(merged1, lines12, lm).scored)
+          val st = Refresh.asmBuildState(merged1, lines12, lm, thr, bench,
+            Declared.CrawlAsmParams).persisted(dir)
+          // read by the refresh leg, reused by the rebuild
+          lazy val pages2 = v2pages.localCheckpoint(true)
+          rowLegs({
+            val idx2 = Urls.urlDedupRefresh(idx1,
+              pages2.select(col("url"), col("fetch_id")), "url", "fetch_id",
+              latestWins = true)
+            val ex2 = Refresh.crawlExtractRefresh(ex1, idx1, idx2, pages2)
+            val st2 = Refresh.asmRefresh(st, merged1, merged(ex2).localCheckpoint(true),
+              lines12, lm, thr, bench, Declared.CrawlAsmParams)
+            Refresh.asmManifestFrom(st2.dedup.meta, st2.clusters)
+          }, {
+            val pagesAll = pages1.unionByName(pages2)
+            val keepAll = urlIndex(pagesAll).select(col("keeper_id").as("fetch_id"))
+            val fullSt = Refresh.asmBuildState(
+              merged(Declared.crawlKeeperCorpus(pagesAll, keepAll)).localCheckpoint(true),
+              lines12, lm, thr, bench, Declared.CrawlAsmParams)
+            Refresh.asmManifestFrom(fullSt.dedup.meta, fullSt.clusters)
+          })(())
+        }
+        val runs = scales.map(run)
+        // the x112/x121 retry discipline
+        val (ref16, reb16) = cheaperAt16("x131 scale: constant-delta crawl refresh",
+          "cumulative-history rebuild", runs, Some(() => run(16)))
+        report.text("\n## Crawl-assembly refresh at scale (x131, constant delta)\n\n" +
+          "The x114 witness with the crawl front door composed in: WARC\n" +
+          "containers for both snapshots, the v2 delta in replica 0. Refresh\n" +
+          "(URL-index fold -> delta-only extraction -> asmRefresh) manifest\n" +
+          "asserted == cumulative-history rebuild at every scale;\n" +
+          "constant-delta refresh asserted cheaper than the rebuild at 16x.\n\n")
+        report.table("case", "1x (s)", "4x (s)", "16x (s)")
+        wallRow("x131 crawl refresh (delta fixed)", runs.init.map(_.refresh) :+ ref16)
+        wallRow("x131 cumulative rebuild", runs.init.map(_.rebuild) :+ reb16)
       }
-      val (_, ref16, reb16, incCl16, fullCl16, sub16, tot16) = timedR.last
-      assert(sub16 * 4 <= tot16,
-        s"x87 scale: region edges $sub16 not delta-bound vs total $tot16 at 16x")
-      assert(sub16 <= timedR.head._6 * 2 + 64,
-        s"x87 scale: region edge volume grew with corpus " +
-          s"(1x: ${timedR.head._6}, 16x: $sub16) — extraction not delta-bound")
-      // No WALL assertion for the cluster stage at fixture scale: the
-      // 16x pair graph is still only thousands of edges, where
-      // per-job scheduling latency dominates and the incremental
-      // path's ~5 extra extraction jobs cost more than they save
-      // (measured 1.57 s inc vs 0.98 s full at 16x on the first run of
-      // this witness). The quantity that scales is the ITERATIVE
-      // stage's input volume — label propagation is rounds x joins
-      // over the edge frame — and that is what the region-edge
-      // asserts above pin: region edges stay delta-sized (<= 2x the
-      // 1x volume) while total pairs grow ~16x. At deployment pair
-      // graphs (10^8+ edges) the per-round join cost dominates and
-      // the edge bound IS the wall bound; at fixture scale asserting
-      // walls would test the scheduler, not the operator.
-      assert(ref16 < reb16,
-        f"x85 scale: constant-delta refresh ($ref16%.2f s) not cheaper than " +
-          f"the 16x rebuild ($reb16%.2f s)")
-      val expRef = math.log(timedR(2)._2 / timedR(0)._2) / math.log(16.0)
-      val expReb = math.log(timedR(2)._3 / timedR(0)._3) / math.log(16.0)
-      sb.append("\n## Incremental refresh at scale (x85, constant delta)\n\n")
-      sb.append("Gate-preserving permuted replication; refresh manifest asserted ==\n")
-      sb.append("full-rebuild manifest at every scale; 16x refresh wall asserted\n")
-      sb.append("below the 16x rebuild wall (the delta-bound work claim).\n\n")
-      sb.append("| case | 1x (s) | 4x | 16x | exp |\n|---|---|---|---|---|\n")
-      sb.append(f"| x85 refresh (delta fixed) | ${timedR(0)._2}%.2f | " +
-        f"${timedR(1)._2}%.2f | ${timedR(2)._2}%.2f | $expRef%.2f |\n")
-      sb.append(f"| x85 full rebuild | ${timedR(0)._3}%.2f | " +
-        f"${timedR(1)._3}%.2f | ${timedR(2)._3}%.2f | $expReb%.2f |\n")
-      sb.append(f"| x87 incremental clusters | ${timedR(0)._4}%.2f | " +
-        f"${timedR(1)._4}%.2f | ${timedR(2)._4}%.2f | |\n")
-      sb.append(f"| x87 full cluster recompute | ${timedR(0)._5}%.2f | " +
-        f"${timedR(1)._5}%.2f | ${timedR(2)._5}%.2f | |\n")
-      sb.append(f"| x87 region / total edges | ${timedR(0)._6}/${timedR(0)._7} | " +
-        f"${timedR(1)._6}/${timedR(1)._7} | ${timedR(2)._6}/${timedR(2)._7} | |\n")
-      sb.append("\nx87 asserted at 16x: incremental == full recompute, region\n")
-      sb.append("edges <= total/4 AND <= 2x the 1x region volume (the work the\n")
-      sb.append("iterative stage sees is the delta's component volume, not the\n")
-      sb.append("corpus pair count). Walls reported unasserted: at fixture\n")
-      sb.append("pair-graph sizes per-job latency dominates and the incremental\n")
-      sb.append("path's extraction jobs cost more than they save; the asserted\n")
-      sb.append("edge bound is the quantity that becomes the wall at real scale.\n")
-      println(f"SCALE x85 refresh exp=$expRef%.2f rebuild exp=$expReb%.2f " +
-        timedR.map { case (n, a, b, _, _, _, _) => f"${n}x:$a%.2f/$b%.2f" }.mkString(" "))
-      println(f"SCALE x87 clusters inc/full 16x: $incCl16%.2f/$fullCl16%.2f s, " +
-        s"region/total edges " +
-        timedR.map { case (n, _, _, _, _, se, te) => s"${n}x:$se/$te" }.mkString(" "))
+
+      // --- x79 BPE training at scale ------------------------------------
+      // Plain replication (same texts, shifted ids) multiplies every word
+      // frequency by n, so every pair count scales by exactly n and the
+      // argmax SEQUENCE is invariant — the witness asserts merges(n) ==
+      // merges(1) with counts scaled by n, which exercises the whole
+      // train loop (corpus scan → distinct-word table → per-iteration
+      // counts/argmax/rebuild) at 1x/4x and pins its determinism. Wall
+      // cost after the first scan is distinct-word-sized by design.
+      section("x79 BPE training at scale") {
+        val t = timedWitness("x79 bpe", Seq(1, 4), warmUp = false) { n =>
+          TextStats.bpeTrain(docsN(n), "text", numMerges = 8).toSeq
+        } { (n, t4, t1) =>
+          assert(t1.size == 8, s"x79 scale: expected 8 merges at 1x, got ${t1.size}")
+          assert(t4.map(m => (m._1, m._2)) == t1.map(m => (m._1, m._2)),
+            s"x79 scale: merge sequence changed under replication\n 1x: $t1\n ${n}x: $t4")
+          assert(t4.map(_._3) == t1.map(_._3 * n),
+            s"x79 scale: pair counts not exactly ${n}x\n 1x: $t1\n ${n}x: $t4")
+        }
+        report.text("\n## BPE training replication invariance (x79)\n\n" +
+          "Plain 4x replication: merge sequence identical, every pair count\n")
+        report.line(s"exactly 4x (asserted). 1x merges: " +
+          s"${t.outs.head.map(m => m._1 + "+" + m._2).mkString(", ")}.")
+      }
+
+      // --- x85 incremental refresh at scale -----------------------------
+      // Gate-preserving, dup-scrambling replication: replica 0 keeps the
+      // original text (the fixture's genuine pair structure AND the whole
+      // delta live there); replicas >= 1 are token-PERMUTED ([[permute]]),
+      // so they flow through the gates like real corpus growth while
+      // cross-replica identity clusters don't explode quadratically (the
+      // harness's standing concern with verbatim replication of a
+      // near-dup operator's input).
+      // Witnesses: (a) refresh manifest == full-rebuild manifest at EVERY
+      // scale — the x85 equality claim under a growing standing corpus;
+      // (b) with the delta held constant (replica-0-sized) the refresh
+      // wall must stay well under the rebuild wall at 16x — corpus-scale
+      // text work (gates, shingles, MinHash) is delta-bound, and the only
+      // corpus-proportional refresh costs are the slim diff scan and the
+      // pair/meta/index anti-joins.
+      section("x85 incremental refresh at scale") {
+        val runs = scales.map { n =>
+          val (v1, v2) = versions(n)
+          // deployment shape, all UNTIMED setup: the corpora are stored
+          // tables and the standing state is parquet-persisted (exactly
+          // what the declared x85 ships through Artifacts.saveIndex) —
+          // handing refresh() the raw lazy buildState frames instead
+          // re-runs full-corpus gating/shingling on every state use and
+          // measures that mistake, not the operator (first formulation
+          // of this witness did exactly that: 173 s refresh vs 76 s
+          // rebuild at 16x)
+          refreshAtScale("x85", n, v1, v2) { (dir, v1p, v2p) =>
+            val st = Refresh.buildState(v1p).persisted(dir)
+            rowLegs(Refresh.refresh(st, v1p, v2p, "scale-ref", 4)._2,
+              Refresh.fullRebuild(v2p, "scale-ref", 4)) {
+              // x87: the cluster stage alone, delta-bound. Standing
+              // clusters persist as the fifth state frame; both paths then
+              // consume the SAME persisted refreshed pair list (a
+              // deployment persists pairs2 — timing the lazy frame would
+              // re-run the pair legs inside both measurements and swamp
+              // the stage under test).
+              val c1p = parquetStore(Dedup.dupClusters(st.pairs), s"$dir/clusters")
+              val d = Refresh.delta(st, v1p, v2p)
+              val pairs2 = parquetStore(d.state2.pairs, s"$dir/pairs2")
+              val seeds = Refresh.seedsOf(d.touched, d.addedPairs).localCheckpoint(true)
+              val (incCl, tIncCl) = clocked(rowSet(
+                Refresh.incrementalClusters(c1p, pairs2, d.touched, d.addedPairs)))
+              val (fullCl, tFullCl) = clocked(rowSet(Dedup.dupClusters(pairs2)))
+              assert(incCl == fullCl, s"x87 scale: incremental clusters != full recompute at ${n}x")
+              // edge-volume bound: the iterative stage's input (region
+              // edges) vs the full pair graph — the delta lives in replica
+              // 0, so the touched-component volume must NOT grow with the
+              // corpus while total pairs do
+              val tcl = c1p.join(broadcast(seeds), Seq("doc_id"), "left_semi")
+                .select("cluster_id").distinct()
+              val region = c1p.join(broadcast(tcl), Seq("cluster_id"), "left_semi")
+                .select("doc_id").unionByName(seeds).distinct()
+              val subEdges = pairs2.join(
+                broadcast(region.withColumnRenamed("doc_id", "id_a")),
+                Seq("id_a"), "left_semi").count()
+              (tIncCl, tFullCl, subEdges, pairs2.count())
+            }
+          }
+        }
+        val (_, _, sub1, _) = runs.head.witness
+        val (_, _, sub16, tot16) = runs.last.witness
+        assert(sub16 * 4 <= tot16,
+          s"x87 scale: region edges $sub16 not delta-bound vs total $tot16 at 16x")
+        assert(sub16 <= sub1 * 2 + 64,
+          s"x87 scale: region edge volume grew with corpus " +
+            s"(1x: $sub1, 16x: $sub16) — extraction not delta-bound")
+        // No WALL assertion for the cluster stage at fixture scale: the
+        // 16x pair graph is still only thousands of edges, where
+        // per-job scheduling latency dominates and the incremental
+        // path's ~5 extra extraction jobs cost more than they save
+        // (measured 1.57 s inc vs 0.98 s full at 16x on the first run of
+        // this witness). The quantity that scales is the ITERATIVE
+        // stage's input volume — label propagation is rounds x joins
+        // over the edge frame — and that is what the region-edge
+        // asserts above pin: region edges stay delta-sized (<= 2x the
+        // 1x volume) while total pairs grow ~16x. At deployment pair
+        // graphs (10^8+ edges) the per-round join cost dominates and
+        // the edge bound IS the wall bound; at fixture scale asserting
+        // walls would test the scheduler, not the operator.
+        cheaperAt16("x85 scale: constant-delta refresh", "the 16x rebuild", runs)
+        report.text("\n## Incremental refresh at scale (x85, constant delta)\n\n" +
+          "Gate-preserving permuted replication; refresh manifest asserted ==\n" +
+          "full-rebuild manifest at every scale; 16x refresh wall asserted\n" +
+          "below the 16x rebuild wall (the delta-bound work claim).\n\n")
+        report.table("case", "1x (s)", "4x", "16x", "exp")
+        wallRow("x85 refresh (delta fixed)", runs.map(_.refresh), s2(growth(runs.map(_.refresh))))
+        wallRow("x85 full rebuild", runs.map(_.rebuild), s2(growth(runs.map(_.rebuild))))
+        wallRow("x87 incremental clusters", runs.map(_.witness._1), "")
+        wallRow("x87 full cluster recompute", runs.map(_.witness._2), "")
+        report.row("x87 region / total edges" +: runs.map(r => s"${r.witness._3}/${r.witness._4}") :+
+          "": _*)
+        report.text("\nx87 asserted at 16x: incremental == full recompute, region\n" +
+          "edges <= total/4 AND <= 2x the 1x region volume (the work the\n" +
+          "iterative stage sees is the delta's component volume, not the\n" +
+          "corpus pair count). Walls reported unasserted: at fixture\n" +
+          "pair-graph sizes per-job latency dominates and the incremental\n" +
+          "path's extraction jobs cost more than they save; the asserted\n" +
+          "edge bound is the quantity that becomes the wall at real scale.\n")
+      }
     }
 
-    // --- as-of join under hot-key skew: salted vs plain ---------------
-    // Fixture: the sf events with ~half of all rows remapped onto ONE
-    // key — the regime AsofJoin.asofJoin's docstring warns about (its
-    // per-key window makes the hot key a single straggler task). The
-    // salted form's window partitions on (key, hour-bin) instead.
-    // Witnesses (all deterministic): (a) the salted partition key's
-    // largest group is a small fraction of the hot key's row count —
-    // the per-task balance argument, since window tasks are keyed by
-    // the partition key; (b) salted output is IDENTICAL to plain on
-    // the skewed fixture (count + order-independent hash). Wall times
-    // reported for context, not asserted (local[32] understates
-    // straggler pain: 32 cores vs 1000 executors).
-    sb.append("\n## As-of join under hot-key skew (salted vs plain)\n\n")
-    section("as-of join under hot-key skew: salted vs plain") {
-      val ev = graft.Tables.load(spark, sfDir, "events")
-        .filter(col("ts").isNotNull)
-        .withColumn("user_id",
-          when(col("event_id") % 2 === 0, lit(77777L)).otherwise(col("user_id")))
-      val l = ev.filter(col("event_id") % 7 === 0)
-      val r = ev.filter(col("event_id") % 7 =!= 0)
-      val binW = 3600L * 1000000L
-      def plain() = graft.operators.AsofJoin.asofJoin(
-        l, r, "user_id", "ts", "event_id", "event_id")
-      def salted() = graft.operators.AsofJoin.asofJoinSalted(
-        l, r, "user_id", "ts", "event_id", "event_id", binW)
-      // partition-key balance: biggest per-key group vs biggest
-      // per-(key, bin) group over the unioned window input
-      val both = ev.select(col("user_id"),
-        (unix_micros(col("ts")) - pmod(unix_micros(col("ts")), lit(binW))).as("bin"))
-      val maxKey = both.groupBy("user_id").count()
-        .agg(max("count")).collect()(0).getLong(0)
-      val maxSalted = both.groupBy("user_id", "bin").count()
-        .agg(max("count")).collect()(0).getLong(0)
-      assert(maxSalted * 4 <= maxKey,
-        s"salting did not spread the hot key: maxKeyRows=$maxKey maxSaltedRows=$maxSalted")
-      def sig(df: DataFrame): (Long, Long) = {
-        val r = df.select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
-          .agg(count(lit(1)), expr("bit_xor(h)")).collect()(0)
-        (r.getLong(0), r.getLong(1))
-      }
+    // order-independent (count, xor-hash) of every row
+    private def sig(df: DataFrame): (Long, Long) = {
+      val r = df.select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
+        .agg(count(lit(1)), expr("bit_xor(h)")).collect()(0)
+      (r.getLong(0), r.getLong(1))
+    }
+
+    // a plain form and its salted twin on one skew fixture: warmed up,
+    // timed, and asserted identical; (plain s, salted s, rows)
+    private def saltedSame(what: String, plain: () => DataFrame,
+        salted: () => DataFrame): (Double, Double, Long) = {
       plain().count(); salted().count() // warm-up
       val tPlain = time(assert(sig(plain())._1 > 0))
       val tSalted = time(assert(sig(salted())._1 > 0))
       val (cp, hp) = sig(plain()); val (cs, hs) = sig(salted())
       assert(cp == cs && hp == hs,
-        s"salted output diverged on the skew fixture: ($cp,$hp) vs ($cs,$hs)")
-      sb.append("Half of all event rows remapped to one key; hourly salt bins.\n\n")
-      sb.append("| form | wall (s) | max rows per window-partition key |\n|---|---|---|\n")
-      sb.append(f"| plain (per-key window) | $tPlain%.2f | $maxKey |\n")
-      sb.append(f"| salted (per-(key,bin) window) | $tSalted%.2f | $maxSalted |\n")
-      sb.append(f"\nOutputs identical (count $cp, xor-hash match); balance factor " +
-        f"${maxKey.toDouble / maxSalted}%.1f x.\n")
-      println(f"SCALE x47 skew: plain $tPlain%.2f s salted $tSalted%.2f s " +
-        f"maxKey=$maxKey maxSalted=$maxSalted")
-
-      // x50's salted twin on the same hot-key fixture: (key, 6h-bin)
-      // window + context-copy stitch; identical output asserted
-      def rollPlain() = graft.operators.Rolling.rollingStats(
-        ev, "user_id", "ts", "event_id", "value")
-      def rollSalted() = graft.operators.Rolling.rollingStatsSalted(
-        ev, "user_id", "ts", "event_id", "value")
-      rollPlain().count(); rollSalted().count() // warm-up
-      val tRp = time(assert(sig(rollPlain())._1 > 0))
-      val tRs = time(assert(sig(rollSalted())._1 > 0))
-      val (rp, rph) = sig(rollPlain()); val (rs, rsh) = sig(rollSalted())
-      assert(rp == rs && rph == rsh,
-        s"salted rolling diverged on the skew fixture: ($rp,$rph) vs ($rs,$rsh)")
-      sb.append(f"\nRolling stats on the same fixture (6h salt bins): plain " +
-        f"$tRp%.2f s, salted $tRs%.2f s, outputs identical ($rp rows).\n")
-      println(f"SCALE x50 skew: plain $tRp%.2f s salted $tRs%.2f s rows=$rp")
-
-      // x51's salted twin on the same hot-key fixture: (key, bin)
-      // session build + summary chain merge; identical output asserted
-      def sessPlain() = graft.operators.SessionWindows.sessionCounts(
-        ev, "user_id", "ts")
-      def sessSalted() = graft.operators.SessionWindows.sessionCountsSalted(
-        ev, "user_id", "ts")
-      sessPlain().count(); sessSalted().count() // warm-up
-      val tSp = time(assert(sig(sessPlain())._1 > 0))
-      val tSs = time(assert(sig(sessSalted())._1 > 0))
-      val (sp, sph) = sig(sessPlain()); val (ss, ssh) = sig(sessSalted())
-      assert(sp == ss && sph == ssh,
-        s"salted sessions diverged on the skew fixture: ($sp,$sph) vs ($ss,$ssh)")
-      sb.append(f"Session counts on the same fixture: plain $tSp%.2f s, " +
-        f"salted $tSs%.2f s, outputs identical ($sp sessions).\n")
-      println(f"SCALE x51 skew: plain $tSp%.2f s salted $tSs%.2f s sessions=$sp")
+        s"salted $what diverged on the skew fixture: ($cp,$hp) vs ($cs,$hs)")
+      (tPlain, tSalted, cp)
     }
 
-    // --- banded ANN under hot-bucket skew: capped vs uncapped ---------
-    // The r8 per-bucket cap's regime: a CLUSTERED corpus (half of all
-    // vectors share one embedding -> one signature -> 16 mega-buckets of
-    // n/2 rows each). Uncapped, every query colliding with the mega
-    // bucket scans all of it; capped, the scan is bounded at 256. On a
-    // UNIFORM corpus the cap is a wash by design (trim savings ~ the
-    // added WindowGroupLimit exchange) — which is why this section uses
-    // the skewed fixture, not plain replication. Witnesses
-    // (deterministic): occupancy bound before/after; top-k for the
-    // cluster probes still k rows of sim ~ 1 through the capped path.
-    sb.append("\n## Banded ANN under hot-bucket skew (capped vs uncapped)\n\n")
-    section("banded ANN under hot-bucket skew: capped vs uncapped") {
-      import graft.ext.Similarity
-      val n = 16
-      val hot = Seq.tabulate(64)(i => if (i < 32) 1.0 else -1.0)
-      // half the replicated corpus collapses onto one vector (id parity)
-      val corpus = replicate(emb0, "vec_id", n)
-        .withColumn("embedding",
-          when(col("vec_id") % 2 === 0, typedLit(hot))
-            .otherwise(col("embedding").cast("array<double>")))
-      // fixed diverse queries + 5 cluster probes (ids disjoint)
-      val probes = spark.range(5).select(
-        (col("id") - 1000000L).as("vec_id"), typedLit(hot).as("embedding"))
-      val queries = emb0.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id"), col("embedding").cast("array<double>"))
-        .unionByName(probes)
-      val planes = Similarity.hyperplanes(64, 64, 42L)
-      val banded = Similarity.bandedFrame(corpus, "neighbor_id", "cv",
-        16, 4, planes, "vec_id", "embedding")
-      val occUncapped = banded.groupBy("band", "bucket").count()
-        .agg(max("count")).collect()(0).getLong(0)
-      val occCapped = Similarity.capBuckets(banded, 256, "neighbor_id")
-        .groupBy("band", "bucket").count()
-        .agg(max("count")).collect()(0).getLong(0)
-      // the sampled hash-threshold cap's contract: MEGA-buckets (the
-      // degenerate regime) are bound near cap in expectation; buckets
-      // inside the 1-in-16 detection band (up to ~1.6x cap) may pass
-      // untrimmed — they were never the unbounded-scan problem. On this
-      // deterministic fixture the max survivor is a ~400-row boundary
-      // bucket; the 17408-row mega-bucket itself is trimmed to ~cap.
-      assert(occCapped <= 2L * 256L, s"cap leaked: $occCapped")
-      assert(occUncapped >= 20L * occCapped,
-        s"mega-bucket not bound: $occUncapped vs $occCapped")
-      assert(occUncapped >= 50L * 256L,
-        s"fixture not skewed enough: $occUncapped vs $occCapped")
-      def run(cap: Int): Long = Similarity.lshTopKBanded(
-        queries, corpus, k = 5, bands = 16, bitsPerBand = 4, dim = 64,
-        maxBucketSize = cap).count()
-      run(256) // warm-up
-      val tCapped = time(run(256))
-      val tUncapped = time(run(Int.MaxValue))
-      // the asymptotic regime the cap exists for: probe-HEAVY traffic
-      // into the mega-bucket (dedup-style workloads where most queries
-      // are cluster members). 50 cluster probes -> uncapped candidate
-      // volume 50·bands·17408; capped, 50·bands·~cap.
-      val heavy = spark.range(50).select(
-        (col("id") - 2000000L).as("vec_id"), typedLit(hot).as("embedding"))
-      def runHeavy(cap: Int): Long = Similarity.lshTopKBanded(
-        heavy, corpus, k = 5, bands = 16, bitsPerBand = 4, dim = 64,
-        maxBucketSize = cap).count()
-      runHeavy(256) // warm-up
-      val tHeavyCapped = time(runHeavy(256))
-      val tHeavyUncapped = time(runHeavy(Int.MaxValue))
-      // cluster probes still served through the capped path
-      val probeRows = Similarity.lshTopKBanded(probes, corpus, k = 5,
-        bands = 16, bitsPerBand = 4, dim = 64, maxBucketSize = 256)
-        .filter(col("sim") > 0.99).count()
-      assert(probeRows == 25L,
-        s"capped mega-bucket probes degraded: $probeRows of 25 sim~1 rows")
-      sb.append(s"${n}x corpus, half collapsed onto one embedding; cap = 256.\n\n")
-      sb.append("| form | 5-probe wall (s) | 50-probe wall (s) | max bucket occupancy |\n|---|---|---|---|\n")
-      sb.append(f"| uncapped | $tUncapped%.2f | $tHeavyUncapped%.2f | $occUncapped |\n")
-      sb.append(f"| capped (256) | $tCapped%.2f | $tHeavyCapped%.2f | $occCapped |\n")
-      sb.append(f"\nCluster probes still return k sim~1 rows through the capped " +
-        f"path. The ASSERTED witness is the occupancy bound " +
-        f"(${occUncapped / occCapped}x here):\nper-probe candidate work is " +
-        f"proportional to bucket occupancy by\nconstruction, so the cap turns " +
-        f"an unbounded per-query scan into a\n≤ cap one — that is the 100 TB " +
-        f"contract. Wall times are reported as\ndata only (convention: never " +
-        f"asserted on local[32]); at these fixture\nsizes the cap's one-off " +
-        f"1/16-sampled sizing pass dominates both\ncolumns and the per-probe " +
-        f"slope sits inside JVM noise.\n")
-      println(f"SCALE x45 hot-bucket: uncapped $tUncapped%.2f/$tHeavyUncapped%.2f s " +
-        f"capped $tCapped%.2f/$tHeavyCapped%.2f s occ $occUncapped -> $occCapped")
-    }
+    private def maxGroup(df: DataFrame, keys: String*): Long =
+      df.groupBy(keys.map(col): _*).count().agg(max("count")).collect()(0).getLong(0)
 
-    // --- interval join under hot-bin skew: salted vs plain ------------
-    // Flash-crowd fixture: most points remapped onto ONE (key, hour) —
-    // the regime RangeJoin's docstring names. The salted form spreads
-    // that bin's points across `salt` sub-buckets of the join key.
-    // Witnesses: (a) the salted join key's largest group shrinks by
-    // ~salt x vs the plain (key, bin) key; (b) outputs identical.
-    sb.append("\n## Interval join under hot-bin skew (salted vs plain)\n\n")
-    section("interval join under hot-bin skew: salted vs plain") {
-      val ev0 = graft.Tables.load(spark, sfDir, "events")
-        .filter(col("ts").isNotNull)
-      // remap ~70% of points into one user's single hour
-      val hotStart = lit("2024-01-15 12:00:00").cast("timestamp")
-      val ev = ev0.withColumn("flash", col("event_id") % 10 < 7)
-        .withColumn("user_id",
-          when(col("flash"), lit(77777L)).otherwise(col("user_id")))
-        .withColumn("ts", when(col("flash"),
-          timestamp_micros(unix_micros(hotStart) +
-            pmod(col("event_id"), lit(3600L)) * 1000000L))
-          .otherwise(col("ts")))
-      val intervals = ev.filter(col("event_id") % 11 === 0)
-        .select(col("event_id"), col("user_id"), col("ts").as("t_start"),
-          (col("ts") + expr("INTERVAL 2 HOURS")).as("t_end"))
-      val points = ev.filter(col("event_id") % 11 =!= 0)
-      val binW = 3600L * 1000000L
-      val saltN = 8
-      def plain() = graft.operators.RangeJoin.intervalJoin(intervals, points,
-        "user_id", "t_start", "t_end", "ts", "event_id", "event_id", binW)
-      def salted() = graft.operators.RangeJoin.intervalJoinSalted(
-        intervals, points, "user_id", "t_start", "t_end", "ts",
-        "event_id", "event_id", binW, salt = saltN)
-      // join-key balance on the POINT side (what the hot bin skews)
-      val pk = points.select(col("user_id"),
-        (unix_micros(col("ts")) - pmod(unix_micros(col("ts")), lit(binW))).as("bin"),
-        pmod(xxhash64(col("event_id")), lit(saltN.toLong)).as("salt"))
-      val maxBin = pk.groupBy("user_id", "bin").count()
-        .agg(max("count")).collect()(0).getLong(0)
-      val maxSaltedBin = pk.groupBy("user_id", "bin", "salt").count()
-        .agg(max("count")).collect()(0).getLong(0)
-      assert(maxSaltedBin * 4 <= maxBin,
-        s"salting did not spread the hot bin: maxBin=$maxBin maxSalted=$maxSaltedBin")
-      def sig(df: DataFrame): (Long, Long) = {
-        val r = df.select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
-          .agg(count(lit(1)), expr("bit_xor(h)")).collect()(0)
-        (r.getLong(0), r.getLong(1))
+    private def skew(): Unit = {
+      // --- as-of join under hot-key skew: salted vs plain ---------------
+      // Fixture: the sf events with ~half of all rows remapped onto ONE
+      // key — the regime AsofJoin.asofJoin's docstring warns about (its
+      // per-key window makes the hot key a single straggler task). The
+      // salted form's window partitions on (key, hour-bin) instead.
+      // Witnesses (all deterministic): (a) the salted partition key's
+      // largest group is a small fraction of the hot key's row count —
+      // the per-task balance argument, since window tasks are keyed by
+      // the partition key; (b) salted output is IDENTICAL to plain on
+      // the skewed fixture (count + order-independent hash). Wall times
+      // reported for context, not asserted (local[32] understates
+      // straggler pain: 32 cores vs 1000 executors).
+      report.text("\n## As-of join under hot-key skew (salted vs plain)\n\n")
+      section("as-of join under hot-key skew: salted vs plain") {
+        val ev = events.filter(col("ts").isNotNull)
+          .withColumn("user_id",
+            when(col("event_id") % 2 === 0, lit(77777L)).otherwise(col("user_id")))
+        val l = ev.filter(col("event_id") % 7 === 0)
+        val r = ev.filter(col("event_id") % 7 =!= 0)
+        val binW = 3600L * 1000000L
+        // partition-key balance: biggest per-key group vs biggest
+        // per-(key, bin) group over the unioned window input
+        val both = ev.select(col("user_id"),
+          (unix_micros(col("ts")) - pmod(unix_micros(col("ts")), lit(binW))).as("bin"))
+        val maxKey = maxGroup(both, "user_id")
+        val maxSalted = maxGroup(both, "user_id", "bin")
+        assert(maxSalted * 4 <= maxKey,
+          s"salting did not spread the hot key: maxKeyRows=$maxKey maxSaltedRows=$maxSalted")
+        val (tPlain, tSalted, cp) = saltedSame("output",
+          () => AsofJoin.asofJoin(l, r, "user_id", "ts", "event_id", "event_id"),
+          () => AsofJoin.asofJoinSalted(l, r, "user_id", "ts", "event_id", "event_id", binW))
+        report.text("Half of all event rows remapped to one key; hourly salt bins.\n\n")
+        report.table("form", "wall (s)", "max rows per window-partition key")
+        report.row("plain (per-key window)", s2(tPlain), s"$maxKey")
+        report.row("salted (per-(key,bin) window)", s2(tSalted), s"$maxSalted")
+        report.line(f"\nOutputs identical (count $cp, xor-hash match); balance factor " +
+          f"${maxKey.toDouble / maxSalted}%.1f x.")
+
+        // x50's salted twin on the same hot-key fixture: (key, 6h-bin)
+        // window + context-copy stitch; identical output asserted
+        val (tRp, tRs, rp) = saltedSame("rolling",
+          () => Rolling.rollingStats(ev, "user_id", "ts", "event_id", "value"),
+          () => Rolling.rollingStatsSalted(ev, "user_id", "ts", "event_id", "value"))
+        report.line(f"\nRolling stats on the same fixture (6h salt bins): plain " +
+          f"$tRp%.2f s, salted $tRs%.2f s, outputs identical ($rp rows).")
+
+        // x51's salted twin on the same hot-key fixture: (key, bin)
+        // session build + summary chain merge; identical output asserted
+        val (tSp, tSs, sp) = saltedSame("sessions",
+          () => SessionWindows.sessionCounts(ev, "user_id", "ts"),
+          () => SessionWindows.sessionCountsSalted(ev, "user_id", "ts"))
+        report.line(f"Session counts on the same fixture: plain $tSp%.2f s, " +
+          f"salted $tSs%.2f s, outputs identical ($sp sessions).")
       }
-      plain().count(); salted().count() // warm-up
-      val tPlain = time(assert(sig(plain())._1 > 0))
-      val tSalted = time(assert(sig(salted())._1 > 0))
-      val (cp, hp) = sig(plain()); val (cs, hs) = sig(salted())
-      assert(cp == cs && hp == hs,
-        s"salted interval join diverged on the flash-crowd fixture: ($cp,$hp) vs ($cs,$hs)")
-      sb.append("~70% of points remapped into one (user, hour); salt = 8.\n\n")
-      sb.append("| form | wall (s) | max points per join-key group |\n|---|---|---|\n")
-      sb.append(f"| plain (k, bin) | $tPlain%.2f | $maxBin |\n")
-      sb.append(f"| salted (k, bin, salt) | $tSalted%.2f | $maxSaltedBin |\n")
-      sb.append(f"\nOutputs identical (count $cp, xor-hash match); balance factor " +
-        f"${maxBin.toDouble / maxSaltedBin}%.1f x. The salted wall is HIGHER " +
-        "here: the salt replicates every interval-bin row 8x unconditionally, " +
-        "and on 32 local cores the hot bin does not straggle enough to pay " +
-        "that back — the documented trade (salt buys tail latency on a real " +
-        "cluster, where one 64k-row task among thousands is the whole stage's " +
-        "critical path; AQE skew-join covers the mild-skew middle ground " +
-        "with no replication cost).\n")
-      println(f"SCALE x48 skew: plain $tPlain%.2f s salted $tSalted%.2f s " +
-        f"maxBin=$maxBin maxSalted=$maxSaltedBin")
+
+      // --- banded ANN under hot-bucket skew: capped vs uncapped ---------
+      // The r8 per-bucket cap's regime: a CLUSTERED corpus (half of all
+      // vectors share one embedding -> one signature -> 16 mega-buckets of
+      // n/2 rows each). Uncapped, every query colliding with the mega
+      // bucket scans all of it; capped, the scan is bounded at 256. On a
+      // UNIFORM corpus the cap is a wash by design (trim savings ~ the
+      // added WindowGroupLimit exchange) — which is why this section uses
+      // the skewed fixture, not plain replication. Witnesses
+      // (deterministic): occupancy bound before/after; top-k for the
+      // cluster probes still k rows of sim ~ 1 through the capped path.
+      report.text("\n## Banded ANN under hot-bucket skew (capped vs uncapped)\n\n")
+      section("banded ANN under hot-bucket skew: capped vs uncapped") {
+        val n = 16
+        val hot = Seq.tabulate(64)(i => if (i < 32) 1.0 else -1.0)
+        // half the replicated corpus collapses onto one vector (id parity)
+        val corpus = embN(n)
+          .withColumn("embedding",
+            when(col("vec_id") % 2 === 0, typedLit(hot))
+              .otherwise(col("embedding").cast("array<double>")))
+        def hotProbes(k: Long, idBase: Long) = spark.range(k).select(
+          (col("id") - idBase).as("vec_id"), typedLit(hot).as("embedding"))
+        // fixed diverse queries + 5 cluster probes (ids disjoint)
+        val probes = hotProbes(5, 1000000L)
+        val queries = emb0.filter(col("vec_id") % 50 === 0)
+          .select(col("vec_id"), col("embedding").cast("array<double>"))
+          .unionByName(probes)
+        val banded = Similarity.bandedFrame(corpus, "neighbor_id", "cv",
+          16, 4, Similarity.hyperplanes(64, 64, 42L), "vec_id", "embedding")
+        val occUncapped = maxGroup(banded, "band", "bucket")
+        val occCapped = maxGroup(Similarity.capBuckets(banded, 256, "neighbor_id"),
+          "band", "bucket")
+        // the sampled hash-threshold cap's contract: MEGA-buckets (the
+        // degenerate regime) are bound near cap in expectation; buckets
+        // inside the 1-in-16 detection band (up to ~1.6x cap) may pass
+        // untrimmed — they were never the unbounded-scan problem. On this
+        // deterministic fixture the max survivor is a ~400-row boundary
+        // bucket; the 17408-row mega-bucket itself is trimmed to ~cap.
+        assert(occCapped <= 2L * 256L, s"cap leaked: $occCapped")
+        assert(occUncapped >= 20L * occCapped,
+          s"mega-bucket not bound: $occUncapped vs $occCapped")
+        assert(occUncapped >= 50L * 256L,
+          s"fixture not skewed enough: $occUncapped vs $occCapped")
+        def run(q: DataFrame, cap: Int): Long = Similarity.lshTopKBanded(
+          q, corpus, k = 5, bands = 16, bitsPerBand = 4, dim = 64,
+          maxBucketSize = cap).count()
+        run(queries, 256) // warm-up
+        val tCapped = time(run(queries, 256))
+        val tUncapped = time(run(queries, Int.MaxValue))
+        // the asymptotic regime the cap exists for: probe-HEAVY traffic
+        // into the mega-bucket (dedup-style workloads where most queries
+        // are cluster members). 50 cluster probes -> uncapped candidate
+        // volume 50·bands·17408; capped, 50·bands·~cap.
+        val heavy = hotProbes(50, 2000000L)
+        run(heavy, 256) // warm-up
+        val tHeavyCapped = time(run(heavy, 256))
+        val tHeavyUncapped = time(run(heavy, Int.MaxValue))
+        // cluster probes still served through the capped path
+        val probeRows = Similarity.lshTopKBanded(probes, corpus, k = 5,
+          bands = 16, bitsPerBand = 4, dim = 64, maxBucketSize = 256)
+          .filter(col("sim") > 0.99).count()
+        assert(probeRows == 25L,
+          s"capped mega-bucket probes degraded: $probeRows of 25 sim~1 rows")
+        report.text(s"${n}x corpus, half collapsed onto one embedding; cap = 256.\n\n")
+        report.table("form", "5-probe wall (s)", "50-probe wall (s)", "max bucket occupancy")
+        report.row("uncapped", s2(tUncapped), s2(tHeavyUncapped), s"$occUncapped")
+        report.row("capped (256)", s2(tCapped), s2(tHeavyCapped), s"$occCapped")
+        report.line(s"\nCluster probes still return k sim~1 rows through the capped " +
+          s"path. The ASSERTED witness is the occupancy bound " +
+          s"(${occUncapped / occCapped}x here):")
+        report.text("per-probe candidate work is " +
+          "proportional to bucket occupancy by\nconstruction, so the cap turns " +
+          "an unbounded per-query scan into a\n≤ cap one — that is the 100 TB " +
+          "contract. Wall times are reported as\ndata only (convention: never " +
+          "asserted on local[32]); at these fixture\nsizes the cap's one-off " +
+          "1/16-sampled sizing pass dominates both\ncolumns and the per-probe " +
+          "slope sits inside JVM noise.\n")
+      }
+
+      // --- interval join under hot-bin skew: salted vs plain ------------
+      // Flash-crowd fixture: most points remapped onto ONE (key, hour) —
+      // the regime RangeJoin's docstring names. The salted form spreads
+      // that bin's points across `salt` sub-buckets of the join key.
+      // Witnesses: (a) the salted join key's largest group shrinks by
+      // ~salt x vs the plain (key, bin) key; (b) outputs identical.
+      report.text("\n## Interval join under hot-bin skew (salted vs plain)\n\n")
+      section("interval join under hot-bin skew: salted vs plain") {
+        // remap ~70% of points into one user's single hour
+        val hotStart = lit("2024-01-15 12:00:00").cast("timestamp")
+        val ev = events.filter(col("ts").isNotNull)
+          .withColumn("flash", col("event_id") % 10 < 7)
+          .withColumn("user_id",
+            when(col("flash"), lit(77777L)).otherwise(col("user_id")))
+          .withColumn("ts", when(col("flash"),
+            timestamp_micros(unix_micros(hotStart) +
+              pmod(col("event_id"), lit(3600L)) * 1000000L))
+            .otherwise(col("ts")))
+        val intervals = ev.filter(col("event_id") % 11 === 0)
+          .select(col("event_id"), col("user_id"), col("ts").as("t_start"),
+            (col("ts") + expr("INTERVAL 2 HOURS")).as("t_end"))
+        val points = ev.filter(col("event_id") % 11 =!= 0)
+        val binW = 3600L * 1000000L
+        val saltN = 8
+        // join-key balance on the POINT side (what the hot bin skews)
+        val pk = points.select(col("user_id"),
+          (unix_micros(col("ts")) - pmod(unix_micros(col("ts")), lit(binW))).as("bin"),
+          pmod(xxhash64(col("event_id")), lit(saltN.toLong)).as("salt"))
+        val maxBin = maxGroup(pk, "user_id", "bin")
+        val maxSaltedBin = maxGroup(pk, "user_id", "bin", "salt")
+        assert(maxSaltedBin * 4 <= maxBin,
+          s"salting did not spread the hot bin: maxBin=$maxBin maxSalted=$maxSaltedBin")
+        val (tPlain, tSalted, cp) = saltedSame("interval join",
+          () => RangeJoin.intervalJoin(intervals, points,
+            "user_id", "t_start", "t_end", "ts", "event_id", "event_id", binW),
+          () => RangeJoin.intervalJoinSalted(intervals, points, "user_id", "t_start", "t_end",
+            "ts", "event_id", "event_id", binW, salt = saltN))
+        report.text("~70% of points remapped into one (user, hour); salt = 8.\n\n")
+        report.table("form", "wall (s)", "max points per join-key group")
+        report.row("plain (k, bin)", s2(tPlain), s"$maxBin")
+        report.row("salted (k, bin, salt)", s2(tSalted), s"$maxSaltedBin")
+        report.line(f"\nOutputs identical (count $cp, xor-hash match); balance factor " +
+          f"${maxBin.toDouble / maxSaltedBin}%.1f x.")
+        report.text("The salted wall is HIGHER " +
+          "here: the salt replicates every interval-bin row 8x unconditionally, " +
+          "and on 32 local cores the hot bin does not straggle enough to pay " +
+          "that back — the documented trade (salt buys tail latency on a real " +
+          "cluster, where one 64k-row task among thousands is the whole stage's " +
+          "critical path; AQE skew-join covers the mild-skew middle ground " +
+          "with no replication cost).\n")
+      }
     }
 
-    // --- generator: linear scaling with numPartitions ----------------
-    // BASELINE.md's remaining derived target: wire-record generation
-    // "scales linearly with numPartitions". Fixed 1M records, varying
-    // partition count on 32 cores — the per-partition generators are
-    // independent (no shuffle anywhere in the plan), so doubling
-    // partitions up to the core count should near-halve the wall time.
     // --- r12 report operators: balanced-cap bound, funnel partition,
     // packing conservation -------------------------------------------
     // Work-volume witnesses (the playbook rule: assert VOLUMES, report
     // walls unasserted — at fixture scale extra jobs can outweigh
     // per-row savings and a wall assert would test the scheduler).
-    sb.append("\n## r12 report operators (x94/x95/x96): volume witnesses\n\n")
-    section("generator: linear scaling with numPartitions") {
-      // x94 cluster-balanced cap: however the corpus grows, the KEPT
-      // volume is bounded by nlist x cap — the flattening contract
-      // (totals must track replication; kept must not).
-      sb.append("### x94 cluster-balanced sample — kept bounded, totals grow\n\n")
-      sb.append("| scale | wall (s) | sum n_total | sum n_kept (bound 320) |\n|---|---|---|---|\n")
-      val x94rows = Seq(1, 4, 16).map { n =>
-        val em = replicate(emb0, "vec_id", n)
-        var rep: Array[org.apache.spark.sql.Row] = null
-        val t = time { rep = graft.ext.Curation
-          .clusterBalancedSample(em, nlist = 8, cap = 40).collect() }
-        val totalV = rep.map(_.getLong(1)).sum
-        val keptV = rep.map(_.getLong(2)).sum
-        assert(keptV <= 8L * 40L, s"x94 cap bound leaked at ${n}x: $keptV")
-        sb.append(f"| ${n}x | $t%.2f | $totalV | $keptV |\n")
-        println(f"SCALE x94 ${n}x: $t%.2f s total $totalV kept $keptV")
-        (n, totalV, keptV)
-      }
-      assert(x94rows.last._2 == 16L * x94rows.head._2,
-        s"x94 totals not tracking replication: ${x94rows.map(_._2)}")
-      sb.append("\nAsserted: sum(n_total) is exactly 16x at 16x; " +
-        "sum(n_kept) <= nlist*cap = 320 at every scale — the sampled " +
-        "volume a trainer ingests is bounded by the cell budget, not " +
-        "the corpus.\n")
+    private def reportOperators(): Unit = {
+      report.text("\n## r12 report operators (x94/x95/x96): volume witnesses\n\n")
+      section("r12 report operators (x94/x95/x96)") {
+        // x94 cluster-balanced cap: however the corpus grows, the KEPT
+        // volume is bounded by nlist x cap — the flattening contract
+        // (totals must track replication; kept must not).
+        report.text("### x94 cluster-balanced sample — kept bounded, totals grow\n\n")
+        report.table("scale", "wall (s)", "sum n_total", "sum n_kept (bound 320)")
+        val x94rows = scales.map { n =>
+          val (rep, t) =
+            clocked(Curation.clusterBalancedSample(embN(n), nlist = 8, cap = 40).collect())
+          val totalV = rep.map(_.getLong(1)).sum
+          val keptV = rep.map(_.getLong(2)).sum
+          assert(keptV <= 8L * 40L, s"x94 cap bound leaked at ${n}x: $keptV")
+          report.row(s"${n}x", s2(t), s"$totalV", s"$keptV")
+          totalV
+        }
+        assert(x94rows.last == 16L * x94rows.head,
+          s"x94 totals not tracking replication: $x94rows")
+        report.text("\nAsserted: sum(n_total) is exactly 16x at 16x; " +
+          "sum(n_kept) <= nlist*cap = 320 at every scale — the sampled " +
+          "volume a trainer ingests is bounded by the cell budget, not " +
+          "the corpus.\n")
 
-      // x95 funnel: partitions the corpus exactly at every scale (docs
-      // and token mass both fold back to corpus totals — no doc ever
-      // counted twice or dropped from the attribution).
-      sb.append("\n### x95 gate funnel — exact corpus partition\n\n")
-      Seq(1, 16).foreach { n =>
-        val docs = replicate(docs0, "doc_id", n)
-        val fx = graft.ext.Curation.gateFunnel(docs).collect()
-        val sumDocs = fx.map(_.getLong(2)).sum
-        assert(sumDocs == n * nDocs0,
-          s"x95 funnel lost docs at ${n}x: $sumDocs vs ${n * nDocs0}")
-        sb.append(s"- ${n}x: sum(n_docs) = $sumDocs == corpus (asserted); " +
-          s"stages: ${fx.map(r => s"${r.getString(1)}=${r.getLong(2)}").mkString(", ")}\n")
-        println(s"SCALE x95 ${n}x: partition exact ($sumDocs)")
-      }
+        // x95 funnel: partitions the corpus exactly at every scale (docs
+        // and token mass both fold back to corpus totals — no doc ever
+        // counted twice or dropped from the attribution).
+        report.text("\n### x95 gate funnel — exact corpus partition\n\n")
+        Seq(1, 16).foreach { n =>
+          val fx = Curation.gateFunnel(docsN(n)).collect()
+          val sumDocs = fx.map(_.getLong(2)).sum
+          assert(sumDocs == n * nDocs0,
+            s"x95 funnel lost docs at ${n}x: $sumDocs vs ${n * nDocs0}")
+          report.line(s"- ${n}x: sum(n_docs) = $sumDocs == corpus (asserted); " +
+            s"stages: ${fx.map(r => s"${r.getString(1)}=${r.getLong(2)}").mkString(", ")}")
+        }
 
-      // x96 pack efficiency: token mass is conserved EXACTLY under
-      // replication (16x) and chunk volume tracks it (~16x, per-shard
-      // rounding slack) — the report's inputs scale with the corpus,
-      // never with the capacity count.
-      sb.append("\n### x96 pack efficiency — conservation under 16x\n\n")
-      val effAt = Seq(1, 16).map { n =>
-        val fx = replicate(docs0, "doc_id", n)
-          .select(col("doc_id"), graft.ext.TextStats.tokenCount(col("text"))
-            .cast("long").as("n"))
-          .filter(col("n") > 0).withColumn("grp", lit(0L))
-        graft.ext.Curation.packEfficiency(fx, "grp", "doc_id", col("n"),
-          capacities = Seq(512), nShards = 8).collect()(0)
+        // x96 pack efficiency: token mass is conserved EXACTLY under
+        // replication (16x) and chunk volume tracks it (~16x, per-shard
+        // rounding slack) — the report's inputs scale with the corpus,
+        // never with the capacity count.
+        report.text("\n### x96 pack efficiency — conservation under 16x\n\n")
+        val effAt = Seq(1, 16).map { n =>
+          val fx = docsN(n)
+            .select(col("doc_id"), TextStats.tokenCount(col("text"))
+              .cast("long").as("n"))
+            .filter(col("n") > 0).withColumn("grp", lit(0L))
+          Curation.packEfficiency(fx, "grp", "doc_id", col("n"),
+            capacities = Seq(512), nShards = 8).collect()(0)
+        }
+        assert(effAt(1).getLong(2) == 16L * effAt(0).getLong(2),
+          s"x96 token mass not conserved: ${effAt.map(_.getLong(2))}")
+        val chunkGrowth = effAt(1).getLong(1).toDouble / effAt(0).getLong(1)
+        assert(chunkGrowth > 14.0 && chunkGrowth < 18.0,
+          f"x96 chunk growth $chunkGrowth%.2f not ~16x")
+        report.line(f"- n_tokens ${effAt(0).getLong(2)} -> ${effAt(1).getLong(2)} " +
+          f"(exactly 16x, asserted); n_chunks ${effAt(0).getLong(1)} -> " +
+          f"${effAt(1).getLong(1)} (${chunkGrowth}%.2fx, asserted ~16x).")
       }
-      assert(effAt(1).getLong(2) == 16L * effAt(0).getLong(2),
-        s"x96 token mass not conserved: ${effAt.map(_.getLong(2))}")
-      val chunkGrowth = effAt(1).getLong(1).toDouble / effAt(0).getLong(1)
-      assert(chunkGrowth > 14.0 && chunkGrowth < 18.0,
-        f"x96 chunk growth $chunkGrowth%.2f not ~16x")
-      sb.append(f"- n_tokens ${effAt(0).getLong(2)} -> ${effAt(1).getLong(2)} " +
-        f"(exactly 16x, asserted); n_chunks ${effAt(0).getLong(1)} -> " +
-        f"${effAt(1).getLong(1)} (${chunkGrowth}%.2fx, asserted ~16x).\n")
-      println(f"SCALE x96: chunks ${effAt(0).getLong(1)} -> ${effAt(1).getLong(1)} ($chunkGrowth%.2fx)")
     }
 
-    sb.append("\n## Generator scaling with numPartitions (8M wire records)\n\n")
-    sb.append("| partitions | time (s) | speedup vs 2 |\n|---|---|---|\n")
-    section("generator: linear scaling with numPartitions") {
-      // 8M records so per-partition compute dominates scheduling, and
-      // sum(length(value)) — NOT count(): count lets Spark prune the
-      // wire projection away entirely and times pure task scheduling;
-      // the length-sum forces every payload to be generated and encoded
-      def gen(p: Int): Unit = assert(
-        graft.gen.RecordGen.toWire(
-          graft.gen.RecordGen.records(spark, n = 8000000L, numPartitions = p))
-          .agg(sum(length(col("value")))).collect()(0).getLong(0) > 0L)
-      gen(2) // warm-up
-      val parts = Seq(2, 8, 32)
-      val ts = parts.map(p => time(gen(p)))
-      parts.zip(ts).foreach { case (p, t) =>
-        sb.append(f"| $p | $t%.2f | ${ts.head / t}%.2f |\n")
-        println(f"SCALE gen numPartitions=$p $t%.2f s (x${ts.head / t}%.2f)")
+    // --- generator: linear scaling with numPartitions ----------------
+    // BASELINE.md's remaining derived target: wire-record generation
+    // "scales linearly with numPartitions". Fixed 8M records, varying
+    // partition count — the per-partition generators are independent
+    // (no shuffle anywhere in the plan), so doubling partitions up to
+    // the core count should near-halve the wall time.
+    private def generator(): Unit = {
+      report.text("\n## Generator scaling with numPartitions (8M wire records)\n\n")
+      report.table("partitions", "time (s)", "speedup vs 2")
+      section("generator: linear scaling with numPartitions") {
+        // 8M records so per-partition compute dominates scheduling, and
+        // sum(length(value)) — NOT count(): count lets Spark prune the
+        // wire projection away entirely and times pure task scheduling;
+        // the length-sum forces every payload to be generated and encoded
+        def gen(p: Int): Unit = assert(
+          graft.gen.RecordGen.toWire(
+            graft.gen.RecordGen.records(spark, n = 8000000L, numPartitions = p))
+            .agg(sum(length(col("value")))).collect()(0).getLong(0) > 0L)
+        gen(2) // warm-up
+        val parts = Seq(2, 8, 32)
+        val ts = parts.map(p => time(gen(p)))
+        parts.zip(ts).foreach { case (p, t) => report.row(s"$p", s2(t), f"${ts.head / t}%.2f") }
+        // near-linear: 16x the partitions on idle cores must buy a large
+        // multiple — a flat curve would mean a serial section (driver-side
+        // loop or a hidden single-partition stage) in the generator plan
+        assert(ts.head / ts.last >= 4.0,
+          f"generator speedup 2->32 partitions only ${ts.head / ts.last}%.2f")
       }
-      // near-linear: 16x the partitions on idle cores must buy a large
-      // multiple — a flat curve would mean a serial section (driver-side
-      // loop or a hidden single-partition stage) in the generator plan
-      assert(ts.head / ts.last >= 4.0,
-        f"generator speedup 2->32 partitions only ${ts.head / ts.last}%.2f")
     }
-
-    if (scaleOnly.isEmpty) {
-      Files.write(Paths.get("SCALE.md"),
-        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      println("wrote SCALE.md")
-    } else println("filtered run: SCALE.md not written")
-    spark.stop()
   }
 }

@@ -232,24 +232,53 @@ class PlanSpec extends SparkSuite {
     assert(p.contains("partial_top_k_by_score"), s"plan:\n$p")
   }
 
-  // nothing may plan a cartesian product except the declared n² oracles
-  // (x03 brute-force top-k, x16 exact embedding pairs) and the r7
-  // property-oracle queries that embed an n² form as their VERIFICATION
-  // side only (x29 joins its blocked pairs against the exact n² set to
-  // assert precision/recall driver-visibly; the scale path inside it is
-  // still the cell-blocked equi-join, gated via the raw-operator
-  // composition below)
+  // nothing may plan a cartesian product, nor a nested-loop join that
+  // carries a join condition (a theta join: the condition is tested on
+  // every pair of rows), except the declared n² oracles (x03 brute-force
+  // top-k, x16 exact embedding pairs) and x29, which embeds an n² form as
+  // its VERIFICATION side only (it joins its blocked pairs against the
+  // exact n² set to assert precision/recall driver-visibly; its scale
+  // path is still the cell-blocked equi-join, gated via the raw-operator
+  // composition below). The broadcast crossJoins of 1-row corpus totals
+  // carry no condition.
   private val nSquaredOracles =
     Set("x03_cosine_topk", "x03_cosine_topk_agg", "x16_embedding_dups",
       "x29_embedding_dups_blocked")
+  // the theta joins allowed by name: the number of distinct join
+  // conditions each query may test in nested loops
+  private val thetaAllowance = Map(
+    // n²: the exhaustive hamming scan its banded pairs are verified
+    // against (the scale path is the banded equi-join, gated in the
+    // captured runs below)
+    "x33_simhash_pairs" -> 1,
+    // against a FIXED-size broadcast side, so linear in the corpus: the
+    // brute-force top-k of the 1-in-50 query set that ANN recall is
+    // verified against
+    "x11_ann_ivf" -> 1, "x45_ann_capped" -> 1, "x45_ann_lsh_banded" -> 1,
+    "x62_ann_ivfpq" -> 1,
+    // ... the same, plus PQ's brute-force scan of the fixed query batch
+    // over the decoded codes (PQ compresses, it does not prune; x62
+    // composes it with IVF)
+    "x61_ann_pq" -> 3,
+    // each flagged document's argmax over the fixed benchmark set
+    "x39_decontam_attribution" -> 1,
+    // two comparisons with a 1-row vocabulary cutoff
+    "x82_vocab_growth" -> 2).withDefaultValue(0)
 
   test("no cartesian product outside the declared n-squared oracles") {
-    import org.apache.spark.sql.execution.joins.CartesianProductExec
-    for ((q, b) <- built.toSeq.sortBy(_._1) if !nSquaredOracles.contains(q);
-         p <- b.plans) {
-      val cartesian = Executions.nodes(p).exists(_._2.isInstanceOf[CartesianProductExec])
-      assert(!cartesian, s"$q: cartesian product:\n${Executions.text(p)}")
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+    val found = for ((q, b) <- built.toSeq.sortBy(_._1) if !nSquaredOracles.contains(q)) yield {
+      val nodes = b.plans.flatMap(Executions.nodes(_).map(_._2))
+      val cartesian = nodes.collect {
+        case c: CartesianProductExec => s"cartesian product on ${c.condition}"
+      }
+      val theta = nodes.collect {
+        case j: BroadcastNestedLoopJoinExec if j.condition.isDefined => j.condition.get.toString
+      }.distinct
+      val over = if (theta.size > thetaAllowance(q)) theta.map("nested-loop join on " + _) else Nil
+      (cartesian.distinct ++ over).map(q + ": " + _)
     }
+    assert(found.flatten.isEmpty, found.flatten.mkString("\n"))
   }
 
   // no silent passes: a query whose returned frame scans a checkpoint
