@@ -236,7 +236,7 @@ object ScaleCheck {
     val report = new Report
     private val scales = Seq(1, 4, 16)
 
-    // builder-iteration filter (the bench's SPARK_GRAFT_BENCH_ONLY
+    // the iteration filter (the bench's SPARK_GRAFT_BENCH_ONLY
     // precedent): runs only the matching cases and sections — for
     // adjudicating ONE ordering violation on a quiet box without the
     // full run
