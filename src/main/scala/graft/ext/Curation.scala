@@ -49,14 +49,12 @@ object Curation {
 
   def stripUrls(text: Column): Column = regexp_replace(text, urlRe, "<URL>")
 
-  /** Token-level repetition ratio: 1 - distinct/total tokens. High values
-    * flag boilerplate / degenerate documents (C4-style repetition filter).
+  /** Token-level repetition ratio: 1 - distinct/total tokens, rounded to
+    * 6 decimals (null for null text). High values flag boilerplate /
+    * degenerate documents (C4-style repetition filter).
     */
-  def repetitionRatio(text: Column): Column = {
-    val toks = Dedup.tokens(text)
-    round(lit(1.0d) - size(array_distinct(toks)).cast("double") /
-      greatest(size(toks), lit(1)), 6)
-  }
+  def repetitionRatio(text: Column): Column =
+    TextStats.scores(text).getField("rep_ratio")
 
   /** WITHIN-doc duplicated n-gram coverage (the Gopher-family
     * "fraction of characters in duplicate n-grams" rule, token-level):
@@ -334,14 +332,14 @@ object Curation {
     */
   def standardGates(docs: DataFrame, idCol: String = "doc_id",
                     textCol: String = "text",
-                    sampleThr: String = "c0"): DataFrame =
+                    sampleThr: String = "c0"): DataFrame = {
+    val s = TextStats.scores(col(textCol))
     docs
-      .filter(hashKeep(col(idCol), lit(sampleThr)))
-      .withColumn("lang_pred", TextStats.langId(col(textCol)))
-      .filter(col("lang_pred") === "en")
-      .withColumn("quality", TextStats.qualityScore(col(textCol)))
-      .withColumn("rep_ratio", repetitionRatio(col(textCol)))
-      .filter(col("quality") >= 0.8 && col("rep_ratio") <= 0.6)
+      .filter(hashKeep(col(idCol), lit(sampleThr)) && s.getField("lang") === "en" &&
+        s.getField("quality") >= 0.8 && s.getField("rep_ratio") <= 0.6)
+      .withColumns(scala.collection.immutable.ListMap("lang_pred" -> s.getField("lang"),
+        "quality" -> s.getField("quality"), "rep_ratio" -> s.getField("rep_ratio")))
+  }
 
   /** X7j: the CONTENT-ONLY teacher label for gate-chain distillation —
     * "keep" iff the document clears the language + quality + repetition
@@ -353,10 +351,11 @@ object Curation {
     * that runs at wire speed on streams and never re-tokenizes through
     * the full gate expressions. Pure column expression — map-only.
     */
-  def teacherLabel(text: Column): Column =
-    when(TextStats.langId(text) === "en" &&
-      TextStats.qualityScore(text) >= 0.8 &&
-      repetitionRatio(text) <= 0.6, "keep").otherwise("drop")
+  def teacherLabel(text: Column): Column = {
+    val s = TextStats.scores(text)
+    when(s.getField("lang") === "en" && s.getField("quality") >= 0.8 &&
+      s.getField("rep_ratio") <= 0.6, "keep").otherwise("drop")
+  }
 
   /** X7l: per-group ADAPTIVE quantile gate (the FineWeb-family "drop the
     * bottom decile per language" rule): instead of one global threshold —
@@ -810,12 +809,14 @@ object Curation {
     * and the streaming journal delta so the two cannot drift.
     */
   private[graft] def gateStage(idCol: String, textCol: String,
-                               sampleThr: String): Column =
+                               sampleThr: String): Column = {
+    val s = TextStats.scores(col(textCol))
     when(!hashKeep(col(idCol), lit(sampleThr)), lit("sample"))
-      .when(TextStats.langId(col(textCol)) =!= "en", lit("langid"))
-      .when(TextStats.qualityScore(col(textCol)) < 0.8, lit("quality"))
-      .when(repetitionRatio(col(textCol)) > 0.6, lit("repetition"))
+      .when(s.getField("lang") =!= "en", lit("langid"))
+      .when(s.getField("quality") < 0.8, lit("quality"))
+      .when(s.getField("rep_ratio") > 0.6, lit("repetition"))
       .otherwise(lit("kept"))
+  }
 
   /** One pass's slim (stage, n_docs, n_tokens) rollup — the batch
     * funnel aggregates exactly this; a streaming micro-batch appends it

@@ -231,12 +231,13 @@ object Dedup {
     }
   }
 
-  /** MinHash signature: for each of `numHashes` hash families, the min
-    * xxhash64 over the shingle set. Map-only, codegen'd.
+  /** MinHash signature: for each of `numHashes` hash families i, the min
+    * `xxhash64(s, i)` over the shingle set. Map-only, one native
+    * expression ([[graft.functions.MinhashSignature]], codegen'd: each
+    * shingle's bytes are hashed once, then one `hashInt` per index).
     */
   def minhashSignature(shingleArr: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(shingleArr, s => xxhash64(s, i))))
+    graft.functions.MinhashSignature.minhash_signature(shingleArr, numHashes, portable = false)
 
   /** (doc_id, shingles, signature) frame — the expensive front half of
     * the LSH pair-finders (numHashes × |shingles| hashing per doc).
@@ -260,8 +261,7 @@ object Dedup {
     */
   private[graft] def signatureOf(sh: Column, numHashes: Int,
                                  portable: Boolean): Column =
-    if (portable) minhashSignaturePortable(sh, numHashes)
-    else minhashSignature(sh, numHashes)
+    graft.functions.MinhashSignature.minhash_signature(sh, numHashes, portable)
 
   /** One SLIM row per (doc, band): the LSH join must shuffle only
     * (band, bucket, id) — shingle arrays are re-joined after the
@@ -277,14 +277,12 @@ object Dedup {
   /** A MinHash signature's LSH band buckets — per band b, the struct
     * (band = b, bucket = xxhash64 of b and the band's `rowsPerBand`
     * signature values): the one banding rule, which [[bandedFrame]]
-    * explodes and the refresh's driver fold reads as an array.
+    * explodes and the refresh's driver fold reads as an array. One
+    * native expression, [[graft.functions.LshBandBuckets]].
     */
   private[graft] def bandBuckets(sig: Column, bands: Int,
                                  rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => struct(b.as("band"),
-        xxhash64((Seq(b) ++ (0 until rowsPerBand).map(r =>
-          element_at(sig, b * rowsPerBand + r + 1))): _*).as("bucket")))
+    graft.functions.LshBandBuckets.lsh_band_buckets(sig, bands, rowsPerBand)
 
   /** Exact-Jaccard verification of a candidate (id_a, id_b) frame against
     * the shingle sets in `shA`/`shB` (each (doc_id, sh)).
@@ -560,15 +558,15 @@ object Dedup {
     * (the [[graft.operators.Routing.portableHash]] family, seeded by
     * prefixing the seed index), so signatures — and hence band
     * collisions — are bit-identical in any engine that has md5. The
-    * xxhash64 [[minhashSignature]] stays the scale path (codegen'd, no
-    * hex round-trip); this variant exists so LSH DESIGN DECISIONS
-    * (x101's S-curve) are independently replayable.
+    * xxhash64 [[minhashSignature]] stays the scale path: it hashes each
+    * shingle's bytes once, where this family takes numHashes md5
+    * digests per shingle. This variant exists so LSH DESIGN DECISIONS
+    * (x101's S-curve) are independently replayable. One native
+    * expression, [[graft.functions.MinhashSignature]] with
+    * `portable = true`.
     */
   def minhashSignaturePortable(shingleArr: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(shingleArr, s =>
-        conv(substring(md5(concat(i.cast("string"), lit(":"), s)), 1, 15),
-          16, 10).cast("long"))))
+    graft.functions.MinhashSignature.minhash_signature(shingleArr, numHashes, portable = true)
 
   /** X2g: LSH band-calibration report — the MMDS S-curve MEASURED on
     * the corpus instead of assumed: for every candidate (bands,

@@ -105,19 +105,12 @@ object Extract {
     * French/Spanish prose rescues against its own function words
     * instead of being silently mis-dropped by an English list.
     */
-  def pageLang(html: Column): Column = {
-    val pageText = entityDecode(
-      regexp_replace(stripNoise(html), "<[^>]*>", " "))
-    // bind the stripped page text AND its token list once each (via
-    // 1-element transform lambda variables): langId's marker scoring
-    // references its token input four times and the CJK probe the text
-    // once, and Catalyst inlines aliased subtrees per reference —
-    // unbound, the whole-page regex chain ran ~5x per page (measured
-    // 7.8 -> 45 s on x119 before the binding)
-    element_at(transform(array(pageText), pt =>
-      element_at(transform(array(graft.ext.Dedup.tokens(pt)), tk =>
-        TextStats.langIdOn(tk, pt)), 1)), 1)
-  }
+  def pageLang(html: Column): Column =
+    // langId is one native expression, so the whole-page strip chain
+    // under it is evaluated once per page (an expression tree that
+    // referenced it once per language ran it ~5x: x119 7.8 -> 45 s)
+    TextStats.langId(entityDecode(
+      regexp_replace(stripNoise(html), "<[^>]*>", " ")))
 
   /** The stopword list for a page language — map literal + English
     * fallback, the exact rule [[TextStats.stopwordListSql]] emits for

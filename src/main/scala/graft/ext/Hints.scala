@@ -78,13 +78,17 @@ object Hints {
     * over them: a checkpointed frame (its plan a bare checkpoint scan)
     * yields its checkpoint RDD directly — no query plan, no generated
     * code, which a repeated pipeline would otherwise keep in the
-    * codegen cache — any other frame its executed plan's rows.
+    * codegen cache — any other frame its executed plan's rows. Such a
+    * job posts no SQL execution, so the plan is reported to
+    * [[graft.tools.Executions.ranRows]] instead.
     */
   private[ext] def rows(f: DataFrame)
     : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
     f.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      case _ => f.queryExecution.toRdd
+      case _ =>
+        graft.tools.Executions.ranRows(f.queryExecution)
+        f.queryExecution.toRdd
     }
 
   /** The row counts of N independent frames from ONE job — the

@@ -5,12 +5,27 @@ import org.apache.spark.sql.functions._
 
 /** X5/X6: text analysis for training-data pipelines (SURVEY §2.9) —
   * token counting, quality scoring, language ID, fingerprinting.
-  * Everything is a codegen'd Column expression: map-only at any scale.
+  * Everything is a per-row Column expression: map-only at any scale.
+  * Token count, quality and language ID are fields of ONE native
+  * expression ([[graft.functions.CurationScores]], codegen'd, one
+  * tokenize pass). The helpers built on `filter`/`transform` lambdas
+  * (`subwordCount`, `stopwordRatio`, the n-gram buckets) are
+  * higher-order functions, which Spark 4.1 evaluates interpreted
+  * (`CodegenFallback`) and keeps out of whole-stage codegen.
   */
 object TextStats {
 
-  /** Whitespace-ish token count (empty tokens excluded, engine-agnostic). */
-  def tokenCount(text: Column): Column = size(Dedup.tokens(text))
+  /** The per-document curation features (lang, quality, rep_ratio,
+    * n_toks) of `text` as one struct — see
+    * [[graft.functions.CurationScores]].
+    */
+  def scores(text: Column): Column =
+    graft.functions.CurationScores.curation_scores(text)
+
+  /** Whitespace-ish token count (empty tokens excluded, engine-agnostic):
+    * `size` of [[Dedup.tokens]], null for null text.
+    */
+  def tokenCount(text: Column): Column = scores(text).getField("n_toks")
 
   /** BPE-ish subword count heuristic: word chunks + digit runs +
     * punctuation marks each count as a token.
@@ -40,17 +55,12 @@ object TextStats {
   private def array_intersect_keepdup(toks: Column): Column =
     filter(toks, t => t.isin(englishStopwords: _*))
 
-  /** Composite quality score in [0,1]: length band + stopword presence -
-    * punctuation excess. Deterministic, SQL-expressible.
+  /** Composite quality score in [0,1]: length band (0.5 for 100–20000
+    * chars, 0.25 for 20–99) + 0.3 when [[stopwordRatio]] >= 0.05 + 0.2
+    * - 0.2 when [[punctRatio]] > 0.1, rounded to 6 decimals.
+    * Deterministic, SQL-expressible.
     */
-  def qualityScore(text: Column): Column = {
-    val len = length(text)
-    val lenScore = when(len.between(100, 20000), 0.5d)
-      .when(len.between(20, 99), 0.25d).otherwise(0.0d)
-    val stopScore = when(stopwordRatio(text) >= 0.05, 0.3d).otherwise(0.0d)
-    val punctPenalty = when(punctRatio(text) > 0.1, 0.2d).otherwise(0.0d)
-    round(lenScore + stopScore + lit(0.2d) - punctPenalty, 6)
-  }
+  def qualityScore(text: Column): Column = scores(text).getField("quality")
 
   private[graft] val langMarkers: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "and", "of", "to", "is", "that", "for", "with"),
@@ -118,27 +128,9 @@ object TextStats {
   /** Heuristic language ID: CJK codepoint presence, else the language
     * whose stopword marker set scores highest on the token list
     * (ties -> lexicographic, 'und' = undetermined when nothing matches).
+    * The `lang` field of [[scores]].
     */
-  def langId(text: Column): Column = langIdOn(Dedup.tokens(text), text)
-
-  /** [[langId]] split into its two inputs so callers whose text is an
-    * EXPENSIVE expression (not a plain column) can bind the token list
-    * and the text once — the marker scoring references `toks` four
-    * times and the CJK probe references `text` once, and Catalyst
-    * inlines aliased subtrees into each reference (the r17
-    * pageLang lesson: inlining a whole-page strip chain here cost ~5x
-    * on every extraction-heavy query).
-    */
-  def langIdOn(toks: Column, text: Column): Column = {
-    val scores = langMarkers.toSeq.sortBy(_._1).map { case (lang, markers) =>
-      struct(size(filter(toks, t => t.isin(markers: _*))).as("score"),
-        lit(lang).as("lang"))
-    }
-    val best = greatest(scores: _*)
-    when(text.rlike("[\\u4e00-\\u9fff]"), "zh")
-      .when(best.getField("score") > 0, best.getField("lang"))
-      .otherwise("und")
-  }
+  def langId(text: Column): Column = scores(text).getField("lang")
 
   /** The hashed unigram+bigram bucket stream of one document as an
     * in-row array (doc order; the per-row form of

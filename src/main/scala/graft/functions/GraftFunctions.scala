@@ -21,9 +21,22 @@ object GraftFunctions {
       s"$what must be an integer literal, got $other")
   }
 
+  private def boolLit(e: Expression, what: String): Boolean = e match {
+    case Literal(v: Boolean, _) => v
+    case other => throw new IllegalArgumentException(
+      s"$what must be a boolean literal, got $other")
+  }
+
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "cosine_sim" -> (args => CosineSimilarity(args(0), args(1))),
     "word_shingles" -> (args => WordShingles(args(0), intLit(args(1), "k"))),
+    // the per-document curation / MinHash / LSH kernels
+    "curation_scores" -> (args => CurationScores(args(0))),
+    "minhash_signature" -> (args => MinhashSignature(args(0),
+      intLit(args(1), "numHashes"),
+      args.length > 2 && boolLit(args(2), "portable"))),
+    "lsh_band_buckets" -> (args => LshBandBuckets(args(0),
+      intLit(args(1), "bands"), intLit(args(2), "rowsPerBand"))),
     "simhash64" -> (args => SimHash64(args(0))),
     "media_probe" -> (args => MediaProbe(args(0))),
     "deterministic_base64" -> (args =>

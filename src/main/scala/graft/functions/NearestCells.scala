@@ -107,7 +107,7 @@ object NearestCells {
     * apply, which `math.rint`-style half-to-even would break at exact
     * .5-ulp boundaries.
     */
-  private def round6(x: Double): Double =
+  private[functions] def round6(x: Double): Double =
     if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
     else BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 

@@ -42,8 +42,11 @@ case class WordShingles(child: Expression, k: Int) extends UnaryExpression
 object WordShingles {
 
   /** Lowercased [a-z0-9]+ token runs of `text`. */
-  def tokenize(text: UTF8String): Array[String] = {
-    val s = text.toLowerCase.toString
+  def tokenize(text: UTF8String): Array[String] =
+    tokensOf(text.toLowerCase.toString)
+
+  /** The [a-z0-9]+ token runs of an already lowercased `s`. */
+  def tokensOf(s: String): Array[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var i = 0
     val n = s.length

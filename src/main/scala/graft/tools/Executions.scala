@@ -56,11 +56,26 @@ object Executions {
     }
   }
 
+  // the plans driver code ran as RDDs of their rows (`Hints.rows`: the
+  // driver's bounded collects and counts), which post no SQL execution;
+  // recorded while a capture is on
+  private val rowRuns =
+    new java.util.concurrent.atomic.AtomicReference[java.util.Queue[QueryExecution]]()
+
+  /** Report a plan whose rows driver code runs in a job of its own. */
+  private[graft] def ranRows(qe: QueryExecution): Unit = {
+    val q = rowRuns.get
+    if (q != null) q.add(qe)
+  }
+
   /** `f`'s result and the SQL executions it started, in the order they
-    * ended. Eager and lazy `localCheckpoint` each post one, carrying the
-    * whole plan the checkpoint ran.
+    * ended, then the plans it ran through `Hints.rows` (action `rows`),
+    * in the order they were built. Eager and lazy `localCheckpoint` each
+    * post one, carrying the whole plan the checkpoint ran.
     */
   def captured[T](spark: SparkSession)(f: => T): (T, Seq[Execution]) = {
+    val rows = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val outer = rowRuns.getAndSet(rows)
     val runs = new java.util.concurrent.ConcurrentLinkedQueue[Execution]()
     val listener = new QueryExecutionListener {
       override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
@@ -74,8 +89,11 @@ object Executions {
     try {
       val out = fenced(spark, new SparkListener {})(f)
       import scala.jdk.CollectionConverters._
-      (out, runs.asScala.toSeq)
-    } finally spark.listenerManager.unregister(listener)
+      (out, runs.asScala.toSeq ++ rows.asScala.map(qe => Execution("rows", qe.executedPlan)))
+    } finally {
+      spark.listenerManager.unregister(listener)
+      rowRuns.set(outer)
+    }
   }
 
   /** Every node `plan` runs, pre-order with its depth: adaptive plans

@@ -326,6 +326,44 @@ class FunctionsSpec extends SparkSuite {
     assert(agg.getSeq[org.apache.spark.sql.Row](1).map(_.getLong(1)) == Seq(1L, 3L))
   }
 
+  test("SQL registration: the per-document kernels round-trip through spark.sql") {
+    import graft.ext.{Dedup, TextStats}
+    graft.functions.GraftFunctions.register(spark)
+    val text = "The cat and the dog is on the mat, with a hat."
+    val viaSql = spark.sql(
+      s"""SELECT curation_scores(t) AS cs,
+        |  minhash_signature(word_shingles(t, 3), 12) AS sig,
+        |  minhash_signature(word_shingles(t, 3), 12, true) AS psig,
+        |  lsh_band_buckets(minhash_signature(word_shingles(t, 3), 12), 3, 4) AS bb
+        |FROM VALUES ('$text'), (NULL) AS v(t)""".stripMargin)
+    val sh = Dedup.shingles(col("t"), 3)
+    val viaCol = Seq(text, null).toDF("t").select(
+      TextStats.scores(col("t")).as("cs"),
+      Dedup.signatureOf(sh, 12, portable = false).as("sig"),
+      Dedup.signatureOf(sh, 12, portable = true).as("psig"),
+      Dedup.bandBuckets(Dedup.signatureOf(sh, 12, portable = false), 3, 4).as("bb"))
+    assert(viaSql.schema == viaCol.schema)
+    val rows = viaSql.collect()
+    assert(rows.toSeq == viaCol.collect().toSeq)
+    // 12 tokens, 10 distinct, six English markers
+    assert(rows(0).getStruct(0).toSeq == Seq("en", 0.75, 0.166667, 12))
+    assert(rows(0).getSeq[Long](1).length == 12 && !rows(0).getSeq[Long](1).contains(null))
+    assert(rows(0).getSeq[org.apache.spark.sql.Row](3).map(_.getInt(0)) == Seq(0, 1, 2))
+    // null text: no shingles, so 12 null hashes, banded by index alone
+    assert(rows(1).getSeq[Any](1) == Seq.fill(12)(null))
+    // a parameter that is not a literal is refused by name
+    for ((q, what) <- Seq(
+        "minhash_signature(array('a b c'), n)" -> "numHashes",
+        "lsh_band_buckets(array(1L, 2L), n, 1)" -> "bands",
+        "lsh_band_buckets(array(1L, 2L), 1, n)" -> "rowsPerBand",
+        "minhash_signature(array('a b c'), 4, n > 1)" -> "portable")) {
+      val err = intercept[Exception] {
+        spark.sql(s"SELECT $q FROM VALUES (2) AS v(n)").collect()
+      }
+      assert(err.getMessage.contains(s"$what must be"), err.getMessage)
+    }
+  }
+
   test("SQL registration: sketch aggregates and greatest_row from spark.sql") {
     graft.functions.GraftFunctions.register(spark)
     // freq family end-to-end in SQL: exact regime (3 distinct << 64)

@@ -1380,4 +1380,53 @@ class PlanSpec extends SparkSuite {
       case e: Exchange if e.output.exists(_.name == "text") => e }
     assert(textExchanges.isEmpty, s"an Exchange carries corpus text:\n$shown")
   }
+
+  // x85's per-document executions — each checkpoint and driver collect
+  // whose plan gates the corpus text: the rebuild's per-document
+  // checkpoint and the driver fold's fresh-row collect (and the standing
+  // state's build, when x85 builds it). Their gate Filter and the
+  // Projects around it run per document, so they must run compiled: no
+  // interpreted (`CodegenFallback`) expression, no Filter or Project
+  // outside a whole-stage codegen stage. Every higher-order function
+  // (`filter`, `transform`) is a `CodegenFallback` in Spark 4.1.
+  test("x85 per-document executions run whole-stage codegen, nothing interpreted") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec,
+      WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    // every node of the plan that ran (adaptive plans in their final
+    // form, query stages followed into their plans), with whether it
+    // runs inside a whole-stage codegen stage
+    def compiled(p: SparkPlan, inStage: Boolean): Seq[(SparkPlan, Boolean)] = p match {
+      case a: AdaptiveSparkPlanExec => compiled(a.executedPlan, inStage)
+      case s: QueryStageExec => compiled(s.plan, inStage = false)
+      case r: ReusedExchangeExec => compiled(r.child, inStage = false)
+      case w: WholeStageCodegenExec => (w, false) +: compiled(w.child, inStage = true)
+      case i: InputAdapter => (i, inStage) +: compiled(i.child, inStage = false)
+      case _ => (p, inStage) +: p.children.flatMap(compiled(_, inStage))
+    }
+    val runs = built("x85_assembly_refresh").runs
+      .map(r => r -> compiled(r.plan, inStage = false))
+    val perDoc = runs.filter(_._2.exists {
+      case (f: FilterExec, _) => f.condition.references.exists(_.name == "text")
+      case _ => false
+    })
+    val offences = perDoc.flatMap { case (r, nodes) =>
+      nodes.flatMap { case (n, inStage) =>
+        val interpreted = n.expressions.flatMap(_.collect {
+          case e: CodegenFallback => e.prettyName })
+        val outside = n match {
+          case _: FilterExec | _: ProjectExec if !inStage => Seq("outside codegen")
+          case _ => Nil
+        }
+        (interpreted.distinct ++ outside).map(why => s"${r.action}: ${n.nodeName} ($why)")
+      }
+    }
+    assert(offences.isEmpty, s"interpreted per-document work in x85:\n" +
+      offences.distinct.mkString("\n") + "\n" +
+      perDoc.map(r => r._1.plan.treeString).mkString("\n"))
+    assert(Set("localCheckpoint", "rows").subsetOf(perDoc.map(_._1.action).toSet),
+      s"x85 per-document executions: ${perDoc.map(_._1.action)} of ${runs.map(_._1.action)}")
+  }
 }

@@ -1107,4 +1107,178 @@ class PropertySpec extends SparkSuite {
       }
     }
   }
+
+  // ---- the per-document kernels against their built-ins forms ----------
+  //
+  // The forms below are what `graft.functions.CurationScores`,
+  // `MinhashSignature` and `LshBandBuckets` replaced on the gate,
+  // signature and band paths: Catalyst expressions over `filter` /
+  // `transform` lambdas. They are kept here only as the kernels'
+  // reference; every kernel must equal its form bit for bit, nulls
+  // and schema included.
+  private object Builtins {
+    import org.apache.spark.sql.Column
+    import graft.ext.TextStats
+
+    def tokenCount(text: Column): Column = size(Dedup.tokens(text))
+
+    def langId(text: Column): Column = {
+      val toks = Dedup.tokens(text)
+      val best = greatest(TextStats.langMarkers.toSeq.sortBy(_._1).map {
+        case (lang, markers) =>
+          struct(size(filter(toks, t => t.isin(markers: _*))).as("score"),
+            lit(lang).as("lang"))
+      }: _*)
+      when(text.rlike("[\\u4e00-\\u9fff]"), "zh")
+        .when(best.getField("score") > 0, best.getField("lang"))
+        .otherwise("und")
+    }
+
+    def qualityScore(text: Column): Column = {
+      val len = length(text)
+      val lenScore = when(len.between(100, 20000), 0.5d)
+        .when(len.between(20, 99), 0.25d).otherwise(0.0d)
+      val stopScore = when(TextStats.stopwordRatio(text) >= 0.05, 0.3d).otherwise(0.0d)
+      val punctPenalty = when(TextStats.punctRatio(text) > 0.1, 0.2d).otherwise(0.0d)
+      round(lenScore + stopScore + lit(0.2d) - punctPenalty, 6)
+    }
+
+    def repetitionRatio(text: Column): Column = {
+      val toks = Dedup.tokens(text)
+      round(lit(1.0d) - size(array_distinct(toks)).cast("double") /
+        greatest(size(toks), lit(1)), 6)
+    }
+
+    def minhashSignature(sh: Column, numHashes: Int, portable: Boolean): Column =
+      transform(sequence(lit(0), lit(numHashes - 1)), i =>
+        array_min(transform(sh, s =>
+          if (portable)
+            conv(substring(md5(concat(i.cast("string"), lit(":"), s)), 1, 15),
+              16, 10).cast("long")
+          else xxhash64(s, i))))
+
+    def bandBuckets(sig: Column, bands: Int, rowsPerBand: Int): Column =
+      transform(sequence(lit(0), lit(bands - 1)),
+        b => struct(b.as("band"),
+          xxhash64((Seq(b) ++ (0 until rowsPerBand).map(r =>
+            element_at(sig, b * rowsPerBand + r + 1))): _*).as("bucket")))
+  }
+
+  // each kernel column next to its reference column, over one frame:
+  // the schemas and every row must agree, with whole-stage codegen and
+  // with the interpreted path (the two call the same static core)
+  private def assertSameColumns(df: org.apache.spark.sql.DataFrame,
+                                pairs: Seq[(String, org.apache.spark.sql.Column,
+                                  org.apache.spark.sql.Column)]): Unit = {
+    val kernel = df.select(pairs.map { case (n, k, _) => k.as(n) }: _*)
+    val ref = df.select(pairs.map { case (n, _, r) => r.as(n) }: _*)
+    assert(kernel.schema == ref.schema,
+      s"schemas differ:\n${kernel.schema.treeString}\n${ref.schema.treeString}")
+    val want = ref.collect()
+    def check(mode: String): Unit = {
+      val got = kernel.collect()
+      assert(got.length == want.length)
+      got.zip(want).zipWithIndex.find { case ((g, w), _) => g != w }.foreach {
+        case ((g, w), i) => fail(s"$mode, row $i of ${df.columns.mkString(",")}: " +
+          s"kernel $g != built-ins $w (input ${df.collect()(i)})")
+      }
+    }
+    check("codegen")
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try check("interpreted") finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  // texts that sit on every branch of the curation features: null, empty,
+  // all-punctuation, CJK, non-ASCII case folding (dotted capital I folds
+  // to "i" + a combining dot, the Kelvin sign to "k"), language-marker
+  // ties, lengths on the quality bands' edges (19/20/99/100 chars), the
+  // punctuation ratio at 0.1, and a stopword ratio that only rounding
+  // lifts to 0.05 (5000 of 100001 tokens)
+  private val crafted: Seq[String] = Seq(
+    null, "", "   ", "!?.,;:", "...!!!???,,,", "中文文本", "the 中 and of",
+    "İSTANBUL is the city and of", "Kelvin THE AND OF the",
+    "la que", "der le el the", "die und das la les et", "el la los que es",
+    "ÜNÏCÖDÉ café naïve the and", "😀 the and of 😀",
+    "a" * 19, "a" * 20, "a" * 99, "a" * 100, "the " * 5 + "a" * 80,
+    "aaaa bbbb. cccc dddd eeee ffff, gg",
+    "abcdefghi, abcdefgh", "abcdefghi, abcdefg.",
+    ("the " + "x " * 19) * 3, ("the " * 5000) + ("w " * 95001),
+    "spam spam spam spam spam spam", "The the THE tHe")
+
+  private val textGen: Gen[String] = {
+    val pieces = Gen.oneOf(Seq("the", "and", "of", "la", "que", "der", "el",
+      "le", "die", "und", "es", "is", "x", "y9", "Zz", " ", "  ", ".", ",",
+      "!", "?", ";", ":", "-", "中", "İ", "K", "é", "ß",
+      "😀", "\n", "A1", "42"))
+    Gen.choose(0, 60).flatMap(n => Gen.listOfN(n, pieces).map(_.mkString(" ")))
+  }
+
+  private def textsFrame(texts: Seq[String]): org.apache.spark.sql.DataFrame =
+    texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("i", "text")
+
+  test("curation_scores equals the built-ins features on crafted, random and fixture texts") {
+    import graft.ext.{Curation, TextStats}
+    val t = col("text")
+    val pairs = Seq(
+      ("lang", TextStats.langId(t), Builtins.langId(t)),
+      ("quality", TextStats.qualityScore(t), Builtins.qualityScore(t)),
+      ("rep_ratio", Curation.repetitionRatio(t), Builtins.repetitionRatio(t)),
+      ("n_toks", TextStats.tokenCount(t), Builtins.tokenCount(t)))
+    assertSameColumns(textsFrame(crafted ++ samples(textGen, 300)), pairs)
+    assertSameColumns(Tables.load(spark, sf(), "documents").select("text"), pairs)
+    // the crafted cases reach the branches they are meant to
+    val got = textsFrame(crafted).select(TextStats.scores(t).as("s"))
+      .collect().map(_.getStruct(0))
+    val byText = crafted.zip(got).toMap
+    assert(byText(null).toSeq == Seq("und", 0.2, null, null))
+    assert(byText("la que").getString(0) == "fr")
+    assert(byText("el la los que es").getString(0) == "es")
+    assert(byText("the 中 and of").getString(0) == "zh")
+    assert(byText(("the " * 5000) + ("w " * 95001)).getDouble(1) == 0.5,
+      "a stopword ratio rounded up to 0.05 passes")
+  }
+
+  test("minhash_signature equals the built-ins signatures in both hash families") {
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    val shGen = Gen.choose(0, 30).flatMap(n => Gen.listOfN(n,
+      Gen.frequency(1 -> Gen.const(null: String), 12 -> textGen.map(_.trim))))
+    val arrays: Seq[Seq[String]] = Seq(null, Seq.empty, Seq(null), Seq("a b c", null),
+      Seq("中文 文本 x", "é ü ß", "😀 a b"), Seq("", " "), Seq("a b c", "a b c")) ++
+      samples(shGen, 60)
+    val fixtureSh = Tables.load(spark, sf(), "documents")
+      .select(Dedup.shingles(col("text"), 3).as("sh"))
+    val shFrame = spark.createDataFrame(
+      spark.sparkContext.parallelize(arrays.map(a => org.apache.spark.sql.Row(a)), 2),
+      org.apache.spark.sql.types.StructType(Seq(org.apache.spark.sql.types.StructField(
+        "sh", ArrayType(StringType, containsNull = true)))))
+    for (n <- Seq(1, 12, 64); portable <- Seq(false, true)) {
+      val pairs = Seq((s"sig_${n}_$portable",
+        Dedup.signatureOf(col("sh"), n, portable),
+        Builtins.minhashSignature(col("sh"), n, portable)))
+      assertSameColumns(shFrame, pairs)
+      assertSameColumns(fixtureSh, pairs)
+    }
+  }
+
+  test("lsh_band_buckets equals the built-ins bands, null signatures included") {
+    import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+    val sigs = Tables.load(spark, sf(), "documents")
+      .select(Dedup.shingles(col("text"), 3).as("sh"))
+      .select(Dedup.minhashSignature(col("sh"), 64).as("sig"))
+    val odd: Seq[Seq[java.lang.Long]] = Seq(null, Seq.fill(64)(null),
+      Seq.tabulate(64)(i => if (i % 5 == 0) null else java.lang.Long.valueOf(i * 31L - 7)),
+      Seq.fill(64)(java.lang.Long.valueOf(Long.MinValue)))
+    val craftedSigs = spark.createDataFrame(
+      spark.sparkContext.parallelize(odd.map(a => org.apache.spark.sql.Row(a)), 2),
+      StructType(Seq(StructField("sig", ArrayType(LongType, containsNull = true)))))
+    for ((bands, rows) <- Seq((16, 4), (4, 3), (1, 1), (12, 1), (2, 32))) {
+      val pairs = Seq((s"bb_${bands}_$rows",
+        Dedup.bandBuckets(col("sig"), bands, rows),
+        Builtins.bandBuckets(col("sig"), bands, rows)))
+      assertSameColumns(sigs, pairs)
+      assertSameColumns(craftedSigs, pairs)
+    }
+  }
 }
